@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -33,15 +34,16 @@ object Prof {
       // two warm passes first (codegen + JIT)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
       val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val listener = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit =
           jobStarts.put(js.jobId, System.nanoTime())
-        override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-          val t0 = jobStarts.getOrDefault(je.jobId, 0L)
-          lines.add(f"[prof] job ${je.jobId}%3d  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        }
+        // a job whose start event was not seen has no duration to print
+        override def onJobEnd(je: SparkListenerJobEnd): Unit =
+          Option(jobStarts.remove(je.jobId)).foreach { t0 =>
+            lines.add(f"[prof] job ${je.jobId}%3d  ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+          }
         override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
           val si = sc.stageInfo
           val tm = si.taskMetrics
@@ -51,12 +53,15 @@ object Prof {
             f"sh_w=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(60)}")
         }
       }
+      // the warm passes' events must not reach the listener
+      ListenerBus.drain(spark.sparkContext)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      // deliver every event of the run before detaching and printing
+      ListenerBus.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(300)
       println(s"[prof] ===== $name wall=${f"$wall%.3f"} s =====")
       lines.forEach(l => println(l))
     }

@@ -15,8 +15,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   *    buckets, candidates come from an equi-join on the bucket key, so the
   *    corpus is scanned once and never self-cross-joined. The scale path.
   *
-  * Dot products use `zip_with` + `aggregate` (sequential fold, codegen'd,
-  * no UDF).
+  * Dot products use `zip_with` + `aggregate` (sequential fold, no UDF).
+  * Both are `CodegenFallback` in Spark 4.1.2, so the fold runs interpreted
+  * even inside a whole-stage-codegen stage; [[dotNative]] is the fused,
+  * code-generated form.
   */
 object Similarity {
 

@@ -2,7 +2,9 @@ package graft.pipeline
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -19,45 +21,82 @@ import graft.sources.{Staging, TableStore, Tables}
   *   → SCD2 customer dim → year-partitioned fact with broadcast surrogate
   *   lookups → materialized analytics views → QA report + run log.
   *
-  * Each stage is a pure function + one table write; a fixed `runDate` is
-  * threaded through (F8) so output is deterministic.
+  * Each stage is a pure function of its inputs plus table writes; a fixed
+  * `runDate` is threaded through (F8) so output is deterministic. A
+  * stage's writes are independent of each other — each reads only source
+  * tables, tables written by an earlier stage and in-memory frames — so a
+  * call runs them concurrently ([[Concurrent]]) after every guard has
+  * passed. Log rows carry the rows each write committed, counted on its
+  * final write stage, and are appended once per call.
   */
 final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
   private val store = new TableStore(spark, workDir)
 
-  private def log(stage: String, rows: Long, loadId: Int): Unit =
-    Logging.append(store, stage, rows, loadId)
+  private def log(rows: Seq[(String, Long)], loadId: Int): Unit =
+    Logging.append(store, rows, loadId)
+
+  /** Lands `df` through `write` and returns the rows it committed. The
+    * count is an observation on the frame's top node, so it runs in the
+    * final write stage only: placed below a range repartition it would
+    * also count the bounds-sampling job's pass over the child.
+    */
+  private def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
+
+  /** Lands a call's independent writes together through `commit` and
+    * returns the rows each table committed. Each frame is built inside its
+    * write's own thread, so planning overlaps too.
+    */
+  private def writeAll(frames: Seq[(String, () => DataFrame)])(
+      commit: (String, DataFrame) => Unit): Map[String, Long] = {
+    val tables = frames.map(_._1)
+    require(tables.distinct.size == tables.size,
+      s"concurrent writes must target distinct tables: $tables")
+    tables.zip(Concurrent(spark, frames.map { case (t, frame) =>
+      () => counted(frame())(commit(t, _))
+    })).toMap
+  }
 
   /** Stage 1 — raw staging with lineage + duplicate-load guard. An
     * incremental batch passes per-table predicates selecting its slice of
     * the source feed (the reference's loads are batch-id driven the same
-    * way: every load stages only its own rows, bl_cl.sql:43-68).
+    * way: every load stages only its own rows, bl_cl.sql:43-68). Every
+    * table's guards run before any table is appended, so a refused load
+    * leaves all staged tables untouched.
     */
   def stage(loadId: Int,
       batchFilters: Map[String, org.apache.spark.sql.Column] = Map.empty): Unit = {
-    Seq("orders", "lineitem", "customer", "supplier", "part").foreach { t =>
-      val src = batchFilters.get(t)
-        .map(Tables(spark, sfDir, t).filter(_))
-        .getOrElse(Tables(spark, sfDir, t))
+    val tables = Seq("orders", "lineitem", "customer", "supplier", "part")
+    def source(t: String) = batchFilters.get(t)
+      .map(Tables(spark, sfDir, t).filter(_))
+      .getOrElse(Tables(spark, sfDir, t))
+    Concurrent(spark, tables.map(t => () => {
       // C1 guards FULL loads — an empty source there means a broken feed.
       // An incremental slice matching zero rows (no new orders for one
       // table this batch) is a legitimate no-op, so the guard is skipped
       // when a batch filter selected the slice.
       if (!batchFilters.contains(t))
-        require(!src.isEmpty, s"There is no data in the source: $t")
-      Staging.stageAppend(store, s"scr_$t", src, loadId)
-      // count the written batch, not the source plan — `src.count()` would
-      // re-scan the source a second time purely for the log row
-      log(s"stage_$t",
-        store.read(s"scr_$t").filter(col("Load_id") === loadId.toString).count(),
-        loadId)
-    }
+        require(!source(t).isEmpty, s"There is no data in the source: $t")
+      Staging.assertNotLoaded(store, s"scr_$t", loadId)
+    }))
+    val rows = writeAll(tables.map(t =>
+      s"scr_$t" -> (() => Staging.withLineage(source(t), loadId))))(store.append(_, _))
+    log(tables.map(t => s"stage_$t" -> rows(s"scr_$t")), loadId)
   }
 
   /** Stage 2 — dimensions. Region/nation: SCD1 insert-if-absent with
-    * deterministic surrogates and the NA member. Customer: SCD2.
+    * deterministic surrogates and the NA member. Customer: SCD2. Each dim
+    * reads staged tables, its own previous version and in-memory frames
+    * (`dimRegion`, `dimNation`) — never another dim's written table — so
+    * all eleven are written together.
     */
   def loadDims(loadId: Int, runDate: Date): Unit = {
+    def staged(t: String) =
+      store.read(s"scr_$t").filter(col("Load_id") === loadId.toString)
+
     val region = Tables.region(spark, sfDir).select(
       col("r_regionkey").as("region_nk"), col("r_name").as("region_name"))
     val nation = Tables.nation(spark, sfDir).select(
@@ -70,7 +109,6 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
     val dimRegion = naRegion.unionByName(
       Surrogates.assign(region, "region_sk", Seq(col("region_nk")))
         .select(col("region_sk"), col("region_nk"), col("region_name")))
-    store.overwrite("dim_region", dimRegion)
 
     val naNation = spark.range(1).select(
       lit(Constants.NaKey).as("nation_sk"), lit(-1).as("nation_nk"),
@@ -81,148 +119,152 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
           Seq("region_nk"), "left")
         .select(col("nation_sk"), col("nation_nk"), col("nation_name"),
           coalesce(col("region_sk"), lit(Constants.NaKey)).as("region_sk")))
-    store.overwrite("dim_nation", dimNation)
 
-    // SCD1 city dim — the THIRD snowflake level (reference
-    // address→country→region, bl_cl.sql:1783-1785 / bl_3nf.sql:101-136):
-    // cities are synthesized from the customer feed at nation×bucket
-    // grain (city_nk = nation_nk·100 + custkey%10, a single
-    // SQL-replayable key) and carry a SURROGATE nation FK, so
-    // city→nation→region crosses two surrogate hops before the region
-    // name resolves. City population is bounded by |nation|×10 — a true
-    // dimension at any corpus scale, broadcast-joined everywhere.
-    val citySrc = store.read("scr_customer")
-      .filter(col("Load_id") === loadId.toString)
-      .select((col("c_nationkey").cast("long") * 100 +
-          col("c_custkey").cast("long") % 10).as("city_nk"),
-        col("c_nationkey").as("nation_nk"))
-      .distinct()
-      .join(broadcast(dimNation.select(col("nation_nk"), col("nation_sk"))),
-        Seq("nation_nk"), "left")
-      .select(col("city_nk"),
-        coalesce(col("nation_sk"), lit(Constants.NaKey)).as("nation_sk"))
-    store.overwrite("dim_city", scd1Dim("dim_city", citySrc,
-      "city_sk", "city_nk",
-      naRow = spark.range(1).select(
-        lit(Constants.NaKey).as("city_sk"), lit(-1L).as("city_nk"),
-        lit(Constants.NaKey).as("nation_sk"))))
+    val rows = writeAll(Seq(
+      "dim_region" -> (() => dimRegion),
+      "dim_nation" -> (() => dimNation),
 
-    // SCD2 customer: batch 1 bootstraps, later batches close+insert (M3/M5).
-    val src = store.read("scr_customer")
-      .filter(col("Load_id") === loadId.toString)
-      .select(
-        col("c_custkey").as("customer_nk"),
-        col("c_name").as("customer_name"),
-        col("c_mktsegment").as("segment"),
-        col("c_nationkey").as("nation_nk"))
-    val dimCustomer =
-      if (!store.exists("dim_customer"))
-        Scd2.initial(src, Seq("customer_nk"), Constants.LowDt)
-      else
-        Scd2.scd2Apply(
-          store.read("dim_customer"), src, Seq("customer_nk"),
-          Seq("customer_name", "segment", "nation_nk"), runDate)
-    store.overwrite("dim_customer", dimCustomer)
+      // SCD1 city dim — the THIRD snowflake level (reference
+      // address→country→region, bl_cl.sql:1783-1785 / bl_3nf.sql:101-136):
+      // cities are synthesized from the customer feed at nation×bucket
+      // grain (city_nk = nation_nk·100 + custkey%10, a single
+      // SQL-replayable key) and carry a SURROGATE nation FK, so
+      // city→nation→region crosses two surrogate hops before the region
+      // name resolves. City population is bounded by |nation|×10 — a true
+      // dimension at any corpus scale, broadcast-joined everywhere.
+      "dim_city" -> { () =>
+        val citySrc = staged("customer")
+          .select((col("c_nationkey").cast("long") * 100 +
+              col("c_custkey").cast("long") % 10).as("city_nk"),
+            col("c_nationkey").as("nation_nk"))
+          .distinct()
+          .join(broadcast(dimNation.select(col("nation_nk"), col("nation_sk"))),
+            Seq("nation_nk"), "left")
+          .select(col("city_nk"),
+            coalesce(col("nation_sk"), lit(Constants.NaKey)).as("nation_sk"))
+        scd1Dim("dim_city", citySrc,
+          "city_sk", "city_nk",
+          naRow = spark.range(1).select(
+            lit(Constants.NaKey).as("city_sk"), lit(-1L).as("city_nk"),
+            lit(Constants.NaKey).as("nation_sk")))
+      },
 
-    // SCD1 supplier dim (M9/M14 recipe at warehouse breadth): NA member +
-    // insert-if-absent with sequence-continuing surrogates; a repeated
-    // batch no-ops, so incremental loads leave the dim byte-identical.
-    val supSrc = store.read("scr_supplier")
-      .filter(col("Load_id") === loadId.toString)
-      .select(
-        col("s_suppkey").as("supplier_nk"),
-        col("s_name").as("supplier_name"),
-        col("s_nationkey").as("nation_nk"))
-    store.overwrite("dim_supplier", scd1Dim("dim_supplier", supSrc,
-      "supplier_sk", "supplier_nk",
-      naRow = spark.range(1).select(
-        lit(Constants.NaKey).as("supplier_sk"), lit(-1L).as("supplier_nk"),
-        lit(Constants.NA).as("supplier_name"), lit(-1).as("nation_nk"))))
+      // SCD2 customer: batch 1 bootstraps, later batches close+insert (M3/M5).
+      "dim_customer" -> { () =>
+        val src = staged("customer")
+          .select(
+            col("c_custkey").as("customer_nk"),
+            col("c_name").as("customer_name"),
+            col("c_mktsegment").as("segment"),
+            col("c_nationkey").as("nation_nk"))
+        if (!store.exists("dim_customer"))
+          Scd2.initial(src, Seq("customer_nk"), Constants.LowDt)
+        else
+          Scd2.scd2Apply(
+            store.read("dim_customer"), src, Seq("customer_nk"),
+            Seq("customer_name", "segment", "nation_nk"), runDate)
+      },
 
-    // SCD1 brand dim: a derived-attribute chain off the part feed.
-    val brandSrc = store.read("scr_part")
-      .filter(col("Load_id") === loadId.toString)
-      .select(col("p_brand").as("brand_nk")).distinct()
-    store.overwrite("dim_brand", scd1Dim("dim_brand", brandSrc,
-      "brand_sk", "brand_nk",
-      naRow = spark.range(1).select(
-        lit(Constants.NaKey).as("brand_sk"), lit(Constants.NA).as("brand_nk"))))
+      // SCD1 supplier dim (M9/M14 recipe at warehouse breadth): NA member +
+      // insert-if-absent with sequence-continuing surrogates; a repeated
+      // batch no-ops, so incremental loads leave the dim byte-identical.
+      "dim_supplier" -> { () =>
+        val supSrc = staged("supplier")
+          .select(
+            col("s_suppkey").as("supplier_nk"),
+            col("s_name").as("supplier_name"),
+            col("s_nationkey").as("nation_nk"))
+        scd1Dim("dim_supplier", supSrc,
+          "supplier_sk", "supplier_nk",
+          naRow = spark.range(1).select(
+            lit(Constants.NaKey).as("supplier_sk"), lit(-1L).as("supplier_nk"),
+            lit(Constants.NA).as("supplier_name"), lit(-1).as("nation_nk")))
+      },
 
-    // SCD2 employee dim (reference Dim_Employees_SCD2, bl_3nf.sql:188-199):
-    // the supplier feed is this harness's employee entity — its name is
-    // SPLIT_PART into first/last exactly like the reference's employee
-    // names (bl_cl.sql:1069-1070; the feed's delimiter is '#'), and the
-    // dim carries a SURROGATE nation FK so it anchors a 3-level
-    // employee→nation→region snowflake chain, the analog of the
-    // reference's address→country→region (bl_3nf.sql:101-136).
-    val empSrc = store.read("scr_supplier")
-      .filter(col("Load_id") === loadId.toString)
-      .join(broadcast(dimNation.select(col("nation_nk"), col("nation_sk"))),
-        col("s_nationkey") === col("nation_nk"), "left")
-      .select(
-        col("s_suppkey").as("employee_nk"),
-        split_part(col("s_name"), lit("#"), lit(1)).as("first_name"),
-        split_part(col("s_name"), lit("#"), lit(2)).as("last_name"),
-        coalesce(col("nation_sk"), lit(Constants.NaKey)).as("nation_sk"))
-    val dimEmployee =
-      if (!store.exists("dim_employee"))
-        Scd2.initial(empSrc, Seq("employee_nk"), Constants.LowDt)
-      else
-        Scd2.scd2Apply(
-          store.read("dim_employee"), empSrc, Seq("employee_nk"),
-          Seq("first_name", "last_name", "nation_sk"), runDate)
-    store.overwrite("dim_employee", dimEmployee)
+      // SCD1 brand dim: a derived-attribute chain off the part feed.
+      "dim_brand" -> { () =>
+        val brandSrc = staged("part").select(col("p_brand").as("brand_nk")).distinct()
+        scd1Dim("dim_brand", brandSrc,
+          "brand_sk", "brand_nk",
+          naRow = spark.range(1).select(
+            lit(Constants.NaKey).as("brand_sk"), lit(Constants.NA).as("brand_nk")))
+      },
 
-    // Second SCD2 dim — products from the part feed, tracking name/brand/
-    // price history exactly like the customer dim tracks segment moves.
-    val prodSrc = store.read("scr_part")
-      .filter(col("Load_id") === loadId.toString)
-      .select(
-        col("p_partkey").as("product_nk"),
-        col("p_name").as("product_name"),
-        col("p_brand").as("brand_nk"),
-        col("p_retailprice").as("retail_price"))
-    val dimProduct =
-      if (!store.exists("dim_product"))
-        Scd2.initial(prodSrc, Seq("product_nk"), Constants.LowDt)
-      else
-        Scd2.scd2Apply(
-          store.read("dim_product"), prodSrc, Seq("product_nk"),
-          Seq("product_name", "brand_nk", "retail_price"), runDate)
-    store.overwrite("dim_product", dimProduct)
+      // SCD2 employee dim (reference Dim_Employees_SCD2, bl_3nf.sql:188-199):
+      // the supplier feed is this harness's employee entity — its name is
+      // SPLIT_PART into first/last exactly like the reference's employee
+      // names (bl_cl.sql:1069-1070; the feed's delimiter is '#'), and the
+      // dim carries a SURROGATE nation FK so it anchors a 3-level
+      // employee→nation→region snowflake chain, the analog of the
+      // reference's address→country→region (bl_3nf.sql:101-136).
+      "dim_employee" -> { () =>
+        val empSrc = staged("supplier")
+          .join(broadcast(dimNation.select(col("nation_nk"), col("nation_sk"))),
+            col("s_nationkey") === col("nation_nk"), "left")
+          .select(
+            col("s_suppkey").as("employee_nk"),
+            split_part(col("s_name"), lit("#"), lit(1)).as("first_name"),
+            split_part(col("s_name"), lit("#"), lit(2)).as("last_name"),
+            coalesce(col("nation_sk"), lit(Constants.NaKey)).as("nation_sk"))
+        if (!store.exists("dim_employee"))
+          Scd2.initial(empSrc, Seq("employee_nk"), Constants.LowDt)
+        else
+          Scd2.scd2Apply(
+            store.read("dim_employee"), empSrc, Seq("employee_nk"),
+            Seq("first_name", "last_name", "nation_sk"), runDate)
+      },
 
-    // SCD1 segment dim (reference Dim_Segments, bl_3nf.sql:67-75): the
-    // customer feed's market segment as its own keyed lookup.
-    val segSrc = store.read("scr_customer")
-      .filter(col("Load_id") === loadId.toString)
-      .select(col("c_mktsegment").as("segment_nk")).distinct()
-    store.overwrite("dim_segment", scd1Dim("dim_segment", segSrc,
-      "segment_sk", "segment_nk",
-      naRow = spark.range(1).select(
-        lit(Constants.NaKey).as("segment_sk"), lit(Constants.NA).as("segment_nk"))))
+      // Second SCD2 dim — products from the part feed, tracking name/brand/
+      // price history exactly like the customer dim tracks segment moves.
+      "dim_product" -> { () =>
+        val prodSrc = staged("part")
+          .select(
+            col("p_partkey").as("product_nk"),
+            col("p_name").as("product_name"),
+            col("p_brand").as("brand_nk"),
+            col("p_retailprice").as("retail_price"))
+        if (!store.exists("dim_product"))
+          Scd2.initial(prodSrc, Seq("product_nk"), Constants.LowDt)
+        else
+          Scd2.scd2Apply(
+            store.read("dim_product"), prodSrc, Seq("product_nk"),
+            Seq("product_name", "brand_nk", "retail_price"), runDate)
+      },
 
-    // SCD1 degenerate ORDER dim (reference Dim_Orders, bl_3nf.sql:113-122):
-    // order-grain, so it is FACT-SIZED at the 100 TB north star — the
-    // scalable surrogate path (distributed sort + zipWithIndex) replaces
-    // the single-task window ranking, and the fact re-keys through it
-    // with a plain shuffled join (M13 at fact scale).
-    val ordSrc = store.read("scr_orders")
-      .filter(col("Load_id") === loadId.toString)
-      .select(
-        col("o_orderkey").as("order_nk"),
-        col("o_orderstatus").as("order_status"),
-        col("o_orderpriority").as("order_priority"))
-    store.overwrite("dim_orders", scd1Dim("dim_orders", ordSrc,
-      "order_sk", "order_nk",
-      naRow = spark.range(1).select(
-        lit(Constants.NaKey).as("order_sk"), lit(-1L).as("order_nk"),
-        lit(Constants.NA).as("order_status"), lit(Constants.NA).as("order_priority")),
-      scalable = true))
+      // SCD1 segment dim (reference Dim_Segments, bl_3nf.sql:67-75): the
+      // customer feed's market segment as its own keyed lookup.
+      "dim_segment" -> { () =>
+        val segSrc = staged("customer").select(col("c_mktsegment").as("segment_nk")).distinct()
+        scd1Dim("dim_segment", segSrc,
+          "segment_sk", "segment_nk",
+          naRow = spark.range(1).select(
+            lit(Constants.NaKey).as("segment_sk"), lit(Constants.NA).as("segment_nk")))
+      },
 
-    store.overwrite("dim_date",
-      DateDim.build(spark, Date.valueOf("1995-01-01"), Date.valueOf("2002-12-31")))
+      // SCD1 degenerate ORDER dim (reference Dim_Orders, bl_3nf.sql:113-122):
+      // order-grain, so it is FACT-SIZED at the 100 TB north star — the
+      // scalable surrogate path (distributed sort + zipWithIndex) replaces
+      // the single-task window ranking, and the fact re-keys through it
+      // with a plain shuffled join (M13 at fact scale).
+      "dim_orders" -> { () =>
+        val ordSrc = staged("orders")
+          .select(
+            col("o_orderkey").as("order_nk"),
+            col("o_orderstatus").as("order_status"),
+            col("o_orderpriority").as("order_priority"))
+        scd1Dim("dim_orders", ordSrc,
+          "order_sk", "order_nk",
+          naRow = spark.range(1).select(
+            lit(Constants.NaKey).as("order_sk"), lit(-1L).as("order_nk"),
+            lit(Constants.NA).as("order_status"), lit(Constants.NA).as("order_priority")),
+          scalable = true)
+      },
 
-    log("load_dims", store.read("dim_customer").count(), loadId)
+      "dim_date" -> (() =>
+        DateDim.build(spark, Date.valueOf("1995-01-01"), Date.valueOf("2002-12-31")))
+    ))(store.overwrite(_, _))
+
+    log(Seq("load_dims" -> rows("dim_customer")), loadId)
   }
 
   /** The SCD1 dim recipe shared by every non-versioned dimension: first
@@ -303,21 +345,17 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
     // narrow customer ranges, so row-group stats prune customer-filtered
     // scans (range repartition keeps writes parallel across the year —
     // a plain repartition(order_year) would collapse each year to one task)
-    store.append("fct_orders",
-      fact
+    val rows = counted(fact
         .repartitionByRange(col("order_year"), col("customer_nk"))
-        .sortWithinPartitions(col("order_year"), col("customer_nk")),
-      partitionBy = Seq("order_year"))
-    // count the written batch, not the plan — recomputing `fact` would run
-    // the whole join pipeline a second time
-    log("load_fact",
-      store.read("fct_orders").filter(col("load_id") === loadId.toString).count(),
-      loadId)
+        .sortWithinPartitions(col("order_year"), col("customer_nk"))) {
+      store.append("fct_orders", _, partitionBy = Seq("order_year"))
+    }
+    log(Seq("load_fact" -> rows), loadId)
   }
 
   /** Stage 4 — materialized analytics views (reference bl_dm.sql:274-300):
-    * recompute + atomic overwrite (S5). Year partition pruning applies to
-    * any year-bounded read of the fact.
+    * recompute + atomic overwrite (S5), the four views written together.
+    * Year partition pruning applies to any year-bounded read of the fact.
     */
   def refreshViews(): Unit = {
     val fact = store.read("fct_orders")
@@ -326,59 +364,62 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
     val joined = fact
       .join(broadcast(nat.select(col("nation_sk"), col("region_sk"))), Seq("nation_sk"), "left")
       .join(broadcast(reg.select(col("region_sk"), col("region_name"))), Seq("region_sk"), "left")
-    store.overwrite("yearly_sales_profit",
-      joined
+    writeAll(Seq(
+      "yearly_sales_profit" -> (() => joined
         .groupBy(col("order_year").cast(LongType).as("yr"),
           coalesce(col("region_name"), lit(Constants.NA)).as("region"))
         .agg(
           dsumRound2(col("revenue")).as("revenue"),
           dsumRound2(col("extendedprice") * col("discount")).as("discount_amt"),
           lcount().as("n_items"))
-        .orderBy(col("yr"), col("region")))
-    store.overwrite("sales_customer_region",
-      fact
+        .orderBy(col("yr"), col("region"))),
+
+      "sales_customer_region" -> (() => fact
         .join(broadcast(nat.select(col("nation_sk"), col("nation_name"))), Seq("nation_sk"), "left")
         .groupBy(col("customer_nk"),
           coalesce(col("nation_name"), lit(Constants.NA)).as("nation"))
-        .agg(dsumRound2(col("revenue")).as("revenue")))
-    // sales_employees_regions analog (reference bl_dm.sql:288-300, with the
-    // INTENDED region join — the wrong-key quirk lives in the bugcompat
-    // twin below): fact → active employee version → the 3-level surrogate
-    // snowflake chain employee.nation_sk → nation.region_sk → region (J8
-    // over warehouse tables), grouped by the SPLIT_PART-rebuilt full name
-    // (F14 concat of the F3 split). Employee dim is entity-count-sized —
-    // fact-scaled at the north star, so no broadcast hint (AQE promotes
-    // when it measures small); nation/region keep theirs.
-    val emp = store.read("dim_employee")
-      .filter(col(Scd2.IsActive) && col(Scd2.EndDt) === lit(Constants.HighDt))
-      .select(col("employee_nk"),
-        concat_ws(" ", col("first_name"), col("last_name")).as("employee_name"),
-        col("nation_sk").as("emp_nation_sk"))
-    store.overwrite("sales_employee_region",
-      fact
-        .join(emp, Seq("employee_nk"), "left")
-        .join(broadcast(nat.select(col("nation_sk").as("emp_nation_sk"),
-          col("region_sk").as("emp_region_sk"))), Seq("emp_nation_sk"), "left")
-        .join(broadcast(reg.select(col("region_sk").as("emp_region_sk"),
-          col("region_name"))), Seq("emp_region_sk"), "left")
-        .groupBy(col("employee_name"),
-          coalesce(col("region_name"), lit(Constants.NA)).as("region"))
-        .agg(dsumRound2(col("revenue")).as("revenue")))
-    // SURVEY §8 Q1 bug-compat twin: the reference's sales_employees_regions
-    // resolves the region by joining the child dim's PK to the region PK
-    // (dc.pk_country_id = dr.pk_region_id, bl_dm.sql:299) instead of the
-    // child's region FK. Reproduced verbatim in our key space — the fact's
-    // NATION surrogate joined to the REGION surrogate — so only the first
-    // |region| nation surrogates resolve (wrongly) and everything else
-    // lands on the NA member, exactly the reference's failure mode. The
-    // intended-join view above stays the default surface.
-    store.overwrite("sales_region_bugcompat",
-      fact
+        .agg(dsumRound2(col("revenue")).as("revenue"))),
+
+      // sales_employees_regions analog (reference bl_dm.sql:288-300, with the
+      // INTENDED region join — the wrong-key quirk lives in the bugcompat
+      // twin below): fact → active employee version → the 3-level surrogate
+      // snowflake chain employee.nation_sk → nation.region_sk → region (J8
+      // over warehouse tables), grouped by the SPLIT_PART-rebuilt full name
+      // (F14 concat of the F3 split). Employee dim is entity-count-sized —
+      // fact-scaled at the north star, so no broadcast hint (AQE promotes
+      // when it measures small); nation/region keep theirs.
+      "sales_employee_region" -> { () =>
+        val emp = store.read("dim_employee")
+          .filter(col(Scd2.IsActive) && col(Scd2.EndDt) === lit(Constants.HighDt))
+          .select(col("employee_nk"),
+            concat_ws(" ", col("first_name"), col("last_name")).as("employee_name"),
+            col("nation_sk").as("emp_nation_sk"))
+        fact
+          .join(emp, Seq("employee_nk"), "left")
+          .join(broadcast(nat.select(col("nation_sk").as("emp_nation_sk"),
+            col("region_sk").as("emp_region_sk"))), Seq("emp_nation_sk"), "left")
+          .join(broadcast(reg.select(col("region_sk").as("emp_region_sk"),
+            col("region_name"))), Seq("emp_region_sk"), "left")
+          .groupBy(col("employee_name"),
+            coalesce(col("region_name"), lit(Constants.NA)).as("region"))
+          .agg(dsumRound2(col("revenue")).as("revenue"))
+      },
+
+      // SURVEY §8 Q1 bug-compat twin: the reference's sales_employees_regions
+      // resolves the region by joining the child dim's PK to the region PK
+      // (dc.pk_country_id = dr.pk_region_id, bl_dm.sql:299) instead of the
+      // child's region FK. Reproduced verbatim in our key space — the fact's
+      // NATION surrogate joined to the REGION surrogate — so only the first
+      // |region| nation surrogates resolve (wrongly) and everything else
+      // lands on the NA member, exactly the reference's failure mode. The
+      // intended-join view above stays the default surface.
+      "sales_region_bugcompat" -> (() => fact
         .join(broadcast(reg.select(col("region_sk"), col("region_name"))),
           col("nation_sk") === col("region_sk"), "left")
         .groupBy(col("customer_nk").cast(LongType).as("customer_nk"),
           coalesce(col("region_name"), lit(Constants.NA)).as("region"))
         .agg(dsumRound2(col("revenue")).as("revenue")))
+    ))(store.overwrite(_, _))
   }
 
   /** Late-arriving dimension repair (the Kimball pattern the NA-member
@@ -411,10 +452,8 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
         // keep the repaired partitions' clustered layout (see loadFact)
         .repartitionByRange(col("order_year"), col("customer_nk"))
         .sortWithinPartitions(col("order_year"), col("customer_nk"))
-      store.replacePartitions("fct_orders", repaired, "order_year")
-      log("repair_late_fks",
-        store.read("fct_orders").filter(col("supplier_sk") === Constants.NaKey).count(),
-        loadId = -1)
+      val rows = counted(repaired)(store.replacePartitions("fct_orders", _, "order_year"))
+      log(Seq("repair_late_fks" -> rows), loadId = -1)
     }
   }
 
@@ -422,25 +461,26 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
   def qaReport(): DataFrame = {
     val tables = Seq("dim_region", "dim_nation", "dim_city", "dim_customer",
       "dim_supplier", "dim_brand", "dim_product", "dim_employee",
-      "dim_segment", "dim_orders", "dim_date", "fct_orders",
+      "dim_segment", "dim_orders", "dim_date",
       "yearly_sales_profit", "sales_employee_region")
       .map(t => t -> store.read(t)).toMap
     val sweep = QualityChecks.countSweep(tables)
     def scd2Check(name: String, table: String, key: String) = QualityChecks
-      .scd2ActiveViolations(store.read(table), Seq(key))
+      .scd2ActiveViolations(tables(table), Seq(key))
       .agg(count(lit(1)).cast(LongType).as("n"))
       .select(lit(name).as("tbl"), col("n"))
-    // the date re-key must be total: every fact order_date falls inside
-    // the generated dim range, so a -1 here means a broken re-key
-    val naDate = store.read("fct_orders")
-      .filter(col("date_sk") === Constants.NaKey)
-      .agg(count(lit(1)).cast(LongType).as("n"))
-      .select(lit("fct_na_date_sk").as("tbl"), col("n"))
+    // one pass over the (partitioned, so schema-inferring) fact gives its
+    // sweep row and the date re-key check: every fact order_date falls
+    // inside the generated dim range, so a -1 here means a broken re-key
+    val fact = store.read("fct_orders")
+      .agg(count(lit(1)).cast(LongType).as("rows"),
+        count(when(col("date_sk") === Constants.NaKey, 1)).cast(LongType).as("na"))
+      .selectExpr("stack(2, 'fct_orders', rows, 'fct_na_date_sk', na) AS (tbl, n)")
     sweep
       .unionByName(scd2Check("scd2_active_violations", "dim_customer", "customer_nk"))
       .unionByName(scd2Check("scd2_product_violations", "dim_product", "product_nk"))
       .unionByName(scd2Check("scd2_employee_violations", "dim_employee", "employee_nk"))
-      .unionByName(naDate)
+      .unionByName(fact)
   }
 
   /** C5 — full orchestration in dependency order. */
@@ -474,15 +514,50 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
   def table(name: String): DataFrame = store.read(name)
 }
 
-/** C4 — run logging (reference InsertLog, bl_3nf.sql:23-35). */
+/** C4 — run logging (reference InsertLog, bl_3nf.sql:23-35): `log_table`
+  * holds one (stage, rows, load_id, log_ts) row per logged outcome, where
+  * `rows` is what that stage's write committed — counted on the write
+  * itself, never by re-scanning the table. A Runner call appends all of its
+  * rows in one write, from the calling thread, after its writes finished.
+  */
 object Logging {
-  def append(store: TableStore, stage: String, rows: Long, loadId: Int): Unit = {
+  def append(store: TableStore, rows: Seq[(String, Long)], loadId: Int): Unit = {
     val spark = SparkSession.active
     store.append("log_table",
-      spark.range(1).select(
-        lit(stage).as("stage"),
-        lit(rows).as("rows"),
-        lit(loadId).as("load_id"),
-        current_timestamp().as("log_ts")))
+      spark.createDataFrame(rows.map { case (stage, n) => (stage, n, loadId) })
+        .toDF("stage", "rows", "load_id")
+        .withColumn("log_ts", current_timestamp()))
+  }
+}
+
+/** Runs the independent table writes of one [[Runner]] call together.
+  *
+  * Every task gets a fresh thread created by the caller, so it inherits
+  * the caller's Spark local properties — job group and description, on
+  * which per-call job accounting keys (a reused pool would keep whatever
+  * its threads inherited first) — and runs with the Runner's session as
+  * its active session. Spark's task slots bound the work, so a call's
+  * concurrency is just its number of writes. Every task has finished when
+  * this returns, even if the caller is interrupted meanwhile; the first
+  * failure in declared order is then rethrown as thrown, the exception a
+  * sequential loop would have raised first.
+  */
+private[pipeline] object Concurrent {
+  def apply[T](spark: SparkSession, tasks: Seq[() => T]): Seq[T] = {
+    val results = new Array[Try[T]](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => {
+        SparkSession.setActiveSession(spark)
+        results(i) = try Success(task()) catch { case e: Throwable => Failure(e) }
+      }, s"${Thread.currentThread.getName}-write-$i")
+    }
+    threads.foreach(_.start())
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
+    results.toSeq.map(_.get)
   }
 }

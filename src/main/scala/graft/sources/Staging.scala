@@ -91,17 +91,20 @@ object Staging {
     (aligned, batch.columns.filterNot(c => targetKeys(key(c))).toSeq)
   }
 
-  /** S2 — append the batch with lineage columns `Insert_Date` (formatted
+  /** S2 — the batch with lineage columns `Insert_Date` (formatted
     * timestamp string, F9) and `Load_id` (stringified batch id, F11).
+    */
+  def withLineage(batch: DataFrame, loadId: Int): DataFrame =
+    batch
+      .withColumn("Insert_Date", date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss"))
+      .withColumn("Load_id", lit(loadId.toString))
+
+  /** S2 + S3 — guard, then append the lineage-stamped batch. A caller that
+    * stages several tables as one load checks every guard first and
+    * appends [[withLineage]] itself, so no table lands before all pass.
     */
   def stageAppend(store: TableStore, table: String, batch: DataFrame, loadId: Int): Unit = {
     assertNotLoaded(store, table, loadId)
-    store.append(
-      table,
-      batch
-        .withColumn(
-          "Insert_Date",
-          date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss"))
-        .withColumn("Load_id", lit(loadId.toString)))
+    store.append(table, withLineage(batch, loadId))
   }
 }

@@ -2,8 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed layer tables with crash-safe overwrite (reference C6 —
   * per-procedure transactions; SURVEY.md §7.6.4).
@@ -40,26 +42,82 @@ final class TableStore(spark: SparkSession, root: String,
 
   private val manifestMode: Boolean = commit == TableStore.ManifestCommit
 
+  /** Per table, the data-file set of its last write by THIS instance and
+    * the schema those files were written with — see [[read]].
+    */
+  private val committed = new ConcurrentHashMap[String, (Set[String], StructType)]()
+
   def path(table: String): String = s"$root/$table"
 
   def exists(table: String): Boolean =
     if (manifestMode) currentManifest(table).exists(_.entries.nonEmpty)
     else {
-      recoverSwap(table)
-      recoverPartitions(table)
+      settle(table)
       Files.exists(Paths.get(path(table)))
     }
 
+  /** Reads the table's current version. Spark infers a parquet schema with
+    * a job per read; a version this instance provably committed skips it.
+    * The proof is the file set: part-file names carry a per-write UUID and
+    * files are never mutated, so a live data-file set equal to the one this
+    * instance recorded at its last write holds exactly the rows written
+    * with the recorded schema. A write by anyone else (another instance or
+    * process on this root, a rollback, a partition replace) changes the
+    * set and the read infers. Partitioned tables and manifest mode always
+    * infer.
+    */
   def read(table: String): DataFrame =
     if (manifestMode) {
       val m = currentManifest(table).getOrElse(
         throw new IllegalArgumentException(s"table $table does not exist"))
       readManifest(table, m)
     } else {
-      recoverSwap(table)
-      recoverPartitions(table)
-      spark.read.parquet(path(table))
+      settle(table)
+      val reader = Option(committed.get(table)) match {
+        case Some((files, schema)) if dataFiles(table).contains(files) =>
+          spark.read.schema(schema)
+        case _ => spark.read
+      }
+      reader.parquet(path(table))
     }
+
+  /** Runs both recovery sweeps. Serialized per store: the writes of one
+    * Runner call run concurrently, and two threads must never replay the
+    * same crash recovery's moves.
+    */
+  private def settle(table: String): Unit = synchronized {
+    recoverSwap(table)
+    recoverPartitions(table)
+  }
+
+  /** Names of the table's live data files, or None when the layout is
+    * partitioned (any subdirectory). A missing table has no files.
+    */
+  private def dataFiles(table: String): Option[Set[String]] = {
+    val live = Paths.get(path(table))
+    if (!Files.exists(live)) return Some(Set.empty)
+    val ls = Files.list(live)
+    val entries = try ls.toArray.map(_.asInstanceOf[Path]).toSeq finally ls.close()
+    if (entries.exists(Files.isDirectory(_))) None
+    else Some(entries.map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet)
+  }
+
+  /** Records the schema of a finished write, given the data files the
+    * table held before it (None for a partitioned write, which is never
+    * recorded). An append keeps the record only when every earlier file is
+    * this instance's, written with the same schema; otherwise, or when the
+    * write left no data file, the table goes back to inference.
+    */
+  private def remember(table: String, schema: StructType,
+      before: Option[Set[String]]): Unit = {
+    val own = before.exists(b => b.isEmpty ||
+      Option(committed.get(table)).contains((b, schema)))
+    dataFiles(table).filter(files => own && files.nonEmpty) match {
+      case Some(files) => committed.put(table, (files, schema))
+      case None => committed.remove(table)
+    }
+  }
 
   /** Recover from a crash inside [[overwrite]] / [[overwriteVersioned]] /
     * [[rollback]]'s swap window. Each of those moves the live directory
@@ -129,11 +187,12 @@ final class TableStore(spark: SparkSession, root: String,
         prev.map(_.entries).getOrElse(Nil) :+ MEntry(dir, None, None, Nil))
       return
     }
-    recoverSwap(table)
-    recoverPartitions(table)
+    settle(table)
+    val before = if (partitionBy.isEmpty) dataFiles(table) else None
     val w = df.write.mode(SaveMode.Append)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path(table))
+    remember(table, df.schema, before)
   }
 
   /** Atomic full overwrite: write temp, swap, drop old. */
@@ -150,12 +209,11 @@ final class TableStore(spark: SparkSession, root: String,
         prev.map(_.keep).getOrElse(0), entries)
       return
     }
-    recoverSwap(table)
     // settle parked partitions BEFORE replacing the table: a leftover
     // .old_part/ park from a crashed replacePartitions would otherwise
     // outlive this overwrite and a later recovery would "restore" the
     // stale partition into the brand-new table
-    recoverPartitions(table)
+    settle(table)
     val tmp = Paths.get(s"$root/.tmp_$table")
     deleteRecursively(tmp)
     val w = df.write.mode(SaveMode.Overwrite)
@@ -167,6 +225,7 @@ final class TableStore(spark: SparkSession, root: String,
     if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
+    remember(table, df.schema, if (partitionBy.isEmpty) Some(Set.empty) else None)
   }
 
   // --- Snapshot versioning (time travel / rollback) -----------------------
@@ -196,8 +255,7 @@ final class TableStore(spark: SparkSession, root: String,
       publishManifest(table, prev.map(_.id + 1).getOrElse(1L), keep, entries)
       return prev.map(_.id).getOrElse(0L)
     }
-    recoverSwap(table)
-    recoverPartitions(table)
+    settle(table)
     val tmp = Paths.get(s"$root/.tmp_$table")
     deleteRecursively(tmp)
     val w = df.write.mode(SaveMode.Overwrite)
@@ -212,6 +270,7 @@ final class TableStore(spark: SparkSession, root: String,
         StandardCopyOption.ATOMIC_MOVE)
     }
     Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
+    remember(table, df.schema, if (partitionBy.isEmpty) Some(Set.empty) else None)
     versions(table).dropRight(keep)
       .foreach(v => deleteRecursively(snapDir(table).resolve(s"v$v")))
     snapped
@@ -275,8 +334,7 @@ final class TableStore(spark: SparkSession, root: String,
     // never uses the temp, and leaving one parked would let a LATER
     // crash inside this method's swap window trick [[recoverSwap]] into
     // publishing the stale temp as the live table
-    recoverSwap(table)
-    recoverPartitions(table)
+    settle(table)
     deleteRecursively(Paths.get(s"$root/.tmp_$table"))
     val snap = snapDir(table).resolve(s"v$v")
     require(Files.exists(snap), s"$table has no snapshot v$v; have ${versions(table)}")

@@ -3,10 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.Date
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.pipeline.Runner
-import graft.sources.Tables
+import graft.sources.{TableStore, Tables}
 
 /** End-to-end pipeline (reference orchestrators C5 + guards S3/C1 +
   * QA E3) over the sf0.001 tables in a throwaway work dir.
@@ -175,13 +178,83 @@ class RunnerSpec extends SparkSpec {
       .collect().map(_.getLong(0)).forall(supSks))
   }
 
+  private val stagedTables = Seq("orders", "lineitem", "customer", "supplier", "part")
+
   test("duplicate load id is rejected (idempotence guard S3)") {
     val runner = newRunner()
     runner.stage(1)
+    def stagedRows = stagedTables.map(t => runner.table(s"scr_$t").count())
+    val before = stagedRows
     val e = intercept[IllegalStateException](runner.stage(1))
     assert(e.getMessage.contains("already loaded"))
+    assert(stagedRows == before, "a refused replay must leave every staged table unchanged")
     // a new batch id passes the guard
     runner.stage(2)
+  }
+
+  test("a full load with an empty third source writes no staged table (C1 before any write)") {
+    val src = Files.createTempDirectory("graft_c1_src").toString
+    try {
+      stagedTables.foreach { t =>
+        val df = Tables(spark, sfDir, t)
+        (if (t == "customer") df.limit(0) else df).write.parquet(s"$src/$t.parquet")
+      }
+      val work = Files.createTempDirectory("graft_c1_wh").toString
+      val e = intercept[IllegalArgumentException](new Runner(spark, src, work).stage(1))
+      assert(e.getMessage.contains("no data in the source: customer"))
+      val store = new TableStore(spark, work)
+      val written = stagedTables.filter(t => store.exists(s"scr_$t"))
+      assert(written.isEmpty, s"staged before the guard fired: $written")
+    } finally Tables.evictDir(src)
+  }
+
+  test("each staged table's S3 guard runs once per stage call") {
+    val runner = newRunner()
+    runner.stage(1)
+    // every table sliced: C1 is skipped, so the only emptiness probes left
+    // are the five duplicate-load guards
+    val probes = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "isEmpty") probes.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      runner.stage(2, stagedTables.map(t => t -> lit(true)).toMap)
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(probes.get == stagedTables.size)
+  }
+
+  test("log_table rows equal the rows each load committed (full and incremental)") {
+    val oneShot = newRunner()
+    oneShot.runAll(1, Date.valueOf("2024-01-01"))
+    val inc = newRunner()
+    inc.runIncremental(
+      Seq(
+        1 -> Map("orders" -> (col("o_orderkey") % 2 === 0),
+          "lineitem" -> (col("l_orderkey") % 2 === 0)),
+        2 -> Map("orders" -> (col("o_orderkey") % 2 === 1),
+          "lineitem" -> (col("l_orderkey") % 2 === 1))),
+      Date.valueOf("2024-01-01"))
+    for ((runner, loads) <- Seq(oneShot -> Seq(1), inc -> Seq(1, 2))) {
+      val logged = runner.table("log_table").collect()
+        .map(r => (r.getString(0), r.getInt(2)) -> r.getLong(1))
+      val committed = loads.flatMap { id =>
+        stagedTables.map(t => (s"stage_$t", id) ->
+          runner.table(s"scr_$t").filter(col("Load_id") === id.toString).count()) ++
+          Seq(
+            // the customer dim is the logged dim; later loads restage the
+            // same customers, so it commits the same rows every load
+            ("load_dims", id) -> runner.table("dim_customer").count(),
+            // range-partitioned write: a count below the repartition would
+            // see every row twice
+            ("load_fact", id) ->
+              runner.table("fct_orders").filter(col("load_id") === id.toString).count())
+      }
+      assert(logged.sortBy(_.toString).toSeq == committed.sortBy(_.toString))
+    }
   }
 
   test("second batch closes changed SCD2 customers instead of duplicating them") {

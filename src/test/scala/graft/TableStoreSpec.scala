@@ -438,6 +438,61 @@ class TableStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.readVersion("w", 2))
   }
 
+  // --- Schema reuse ---------------------------------------------------------
+
+  test("schema reuse: every table runAll writes reads with the inferred schema") {
+    val root = Files.createTempDirectory("graft_reuse").toString
+    val runner = new graft.pipeline.Runner(spark, sfDir, root)
+    runner.runAll(1, java.sql.Date.valueOf("2024-01-01"))
+    val tables = Files.list(Paths.get(root)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).sorted.toSeq
+    assert(tables.size == 22, s"runAll tables: $tables") // 21 warehouse tables + log_table
+    tables.foreach { t =>
+      val (df, jobs) = Jobs.during(spark)(runner.table(t))
+      val inferred = spark.read.parquet(s"$root/$t")
+      assert(df.schema == inferred.schema, t)
+      assert(df.count() == inferred.count(), t)
+      // the partitioned fact infers; every other table reuses its schema
+      assert(jobs.isEmpty == (t != "fct_orders"), s"$t: ${jobs.size} jobs")
+    }
+  }
+
+  test("schema reuse: another instance's write on the same root is read afresh") {
+    val root = Files.createTempDirectory("graft_reuse").toString
+    val a = new TableStore(spark, root)
+    val b = new TableStore(spark, root)
+    a.overwrite("t", Seq(1, 2).toDF("v"))
+    assert(Jobs.count(spark)(a.read("t")) == 0)
+    b.overwrite("t", Seq(("x", 7L)).toDF("name", "n"))
+    val got = a.read("t")
+    assert(got.schema.fieldNames.toSeq == Seq("name", "n"))
+    assert(got.as[(String, Long)].collect().toSeq == Seq(("x", 7L)))
+    // an append by the other instance also drops the record: the table
+    // now holds files this instance did not write
+    a.overwrite("u", Seq(1).toDF("v"))
+    b.append("u", Seq(2).toDF("v"))
+    assert(Jobs.count(spark)(a.read("u")) > 0)
+    assert(a.read("u").as[Int].collect().sorted.toSeq == Seq(1, 2))
+    // a same-schema append by the owner keeps reusing; a schema change infers
+    a.append("u2", Seq(1).toDF("v"))
+    a.append("u2", Seq(2).toDF("v"))
+    assert(Jobs.count(spark)(a.read("u2")) == 0)
+    a.append("u2", Seq(3L).toDF("v"))
+    assert(Jobs.count(spark)(a.read("u2")) > 0)
+  }
+
+  test("schema reuse: partitioned and manifest-mode tables still infer") {
+    val root = Files.createTempDirectory("graft_reuse").toString
+    val store = new TableStore(spark, root)
+    store.overwrite("p", Seq((1, 2020), (2, 2021)).toDF("v", "yr"), Seq("yr"))
+    store.append("q", Seq((1, 2020)).toDF("v", "yr"), Seq("yr"))
+    assert(Jobs.count(spark)(store.read("p")) > 0)
+    assert(Jobs.count(spark)(store.read("q")) > 0)
+    val (m, _) = manifestStore()
+    m.overwrite("t", Seq(1).toDF("v"))
+    assert(Jobs.count(spark)(m.read("t")) > 0)
+  }
+
   private def col(n: String) = org.apache.spark.sql.functions.col(n)
   private def lit(v: Any) = org.apache.spark.sql.functions.lit(v)
 }

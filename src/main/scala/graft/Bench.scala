@@ -5,8 +5,6 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully executed through a `noop`
   * write — unlike `count()`, that materializes every output column, so
@@ -109,7 +107,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // History and full-map files are SF-SCOPED: the driver's official runs
     // use sf0.1 and own the canonical names; a local iteration run at any
     // other sf gets suffixed files. Before this split, one local sf0.01
@@ -129,34 +126,7 @@ object Bench {
     // of 8, while still absorbing the ~872s shape a slow window produced
     // at 304 queries.
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "885").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scan parallelism derived from the CORE COUNT, not a byte
-      // constant (guide §6 / round-19 profiling): the harness tables are
-      // single ~1-11 MB parquet files, and the default 4 MB
-      // openCostInBytes floor packed e.g. lineitem's 600k rows into 3
-      // scan tasks on a 32-core box — every scan-bound query ran ≤ 10%
-      // utilized (q1's scan-agg stage wall 2.4 s at 3 tasks). 512 KB /
-      // minPartitionNum=cpus splits lineitem ~21 ways while leaving the
-      // sub-MB dims at 1-2 splits (a first cut at 256 KB / 2×cpus split
-      // everything ~42 ways and the M×R shuffle-block inflation, guide
-      // §2.2, regressed the shuffle-heavy small queries). minPartitionNum
-      // scales with SPARK_GRAFT_CPUS (a no-op at cluster scale, where
-      // files vastly outnumber cores); the open cost is env-tunable with
-      // a local-NVMe default — production object-store deployments keep
-      // Spark's 4 MB via SPARK_GRAFT_OPEN_COST.
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "524288"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "131072"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // Pass-1 order: cheapest-first by CUMULATIVE per-query timing history.

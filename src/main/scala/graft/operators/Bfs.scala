@@ -30,9 +30,8 @@ object Bfs {
     // materialized once: each relaxation round re-references adj; the
     // truncation keeps the upstream edge derivation from re-executing
     // per round (vocabulary-bounded frame)
-    val adj = und.select(col("u").as("c"), col("v").as("n"))
-      .unionAll(und.select(col("v").as("c"), col("u").as("n")))
-      .localCheckpoint()
+    val adj = Pin(und.select(col("u").as("c"), col("v").as("n"))
+      .unionAll(und.select(col("v").as("c"), col("u").as("n"))))
     var dist = und.sparkSession.range(1)
       .select(lit(source).cast(LongType).as("node"), lit(0L).as("dist"))
     for (i <- 1 to rounds) {
@@ -41,7 +40,7 @@ object Bfs {
           .join(dist.withColumnRenamed("node", "n"), Seq("n"))
           .select(col("c").as("node"), (col("dist") + 1).cast(LongType).as("dist")))
         .groupBy(col("node")).agg(min(col("dist")).cast(LongType).as("dist"))
-      if (i < rounds) dist = dist.localCheckpoint() // O(1) lineage per round
+      if (i < rounds) dist = Pin(dist) // O(1) lineage per round
     }
     dist
   }

@@ -109,7 +109,7 @@ object Bpe {
       // rounds would have contributed zero merge rows, so the output is
       // unchanged either way.
       if (r % 4 == 0 && r < rounds) {
-        v = v.localCheckpoint()
+        v = Pin(v)
         exhausted = top.isEmpty
       }
       r += 1

@@ -47,24 +47,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * (true of fixed-dim embedding arrays). On ragged input `zip_with`
   * null-pads the shorter side and the whole distance folds to NULL —
   * contract violations surface as NULL coverage rather than silently
-  * dropping rows. [[kCenters]] keeps the (vec_id, i, x) element-stream
-  * contract and pivots it to arrays in index order first. Output: one
-  * row per pick in selection order — (rnk, vec_id, radius) where
-  * radius is the pick's coverage distance (its min d² to the earlier
-  * picks, a round-12 DOUBLE from the exact decimal; NULL for the seed).
+  * dropping rows. Output: one row per pick in selection order —
+  * (rnk, vec_id, radius) where radius is the pick's coverage distance
+  * (its min d² to the earlier picks, a round-12 DOUBLE from the exact
+  * decimal; NULL for the seed).
   */
 object Coreset {
-
-  /** Element-stream entry — pivots (vec_id, i, x) to index-ordered
-    * arrays, then runs the array traversal. One keyed aggregate, only
-    * at entry; the k rounds themselves stay exchange-free.
-    */
-  def kCenters(el: DataFrame, k: Int): DataFrame =
-    kCentersOf(
-      el.groupBy(col("vec_id"))
-        .agg(array_sort(collect_list(struct(col("i"), col("x")))).as("__p"))
-        .select(col("vec_id"), expr("transform(__p, e -> e.x)").as("xs")),
-      k)
 
   def kCentersOf(vecs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"need at least one center, got $k")
@@ -103,7 +91,7 @@ object Coreset {
     // it (guide §2.4/§5 — don't recompute what every iteration
     // re-reads); this is the same corpus-element byte volume the
     // element-stream formulation checkpointed.
-    val vecsC = vecs.localCheckpoint()
+    val vecsC = Pin(vecs)
     // seed pick: the lowest id — its row already carries the elements
     val seedRows = vecsC.orderBy(col("vec_id")).limit(1).collect()
     if (seedRows.isEmpty)
@@ -112,9 +100,8 @@ object Coreset {
     def vecOf(row: Row): Array[Double] =
       row.getSeq[Double](1).toArray
     var picks = Vector[(Long, Long, java.math.BigDecimal)]((1L, seedId, null))
-    var scored = vecsC
-      .select(col("vec_id"), col("xs"), d2To(vecOf(seedRows.head)).as("mind2"))
-      .localCheckpoint()
+    var scored = Pin(vecsC
+      .select(col("vec_id"), col("xs"), d2To(vecOf(seedRows.head)).as("mind2")))
     for (r <- 2L to k.toLong) {
       // ONE collect per round: the argmax row is (vec_id, xs, mind2) —
       // rank r's pick, its coverage radius AND its center elements, no
@@ -130,10 +117,9 @@ object Coreset {
         val id = next.head.getLong(0)
         picks :+= ((r, id, next.head.getDecimal(2)))
         if (r < k)
-          scored = scored
+          scored = Pin(scored
             .select(col("vec_id"), col("xs"),
-              least(col("mind2"), d2To(vecOf(next.head))).as("mind2"))
-            .localCheckpoint()
+              least(col("mind2"), d2To(vecOf(next.head))).as("mind2")))
       }
     }
     present(spark.createDataFrame(

@@ -23,19 +23,6 @@ import graft.functions.TextAnalysis
   */
 object Dedup {
 
-  /** Lineage truncation for the iterative clustering loops. Defaults to
-    * `localCheckpoint` (executor-local blocks — fast, no infrastructure),
-    * which trades fault tolerance for speed: blocks live only on
-    * executors, so losing one mid-loop fails the job instead of
-    * recomputing. For fault-tolerant production runs, opt in to reliable
-    * checkpointing by setting a checkpoint dir
-    * (`spark.sparkContext.setCheckpointDir(...)`) — when one is set,
-    * rounds checkpoint to that (replicated/DFS) location instead.
-    */
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** Exact duplicate groups: md5(text) → representative id + group size. */
   def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
@@ -96,7 +83,7 @@ object Dedup {
       groupCol: String, n: Int = 3, minDf: Int = 3): DataFrame = {
     // sh feeds both the df aggregate and the per-source join leg:
     // checkpoint so the corpus shingle explode runs once, not twice
-    val sh = ckpt(shingleSet(docs, idCol, textCol, n))
+    val sh = Pin(shingleSet(docs, idCol, textCol, n))
     val boiler = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf).select(col("shingle"), lit(1).as("hit"))
     sh.join(docs.select(col(idCol), col(groupCol)), Seq(idCol))
@@ -297,7 +284,7 @@ object Dedup {
     * pathological case, and blowing it THROWS rather than silently
     * returning non-minimal labels.
     *
-    * Each round's inputs are `localCheckpoint`ed, not merely cached: a
+    * Each round's inputs are pinned ([[Pin]]), not merely cached: a
     * cache leaves the full logical plan in place, so round N re-plans
     * (and Janino-recompiles) the whole upstream LSH pipeline N times
     * over — measured as a >150s cold stall at sf0.1. Checkpointing
@@ -314,11 +301,11 @@ object Dedup {
     * component; only docs that appear in some pair are labeled.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    val edges = ckpt(pairs
+    val edges = Pin(pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     val idType = edges.schema("src").dataType
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
+    var labels = Pin(edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("cluster")))
     var converged = false
     var i = 0
@@ -329,7 +316,7 @@ object Dedup {
           lit(null).cast(idType).as("prev"))
       val own = labels.select(col("id"), col("cluster"),
         col("cluster").as("prev"))
-      val next = ckpt(own.union(neighborLabels)
+      val next = Pin(own.union(neighborLabels)
         .groupBy(col("id"))
         .agg(min(col("cluster")).as("cluster"), max(col("prev")).as("prev")))
       converged = next.filter(col("cluster") =!= col("prev")).limit(1).isEmpty
@@ -382,7 +369,7 @@ object Dedup {
     * At the fixed point the edges form stars (node → component min).
     */
   def dupClustersStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    var edges = ckpt(pairs
+    var edges = Pin(pairs
       .select(
         greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
@@ -406,7 +393,7 @@ object Dedup {
       // small-star over smaller-neighbor lists (all edges point small)
       val smins = afterLarge.groupBy(col("u"))
         .agg(min(col("v")).as("m"))
-      val afterSmall = ckpt(afterLarge.join(smins, Seq("u"))
+      val afterSmall = Pin(afterLarge.join(smins, Seq("u"))
         .select(col("v").as("a"), col("m"))
         .union(afterLarge.join(smins, Seq("u")).select(col("u").as("a"), col("m")))
         .filter(col("a") =!= col("m"))
@@ -565,7 +552,7 @@ object Dedup {
     // side: checkpoint it so a standalone call windows the corpus once,
     // not twice (catalog consumers pass a persisted shared frame instead)
     duplicatedSpanCoverageFromOcc(docs,
-      ckpt(spanOccurrences(docs, idCol, textCol, l)), idCol, textCol, l)
+      Pin(spanOccurrences(docs, idCol, textCol, l)), idCol, textCol, l)
 
   /** [[duplicatedSpanCoverage]] over an existing occurrence frame. */
   def duplicatedSpanCoverageFromOcc(docs: DataFrame, occ: DataFrame,
@@ -779,7 +766,7 @@ object Dedup {
     // Callers that can tell large-scale from a frame they have already
     // materialized (the PPJoin's prefix index) branch without this
     // count — see prefixJaccardPairsFrom.
-    val p = ckpt(pairs)
+    val p = Pin(pairs)
     if (p.count() < 65536)
       jaccardForPairs(shingles, idCol, p)
         .filter(col("jaccard") >= threshold)
@@ -793,7 +780,7 @@ object Dedup {
     * `pairs` is consumed by the candDoc derivation and the survivors
     * scoring join, and `survivors` feeds [[jaccardForPairs]] which
     * consumes its pairs three more times — both are checkpointed (the
-    * caller's `pairs` contract + the ckpt below) so the candidate join
+    * caller's `pairs` contract + the pin below) so the candidate join
     * never re-runs (~5× re-derivation before r17's fix).
     */
   private def prefilteredVerify(shingles: DataFrame, idCol: String,
@@ -804,7 +791,7 @@ object Dedup {
     val hashArrays = shingles.join(candDocs, Seq(idCol), "left_semi")
       .groupBy(col(idCol))
       .agg(collect_set(xxhash64(col("shingle"))).as("arr"))
-    val survivors = ckpt(p
+    val survivors = Pin(p
       .join(hashArrays.select(col(idCol).as("doc_a"), col("arr").as("__ha")),
         Seq("doc_a"))
       .join(hashArrays.select(col(idCol).as("doc_b"), col("arr").as("__hb")),
@@ -891,20 +878,18 @@ object Dedup {
     */
   def prefixJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: BigDecimal, shingleN: Int = 3): DataFrame = {
-    // validate BEFORE the ckpt below: an invalid threshold must fail
+    // validate BEFORE the pin below: an invalid threshold must fail
     // fast, not after materializing a full corpus shingle checkpoint
     // (prefixRanked/prefixJaccardPairsFrom re-check, but only after the
-    // eager ckpt has already run)
+    // eager pin has already run)
     require(threshold > 0 && threshold <= 1,
       s"prefix filtering needs 0 < threshold <= 1, got $threshold")
     // the shingle set feeds the df agg, the ranked frame, and the verify
     // join's three legs; the ranked frame feeds both candidate sides.
     // checkpoint each once instead of re-shingling / re-windowing the
-    // corpus per consumer (same tradeoff note as the clustering loops:
-    // executor-local blocks unless a reliable checkpoint dir is
-    // configured)
-    val sh = ckpt(shingleSet(docs, idCol, textCol, shingleN))
-    val ranked = ckpt(prefixRanked(sh, idCol, threshold))
+    // corpus per consumer (see Pin for the checkpoint tradeoff)
+    val sh = Pin(shingleSet(docs, idCol, textCol, shingleN))
+    val ranked = Pin(prefixRanked(sh, idCol, threshold))
     prefixJaccardPairsFrom(sh, ranked, idCol, threshold)
   }
 
@@ -1045,9 +1030,9 @@ object Dedup {
     // too; this branch only runs when the candidate set is small, so the
     // pinned state is bounded by exactly the condition that chose it.
     if (ranked.count() < 160000)
-      jaccardForPairs(sh, idCol, ckpt(cands))
+      jaccardForPairs(sh, idCol, Pin(cands))
         .filter(col("jaccard") >= threshold.toDouble)
-    else prefilteredVerify(sh, idCol, ckpt(cands), threshold.toDouble)
+    else prefilteredVerify(sh, idCol, Pin(cands), threshold.toDouble)
   }
 
   /** SimHash (64-bit) per document over its token set: per bit position,
@@ -1507,9 +1492,9 @@ object Dedup {
         // route through the remainder re-key; the key set is tiny (at
         // most segRows / hotSegDf) and eagerly pinned so the three joins
         // against it don't recompute the aggregation
-        val hotKeys = segs.groupBy(col("kk"))
+        val hotKeys = Pin(segs.groupBy(col("kk"))
           .agg(count(lit(1)).as("__df")).filter(col("__df") > hotSegDf)
-          .select(col("kk")).localCheckpoint()
+          .select(col("kk")))
         if (hotKeys.isEmpty) {
           // no bucket over the cap (the overwhelmingly common corpus):
           // skip the anti-join and the hot machinery entirely — the only

@@ -42,11 +42,9 @@ object Hits {
     // vocabulary-bounded frames once (node/edge-sized — the same bound
     // the Scale-shape note below relies on) and every later reference
     // reads the stored blocks; identical values, linear plan.
-    val e = edges.select(col("src"), col("dst"), col("w").cast(LongType).as("w"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e = Pin(edges.select(col("src"), col("dst"), col("w").cast(LongType).as("w")))
+    val nodes = Pin(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     // raw → normalized: every node present (missing raw = 0), one 1-row
     // broadcast max frame, truncating integer division on positives
     def normalize(raw: DataFrame): DataFrame =
@@ -57,16 +55,14 @@ object Hits {
     var hub = nodes.select(col("node"), lit(base).as("s"))
     var auth = hub
     for (_ <- 1 to iters) {
-      auth = normalize(
+      auth = Pin(normalize(
         e.join(hub.withColumnRenamed("node", "src"), Seq("src"))
           .groupBy(col("dst").as("node"))
-          .agg(sum(col("s").cast("decimal(38,0)") * col("w")).as("r")))
-        .localCheckpoint()
-      hub = normalize(
+          .agg(sum(col("s").cast("decimal(38,0)") * col("w")).as("r"))))
+      hub = Pin(normalize(
         e.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
           .groupBy(col("src").as("node"))
-          .agg(sum(col("s").cast("decimal(38,0)") * col("w")).as("r")))
-        .localCheckpoint()
+          .agg(sum(col("s").cast("decimal(38,0)") * col("w")).as("r"))))
     }
     auth.withColumnRenamed("s", "auth")
       .join(hub.withColumnRenamed("s", "hub"), Seq("node"))

@@ -42,9 +42,8 @@ object LabelProp {
     // materialized once: every round's vote join re-references adj, so
     // without truncation the upstream edge derivation re-executes per
     // round (vocabulary-bounded frame, same budget as the labels)
-    val adj = und.select(col("u").as("c"), col("v").as("n"))
-      .unionAll(und.select(col("v").as("c"), col("u").as("n")))
-      .localCheckpoint()
+    val adj = Pin(und.select(col("u").as("c"), col("v").as("n"))
+      .unionAll(und.select(col("v").as("c"), col("u").as("n"))))
     val nodes = adj.select(col("c").as("node")).distinct()
     var labels = nodes.select(col("node"), col("node").cast(LongType).as("label"))
     for (i <- 1 to rounds) {
@@ -59,8 +58,8 @@ object LabelProp {
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).cast(LongType).as("label"))
       // cut the per-round lineage growth exactly as the clustering loops
-      // do (executor-local blocks; see Dedup.dupClusters's tradeoff note)
-      if (i < rounds) labels = labels.localCheckpoint()
+      // do (see Pin for the checkpoint tradeoff)
+      if (i < rounds) labels = Pin(labels)
     }
     labels
   }

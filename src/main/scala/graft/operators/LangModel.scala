@@ -32,10 +32,6 @@ import graft.functions.TextAnalysis
   */
 object LangModel {
 
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** Bigram transition model: (prev, cur, n_pair, n_prev) with exact
     * integer counts, from whitespace-tokenized `textCol`.
     */
@@ -102,7 +98,7 @@ object LangModel {
     // pair aggregate (Prof r20: two duplicated ~7 s-task-time stages).
     // The frame is MODEL-sized (vocab²-bounded), so pinning it is O(|V|²)
     // state, not O(corpus) — the safe side of the checkpoint trade.
-    val cPair = ckpt(transitions(train, idCol = null, textCol)
+    val cPair = Pin(transitions(train, idCol = null, textCol)
       .groupBy(col("prev"), col("cur"))
       .agg(count(lit(1)).cast(LongType).as("n_pair")))
     val cPrev = cPair.groupBy(col("prev"))
@@ -145,7 +141,7 @@ object LangModel {
     // ONE exploded pass: training and scoring both read the checkpointed
     // id-carrying transitions (the explode over the corpus IS the cost —
     // re-deriving it for the model doubled the query)
-    val trans = ckpt(transitions(docs, idCol, textCol))
+    val trans = Pin(transitions(docs, idCol, textCol))
     val model = modelFromTransitions(trans)
     trans
       .join(model, Seq("prev", "cur"))

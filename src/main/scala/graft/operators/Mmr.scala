@@ -29,11 +29,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * O(poolSize²) decimals by construction, the same bounded-collect class
   * as the k-means seeding paths.
   *
-  * Input `el`: the dense element stream (vec_id, i, x double) — same
-  * contract as [[Coreset.kCenters]]. Output: one row per pick in
-  * selection order — (rnk, vec_id, rel_d2, div_d2) where rel_d2 is the
-  * pick's d² to the query and div_d2 its min d² to the earlier picks
-  * (NULL for the first), both round-12 doubles cast by the ENGINE.
+  * Input `el`: the dense element stream (vec_id, i, x double) — every
+  * vector carries the same index set, the element form of
+  * [[Coreset.kCentersOf]]'s dense array contract. Output: one row per
+  * pick in selection order — (rnk, vec_id, rel_d2, div_d2) where rel_d2
+  * is the pick's d² to the query and div_d2 its min d² to the earlier
+  * picks (NULL for the first), both round-12 doubles cast by the ENGINE.
   */
 object Mmr {
 
@@ -88,7 +89,8 @@ object Mmr {
       pd.getOrElse((math.min(x, y), math.max(x, y)),
         throw new IllegalArgumentException(
           s"pool pair ($x, $y) shares no element rows — Mmr.rerank " +
-            "requires the dense element contract (see Coreset.kCenters)"))
+            "requires the dense element contract (every vector carries " +
+            "the same indices)"))
 
     // greedy: pick 1 = pure relevance argmin; pick r = argmax over the
     // remaining pool of (min d² to selected) − (d² to query), ties to

@@ -47,14 +47,12 @@ object PageRank {
     // then re-referenced by every round's join — without truncation the
     // upstream edge extraction re-plans and re-executes 4+ times (all these
     // frames are the vocabulary-bounded graph, tiny relative to the raw feed)
-    val e0 = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint()
+    val e0 = Pin(edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     val outW = e0.groupBy(col("src"))
       .agg(sum(col("w")).cast("long").as("outw"))
-    val e = e0.join(outW, Seq("src")).localCheckpoint()
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val e = Pin(e0.join(outW, Seq("src")))
+    val nodes = Pin(e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct())
     var rank = nodes.select(col("node"), lit(baseRank).as("rank"))
     for (_ <- 1 to iters) {
       val inbound = e.join(rank.withColumnRenamed("node", "src"), Seq("src"))
@@ -95,12 +93,11 @@ object PageRank {
     require(dampNum >= 0 && dampDen > dampNum,
       s"damping must satisfy 0 <= num < den, got $dampNum/$dampDen")
     val teleport = baseRank * (dampDen - dampNum) / dampDen
-    val e0 = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint()
+    val e0 = Pin(edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
     val outW = e0.groupBy(col("src"))
       .agg(sum(col("w")).cast("long").as("outw"))
-    val e = e0.join(outW, Seq("src")).localCheckpoint()
-    val nodes = e0.select(col("src").as("node"))
+    val e = Pin(e0.join(outW, Seq("src")))
+    val nodes = Pin(e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
       .join(broadcast(seeds.select(col("node")).distinct()
         .withColumn("__seed", lit(1))), Seq("node"), "left")
@@ -108,8 +105,7 @@ object PageRank {
         when(col("__seed").isNotNull, lit(teleport)).otherwise(lit(0L))
           .as("tele"),
         when(col("__seed").isNotNull, lit(baseRank)).otherwise(lit(0L))
-          .as("r0"))
-      .localCheckpoint()
+          .as("r0")))
     var rank = nodes.select(col("node"), col("r0").as("rank"))
     for (_ <- 1 to iters) {
       val inbound = e.join(rank.withColumnRenamed("node", "src"), Seq("src"))

@@ -39,11 +39,10 @@ object SequencePack {
     // executions of a range shuffle are only as consistent as the range
     // sampler — localCheckpoint removes the assumption entirely (the
     // pinned data is just the two narrow columns, not the documents)
-    val base = docs
+    val base = Pin(docs
       .select(col(idCol), col(nTokensCol).cast(LongType).as("n_tokens"))
       .repartitionByRange(col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("pid", spark_partition_id()))
     // one row per partition: (pid, partition token subtotal)
     val subtotals = base.groupBy(col("pid"))
       .agg(sum(col("n_tokens")).as("t"))

@@ -423,15 +423,12 @@ object Similarity {
 
   /** Top principal direction of the (uncentered) second moment by
     * `rounds` power-iteration steps — x ← XᵀXx, max-abs normalized —
-    * over an element stream `el` = (vec_id, i, x double). Never
-    * materializes the d×d Gram matrix: each round is two keyed
-    * aggregates (row-space pass s(doc) = ⟨v_doc, x⟩ against the
-    * broadcast d-row direction frame; dim-space pass
-    * y(i) = Σ_doc s·v_doc[i]), so the plan scales with nnz(X) — the
-    * classic distributed power iteration. Every accumulation is
-    * DECIMAL(38,18) and every normalization a round-12 division, so the
-    * whole iteration is replayable bit-for-bit by an external SQL
-    * engine (the `embed_pca_power` oracle unrolls it as CTEs).
+    * over `vecs` = (vec_id, xs array<double>), DENSE contract (index =
+    * array position). Never materializes the d×d Gram matrix. Every
+    * accumulation is DECIMAL(38,18) and every normalization a round-12
+    * division, so the whole iteration is replayable bit-for-bit by an
+    * external SQL engine (the `embed_pca_power` oracle unrolls it as
+    * CTEs).
     *
     * Convergence is gap-dependent (error ∝ (λ₂/λ₁)^rounds): planted
     * dominant directions lock in within a few rounds, near-isotropic
@@ -439,21 +436,11 @@ object Similarity {
     * expect. Output: (i, v, growth) — the round-12 direction with peak
     * coordinate ±1 and the final max-abs growth factor (the λ₁
     * estimate under max-abs normalization) on every row.
-    */
-  def powerIteration(el: DataFrame, rounds: Int): DataFrame =
-    powerIterationOf(
-      el.groupBy(col("vec_id"))
-        .agg(array_sort(collect_list(struct(col("i"), col("x")))).as("__p"))
-        .select(col("vec_id"), expr("transform(__p, e -> e.x)").as("xs")),
-      rounds)
-
-  /** Array-frame power iteration — `vecs` = (vec_id, xs array<double>),
-    * DENSE contract (index = array position; [[powerIteration]] pivots
-    * the element-stream form to this in index order). The row-space
-    * pass s(doc) = ⟨v_doc, x⟩ is an IN-ROW `zip_with` + exact decimal
-    * fold against the direction as an ARRAY LITERAL (d doubles of
-    * driver state — the same bound as the k-means seeding paths), so a
-    * round has no join and no corpus-keyed shuffle at all: the only
+    *
+    * The row-space pass s(doc) = ⟨v_doc, x⟩ is an IN-ROW `zip_with` +
+    * exact decimal fold against the direction as an ARRAY LITERAL (d
+    * doubles of driver state — the same bound as the k-means seeding
+    * paths), so a round has no join and no corpus-keyed shuffle at all: the only
     * exchange is the dim-space aggregate y(i) = Σ_doc s·v_doc[i], whose
     * map-side partial reduces each task to d rows. The r19 formulation
     * broadcast-joined the direction frame, shuffled a corpus-row
@@ -499,25 +486,16 @@ object Similarity {
         round(col("m"), 12).as("growth"))
   }
 
-  /** Packed sign-bit signatures over an element stream
-    * (vec_id, i 0-based, x double): one row per (vec_id, 32-dim half)
-    * with the BIGINT word whose bit (i mod 32) is set iff x ≥ 0 — the
-    * 1-bit quantization storage form, dim/8 bytes per vector (two words
-    * per 64-dim vector; a single 64-bit word would wrap the signed bit).
-    * Engine-portable: packing is integer shifts + a conditional sum.
-    */
-  def bqSignWords(el: DataFrame): DataFrame =
-    el.groupBy(col("vec_id"), expr("CAST(i div 32 AS BIGINT)").as("half"))
-      .agg(sum(when(col("x") >= 0,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(i % 32 AS INT))"))
-        .otherwise(0L)).cast(LongType).as("w"))
-
-  /** [[bqSignWords]] over an array frame (vec_id, xs array<double>),
-    * DENSE contract (index = array position): the packing is an IN-ROW
-    * integer fold per 32-dim half — no element rows, no per-vector
-    * aggregate, no exchange. Bit-identical to the element form: for
-    * i ∈ [32h, 32h+32) the slice-local index idx = i − 32h = i mod 32,
-    * and a sum of distinct powers of two equals the element SUM exactly.
+  /** Packed sign-bit signatures over an array frame
+    * (vec_id, xs array<double>), DENSE contract (index = array
+    * position): one row per (vec_id, 32-dim half) with the BIGINT word
+    * whose bit (i mod 32) is set iff x ≥ 0 — the 1-bit quantization
+    * storage form, dim/8 bytes per vector (two words per 64-dim vector;
+    * a single 64-bit word would wrap the signed bit). The packing is an
+    * IN-ROW integer fold per 32-dim half — no element rows, no
+    * per-vector aggregate, no exchange: for i ∈ [32h, 32h+32) the
+    * slice-local index idx = i − 32h = i mod 32, and a sum of distinct
+    * powers of two is engine-portable (integer shifts + a sum).
     */
   def bqSignWordsOf(vecs: DataFrame): DataFrame =
     vecs
@@ -534,30 +512,23 @@ object Similarity {
           .stripMargin)).as("e"))
       .select(col("vec_id"), col("e.half").as("half"), col("e.w").as("w"))
 
-  /** Binary-quantization candidate screen: each query's `nCand` nearest
-    * corpus vectors by EXACT sign-bit Hamming distance (XOR + popcount
-    * over the packed words, summed across halves), ties to the lower id
-    * — ranked through the bounded heap, no window. `queryPred` selects
-    * the query rows OUT OF the signature frame (they must be corpus
-    * members, the harness convention). Returns (qid, nid) pairs for an
-    * exact rerank stage.
+  /** Binary-quantization candidate screen over an array frame
+    * ([[bqSignWordsOf]]'s input): each query's `nCand` nearest corpus
+    * vectors by EXACT sign-bit Hamming distance (XOR + popcount over the
+    * packed words, summed across halves), ties to the lower id — ranked
+    * through the bounded heap, no window. `queryPred` selects the query
+    * rows OUT OF the signature frame (they must be corpus members, the
+    * harness convention). Returns (qid, nid) pairs for an exact rerank
+    * stage.
     */
-  def bqCandidates(el: DataFrame, queryPred: Column, nCand: Int): DataFrame =
-    bqCandidatesFromSig(bqSignWords(el), queryPred, nCand)
-
-  /** [[bqCandidates]] over an array frame ([[bqSignWordsOf]]'s input). */
-  def bqCandidatesOf(vecs: DataFrame, queryPred: Column, nCand: Int): DataFrame =
-    bqCandidatesFromSig(bqSignWordsOf(vecs), queryPred, nCand)
-
-  private def bqCandidatesFromSig(sigRaw: DataFrame, queryPred: Column,
-      nCand: Int): DataFrame = {
+  def bqCandidatesOf(vecs: DataFrame, queryPred: Column, nCand: Int): DataFrame = {
     // materialize the signature frame once: the broadcast query side and
     // the corpus probe side both consume it, and a broadcast consumer
     // does not reuse a shuffle consumer's exchange — without this the
     // corpus-sized signature build (the operator's dominant stage)
     // runs twice. The frame is 2 rows/vector of BIGINTs — the compressed
     // index itself, cheap to pin.
-    val sig = sigRaw.localCheckpoint()
+    val sig = Pin(bqSignWordsOf(vecs))
     val q = sig.filter(queryPred)
       .select(col("vec_id").as("qid"), col("half"), col("w").as("wq"))
     val ham = broadcast(q).join(

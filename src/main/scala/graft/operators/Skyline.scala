@@ -47,9 +47,8 @@ object Skyline {
     // pin the range partitioning: spark_partition_id is recompute-
     // dependent (range bounds come from sampling), and the per-partition
     // max frame and the sweep must see the SAME assignment
-    val parted = cand.repartitionByRange(nRanges, col(xCol).desc)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val parted = Pin(cand.repartitionByRange(nRanges, col(xCol).desc)
+      .withColumn("__pid", spark_partition_id()))
     // exclusive prefix max across partitions: nRanges rows, bounded
     val byPid = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -402,9 +402,8 @@ object Stats {
   private def cumCounts(per: DataFrame, nRanges: Int): DataFrame = {
     // pin the range partitioning (sampling-dependent) — subtotals and
     // the sweep must see the same assignment
-    val parted = per.repartitionByRange(nRanges, col("__x"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+    val parted = Pin(per.repartitionByRange(nRanges, col("__x"))
+      .withColumn("__pid", spark_partition_id()))
     val byPid = org.apache.spark.sql.expressions.Window.orderBy(col("__pid"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val prefix = parted.groupBy(col("__pid"))

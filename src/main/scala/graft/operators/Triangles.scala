@@ -59,18 +59,15 @@ object Triangles {
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    def ckpt(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     def degrees(und: DataFrame): DataFrame =
       und.select(col("u").as("node"))
         .unionAll(und.select(col("v").as("node")))
         .groupBy(col("node"))
         .agg(count(lit(1)).cast(LongType).as("deg"))
-    var und = ckpt(undirected(edges))
+    var und = Pin(undirected(edges))
     for (_ <- 1 to rounds) {
       val keep = degrees(und).filter(col("deg") >= k).select(col("node"))
-      und = ckpt(und
+      und = Pin(und
         .join(keep.select(col("node").as("u")), Seq("u"))
         .join(keep.select(col("node").as("v")), Seq("v"))
         .select(col("u"), col("v")))

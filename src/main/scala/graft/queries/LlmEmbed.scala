@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.functions.Cleaning.lcount
-import graft.operators.Similarity
+import graft.operators.{Pin, Similarity}
 import graft.sources.{Frames, Tables}
 import graft.queries.Q.C
 
@@ -52,7 +52,7 @@ object LlmEmbed {
     * 18th digit per step). Headroom 10¹⁹ int digits, same
     * overflow-to-NULL past it as the SUM had. The in-row form of the
     * pinned element lattice — no explode, no per-vector aggregate, no
-    * exchange (the Coreset/powerIteration move, applied to the portable
+    * exchange (the kCentersOf/powerIterationOf move, applied to the portable
     * ANN family).
     */
   private val dec37 = DecimalType(37, 18)
@@ -1149,12 +1149,11 @@ object LlmEmbed {
     // normalization branches, the margin join, the final ranking) would
     // otherwise each re-run the element join. The pinned data is
     // batch × pool rows (bounded × linear), never pool².
-    val cosd = dots
+    val cosd = Pin(dots
       .join(norms(srcEl).select(col("vec_id").as("qid"), col("n2").as("na")), Seq("qid"))
       .join(norms(tgtEl).select(col("vec_id").as("tid"), col("n2").as("nb")), Seq("tid"))
       .select(col("qid"), col("tid"),
-        round(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 12).as("c"))
-      .localCheckpoint()
+        round(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 12).as("c")))
     // Both top-4 normalization terms and the final argmax are bounded-
     // heap / max_by aggregates, not row_number windows: cosd is
     // |src|×|tgt| rows, and partitioning it by qid funnels the whole
@@ -1826,7 +1825,7 @@ object LlmEmbed {
   }
 
   /** Greedy k-center coreset selection over the embedding corpus
-    * ([[graft.operators.Coreset.kCenters]], Gonzalez farthest-point —
+    * ([[graft.operators.Coreset.kCentersOf]], Gonzalez farthest-point —
     * a 2-approximation of the optimal k-center cover): 8 picks in
     * selection order with their coverage radii — the diverse-subset
     * primitive (coverage-maximizing data selection, eval seeding,

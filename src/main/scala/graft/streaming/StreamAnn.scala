@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.Similarity
+import graft.operators.{Pin, Similarity}
 import graft.sources.TableStore
 
 /** Streaming ANN index maintenance — the streaming face of
@@ -73,7 +73,7 @@ object StreamAnn {
             (sqrt(col("n2")) * sqrt(col("n2c"))), 12).as("cs"))
       val w = Window.partitionBy(col("vec_id"))
         .orderBy(col("cs").desc, col("cid"))
-      val ranked = scored.withColumn("r", row_number().over(w)).localCheckpoint()
+      val ranked = Pin(scored.withColumn("r", row_number().over(w)))
       val home = ranked.filter(col("r") === 1)
         .select(col("vec_id"), col("cid"), col("v"))
       val probes = ranked.filter(col("r") <= probe)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Pin}
 import graft.sources.TableStore
 
 /** Streaming deduplication at ingest.
@@ -104,8 +104,7 @@ object StreamDedup {
     val lastApplied = store.lastAppliedBatch(spanTable)
     if (batchId > lastApplied) {
       // window once; the occurrences feed the dup join AND the count store
-      val newOcc = Dedup.spanOccurrences(batch, idCol, textCol, l)
-        .localCheckpoint()
+      val newOcc = Pin(Dedup.spanOccurrences(batch, idCol, textCol, l))
       val oldCounts =
         if (!store.exists(spanTable))
           Dedup.spanCountStoreFromOcc(newOcc).limit(0)
@@ -171,10 +170,8 @@ object StreamDedup {
     val lastApplied = store.lastAppliedBatch(prefixTable)
     if (batchId > lastApplied) {
       // shingle + rank ONCE per batch; both feed joins and the stores
-      val newSh = Dedup.shingleSet(batch, idCol, textCol, shingleN)
-        .localCheckpoint()
-      val newRanked = Dedup.prefixRankedStable(newSh, idCol, threshold)
-        .localCheckpoint()
+      val newSh = Pin(Dedup.shingleSet(batch, idCol, textCol, shingleN))
+      val newRanked = Pin(Dedup.prefixRankedStable(newSh, idCol, threshold))
       val oldRanked =
         if (store.exists(prefixTable)) store.read(prefixTable).drop("__applied")
         else newRanked.limit(0)
@@ -258,23 +255,21 @@ object StreamDedup {
     require(d >= 1, s"maxDist must be >= 1, got $d")
     val lastApplied = store.lastAppliedBatch(strTable)
     if (batchId > lastApplied) {
-      val newDocs = batch
-        .select(col(idCol).as("__id"), col(strCol).as("__s"))
-        .localCheckpoint()
+      val newDocs = Pin(batch
+        .select(col(idCol).as("__id"), col(strCol).as("__s")))
       // the doc store is the marker table (written LAST), so it can
       // never hold partitions beyond lastApplied — no crash filter here
       val oldDocs =
         if (store.exists(strTable)) store.read(strTable).drop("__applied")
         else newDocs.limit(0)
-      val batchBase = Dedup.editBase(newDocs.select(col("__s")))
-        .localCheckpoint()
+      val batchBase = Pin(Dedup.editBase(newDocs.select(col("__s"))))
       val oldVals = oldDocs.select(col("__s")).distinct()
       val oldBase = oldVals.select(col("__s"), length(col("__s")).as("__len"))
       // segment only the truly-new values: the segment key is value-
       // derived and immutable, so history is never re-segmented and a
       // value re-arriving under a new doc id appends nothing
       val freshBase = batchBase.join(oldVals, Seq("__s"), "left_anti")
-      val newSegs = Dedup.editSegs(freshBase, d).localCheckpoint()
+      val newSegs = Pin(Dedup.editSegs(freshBase, d))
       // a crashed attempt of THIS batch may have landed its segment
       // partition (segments commit before the marker): exclude it — the
       // refold recomputes and replaces that partition
@@ -386,8 +381,7 @@ object StreamDedup {
     val lastApplied = store.lastAppliedBatch(sigTable)
     if (batchId > lastApplied) {
       // only the batch is token-hashed; one row per doc
-      val newSig = Dedup.simhashPortable(batch, idCol, textCol)
-        .localCheckpoint()
+      val newSig = Pin(Dedup.simhashPortable(batch, idCol, textCol))
       val oldSig =
         if (store.exists(sigTable)) store.read(sigTable).drop("__applied")
         else newSig.limit(0)
@@ -464,9 +458,8 @@ object StreamDedup {
       val oldBands =
         if (store.exists(bandTable)) store.read(bandTable).drop("__applied")
         else batchBands.limit(0)
-      val newBands = batchBands
-        .join(oldBands, Seq(idCol, "band", "band_key"), "left_anti")
-        .localCheckpoint()
+      val newBands = Pin(batchBands
+        .join(oldBands, Seq(idCol, "band", "band_key"), "left_anti"))
       // current labeling = latest delta per doc; a crashed attempt of
       // THIS batch may have landed its delta partition (deltas commit
       // before the marker) — exclude it, the refold replaces it
@@ -541,9 +534,8 @@ object StreamDedup {
         if (store.exists(bandTable)) store.read(bandTable).drop("__applied")
         else batchBands.limit(0)
       // shingle once; the deduped bands feed the join AND the store
-      val newBands = batchBands
-        .join(oldBands, Seq(idCol, "band", "band_key"), "left_anti")
-        .localCheckpoint()
+      val newBands = Pin(batchBands
+        .join(oldBands, Seq(idCol, "band", "band_key"), "left_anti"))
       val allBands = oldBands.unionByName(newBands)
       val newPairs = Dedup.incrementalCandidatePairs(allBands, newBands, idCol)
         .withColumn("__batch", lit(batchId))

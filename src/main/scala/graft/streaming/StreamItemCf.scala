@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.Pin
 import graft.sources.TableStore
 
 /** Streaming recommender-index maintenance: per-(item, item) basket
@@ -87,7 +88,7 @@ object StreamItemCf {
       batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(itemTable)
     if (batchId > lastApplied) {
-      val inc = basketIncidence(batch, basketCol, itemCol).localCheckpoint()
+      val inc = Pin(basketIncidence(batch, basketCol, itemCol))
       store.replacePartitions(pairTable,
         basketPairCounts(inc).withColumn("__applied", lit(batchId)),
         "__applied")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.IncrementalJoin
+import graft.operators.{IncrementalJoin, Pin}
 import graft.sources.TableStore
 
 /** Streaming JOIN-view maintenance — the streaming twin of
@@ -69,7 +69,7 @@ object StreamJoinView {
         pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
       // ONE materialization of the batch (splits re-filter it in memory):
       // two per-side checkpoints recomputed the batch lineage twice
-      val pinned = batch.withColumn("__bucket", bucketOf).localCheckpoint()
+      val pinned = Pin(batch.withColumn("__bucket", bucketOf))
       val aDelta = split(pinned, sideCol, "a", keys, extra = Seq("__bucket"))
       val bDelta = split(pinned, sideCol, "b", keys, extra = Seq("__bucket"))
       // the touched-bucket list only prunes PRIOR state — with no store
@@ -148,9 +148,9 @@ object StreamJoinView {
     if (batchId > lastApplied) {
       val bucketOf =
         pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
-      val pinned = batch
+      val pinned = Pin(batch
         .withColumn("w", when(col(opCol) === "D", lit(-1)).otherwise(lit(1)))
-        .withColumn("__bucket", bucketOf).localCheckpoint()
+        .withColumn("__bucket", bucketOf))
       val aDelta = split(pinned, sideCol, "a", keys, extra = Seq("w", "__bucket"))
       val bDelta = split(pinned, sideCol, "b", keys, extra = Seq("w", "__bucket"))
       lazy val touched = pinned.select(col("__bucket"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
+import graft.operators.Pin
 import graft.sources.TableStore
 
 /** Streaming Markov-transition maintenance: per-(src, dst) consecutive-
@@ -56,8 +57,8 @@ object StreamMarkov {
       batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(lastTable)
     if (batchId > lastApplied) {
-      val ev = batch.select(col(userCol).as("u"), col(tsCol).as("t"),
-        col(idCol).as("eid"), col(kCol).as("k")).localCheckpoint()
+      val ev = Pin(batch.select(col(userCol).as("u"), col(tsCol).as("t"),
+        col(idCol).as("eid"), col(kCol).as("k")))
       val w = Window.partitionBy(col("u")).orderBy(col("t"), col("eid"))
       val internal = ev
         .select(lag(col("k"), 1).over(w).as("src"), col("k").as("dst"))

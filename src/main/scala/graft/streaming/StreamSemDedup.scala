@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.Similarity
+import graft.operators.{Pin, Similarity}
 import graft.sources.TableStore
 
 /** Streaming SemDeDup maintenance — the streaming face of
@@ -88,11 +88,11 @@ object StreamSemDedup {
         .groupBy(col("vec_id"))
         .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc")))
           .as("cid"))
-      val home = homeIds
+      // consumed 4× below (witness joins + the write)
+      val home = Pin(homeIds
         .join(keep.select(col("vec_id"), col("v"), col("n2")), Seq("vec_id"))
         .select(col("vec_id"), col("cid"), col("v"), col("n2"),
-          pmod(col("cid"), lit(CidBuckets)).as("__cbucket"))
-        .localCheckpoint() // consumed 4× below (witness joins + the write)
+          pmod(col("cid"), lit(CidBuckets)).as("__cbucket")))
       val touched = home.select(col("cid")).distinct()
         .collect().map(_.getLong(0)).toSeq
       // floorMod, NOT %: the store's __cbucket is written with pmod, and

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.Sketches
+import graft.operators.{Pin, Sketches}
 import graft.sources.TableStore
 
 /** Streaming sketch maintenance: per-day distinct-user HyperLogLog
@@ -135,8 +135,8 @@ object StreamSketch {
       batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(cmsTable)
     if (batchId > lastApplied) {
-      val batchCms = Sketches.countMin(batch.select(col(keyCol)), keyCol,
-        depth, width).localCheckpoint()
+      val batchCms = Pin(Sketches.countMin(batch.select(col(keyCol)), keyCol,
+        depth, width))
       val folded = (
         if (store.exists(cmsTable))
           store.read(cmsTable).drop("__applied").unionByName(batchCms)

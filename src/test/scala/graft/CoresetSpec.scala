@@ -27,7 +27,7 @@ class CoresetSpec extends SparkSpec {
   }
 
   test("4 picks land in 4 distinct clusters; radii are non-increasing") {
-    val out = Coreset.kCenters(el, 4).orderBy(col("rnk")).collect()
+    val out = Coreset.kCentersOf(vecArrays(el), 4).orderBy(col("rnk")).collect()
     assert(out.length == 4)
     assert(out.head.getLong(1) == 0L, "seed must be the lowest id")
     assert(out.head.isNullAt(2), "seed has no coverage radius")
@@ -41,9 +41,9 @@ class CoresetSpec extends SparkSpec {
 
   test("k beyond the corpus stops at corpus size; empty input yields no rows") {
     val tiny = Seq((7L, 0, 1.0), (9L, 0, 5.0)).toDF("vec_id", "i", "x")
-    val out = Coreset.kCenters(tiny, 5).orderBy(col("rnk")).collect()
+    val out = Coreset.kCentersOf(vecArrays(tiny), 5).orderBy(col("rnk")).collect()
     assert(out.map(_.getLong(1)).toSeq == Seq(7L, 9L))
-    assert(Coreset.kCenters(tiny.limit(0), 3).count() == 0L)
-    intercept[IllegalArgumentException] { Coreset.kCenters(tiny, 0) }
+    assert(Coreset.kCentersOf(vecArrays(tiny.limit(0)), 3).count() == 0L)
+    intercept[IllegalArgumentException] { Coreset.kCentersOf(vecArrays(tiny), 0) }
   }
 }

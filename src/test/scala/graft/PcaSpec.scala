@@ -24,7 +24,7 @@ class PcaSpec extends SparkSpec {
       (n.toLong, i, spike + noise)
     }
     val el = rows.toDF("vec_id", "i", "x")
-    val out = Similarity.powerIteration(el, 3)
+    val out = Similarity.powerIterationOf(vecArrays(el), 3)
       .orderBy(col("i")).collect().map(_.getDouble(1))
     val nrm = math.sqrt(out.map(a => a * a).sum)
     assert(math.abs(math.abs(out(3)) / nrm - 1.0) < 0.01,
@@ -42,7 +42,8 @@ class PcaSpec extends SparkSpec {
 
   test("round count must be positive") {
     intercept[IllegalArgumentException] {
-      Similarity.powerIteration(Seq((1L, 0, 1.0)).toDF("vec_id", "i", "x"), 0)
+      Similarity.powerIterationOf(
+        vecArrays(Seq((1L, 0, 1.0)).toDF("vec_id", "i", "x")), 0)
     }
   }
 }

@@ -204,9 +204,8 @@ class SimilaritySpec extends SparkSpec {
     rows.toDF("vec_id", "embedding")
   }
 
-  private def elementsOf(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), col("pos").as("i"), col("col").cast("double").as("x"))
+  private def arraysOf(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("vec_id"), col("embedding").cast("array<double>").as("xs"))
 
   test("bqSignWords packs sign bits into the documented 32-bit halves") {
     // 40-dim vector, non-negative exactly at dims 0, 31, 33 (0-based):
@@ -214,15 +213,15 @@ class SimilaritySpec extends SparkSpec {
     // set bit (x >= 0), matching the oracle's CASE.
     val v = Array.tabulate(40)(i => if (i == 0) 0.0 else if (i == 31 || i == 33) 2.5 else -1.0)
     val el = Seq((7L, v.toSeq)).toDF("vec_id", "embedding")
-    val words = Similarity.bqSignWords(elementsOf(el))
+    val words = Similarity.bqSignWordsOf(arraysOf(el))
       .as[(Long, Long, Long)].collect().map { case (_, h, w) => h -> w }.toMap
     assert(words(0L) == (1L | (1L << 31)), s"half 0: ${words(0L)}")
     assert(words(1L) == (1L << 1), s"half 1: ${words(1L)}")
   }
 
   test("bqCandidates == brute-force Hamming ranking, ties to the lower id") {
-    val el = elementsOf(signedVectors)
-    val sig = Similarity.bqSignWords(el)
+    val vecs = arraysOf(signedVectors)
+    val sig = Similarity.bqSignWordsOf(vecs)
     // brute truth: per query, all corpus vectors ordered by (hamming, nid)
     val q = sig.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("qid"), col("half"), col("w").as("wq"))
@@ -238,7 +237,7 @@ class SimilaritySpec extends SparkSpec {
           .orderBy(col("ham"), col("nid"))))
       .filter(col("rn") <= nCand)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
-    val got = Similarity.bqCandidates(el, col("vec_id") % 10 === 0, nCand)
+    val got = Similarity.bqCandidatesOf(vecs, col("vec_id") % 10 === 0, nCand)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     assert(got == truth, s"heap screen diverges from the window ranking")
   }
@@ -248,7 +247,7 @@ class SimilaritySpec extends SparkSpec {
     val truth = Similarity.bruteForceTopK(signedVectors, queries,
       "vec_id", "embedding", 3)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
-    val cand = Similarity.bqCandidates(elementsOf(signedVectors),
+    val cand = Similarity.bqCandidatesOf(arraysOf(signedVectors),
       col("vec_id") % 10 === 0, nCand = 6)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val recall = truth.count(cand.contains).toDouble / truth.size

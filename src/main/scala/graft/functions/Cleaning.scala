@@ -63,10 +63,6 @@ object Cleaning {
   def dsumRound2(c: Column): Column =
     round(sum(c.cast(DecimalType(18, 4))), 2).cast(DoubleType)
 
-  /** Exact mean: decimal sum divided by count, in double. */
-  def davg(c: Column): Column =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType) / count(c).cast(DoubleType)
-
   /** Count cast to BIGINT on both engines (DuckDB count is HUGEINT-prone). */
   def lcount(c: Column = lit(1)): Column = count(c).cast(LongType)
 }

@@ -33,14 +33,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * formulation checkpointed once — the per-round copy is freed by the
   * ContextCleaner as the loop rebinds it.
   *
-  * Decimal typing of the fold: the per-element terms and the running
-  * accumulator are DECIMAL(37,18), NOT 38 — Spark widens
-  * `Add(d(38,18), d(38,18))` to the unrepresentable (39,18) and then
-  * rescales to (38,17) under precision-loss, which would ROUND the 18th
-  * digit per step; at 37 the sum type is exactly (38,18) and every step
-  * is exact, so the fold equals `SUM(CAST(… AS DECIMAL(38,18)))`
-  * bit for bit (headroom: 10¹⁹ int digits, same overflow-to-NULL past
-  * it as the aggregate had).
+  * The fold is [[Similarity.exactSum]], so it equals
+  * `SUM(CAST(… AS DECIMAL(38,18)))` bit for bit.
   *
   * Input `vecs` ([[kCentersOf]]): (vec_id, xs array<double>) — DENSE
   * support required: every vector must carry the same dimension count
@@ -58,7 +52,6 @@ object Coreset {
     require(k >= 1, s"need at least one center, got $k")
     val spark = vecs.sparkSession
     val dec = org.apache.spark.sql.types.DecimalType(38, 18)
-    val dec37 = org.apache.spark.sql.types.DecimalType(37, 18)
     // the exact decimal radius rides to the edge and is cast to DOUBLE
     // by the ENGINE (driver-side BigDecimal.doubleValue measured 1 ULP
     // off DuckDB's decimal cast — the SQL-level cast is the proven-
@@ -72,13 +65,10 @@ object Coreset {
     // so the generated source is identical across rounds and the
     // compile cache hits from round 2 on — same property the r20
     // array_contains exclusion relies on), and the decimal fold is
-    // exact at (37,18) per the typing note above.
+    // [[Similarity.exactSum]].
     def d2To(center: Array[Double]): Column =
-      aggregate(
-        zip_with(col("xs"), lit(center),
-          (x, c) => ((x - c) * (x - c)).cast(dec37)),
-        lit(java.math.BigDecimal.ZERO).cast(dec37),
-        (acc, v) => (acc + v).cast(dec37)).cast(dec)
+      Similarity.exactSum(zip_with(col("xs"), lit(center),
+        (x, c) => ((x - c) * (x - c)).cast(Similarity.ExactTerm)))
     def present(df: DataFrame) =
       df.select(col("rnk"), col("vec_id"),
         // round-12 BEFORE the double cast: a DECIMAL(38,18)'s unscaled

@@ -120,14 +120,6 @@ object Dedup {
     shingles.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** MinHash signatures in long format: (id, seed, minhash). The hash
-    * family is the high 60 bits of md5(seed || '|' || shingle) as a
-    * BIGINT — deterministic and portable (see [[minhashWide]]). Computed
-    * wide (one shuffle) and unpivoted map-side.
-    */
-  def minhashSignatures(shingles: DataFrame, idCol: String, numHashes: Int): DataFrame =
-    signaturesFromWide(minhashWide(shingles, idCol, numHashes), idCol, numHashes)
-
   /** Long-format unpivot of an existing wide signature frame — map-side
     * only, so consumers that already hold (or persist) the wide frame pay
     * no re-aggregation.
@@ -138,21 +130,6 @@ object Dedup {
     wide.select(col(idCol),
       expr(s"stack($numHashes, $stackArgs)").as(Seq("seed", "minhash")))
   }
-
-  /** Collapse signatures into per-band bucket keys: band = seed / rows,
-    * band_key = ordered concat of the band's minhashes.
-    */
-  def bandKeys(sig: DataFrame, idCol: String, rowsPerBand: Int): DataFrame =
-    sig
-      .groupBy(
-        col(idCol),
-        (col("seed") / rowsPerBand).cast(LongType).as("band"))
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("seed"), col("minhash")))),
-            s => s.getField("minhash")),
-          ",").as("band_key"))
 
   /** All unordered (a < b) pairs drawn from an array column — nested
     * `transform` over the sorted member list, flattened. Pure Catalyst

@@ -32,12 +32,6 @@ import graft.functions.TextAnalysis
   */
 object LangModel {
 
-  /** Bigram transition model: (prev, cur, n_pair, n_prev) with exact
-    * integer counts, from whitespace-tokenized `textCol`.
-    */
-  def bigramModel(docs: DataFrame, textCol: String): DataFrame =
-    modelFromTransitions(transitions(docs, idCol = null, textCol))
-
   /** The model aggregates over an existing transition frame — extra
     * columns (the doc id) ride through the counts unchanged, so scoring
     * and training can share ONE exploded pass over the corpus.

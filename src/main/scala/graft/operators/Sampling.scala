@@ -82,24 +82,6 @@ object Sampling {
       .limit(k)
   }
 
-  /** [[quotaPerGroup]] for the regime where n ≪ group size: the window
-    * form shuffles and sorts EVERY group row, while the bounded-heap
-    * `topk_pairs` aggregate (graft.plans.TopKPairs) partial-aggregates,
-    * so only n ids per group per map partition reach the shuffle; the
-    * kept-id set then semi-joins back (AQE turns that into a broadcast
-    * when the quota output is small). Keeps the n rows with the LOWEST
-    * `idCol` per group; `idCol` must be a unique bigint.
-    */
-  def quotaPerGroupHeap(df: DataFrame, groupCol: String, idCol: String,
-      n: Int): DataFrame = {
-    val kept = df
-      .groupBy(col(groupCol))
-      .agg(expr(s"topk_pairs(-CAST($idCol AS DOUBLE), $idCol, $n)").as("tk"))
-      .select(explode(col("tk")).as("p"))
-      .select(col("p.id").as(idCol))
-    df.join(kept, Seq(idCol), "left_semi")
-  }
-
   /** Weight-proportional SYSTEMATIC sampling without randomness — the
     * data-mixing primitive "draw k examples proportional to token count":
     * lay every document's weight out on the integer line in id order

@@ -45,6 +45,25 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dotNative(a, a))
 
+  /** Term type of [[exactSum]]: callers cast each term to it. */
+  val ExactTerm: DecimalType = DecimalType(37, 18)
+
+  /** Exact in-row sum of an array of [[ExactTerm]] terms as
+    * DECIMAL(38,18) — equals `SUM(CAST(term AS DECIMAL(38,18)))` over the
+    * exploded rows bit for bit, with no explode, no per-vector aggregate
+    * and no exchange. The one exact decimal fold of the vector family.
+    *
+    * Fold typing: terms and accumulator are DECIMAL(37,18) — at 38 Spark
+    * widens Add to the unrepresentable (39,18) and rescales to (38,17)
+    * under precision-loss, rounding the 18th digit per step; at 37 the
+    * Add type is exactly (38,18) and every step is exact (decimal
+    * addition is exact at matched scale). Headroom 10¹⁹ int digits, the
+    * same overflow-to-NULL past it as the SUM had.
+    */
+  def exactSum(terms: Column): Column =
+    aggregate(terms, lit(java.math.BigDecimal.ZERO).cast(ExactTerm),
+      (acc, t) => (acc + t).cast(ExactTerm)).cast(DecimalType(38, 18))
+
   /** Rank scored (qid, nid, cosine) candidates to top-k per query via the
     * bounded-heap `topk_pairs` aggregate ([[graft.plans.TopKPairs]]):
     * map-side partial top-k means only k rows per key per partition reach
@@ -447,30 +466,23 @@ object Similarity {
     * aggregate for s, then shuffle-joined it back against the
     * corpus-element stream every round.
     *
-    * Fold typing: terms and accumulator are DECIMAL(37,18) — at 38
-    * Spark widens Add to (39,18) and rescales to (38,17) under
-    * precision-loss, rounding the 18th digit per step; at 37 the Add
-    * type is exactly (38,18) and every step is exact, so the fold
-    * equals `SUM(CAST(x·v AS DECIMAL(38,18)))` bit for bit. The
-    * direction re-enters as collected round-12 doubles — doubles
+    * The row-space fold is [[exactSum]], so it equals
+    * `SUM(CAST(x·v AS DECIMAL(38,18)))` bit for bit. The direction
+    * re-enters as collected round-12 doubles — doubles
     * round-trip the driver exactly, and the division itself stays in
     * the engine (the proven-parity rounding).
     */
   def powerIterationOf(vecs: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need at least one round, got $rounds")
     val dec = org.apache.spark.sql.types.DecimalType(38, 18)
-    val dec37 = org.apache.spark.sql.types.DecimalType(37, 18)
-    def fold(terms: Column): Column =
-      aggregate(terms, lit(java.math.BigDecimal.ZERO).cast(dec37),
-        (acc, t) => (acc + t).cast(dec37))
-        .cast(dec).cast(org.apache.spark.sql.types.DoubleType)
+    def fold(terms: Column): Column = exactSum(terms).cast(DoubleType)
     def ymul(sCol: Column) =
       vecs.select(sCol.as("s"), posexplode(col("xs")))
         .groupBy(col("pos").as("i"))
         .agg(sum((col("s") * col("col")).cast(dec))
           .cast(org.apache.spark.sql.types.DoubleType).as("y"))
     // round 1: x0 = all-ones, so the row-space pass is a plain sum
-    var y = ymul(fold(transform(col("xs"), x => x.cast(dec37))))
+    var y = ymul(fold(transform(col("xs"), x => x.cast(ExactTerm))))
     for (_ <- 2 to rounds) {
       val m = y.agg(max(abs(col("y"))).as("m"))
       val varr = y.crossJoin(broadcast(m))
@@ -478,7 +490,7 @@ object Similarity {
         .orderBy(col("i")).collect()
         .map(r => r.getDouble(1)) // dense: row k carries index k
       y = ymul(fold(zip_with(col("xs"), lit(varr),
-        (x, v) => (x * v).cast(dec37))))
+        (x, v) => (x * v).cast(ExactTerm))))
     }
     val m = y.agg(max(abs(col("y"))).as("m"))
     y.crossJoin(broadcast(m))

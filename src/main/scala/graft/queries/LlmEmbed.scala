@@ -44,29 +44,16 @@ object LlmEmbed {
       .select(col("vec_id"),
         transform(col("embedding"), e => e.cast(DoubleType)).as("xs"))
 
-  /** Exact decimal fold over an array of DECIMAL(37,18) terms — equals
-    * `SUM(CAST(term AS DECIMAL(38,18)))` over the exploded rows bit for
-    * bit: decimal addition is exact at matched scale, and at 37 the Add
-    * type is exactly (38,18) (at 38 Spark widens to the unrepresentable
-    * (39,18) and rescales to (38,17) under precision-loss, rounding the
-    * 18th digit per step). Headroom 10¹⁹ int digits, same
-    * overflow-to-NULL past it as the SUM had. The in-row form of the
-    * pinned element lattice — no explode, no per-vector aggregate, no
-    * exchange (the kCentersOf/powerIterationOf move, applied to the portable
-    * ANN family).
-    */
-  private val dec37 = DecimalType(37, 18)
-  private def foldDec(terms: org.apache.spark.sql.Column) =
-    aggregate(terms, lit(java.math.BigDecimal.ZERO).cast(dec37),
-      (acc, t) => (acc + t).cast(dec37)).cast(dec)
-
-  /** ⟨a, b⟩ as the exact decimal fold (== `SUM(CAST(aᵢ·bᵢ AS
-    * DECIMAL(38,18)))`), presented as the same DOUBLE the el-aggregate
+  /** ⟨a, b⟩ as the exact decimal fold [[Similarity.exactSum]] (==
+    * `SUM(CAST(aᵢ·bᵢ AS DECIMAL(38,18)))`, the in-row form of the pinned
+    * element lattice), presented as the same DOUBLE the el-aggregate
     * form emitted.
     */
   private def dotDec(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column) =
-    foldDec(zip_with(a, b, (x, y) => (x * y).cast(dec37))).cast(DoubleType)
+    Similarity.exactSum(
+      zip_with(a, b, (x, y) => (x * y).cast(Similarity.ExactTerm)))
+      .cast(DoubleType)
 
   /** Per-vector squared norms (vec_id, n2) from the array frame — the
     * narrow form of `el GROUP BY vec_id: SUM(CAST(x·x AS DEC(38,18)))`.
@@ -326,9 +313,9 @@ object LlmEmbed {
     // signs(j) = sign(p, j+1) pairs exactly as element_at(…, i+1) did)
     val planeSums = (0 until nPlanes).map { p =>
       val signs = (1 to 64).map(i => sign(p, i)).toArray
-      foldDec(zip_with(col("xs"), lit(signs),
-        (x, sg) => when(sg === 1, x.cast(dec37))
-          .otherwise((-x).cast(dec37)))).as(s"s$p")
+      Similarity.exactSum(zip_with(col("xs"), lit(signs),
+        (x, sg) => when(sg === 1, x.cast(Similarity.ExactTerm))
+          .otherwise((-x).cast(Similarity.ExactTerm)))).as(s"s$p")
     }
     val bk = vecs
       .select(col("vec_id") +: planeSums: _*)
@@ -1007,8 +994,8 @@ object LlmEmbed {
       else vecs
         .select(col("vec_id"), explode(array(centArrs.map { case (cid, arr) =>
           struct(lit(cid).as("cid"),
-            round(foldDec(zip_with(col("xs"), lit(arr),
-              (x, c) => ((x - c) * (x - c)).cast(dec37)))
+            round(Similarity.exactSum(zip_with(col("xs"), lit(arr),
+              (x, c) => ((x - c) * (x - c)).cast(Similarity.ExactTerm)))
               .cast(DoubleType), 12).as("d2"))
         }: _*)).as("e"))
         .select(col("vec_id"), col("e.cid").as("cid"), col("e.d2").as("d2"))
@@ -1745,9 +1732,10 @@ object LlmEmbed {
     // every downstream product)
     val projCols = (0 until nProj).map { p =>
       val signs = (1 to 64).map(i => sign(p, i)).toArray
-      round(foldDec(zip_with(col("xs"), lit(signs),
-        (x, sg) => when(sg === 1, x.cast(dec37))
-          .otherwise((-x).cast(dec37)))).cast(DoubleType), 12).as(s"p$p")
+      round(Similarity.exactSum(zip_with(col("xs"), lit(signs),
+        (x, sg) => when(sg === 1, x.cast(Similarity.ExactTerm))
+          .otherwise((-x).cast(Similarity.ExactTerm))))
+        .cast(DoubleType), 12).as(s"p$p")
     }
     val proj = vecs.select(col("vec_id") +: projCols: _*)
     val pel = proj.select(col("vec_id"),

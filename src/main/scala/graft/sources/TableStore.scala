@@ -535,8 +535,9 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Highest applied batch id recorded in `markerCol` of `table`, or −1
     * when the table is absent/empty — the replay guard every streaming
-    * fold reads before touching a batch (at-least-once `foreachBatch`
-    * delivery makes this check the idempotence boundary). Recovers
+    * fold reads before touching a batch (at-least-once micro-batch
+    * delivery, [[graft.streaming.Maintain]], makes this check the
+    * idempotence boundary). Recovers
     * parked partitions first so a crashed fold can't hide the marker.
     */
   def lastAppliedBatch(table: String, markerCol: String = "__applied"): Long = {

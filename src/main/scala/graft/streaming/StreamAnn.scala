@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Pin, Similarity}
@@ -35,19 +34,9 @@ import graft.sources.TableStore
   */
 object StreamAnn {
 
-  def maintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      listTable: String, neighborsTable: String, centroids: DataFrame,
-      probe: Int = 4, k: Int = 3): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, listTable, neighborsTable, centroids, probe, k)(
-          batch.toDF(), batchId)
-      }
-
-  /** The per-batch fold, exposed for direct testing. `batch` carries
-    * (vec_id, v: array<double>); `centroids` (cid, cv: array<double>).
+  /** The per-batch fold, run from a stream with [[Maintain]]. `batch`
+    * carries (vec_id, v: array<double>); `centroids` (cid, cv:
+    * array<double>).
     */
   def applyBatch(store: TableStore, listTable: String,
       neighborsTable: String, centroids: DataFrame, probe: Int, k: Int)(

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.sources.TableStore
@@ -30,23 +29,12 @@ import graft.sources.TableStore
   * scoring tail is the SAME Column expression the one-shot query uses,
   * so rankings replay hash-identically.
   *
-  * `checkpointDir` REQUIRED for the same batch-id-durability reason as
-  * [[StreamDedup.nearDupMaintainer]].
+  * Run from a stream with [[Maintain]] (its checkpoint keeps the batch
+  * ids the marker checks durable).
   */
 object StreamBm25 {
 
-  def maintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String, postTable: String, dlTable: String,
-      idCol: String, textCol: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, postTable, dlTable, idCol, textCol)(
-          batch.toDF(), batchId)
-      }
-
-  /** The per-batch index fold, exposed for direct testing. */
+  /** The per-batch index fold, run from a stream with [[Maintain]]. */
   def applyBatch(store: TableStore, postTable: String, dlTable: String,
       idCol: String, textCol: String)(
       batch: DataFrame, batchId: Long): Unit = {

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.Cdc
 import graft.sources.TableStore
@@ -32,7 +31,7 @@ import graft.sources.TableStore
   * table. The un-touched buckets are untouched bytes, and the state
   * stays a plain partitioned table every batch query can read.
   *
-  * Replay safety: foreachBatch is at-least-once, and per-bucket
+  * Replay safety: [[Maintain]] is at-least-once, and per-bucket
   * replacement is NOT atomic across buckets, so the applied-batch
   * watermark lives in its own scalar marker committed LAST
   * ([[TableStore.putMarker]] — one file, atomic single-file move). A crash anywhere before the marker — half the
@@ -45,17 +44,9 @@ import graft.sources.TableStore
   */
 object StreamCdc {
 
-  def maintainer(stream: DataFrame, store: TableStore, table: String,
-      keys: Seq[String], seqCol: String, opCol: String,
-      nBuckets: Int = 64): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, table, keys, seqCol, opCol, nBuckets)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch fold, exposed for direct testing of replay and
-    * cross-batch reordering semantics.
+  /** The per-batch fold — run from a stream with [[Maintain]], or
+    * directly with explicit batch ids (replay and cross-batch reordering
+    * specs).
     */
   def applyBatch(store: TableStore, table: String, keys: Seq[String],
       seqCol: String, opCol: String, nBuckets: Int = 64)(

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.{Dedup, Pin}
 import graft.sources.TableStore
@@ -17,9 +16,10 @@ import graft.sources.TableStore
   * after the horizon re-emits — the standard bounded-state tradeoff;
   * exact global dedup stays a batch job ([[graft.operators.Dedup]]).
   *
-  * Near-dup: [[nearDupMaintainer]] keeps the MinHash-LSH band-key store
-  * current from a document stream and emits each micro-batch's candidate
-  * near-dup pairs against everything seen so far — online what
+  * Near-dup: [[applyBatch]], run from a document stream with
+  * [[Maintain]], keeps the MinHash-LSH band-key store current and emits
+  * each micro-batch's candidate near-dup pairs against everything seen
+  * so far — online what
   * [[graft.operators.Dedup.incrementalCandidatePairs]] is per batch.
   */
 object StreamDedup {
@@ -35,39 +35,9 @@ object StreamDedup {
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("fp")
 
-  /** Maintain the band-key store + candidate-pair log from a document
-    * stream: each micro-batch shingles ONLY its own documents, joins its
-    * band keys against the store (history is never re-shingled — the
-    * [[graft.operators.Dedup.incrementalCandidatePairs]] contract), logs
-    * the new candidate pairs, and APPENDS the batch's band keys as one
-    * store partition (write volume O(batch), not O(state) — see
-    * [[applyBatch]]). Union over all batches of the emitted pairs equals
-    * the one-shot corpus pair set (StreamNearDupSpec asserts it) — so a
-    * downstream clustering job always sees complete candidate edges no
-    * matter how the corpus was batched.
-    *
-    * `checkpointDir` is REQUIRED (not optional) because the store's
-    * replay guard keys on the stream's batch ids: without a durable
-    * checkpoint, a restarted stream re-allocates batch ids from 0, every
-    * new batch compares <= the store's high-water mark, and ingest
-    * silently drops — the guard can only be as durable as the id
-    * sequence it checks.
-    */
-  def nearDupMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String,
-      bandTable: String, pairsTable: String, idCol: String, textCol: String,
-      numHashes: Int = 16, rowsPerBand: Int = 4,
-      shingleN: Int = 3): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, bandTable, pairsTable, idCol, textCol,
-          numHashes, rowsPerBand, shingleN)(batch.toDF(), batchId)
-      }
-
-  /** Maintain the SUBSTRING-dedup span-count store + duplicated-span log
-    * from a document stream — the streaming face of
+  /** The per-batch substring fold, run from a document stream with
+    * [[Maintain]]: maintains the SUBSTRING-dedup span-count store +
+    * duplicated-span log — the streaming face of
     * [[graft.operators.Dedup.incrementalDuplicatedSpans]], sharing the
     * band store's layout discipline: each micro-batch windows ONLY its
     * own documents (history text is never re-windowed), joins its span
@@ -82,22 +52,8 @@ object StreamDedup {
     * Replay safety mirrors [[applyBatch]]: the span partition's presence
     * is the applied marker (lands last), the dup log's partition lands
     * first and replays by replacement, and folds recover parked
-    * partitions before reading. `checkpointDir` is REQUIRED for the same
-    * batch-id-durability reason as [[nearDupMaintainer]].
+    * partitions before reading.
     */
-  def substringMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String,
-      spanTable: String, dupTable: String, idCol: String, textCol: String,
-      l: Int = 8): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applySubstringBatch(store, spanTable, dupTable, idCol, textCol, l)(
-          batch.toDF(), batchId)
-      }
-
-  /** The per-batch substring fold, exposed for direct testing. */
   def applySubstringBatch(store: TableStore, spanTable: String,
       dupTable: String, idCol: String, textCol: String, l: Int)(
       batch: DataFrame, batchId: Long): Unit = {
@@ -121,12 +77,13 @@ object StreamDedup {
     }
   }
 
-  /** Maintain the EXACT prefix-Jaccard (PPJoin) stores from a document
-    * stream — the deterministic-dedup counterpart of
-    * [[nearDupMaintainer]]'s probabilistic LSH: each micro-batch emits
-    * every Jaccard-≥-t pair it completes (new×history and new×new), with
-    * EXACT similarity values, and the union over batches equals the
-    * one-shot [[graft.operators.Dedup.prefixJaccardPairs]] answer.
+  /** The per-batch PPJoin fold, run from a document stream with
+    * [[Maintain]]: maintains the EXACT prefix-Jaccard stores — the
+    * deterministic-dedup counterpart of [[applyBatch]]'s probabilistic
+    * LSH: each micro-batch emits every Jaccard-≥-t pair it completes
+    * (new×history and new×new), with EXACT similarity values, and the
+    * union over batches equals the one-shot
+    * [[graft.operators.Dedup.prefixJaccardPairs]] answer.
     *
     * The incremental trick is the prefix ORDER: the one-shot operator
     * ranks shingles by corpus rarity, but document frequencies drift as
@@ -146,23 +103,8 @@ object StreamDedup {
     * candidate docs. Writes are O(batch): the pair log lands FIRST
     * (replay replaces, never doubles), the shingle partition next, and
     * the prefix partition LAST as the applied marker — same replay
-    * contract as [[applyBatch]]. `checkpointDir` REQUIRED for the same
-    * batch-id-durability reason as [[nearDupMaintainer]].
+    * contract as [[applyBatch]].
     */
-  def prefixMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String,
-      shTable: String, prefixTable: String, pairsTable: String,
-      idCol: String, textCol: String, threshold: BigDecimal,
-      shingleN: Int = 3): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyPrefixBatch(store, shTable, prefixTable, pairsTable,
-          idCol, textCol, threshold, shingleN)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch PPJoin fold, exposed for direct testing. */
   def applyPrefixBatch(store: TableStore, shTable: String,
       prefixTable: String, pairsTable: String, idCol: String,
       textCol: String, threshold: BigDecimal, shingleN: Int)(
@@ -201,11 +143,12 @@ object StreamDedup {
     }
   }
 
-  /** Maintain the EXACT edit-distance (PassJoin) stores from a document
-    * stream — the streaming face of
-    * [[graft.operators.Dedup.editDistancePairs]]: each micro-batch emits
-    * every ED-≤-d pair it completes (new×history and new×new, with exact
-    * distances), and the union over batches equals the one-shot answer.
+  /** The per-batch PassJoin fold, run from a document stream with
+    * [[Maintain]]: maintains the EXACT edit-distance stores — the
+    * streaming face of [[graft.operators.Dedup.editDistancePairs]]: each
+    * micro-batch emits every ED-≤-d pair it completes (new×history and
+    * new×new, with exact distances), and the union over batches equals
+    * the one-shot answer.
     *
     * Unlike the PPJoin maintainer there is no ordering to freeze: the
     * PassJoin segment key (length, segment index, segment text) is
@@ -232,22 +175,8 @@ object StreamDedup {
     * is (batch probes) × (stored segments in bucket), linear in the
     * store per batch; adversarial constant-prefix corpora should use the
     * one-shot rebuild (same exposure as the LSH band maintainer's hot
-    * bands). `checkpointDir` REQUIRED for the same batch-id-durability
-    * reason as [[nearDupMaintainer]].
+    * bands).
     */
-  def editMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String,
-      strTable: String, segTable: String, pairsTable: String,
-      idCol: String, strCol: String, maxDist: Int): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyEditBatch(store, strTable, segTable, pairsTable,
-          idCol, strCol, maxDist)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch PassJoin fold, exposed for direct testing. */
   def applyEditBatch(store: TableStore, strTable: String, segTable: String,
       pairsTable: String, idCol: String, strCol: String, maxDist: Int)(
       batch: DataFrame, batchId: Long): Unit = {
@@ -341,12 +270,12 @@ object StreamDedup {
     }
   }
 
-  /** Maintain the EXACT Hamming-≤d SimHash stores from a document
-    * stream — the streaming face of
-    * [[graft.operators.Dedup.simhashHammingPairs]]: each micro-batch
-    * SimHashes ONLY its own documents (the token-hash aggregate is the
-    * expensive stage; stored 32-bit signatures re-chunk for free,
-    * map-side), joins its pigeonhole chunks against the signature
+  /** The per-batch SimHash fold, run from a document stream with
+    * [[Maintain]]: maintains the EXACT Hamming-≤d SimHash stores — the
+    * streaming face of [[graft.operators.Dedup.simhashHammingPairs]]:
+    * each micro-batch SimHashes ONLY its own documents (the token-hash
+    * aggregate is the expensive stage; stored 32-bit signatures re-chunk
+    * for free, map-side), joins its pigeonhole chunks against the signature
     * store's, and emits every Hamming-≤-d pair it completes with exact
     * distances — the union over batches equals the one-shot answer.
     *
@@ -359,21 +288,7 @@ object StreamDedup {
     * contract as the other maintainers). Hot chunk buckets cost (batch
     * docs in bucket) × (stored docs in bucket) per batch — linear in
     * the store, the family's documented adversarial exposure.
-    * `checkpointDir` REQUIRED for the same batch-id-durability reason
-    * as [[nearDupMaintainer]].
     */
-  def hammingMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String, sigTable: String, pairsTable: String,
-      idCol: String, textCol: String, maxDist: Int): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyHammingBatch(store, sigTable, pairsTable,
-          idCol, textCol, maxDist)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch SimHash fold, exposed for direct testing. */
   def applyHammingBatch(store: TableStore, sigTable: String,
       pairsTable: String, idCol: String, textCol: String, maxDist: Int)(
       batch: DataFrame, batchId: Long): Unit = {
@@ -406,8 +321,9 @@ object StreamDedup {
     }
   }
 
-  /** Maintain duplicate-CLUSTER labels from a document stream — the
-    * streaming face of the `dedup_clusters_incremental` fold
+  /** The per-batch cluster fold, run from a document stream with
+    * [[Maintain]]: maintains duplicate-CLUSTER labels — the streaming
+    * face of the `dedup_clusters_incremental` fold
     * ([[graft.operators.Dedup.mergeClusters]]): each micro-batch
     * shingles ONLY its own documents, generates its candidate pairs
     * against the band store, and folds them into the maintained
@@ -425,23 +341,8 @@ object StreamDedup {
     *
     * Write order: the label delta FIRST (a replayed batch replaces it),
     * the band partition LAST as the applied marker — same replay
-    * contract as [[applyBatch]]; `checkpointDir` REQUIRED for the same
-    * batch-id-durability reason as [[nearDupMaintainer]].
+    * contract as [[applyBatch]].
     */
-  def clusterMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String, bandTable: String, labelTable: String,
-      idCol: String, textCol: String, numHashes: Int, rowsPerBand: Int,
-      shingleN: Int): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyClusterBatch(store, bandTable, labelTable,
-          idCol, textCol, numHashes, rowsPerBand, shingleN)(
-          batch.toDF(), batchId)
-      }
-
-  /** The per-batch cluster fold, exposed for direct testing. */
   def applyClusterBatch(store: TableStore, bandTable: String,
       labelTable: String, idCol: String, textCol: String, numHashes: Int,
       rowsPerBand: Int, shingleN: Int)(
@@ -487,7 +388,17 @@ object StreamDedup {
     }
   }
 
-  /** The per-batch fold, exposed for direct testing of replay semantics.
+  /** The per-batch near-dup fold, run from a document stream with
+    * [[Maintain]]: each micro-batch shingles ONLY its own documents,
+    * joins its band keys against the store (history is never
+    * re-shingled — the
+    * [[graft.operators.Dedup.incrementalCandidatePairs]] contract), logs
+    * the new candidate pairs, and APPENDS the batch's band keys as one
+    * store partition (write volume O(batch), not O(state) — see
+    * below). Union over all batches of the emitted pairs equals
+    * the one-shot corpus pair set (StreamNearDupSpec asserts it) — so a
+    * downstream clustering job always sees complete candidate edges no
+    * matter how the corpus was batched.
     *
     * Both stores are PARTITION-APPENDED, never rewritten: the band store
     * is partitioned by `__applied` (the batch id that contributed the
@@ -501,7 +412,7 @@ object StreamDedup {
     * lose band keys (and with them every future cross-batch pair against
     * those docs).
     *
-    * Replay safety (foreachBatch is at-least-once): the applied batch id
+    * Replay safety ([[Maintain]] is at-least-once): the applied batch id
     * IS the band partition, which lands LAST, so a replayed batch
     * short-circuits on `batchId <= max(__applied)`; the pair log's
     * partition lands FIRST and is idempotent by reconstruction — a

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.sources.TableStore
@@ -32,7 +31,7 @@ import graft.sources.TableStore
   * query's conditional-min formulation; an exists-ordered-subsequence
   * funnel is a different statistic and needs per-user event retention).
   *
-  * Replay safety (foreachBatch is at-least-once): the mins partition's
+  * Replay safety ([[Maintain]] is at-least-once): the mins partition's
   * `__applied` id is the applied marker and a replayed partition
   * replaces itself ([[StreamDedup.applyBatch]] discipline).
   */
@@ -48,7 +47,9 @@ object StreamFunnel {
     events.groupBy(col(userCol), col(typeCol))
       .agg(min(col(tsCol)).as("t_first"))
 
-  /** The per-batch fold, exposed for direct testing. */
+  /** The per-batch fold, run from a stream with [[Maintain]] (its
+    * checkpoint keeps the batch ids the marker checks durable).
+    */
   def applyStageMins(store: TableStore, table: String, userCol: String,
       typeCol: String, tsCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(table)
@@ -90,19 +91,4 @@ object StreamFunnel {
         sum(when(col("t_click") > col("t_signup") &&
           col("t_purchase") > col("t_click"), 1).otherwise(0)).cast(LongType)
           .as("n_full_funnel"))
-
-  /** Structured Streaming entry: fold each micro-batch into the store.
-    * `checkpointDir` is REQUIRED for batch-id durability (the
-    * [[StreamDedup.nearDupMaintainer]] note).
-    */
-  def maintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      table: String, userCol: String, typeCol: String, tsCol: String)
-      : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyStageMins(store, table, userCol, typeCol, tsCol)(
-          batch.toDF(), batchId)
-      }
 }

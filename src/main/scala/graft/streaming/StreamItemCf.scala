@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.Pin
@@ -80,8 +79,10 @@ object StreamItemCf {
     incidence.groupBy(col("item"))
       .agg(count(lit(1)).cast(LongType).as("n_item"))
 
-  /** The per-batch fold, exposed for direct testing. Batch columns are
-    * (basketCol, itemCol); baskets must arrive whole (see object doc).
+  /** The per-batch fold, run from a stream with [[Maintain]] (its
+    * checkpoint keeps the batch ids the marker checks durable). Batch
+    * columns are (basketCol, itemCol); baskets must arrive whole (see
+    * object doc).
     */
   def applyBatch(store: TableStore, pairTable: String, itemTable: String,
       basketCol: String, itemCol: String)(
@@ -114,19 +115,4 @@ object StreamItemCf {
     store.read(itemTable)
       .groupBy(col("item"))
       .agg(sum(col("n_item")).cast(LongType).as("n_item"))
-
-  /** Structured Streaming entry: fold each micro-batch into the store.
-    * `checkpointDir` is REQUIRED for batch-id durability (the
-    * [[StreamDedup.nearDupMaintainer]] note).
-    */
-  def maintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      pairTable: String, itemTable: String, basketCol: String,
-      itemCol: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, pairTable, itemTable, basketCol, itemCol)(
-          batch.toDF(), batchId)
-      }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.{IncrementalJoin, Pin}
 import graft.sources.TableStore
@@ -24,33 +23,22 @@ import graft.sources.TableStore
   * per refresh, not O(all history); compact with [[TableStore.compact]]
   * as batch partitions accumulate.
   *
-  * Replay safety (foreachBatch is at-least-once) rests on ONE rule: the
+  * Replay safety ([[Maintain]] is at-least-once) rests on ONE rule: the
   * fold only ever reads side partitions with `__applied < batchId`. A
   * crashed attempt may have appended this batch's side partitions
   * already, but the replay's delta computation prunes them, so ΔV is
   * reconstructed identically and its partition replacement is
   * idempotent. The view partition lands LAST and is the applied marker;
-  * its presence implies the side partitions landed too.
-  * `checkpointDir` is REQUIRED for the batch-id-durability reason
-  * documented on [[StreamDedup.nearDupMaintainer]].
+  * its presence implies the side partitions landed too. Run from a
+  * stream with [[Maintain]], whose checkpoint keeps the batch ids this
+  * rule compares durable.
   */
 object StreamJoinView {
 
-  def maintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      aTable: String, bTable: String, viewTable: String,
-      sideCol: String, keys: Seq[String], nBuckets: Int = 64): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, aTable, bTable, viewTable, sideCol, keys, nBuckets)(
-          batch.toDF(), batchId)
-      }
-
-  /** The per-batch fold, exposed for direct testing. The batch's A-rows
-    * keep every non-null A column, B-rows every non-null B column (the
-    * tagged union is ragged: each side's own columns are set, the other
-    * side's are null — [[split]] reprojects them).
+  /** The per-batch fold, run from a stream with [[Maintain]]. The
+    * batch's A-rows keep every non-null A column, B-rows every non-null B
+    * column (the tagged union is ragged: each side's own columns are set,
+    * the other side's are null — [[split]] reprojects them).
     *
     * The side logs are HASH-BUCKETED on the join key inside each batch
     * partition (`__applied=N/__bucket=K/` — [[TableStore
@@ -112,7 +100,8 @@ object StreamJoinView {
     Await.result(fa, Duration.Inf)
   }
 
-  /** CDC form: the tagged stream also carries an op column ('I' insert,
+  /** The per-batch weighted fold, run from a stream with [[Maintain]] —
+    * the CDC form: the tagged stream also carries an op column ('I' insert,
     * 'D' delete), and the fold flows deletes through the join as −1
     * weights ([[IncrementalJoin.weightedDelta]] — the streaming
     * `c10_retract_join_view`): deleting a side row appends a −1 row to
@@ -128,19 +117,6 @@ object StreamJoinView {
     * like any counting IVM, track the feed's algebra rather than
     * validate it.
     */
-  def cdcMaintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      aTable: String, bTable: String, viewTable: String,
-      sideCol: String, opCol: String, keys: Seq[String],
-      nBuckets: Int = 64): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyCdcBatch(store, aTable, bTable, viewTable, sideCol, opCol, keys,
-          nBuckets)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch weighted fold, exposed for direct testing. */
   def applyCdcBatch(store: TableStore, aTable: String, bTable: String,
       viewTable: String, sideCol: String, opCol: String, keys: Seq[String],
       nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit = {

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.Pin
@@ -48,9 +47,10 @@ import graft.sources.TableStore
   */
 object StreamMarkov {
 
-  /** The per-batch fold, exposed for direct testing. Batch columns are
-    * (userCol, tsCol, idCol, kCol); both stores key partitions by
-    * `__applied`.
+  /** The per-batch fold, run from a stream with [[Maintain]] (its
+    * checkpoint keeps the batch ids the marker checks durable). Batch
+    * columns are (userCol, tsCol, idCol, kCol); both stores key
+    * partitions by `__applied`.
     */
   def applyBatch(store: TableStore, cntTable: String, lastTable: String,
       userCol: String, tsCol: String, idCol: String, kCol: String)(
@@ -110,19 +110,4 @@ object StreamMarkov {
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("n")).cast(LongType).as("n"))
   }
-
-  /** Structured Streaming entry: fold each micro-batch into the store.
-    * `checkpointDir` is REQUIRED for batch-id durability (the
-    * [[StreamDedup.nearDupMaintainer]] note).
-    */
-  def maintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      cntTable: String, lastTable: String, userCol: String, tsCol: String,
-      idCol: String, kCol: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, cntTable, lastTable, userCol, tsCol, idCol, kCol)(
-          batch.toDF(), batchId)
-      }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.{Pin, Similarity}
 import graft.sources.TableStore
@@ -50,17 +49,9 @@ object StreamSemDedup {
     */
   val CidBuckets = 32L
 
-  def maintainer(stream: DataFrame, store: TableStore, checkpointDir: String,
-      table: String, centroids: DataFrame, tau: Double): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, table, centroids, tau)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch fold, exposed for direct testing. `batch` carries
-    * (vec_id, v: array<double>); `centroids` (cid, cv: array<double>).
+  /** The per-batch fold, run from a stream with [[Maintain]]. `batch`
+    * carries (vec_id, v: array<double>); `centroids` (cid, cv:
+    * array<double>).
     */
   def applyBatch(store: TableStore, table: String, centroids: DataFrame,
       tau: Double)(batch: DataFrame, batchId: Long): Unit = {

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Pin, Sketches}
@@ -86,7 +85,8 @@ object StreamSketch {
       .groupBy(col("day"), col("register"))
       .agg(max(col("m_rho")).cast(LongType).as("m_rho"))
 
-  /** Maintain corpus-lifetime heavy hitters from a stream: a Count–Min
+  /** The per-batch heavy-hitter fold, run from a stream with
+    * [[Maintain]]: maintains corpus-lifetime heavy hitters — a Count–Min
     * increment log plus a k-row candidate table — the CMS+heap frequent-
     * items algorithm (Cormode & Muthukrishnan 2005) folded per micro-
     * batch instead of per item. "Top pages all time" on an unbounded
@@ -110,26 +110,11 @@ object StreamSketch {
     * guarantee (overestimate ≤ εN with prob 1−δ for width e/ε, depth
     * ln 1/δ).
     *
-    * Replay safety (foreachBatch is at-least-once): the sketch partition
+    * Replay safety ([[Maintain]] is at-least-once): the sketch partition
     * lands LAST and its `__applied` id is the applied marker; the
     * candidate table is overwritten FIRST and is idempotent by
     * reconstruction (deterministic from the pre-fold sketch + batch).
-    * `checkpointDir` is REQUIRED for the batch-id-durability reason
-    * documented on [[StreamDedup.nearDupMaintainer]].
     */
-  def heavyHitterMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String, cmsTable: String, topTable: String,
-      keyCol: String, k: Int = 20, depth: Int = 4, width: Int = 256)
-      : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyHeavyHitters(store, cmsTable, topTable, keyCol, k, depth, width)(
-          batch.toDF(), batchId)
-      }
-
-  /** The per-batch heavy-hitter fold, exposed for direct testing. */
   def applyHeavyHitters(store: TableStore, cmsTable: String, topTable: String,
       keyCol: String, k: Int, depth: Int, width: Int)(
       batch: DataFrame, batchId: Long): Unit = {
@@ -158,8 +143,9 @@ object StreamSketch {
     }
   }
 
-  /** Maintain per-group KMV (k-minimum-values) distinct sketches from a
-    * stream — the bounded-state answer to "distinct keys per group,
+  /** The per-batch KMV fold, run from a stream with [[Maintain]]:
+    * maintains per-group KMV (k-minimum-values) distinct sketches — the
+    * bounded-state answer to "distinct keys per group,
     * forever" when the HLL's register form isn't wanted because the
     * sketch must also answer SET-OVERLAP questions later (KMV bottom-k
     * values support union/intersection/Jaccard estimation, registers
@@ -180,17 +166,6 @@ object StreamSketch {
     * the sketch partition's `__applied` id is the applied marker, and a
     * replayed partition replaces itself.
     */
-  def kmvMaintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String, table: String, grpCol: String, hashCol: String,
-      k: Int = 128): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyKmvSketch(store, table, grpCol, hashCol, k)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch KMV fold, exposed for direct testing. */
   def applyKmvSketch(store: TableStore, table: String, grpCol: String,
       hashCol: String, k: Int)(batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(table)

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.Skyline
 import graft.sources.TableStore
@@ -33,17 +32,7 @@ import graft.sources.TableStore
   */
 object StreamSkyline {
 
-  def maintainer(stream: DataFrame, store: TableStore,
-      checkpointDir: String, table: String, xCol: String, yCol: String)
-      : DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, table, xCol, yCol)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch front fold, exposed for direct testing. */
+  /** The per-batch front fold, run from a stream with [[Maintain]]. */
   def applyBatch(store: TableStore, table: String, xCol: String,
       yCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(table)

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.DataFrame
 
 import graft.operators.IncrementalAgg
 import graft.sources.TableStore
@@ -22,8 +21,10 @@ import graft.sources.TableStore
   */
 object ViewMaintain {
 
-  /** Maintain `table` as the running aggregate of `stream` grouped by
-    * `keys` with decimal sums over `sumCols`.
+  /** The per-batch fold — run from a stream with [[Maintain]], or
+    * directly with explicit batch ids (replay specs): maintains `table`
+    * as the running aggregate of the batches grouped by `keys` with
+    * decimal sums over `sumCols`.
     *
     * The state is HASH-BUCKETED on the group key (`__bucket`, a
     * partition column, same layout as [[StreamCdc]]): a fold rewrites
@@ -31,7 +32,7 @@ object ViewMaintain {
     * O(touched-bucket state + delta), not O(all groups) — at 100 TB view
     * cardinality a day's delta rewrites a few buckets, never the table.
     *
-    * Replay-safe: `foreachBatch` is at-least-once, so the fold must be
+    * Replay-safe: [[Maintain]] is at-least-once, so the fold must be
     * idempotent per batch id. Per-bucket replacement is not atomic
     * across buckets, so the applied-batch watermark lives in a scalar
     * marker ([[TableStore.putMarker]] — one file, atomic single-file
@@ -50,16 +51,6 @@ object ViewMaintain {
     * of a post-batch bucket is prevented by writing the batch id into
     * the bucket rows (`__applied`) and skipping buckets already at it.
     */
-  def maintainer(stream: DataFrame, store: TableStore, table: String,
-      keys: Seq[String], sumCols: Seq[String],
-      nBuckets: Int = 64): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(store, table, keys, sumCols, nBuckets)(batch.toDF(), batchId)
-      }
-
-  /** The per-batch fold, exposed for direct testing of replay semantics. */
   def applyBatch(store: TableStore, table: String, keys: Seq[String],
       sumCols: Seq[String], nBuckets: Int = 64)(
       batch: DataFrame, batchId: Long): Unit = {

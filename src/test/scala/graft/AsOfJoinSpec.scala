@@ -147,13 +147,4 @@ class AsOfJoinSpec extends SparkSpec {
       .as[(String, Int)].collect().toSet
     assert(kept == Set(("a", 1), ("a", 2), ("b", 4), ("b", 5)))
   }
-
-  test("bounded-heap quota equals the window quota on a real table") {
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    val win = Sampling.quotaPerGroup(docs, Seq(col("source")), Seq(col("doc_id")), 7)
-      .select("doc_id").as[Long].collect().toSet
-    val heap = Sampling.quotaPerGroupHeap(docs, "source", "doc_id", 7)
-      .select("doc_id").as[Long].collect().toSet
-    assert(win.nonEmpty && heap == win)
-  }
 }

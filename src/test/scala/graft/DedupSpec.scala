@@ -596,7 +596,7 @@ class DedupSpec extends SparkSpec {
     val sh = Dedup.shingleSet(corpus, "doc_id", "text")
     assertNoBucketCollects(
       Dedup.candidatePairs(
-        Dedup.bandKeys(Dedup.minhashSignatures(sh, "doc_id", 8), "doc_id", 2),
+        Dedup.bandKeysFromWide(Dedup.minhashWide(sh, "doc_id", 8), "doc_id", 8, 2),
         "doc_id"),
       Set("doc_id"), "candidatePairs")
     assertNoBucketCollects(

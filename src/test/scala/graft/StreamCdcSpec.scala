@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Cdc
 import graft.sources.TableStore
-import graft.streaming.StreamCdc
+import graft.streaming.{Maintain, StreamCdc}
 
 /** Streaming CDC mirror: micro-batch folds of an op feed must equal the
   * one-shot batch [[Cdc.applyChanges]], including cross-batch
@@ -111,14 +111,42 @@ class StreamCdcSpec extends SparkSpec {
     feed.filter(col("seq") < 5).coalesce(1).write.mode("append").parquet(srcDir)
     feed.filter(col("seq") >= 5).coalesce(1).write.mode("append").parquet(srcDir)
     val store2 = new TableStore(s, Files.createTempDirectory("graft_cdc3").toString)
+    val ckptDir = Files.createTempDirectory("graft_cdc3_ckpt").toString
     val stream = s.readStream.schema(feed.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    StreamCdc.maintainer(stream, store2, "mirror", Seq("k"), "seq", "op")
+    Maintain(stream, ckptDir)(
+      StreamCdc.applyBatch(store2, "mirror", Seq("k"), "seq", "op") _)
       .start().awaitTermination()
     assert(
       StreamCdc.present(store2.read("mirror"), "seq", "op")
         .as[(Long, String)].collect().toSet ==
         StreamCdc.present(store.read("mirror"), "seq", "op")
+          .as[(Long, String)].collect().toSet)
+  }
+
+  test("a restarted stream resumes its batch ids from the checkpoint: mirror == one-shot") {
+    val srcDir = Files.createTempDirectory("graft_cdc_rs_src").toString
+    val ckptDir = Files.createTempDirectory("graft_cdc_rs_ckpt").toString
+    val store = new TableStore(s, Files.createTempDirectory("graft_cdc_rs").toString)
+    def run(): Unit = {
+      // no maxFilesPerTrigger: each run folds all unseen files as ONE batch
+      val stream = s.readStream.schema(feed.schema).parquet(srcDir)
+      Maintain(stream, ckptDir)(
+        StreamCdc.applyBatch(store, "mirror", Seq("k"), "seq", "op") _)
+        .start().awaitTermination()
+    }
+    (0 to 1).foreach(i => feed.filter(col("seq") % 3 === i).coalesce(1)
+      .write.mode("append").parquet(srcDir))
+    run() // batch 0
+    feed.filter(col("seq") % 3 === 2).coalesce(1).write.mode("append").parquet(srcDir)
+    // the restart must fold the third file as batch 1: a fresh id 0 would
+    // sit at the marker and be skipped as a replay
+    run()
+    assert(store.getMarker("mirror__batch").contains(1L))
+    assert(
+      StreamCdc.present(store.read("mirror"), "seq", "op")
+        .as[(Long, String)].collect().toSet ==
+        Cdc.applyChanges(feed, Seq("k"), "seq", "op")
           .as[(Long, String)].collect().toSet)
   }
 }

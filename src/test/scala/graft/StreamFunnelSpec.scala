@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.sources.TableStore
-import graft.streaming.StreamFunnel
+import graft.streaming.{Maintain, StreamFunnel}
 
 /** Streaming first-touch funnel: the folded (user, stage) min store must
   * read out the exact one-shot funnel (the MIN merge law across batches
@@ -110,8 +110,8 @@ class StreamFunnelSpec extends SparkSpec {
       .schema(events.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/in/*")
-    StreamFunnel.maintainer(stream, store, s"$dir/ckpt",
-      "funnel", "user_id", "event_type", "ts")
+    Maintain(stream, s"$dir/ckpt")(StreamFunnel.applyStageMins(store,
+      "funnel", "user_id", "event_type", "ts") _)
       .start().awaitTermination()
     assert(readout(store) == oneShot)
   }

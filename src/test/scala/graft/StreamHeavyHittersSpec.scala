@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Sketches
 import graft.sources.TableStore
-import graft.streaming.StreamSketch
+import graft.streaming.{Maintain, StreamSketch}
 
 /** Streaming heavy-hitter maintenance: the per-batch CMS increment log
   * must sum to the one-shot corpus sketch (linearity), the k-row
@@ -103,8 +103,7 @@ class StreamHeavyHittersSpec extends SparkSpec {
     def run(): Unit = {
       val stream = s.readStream.schema(arrivals.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      StreamSketch.heavyHitterMaintainer(stream, store, ckptDir,
-        "cms", "top", "key", K, DEPTH, WIDTH).start().awaitTermination()
+      Maintain(stream, ckptDir)(fold(store)).start().awaitTermination()
     }
     (0 to 1).foreach { i =>
       arrivals.filter(col("idx") % 3 === i).coalesce(1)

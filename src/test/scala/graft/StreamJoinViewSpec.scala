@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.TableStore
-import graft.streaming.StreamJoinView
+import graft.streaming.{Maintain, StreamJoinView}
 
 /** Streaming join-view maintenance: the view log must equal the one-shot
   * join as a bag however arrivals are batched (sides interleaved, a row's
@@ -95,8 +95,8 @@ class StreamJoinViewSpec extends SparkSpec {
     def run(): Unit = {
       val stream = s.readStream.schema(arrivals.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      StreamJoinView.maintainer(stream, store, ckptDir,
-        "a_log", "b_log", "v", "side", Seq("k")).start().awaitTermination()
+      Maintain(stream, ckptDir)(StreamJoinView.applyBatch(store,
+        "a_log", "b_log", "v", "side", Seq("k")) _).start().awaitTermination()
     }
     (0 to 2).foreach(i => arrivals.filter(col("idx") === i).coalesce(1)
       .write.mode("append").parquet(srcDir))

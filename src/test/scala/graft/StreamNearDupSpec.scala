@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 import graft.sources.TableStore
-import graft.streaming.StreamDedup
+import graft.streaming.{Maintain, StreamDedup}
 
 /** Streaming near-dup maintenance: the micro-batch band-store folds must
   * emit, across all batches, exactly the one-shot banded-LSH candidate
@@ -173,8 +173,8 @@ class StreamNearDupSpec extends SparkSpec {
     def run(): Unit = {
       val stream = s.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      StreamDedup.nearDupMaintainer(stream, store, ckptDir,
-        "bands", "pairs", "doc_id", "text").start().awaitTermination()
+      Maintain(stream, ckptDir)(StreamDedup.applyBatch(store,
+        "bands", "pairs", "doc_id", "text", 16, 4, 3) _).start().awaitTermination()
     }
     // first process lifetime sees two batches...
     (0 to 1).foreach { i =>

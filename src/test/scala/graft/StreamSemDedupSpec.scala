@@ -6,7 +6,7 @@ import java.util.Comparator
 import org.apache.spark.sql.functions._
 
 import graft.sources.TableStore
-import graft.streaming.StreamSemDedup
+import graft.streaming.{Maintain, StreamSemDedup}
 
 /** Streaming SemDeDup maintenance: the maintained kept flags must equal
   * the arrival-order greedy over frozen-centroid clusters (dropped
@@ -130,8 +130,8 @@ class StreamSemDedupSpec extends SparkSpec {
     def run(): Unit = {
       val stream = s.readStream.schema(batchDf(0).schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      StreamSemDedup.maintainer(stream, store, ckptDir, "members",
-        centroids, Tau).start().awaitTermination()
+      Maintain(stream, ckptDir)(StreamSemDedup.applyBatch(store, "members",
+        centroids, Tau) _).start().awaitTermination()
     }
     (0 to 1).foreach(b => batchDf(b).coalesce(1).write.mode("append").parquet(srcDir))
     run()

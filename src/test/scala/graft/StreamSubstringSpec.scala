@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 import graft.sources.TableStore
-import graft.streaming.StreamDedup
+import graft.streaming.{Maintain, StreamDedup}
 
 /** Streaming substring-dedup maintenance: per-batch folds of the
   * span-count store must log, across all batches, exactly the one-shot
@@ -109,8 +109,8 @@ class StreamSubstringSpec extends SparkSpec {
     }
     val stream = s.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    StreamDedup.substringMaintainer(stream, store2, ckptDir,
-      "spans", "dups", "doc_id", "text", L).start().awaitTermination()
+    Maintain(stream, ckptDir)(StreamDedup.applySubstringBatch(store2,
+      "spans", "dups", "doc_id", "text", L) _).start().awaitTermination()
     def agg(st: TableStore) = st.read("spans")
       .groupBy(col("span_h")).agg(sum(col("n_old")).cast("long").as("n"))
       .as[(String, Long)].collect().toSet

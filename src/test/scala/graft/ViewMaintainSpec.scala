@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalAgg
 import graft.sources.{TableStore, Tables}
-import graft.streaming.ViewMaintain
+import graft.streaming.{Maintain, ViewMaintain}
 
 /** Streaming view maintenance: N micro-batches of deltas folded into the
   * stored state must end bit-identical to one-shot re-aggregation — the
@@ -28,10 +28,11 @@ class ViewMaintainSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(srcDir)
     }
     val store = new TableStore(spark, Files.createTempDirectory("graft_topk").toString)
+    val ckptDir = Files.createTempDirectory("graft_topk_ckpt").toString
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    ViewMaintain.maintainer(stream, store, "user_counts",
-      Seq("event_type", "user_id"), Nil).start().awaitTermination()
+    Maintain(stream, ckptDir)(ViewMaintain.applyBatch(store, "user_counts",
+      Seq("event_type", "user_id"), Nil) _).start().awaitTermination()
 
     val got = IncrementalAgg.present(store.read("user_counts"),
         Seq("event_type", "user_id"), Nil)
@@ -102,11 +103,13 @@ class ViewMaintainSpec extends SparkSpec {
     }
 
     val store = new TableStore(spark, Files.createTempDirectory("graft_vm").toString)
+    val ckptDir = Files.createTempDirectory("graft_vm_ckpt").toString
     val stream = spark.readStream
       .schema(li.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
-    ViewMaintain.maintainer(stream, store, "agg_lineitem", keys, sums)
+    Maintain(stream, ckptDir)(
+      ViewMaintain.applyBatch(store, "agg_lineitem", keys, sums) _)
       .start().awaitTermination()
 
     val streamed = IncrementalAgg.present(store.read("agg_lineitem"), keys, sums)
@@ -119,7 +122,7 @@ class ViewMaintainSpec extends SparkSpec {
     // stored table exists and carries one row per group
     assert(store.read("agg_lineitem").count() == oneShot.count())
 
-    // replay safety: foreachBatch is at-least-once — re-applying an
+    // replay safety: the stream driver is at-least-once — re-applying an
     // already-folded batch id must be a no-op, not a double-fold
     val replayed = li.limit(50)
     ViewMaintain.applyBatch(store, "agg_lineitem", keys, sums)(replayed, 0L)
@@ -130,5 +133,36 @@ class ViewMaintainSpec extends SparkSpec {
     ViewMaintain.applyBatch(store, "agg_lineitem", keys, sums)(replayed, 99L)
     assert(IncrementalAgg.present(store.read("agg_lineitem"), keys, sums)
       .agg(sum("n")).head().getLong(0) == li.count() + 50)
+  }
+
+  test("a restarted stream resumes its batch ids from the checkpoint: view == one-shot") {
+    val keys = Seq("l_returnflag", "l_linestatus")
+    val sums = Seq("l_quantity", "l_extendedprice")
+    val li = Tables.lineitem(spark, sfDir)
+      .select((keys ++ sums).map(col): _*)
+    val srcDir = Files.createTempDirectory("graft_vm_rs_src").toString
+    val ckptDir = Files.createTempDirectory("graft_vm_rs_ckpt").toString
+    val store = new TableStore(spark, Files.createTempDirectory("graft_vm_rs").toString)
+    def part(i: Int) = li.filter(col("l_quantity").cast("long") % 3 === i)
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    def run(): Unit = {
+      // no maxFilesPerTrigger: each run folds all unseen files as ONE batch
+      val stream = spark.readStream.schema(li.schema).parquet(srcDir)
+      Maintain(stream, ckptDir)(
+        ViewMaintain.applyBatch(store, "agg_lineitem", keys, sums) _)
+        .start().awaitTermination()
+    }
+    part(0); part(1)
+    run() // batch 0
+    part(2)
+    // the restart must fold the third file as batch 1: a fresh id 0 would
+    // sit at the marker and be skipped as a replay
+    run()
+    assert(store.getMarker("agg_lineitem__batch").contains(1L))
+    val streamed = IncrementalAgg.present(store.read("agg_lineitem"), keys, sums)
+    val oneShot = IncrementalAgg.present(
+      IncrementalAgg.fromBatch(li, keys, sums), keys, sums)
+    assert(streamed.exceptAll(oneShot).isEmpty && oneShot.exceptAll(streamed).isEmpty,
+      "the restarted stream must end at the one-shot aggregate")
   }
 }

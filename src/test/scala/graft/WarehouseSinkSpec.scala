@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Constants
 import graft.operators.{QualityChecks, Scd2}
 import graft.sources.{TableStore, Tables}
-import graft.streaming.WarehouseSink
+import graft.streaming.{Maintain, WarehouseSink}
 
 /** Streaming ingest through the batch warehouse path: micro-batches become
   * Load_id batches through the same staging + SCD2 stages, ending in the
@@ -30,12 +30,13 @@ class WarehouseSinkSpec extends SparkSpec {
       .mode("append").parquet(srcDir)
 
     val store = new TableStore(spark, Files.createTempDirectory("graft_wh").toString)
+    val ckptDir = Files.createTempDirectory("graft_wh_ckpt").toString
     val stream = spark.readStream
       .schema(customers.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
 
-    val q = WarehouseSink.stagingLoader(stream, store, "scr_customer") { loadId =>
+    val toDim: Int => Unit = { loadId =>
       val src = store.read("scr_customer")
         .filter(col("Load_id") === loadId.toString)
         .select("customer_nk", "customer_name", "segment")
@@ -46,8 +47,10 @@ class WarehouseSinkSpec extends SparkSpec {
           Scd2.scd2Apply(store.read("dim_customer"), src, Seq("customer_nk"),
             Seq("customer_name", "segment"), Date.valueOf("2024-06-01"))
       store.overwrite("dim_customer", dim)
-    }.start()
-    q.awaitTermination()
+    }
+    Maintain(stream, ckptDir)(
+      WarehouseSink.applyBatch(store, "scr_customer", toDim) _)
+      .start().awaitTermination()
 
     val staged = store.read("scr_customer")
     assert(staged.count() == customers.count(), "every row staged exactly once")
@@ -75,6 +78,7 @@ class WarehouseSinkSpec extends SparkSpec {
         .mode("append").parquet(srcDir)
     }
     val store = new TableStore(spark, Files.createTempDirectory("graft_inc_wh").toString)
+    val ckptDir = Files.createTempDirectory("graft_inc_ckpt").toString
     val stream = spark.readStream
       .schema(li.schema)
       .option("maxFilesPerTrigger", "1")
@@ -82,16 +86,13 @@ class WarehouseSinkSpec extends SparkSpec {
     // the production state-table pattern: each micro-batch folds its delta
     // into the persisted state (TableStore's temp-then-swap makes the
     // read-modify-overwrite safe); only the delta is ever re-aggregated
-    val q = stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val delta = IncrementalAgg.fromBatch(batch.toDF(), keys, sums)
-        val next =
-          if (!store.exists("agg_state")) delta
-          else IncrementalAgg.merge(store.read("agg_state"), delta, keys, sums)
-        store.overwrite("agg_state", next)
-      }.start()
-    q.awaitTermination()
+    Maintain(stream, ckptDir) { (batch, _) =>
+      val delta = IncrementalAgg.fromBatch(batch, keys, sums)
+      val next =
+        if (!store.exists("agg_state")) delta
+        else IncrementalAgg.merge(store.read("agg_state"), delta, keys, sums)
+      store.overwrite("agg_state", next)
+    }.start().awaitTermination()
 
     val streamed = IncrementalAgg.present(store.read("agg_state"), keys, sums)
       .collect().map(_.toSeq).toSet
@@ -100,5 +101,34 @@ class WarehouseSinkSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(streamed == oneShot,
       s"streamed-only: ${streamed -- oneShot}; oneshot-only: ${oneShot -- streamed}")
+  }
+
+  test("a restarted stream stages its new file under the next Load_id") {
+    import spark.implicits._
+    val customers = Tables.customer(spark, sfDir)
+      .select(col("c_custkey").as("customer_nk"),
+        col("c_name").as("customer_name"),
+        col("c_mktsegment").as("segment"))
+    def part(i: Int) = customers.filter(col("customer_nk") % 3 === i)
+    val srcDir = Files.createTempDirectory("graft_wh_rs_src").toString
+    val ckptDir = Files.createTempDirectory("graft_wh_rs_ckpt").toString
+    val store = new TableStore(spark, Files.createTempDirectory("graft_wh_rs").toString)
+    def run(): Unit = {
+      // no maxFilesPerTrigger: each run stages all unseen files as ONE batch
+      val stream = spark.readStream.schema(customers.schema).parquet(srcDir)
+      Maintain(stream, ckptDir)(WarehouseSink.applyBatch(store, "scr_customer") _)
+        .start().awaitTermination()
+    }
+    (0 to 1).foreach(i => part(i).coalesce(1).write.mode("append").parquet(srcDir))
+    run() // Load_id 1
+    part(2).coalesce(1).write.mode("append").parquet(srcDir)
+    // the restart resumes at batch 1 = Load_id 2; a fresh id 0 would ask
+    // for Load_id 1 again and the duplicate-load guard would refuse it
+    run()
+    val staged = store.read("scr_customer")
+    assert(staged.count() == customers.count(), "every row staged exactly once")
+    assert(staged.select("Load_id").as[String].distinct().collect().toSet == Set("1", "2"))
+    assert(staged.filter(col("Load_id") === "2").select("customer_nk").as[Long]
+      .collect().toSet == part(2).select("customer_nk").as[Long].collect().toSet)
   }
 }

@@ -778,7 +778,7 @@ object LlmEmbed {
 
   /** Embedding-cosine duplicate CLUSTERS: connected components over the
     * cosine near-dup pairs (graft.operators.Dedup.dupClusters — the same
-    * label-propagation loop the MinHash clusters use), so a cluster of
+    * connected-components loop the MinHash clusters use), so a cluster of
     * mutually-similar embeddings collapses to its min vec_id. The oracle
     * takes the transitive closure with a recursive CTE.
     */
@@ -798,11 +798,9 @@ object LlmEmbed {
       .select(col("doc_id").as("vec_id"), col("cluster"))
   }
 
-  /** Same clusters via the O(log diameter) large-star/small-star CC
-    * (graft.operators.Dedup.dupClustersStar — the scale path for deep
-    * components, where label propagation would need diameter rounds).
-    * Identical contract, identical recursive-CTE oracle — so the star
-    * variant carries its own CORRECTNESS row rather than only a spec.
+  /** The same clusters as a star graph (each member → its component's
+    * min vec_id), from the same loop (graft.operators.Dedup.dupClusters).
+    * Identical recursive-CTE oracle, its own CORRECTNESS row.
     */
   private val cosineClustersStar = Q(
     "dedup_clusters_star",
@@ -814,7 +812,7 @@ object LlmEmbed {
        |          UNION SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
        |SELECT src AS vec_id, CAST(least(src, min(dst)) AS BIGINT) AS cluster
        |FROM reach GROUP BY 1""".stripMargin) { (s, d) =>
-    graft.operators.Dedup.dupClustersStar(
+    graft.operators.Dedup.dupClusters(
         cosinePairsDf(s, d)
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster"))

@@ -1405,8 +1405,8 @@ object Relational {
   }
 
   /** Exact connected components of the page-transition graph
-    * ([[graft.operators.Dedup.dupClustersStar]] — the large-star/
-    * small-star alternation, O(log n) rounds, no data-sized window):
+    * ([[graft.operators.Dedup.dupClusters]] — min-label propagation with
+    * pointer jumping, run to its fixed point, no data-sized window):
     * which page sets are mutually reachable at all — the coarsest
     * structure under `events_labelprop`'s density communities, and the
     * same fixed point the doc-dedup clustering machinery computes, here
@@ -1434,7 +1434,7 @@ object Relational {
        |SELECT cl.node, cl.component, cs.csize
        |FROM cl JOIN cs ON cs.component = cl.component""".stripMargin) { (s, d) =>
     val und = graft.operators.Triangles.undirected(pageTransitions(s, d))
-    val lbl = graft.operators.Dedup.dupClustersStar(
+    val lbl = graft.operators.Dedup.dupClusters(
       und.select(col("u").as("doc_a"), col("v").as("doc_b")))
       .select(col("doc_id").as("node"), col("cluster").as("component"))
     val cs = lbl.groupBy(col("component")).agg(lcount().as("csize"))

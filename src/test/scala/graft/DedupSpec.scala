@@ -305,27 +305,76 @@ class DedupSpec extends SparkSpec {
     assert(merged(20L) == 10L, "new member joins the old component's min id")
   }
 
-  test("dupClustersStar collapses a long chain in O(log diameter) rounds") {
-    // diameter 40: label propagation would need 40 rounds; the star
-    // algorithm's default 25 is plenty (log-diameter convergence)
-    val chain = (1L until 41L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.dupClustersStar(chain).as[(Long, Long)].collect().toMap
-    assert(got.keySet == (1L to 41L).toSet)
+  test("dupClusters and mergeClusters label a 50-doc chain with its min id, in both id orders") {
+    Seq(false, true).foreach { reversed =>
+      // consecutive ids along the chain are pairs; reversed, the min id
+      // sits at the far end of the chain
+      val ids = if (reversed) (50L to 1L by -1L) else (1L to 50L)
+      val whole = ids.map(_ -> 1L).toMap
+      val pairs = ids.zip(ids.tail).toDF("doc_a", "doc_b")
+      assert(Dedup.dupClusters(pairs).as[(Long, Long)].collect().toMap == whole,
+        s"reversed=$reversed")
+      // first half already clustered; the second half (with the link
+      // across the halves) arrives as new pairs
+      val (oldIds, _) = ids.splitAt(25)
+      val oldLabels = oldIds.map(_ -> oldIds.min).toDF("doc_id", "cluster")
+      val rest = ids.drop(24)
+      val merged = Dedup.mergeClusters(oldLabels, rest.zip(rest.tail).toDF("doc_a", "doc_b"))
+      assert(merged.as[(Long, Long)].collect().toMap == whole, s"reversed=$reversed")
+    }
+  }
+
+  test("dupClusters collapses a 1000-node chain") {
+    val chain = (1L until 1000L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val (labels, jobs) = Jobs.during(spark)(Dedup.dupClusters(chain))
+    // pinned at the measured count (job counts do not depend on host
+    // speed): pointer jumping converges here in 12 rounds, while
+    // propagation without the jump needs ~1000
+    assert(jobs.size <= 77, s"dupClusters ran ${jobs.size} jobs")
+    val got = labels.as[(Long, Long)].collect().toMap
+    assert(got.keySet == (1L to 1000L).toSet)
     assert(got.values.forall(_ == 1L), "whole chain is one component rooted at 1")
   }
 
-  test("dupClustersStar == dupClusters on random graphs") {
+  /** Min-id connected components by union-find: the independent
+    * reference [[Dedup.dupClusters]] is checked against.
+    */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // the larger root joins the smaller, so every root is its set's min
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  test("dupClusters == a union-find reference on random graphs") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val edgeGen = Gen.zip(Gen.chooseNum(1L, 25L), Gen.chooseNum(1L, 25L))
-    (1L to 3L).foreach { seed =>
-      val es = (1 to 30)
+    def randomEdges(nodes: Long, edges: Int, seed: Long) = {
+      val edgeGen = Gen.zip(Gen.chooseNum(1L, nodes), Gen.chooseNum(1L, nodes))
+      (1 to edges)
         .map(i => edgeGen.pureApply(Gen.Parameters.default, Seed(seed * 100 + i)))
         .filter { case (a, b) => a != b }
-      val pairs = es.toDF("doc_a", "doc_b")
-      val star = Dedup.dupClustersStar(pairs).as[(Long, Long)].collect().toMap
-      val prop = Dedup.dupClusters(pairs, maxIter = 30).as[(Long, Long)].collect().toMap
-      assert(star == prop, s"seed=$seed")
+    }
+    val graphs =
+      (1L to 3L).map(seed => s"random seed=$seed" -> randomEdges(25L, 30, seed)) ++
+        Seq(10L, 20L).map(seed => s"sparse seed=$seed" -> randomEdges(400L, 300, seed)) :+
+        ("star" -> (1L until 100L).map(leaf => (100L, leaf))) :+
+        // an even cycle whose ids are scattered around it
+        ("cycle" -> {
+          val ring = (0L until 16L).map(i => (i * 5) % 16 + 1)
+          ring.zip(ring.tail :+ ring.head)
+        })
+    graphs.foreach { case (name, es) =>
+      val got = Dedup.dupClusters(es.toDF("doc_a", "doc_b"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == unionFind(es), name)
     }
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 import graft.operators.Dedup
 import graft.sources.TableStore
-import graft.streaming.StreamDedup
+import graft.streaming.{Maintain, StreamDedup}
 
 /** Streaming duplicate-cluster maintenance: the micro-batch folds must
   * keep the label store's latest-delta readout exactly equal to one-shot
@@ -106,5 +106,38 @@ class StreamDupClustersSpec extends SparkSpec {
     assert(Files.exists(p1))
     fold(corpus.filter(col("doc_id") % 3 === 2), 2L)
     assert(readout(store) == oneShot)
+  }
+
+  test("a 50-doc chain streamed in two batches through Maintain is one min-id component, in both id orders") {
+    Seq(false, true).foreach { reversed =>
+      val ids = if (reversed) (50L to 1L by -1L) else (1L to 50L)
+      // the doc at chain position p holds tokens c_p and c_{p+1}: only
+      // chain neighbours share a token, so with unigram shingles and 32
+      // one-row bands the candidate graph is exactly the chain
+      val docs = ids.zipWithIndex.map { case (id, p) => (id, s"c$p c${p + 1}") }
+      val all = docs.toDF("doc_id", "text")
+      val fixture = Dedup.candidatePairs(
+        Dedup.bandKeysFromWide(
+          Dedup.minhashWide(
+            all.select(col("doc_id"),
+              explode(TextAnalysis.shingles(col("text"), 1)).as("shingle")),
+            "doc_id", 32),
+          "doc_id", 32, 1),
+        "doc_id").as[(Long, Long)].collect().toSet
+      assert(fixture == ids.zip(ids.tail).map { case (a, b) => (a min b, a max b) }.toSet,
+        "fixture must be a 50-document chain")
+      val srcDir = Files.createTempDirectory("graft_scc_chain_src").toString
+      val ckptDir = Files.createTempDirectory("graft_scc_chain_ckpt").toString
+      val store = new TableStore(s, Files.createTempDirectory("graft_scc_chain").toString)
+      docs.grouped(25).foreach { half =>
+        half.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(srcDir)
+      }
+      val stream = s.readStream.schema(all.schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      Maintain(stream, ckptDir)(StreamDedup.applyClusterBatch(
+        store, "bands", "labels", "doc_id", "text", 32, 1, 1) _).start().awaitTermination()
+      assert(store.lastAppliedBatch("bands") == 1L, "the chain arrives in two batches")
+      assert(readout(store) == ids.map(_ -> 1L).toSet, s"reversed=$reversed")
+    }
   }
 }

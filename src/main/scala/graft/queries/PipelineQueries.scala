@@ -858,16 +858,16 @@ object PipelineQueries {
         min(col("o_orderdate")).as("first_date"))
   }
 
-  /** Object-store-safe commit protocol end to end ([[TableStore
-    * .ManifestCommit]]): a fact table built ONLY from manifest-mode
-    * operations — a full partitioned load, a partition replacement that
-    * rebinds Include entries, a whole-dir partitioned append, and a
-    * second replacement that must take the append's EXCLUSION path while
-    * leaving its other partition visible. No directory is ever renamed;
-    * every visibility flip is one atomic manifest-file publish. The
-    * oracle recomputes the final state closed-form, so a hash match
-    * certifies the include/exclude binding algebra and the
-    * partition-discovery reads over uuid'd data dirs.
+  /** A partitioned fact table maintained through [[TableStore]]'s
+    * partition operations end to end: a full partitioned load, a
+    * partition replacement, a partitioned append of a new partition, and
+    * a second replacement that must leave the append's partition
+    * visible. Every replacement swaps only its own partition dirs by
+    * atomic rename. The oracle recomputes the final state closed-form,
+    * so a hash match certifies that each replacement rewrote exactly its
+    * partitions and that partition discovery reads the mixed layout
+    * back whole. The name stays: registered query names are part of the
+    * driver contract.
     */
   private val manifestStore = Q(
     "s16_manifest_store",
@@ -884,8 +884,7 @@ object PipelineQueries {
       |  SELECT o_orderkey, o_totalprice, CAST(9 AS BIGINT)
       |  FROM orders WHERE o_orderkey % 7 = 0)
       |SELECT o_orderkey, o_totalprice, p FROM cur""".stripMargin) { (s, d) =>
-    val store = new TableStore(s,
-      Files.createTempDirectory("graft_s16").toString, TableStore.ManifestCommit)
+    val store = new TableStore(s, Files.createTempDirectory("graft_s16").toString)
     val base = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_totalprice"),
         pmod(col("o_orderkey"), lit(4)).cast(LongType).as("p"))
@@ -900,7 +899,7 @@ object PipelineQueries {
     store.replacePartitions("fact",
       base.filter(col("p") === 2)
         .withColumn("o_totalprice", col("o_totalprice") + 200), "p")
-    // C1 guard: an all-empty feed publishes no manifest at all (every
+    // C1 guard: an all-empty feed lands no table at all (every
     // replacement/append had zero rows) — read out the frame's own shape
     val fact = if (store.exists("fact")) store.read("fact") else base.limit(0)
     fact.select(col("o_orderkey"), col("o_totalprice"),

@@ -36,7 +36,7 @@ import graft.sources.TableStore
   * watermark lives in its own scalar marker committed LAST
   * ([[TableStore.putMarker]] — one file, atomic single-file move). A crash anywhere before the marker — half the
   * buckets swapped, or a bucket parked mid-swap
-  * ([[TableStore.recoverPartitions]] restores it before the next fold
+  * (the store's recovery sweep restores it before the next fold
   * reads) — leaves the marker behind, the batch replays, and the fold
   * is idempotent: re-merging rows the state already absorbed picks the
   * same winners ([[Cdc.latestRows]] is a max, and maxes are

@@ -405,8 +405,8 @@ object StreamDedup {
     * keys) and the pair log by `__batch`, and each fold lands exactly its
     * own batch's partition through [[TableStore.replacePartitions]] — so
     * the per-batch write volume is O(batch), not O(state), and a 100 TB
-    * band store never gets copied to absorb a 1 GB micro-batch. Reads
-    * first run [[TableStore.recoverPartitions]]: a crash inside a
+    * band store never gets copied to absorb a 1 GB micro-batch. Every
+    * store read first runs the store's recovery sweep: a crash inside a
     * previous fold's partition swap parks that partition in a side-dir,
     * and planning against a store missing parked history would silently
     * lose band keys (and with them every future cross-batch pair against

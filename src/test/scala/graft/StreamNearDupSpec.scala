@@ -80,25 +80,6 @@ class StreamNearDupSpec extends SparkSpec {
     assert(fingerprint("bands", "__applied=0") == batch0Bands)
   }
 
-  test("the same folds on a MANIFEST-commit store emit the one-shot pair set") {
-    // the object-store-safe protocol under the real maintainer: history
-    // reads resolve manifests instead of a live dir, per-batch partition
-    // appends rebind in one pointer swap, and replay stays a no-op
-    val store = new TableStore(s,
-      Files.createTempDirectory("graft_sdedup_m").toString,
-      TableStore.ManifestCommit)
-    val fold = StreamDedup.applyBatch(
-      store, "bands", "pairs", "doc_id", "text", 16, 4, 3) _
-    (0 to 2).foreach(i => fold(corpus.filter(col("doc_id") % 3 === i), i.toLong))
-    def emitted = store.read("pairs")
-      .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
-    assert(emitted == oneShotPairs)
-    val bandsBefore = store.read("bands").collect().toSet
-    fold(corpus.filter(col("doc_id") % 3 === 2), 2L) // at-least-once replay
-    assert(emitted == oneShotPairs)
-    assert(store.read("bands").collect().toSet == bandsBefore)
-  }
-
   test("a crash between the pair-log and band-store commits replays without duplicates") {
     // applyBatch commits the pair log FIRST, the band store partition
     // (whose presence IS the applied-batch-id guard) LAST — so the

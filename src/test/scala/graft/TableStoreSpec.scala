@@ -210,16 +210,45 @@ class TableStoreSpec extends SparkSpec {
     assert(store.read("p").filter(col("yr") === 2021).count() == 2)
   }
 
+  test("a zero-row partitioned write lands no table; a later append reads") {
+    // Spark writes no part file for an empty partitioned write, only
+    // _SUCCESS: a table dir holding nothing else must not read as present
+    val root = Files.createTempDirectory("graft_store").toString
+    val store = new TableStore(spark, root)
+    val empty = Seq.empty[(Int, Long)].toDF("v", "p")
+    store.replacePartitions("e", empty, "p")
+    assert(!store.exists("e"))
+    store.append("e", empty, Seq("p"))
+    assert(!store.exists("e"))
+    assert(store.lastAppliedBatch("e", "p") == -1L)
+    store.append("e", Seq((1, 1L), (2, 2L)).toDF("v", "p"), Seq("p"))
+    assert(store.read("e").select("v").as[Int].collect().sorted.toSeq == Seq(1, 2))
+    store.append("e", empty, Seq("p")) // must not disturb a live table
+    assert(store.lastAppliedBatch("e", "p") == 2L)
+    // an overwrite that empties the table reads as nonexistent — also
+    // after a crash before the displaced version's cleanup, whose stale
+    // .old_ park a later sweep must not resurrect
+    store.overwrite("e", empty, Seq("p"))
+    assert(!store.exists("e"))
+    store.append("e", Seq((1, 1L)).toDF("v", "p"), Seq("p"))
+    Files.move(Paths.get(s"$root/e"), Paths.get(s"$root/.old_e"))
+    empty.write.partitionBy("p").parquet(s"$root/e")
+    assert(!store.exists("e"))
+    assert(!store.exists("e"), "a stale .old_ park came back")
+    store.replacePartitions("e", Seq((3, 3L)).toDF("v", "p"), "p")
+    assert(store.read("e").select("v").as[Int].collect().toSeq == Seq(3))
+  }
+
   test("compact collapses many small append files without changing content") {
     val root = Files.createTempDirectory("graft_store").toString
     val store = new TableStore(spark, root)
     (0 until 6).foreach(b =>
       store.append("c", Seq(b * 2, b * 2 + 1).toDF("v").repartition(2)))
-    assert(store.dataFileCount("c") >= 6, "fixture must start fragmented")
+    assert(store.read("c").inputFiles.length >= 6, "fixture must start fragmented")
     val before = store.read("c").as[Int].collect().sorted.toSeq
 
     store.compact("c", targetRowsPerFile = 100)
-    assert(store.dataFileCount("c") == 1, "12 rows fit one 100-row file")
+    assert(store.read("c").inputFiles.length == 1, "12 rows fit one 100-row file")
     assert(store.read("c").as[Int].collect().sorted.toSeq == before)
   }
 
@@ -251,191 +280,6 @@ class TableStoreSpec extends SparkSpec {
     assert(plain == 200000, s"unclustered scan must decode everything ($plain)")
     assert(clustered * 4 <= plain,
       s"row-group skip ineffective: clustered=$clustered plain=$plain")
-  }
-
-  // --- Manifest commit mode -----------------------------------------------
-
-  private def manifestStore(): (TableStore, String) = {
-    val root = Files.createTempDirectory("graft_manifest").toString
-    (new TableStore(spark, root, TableStore.ManifestCommit), root)
-  }
-
-  test("manifest mode: overwrite/append/partitioned read behave as rename mode") {
-    val (store, root) = manifestStore()
-    assert(!store.exists("t"))
-    store.overwrite("t", Seq(1, 2, 3).toDF("v"))
-    assert(store.read("t").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
-    store.overwrite("t", Seq(10, 20).toDF("v"))
-    assert(store.read("t").as[Int].collect().sorted.toSeq == Seq(10, 20))
-    store.append("t", Seq(30).toDF("v"))
-    assert(store.read("t").as[Int].collect().sorted.toSeq == Seq(10, 20, 30))
-    // partition columns are discovered natively relative to each data dir
-    store.append("p", Seq((1, 2020), (2, 2021)).toDF("v", "yr"), Seq("yr"))
-    store.append("p", Seq((3, 2021)).toDF("v", "yr"), Seq("yr"))
-    assert(store.read("p").filter(col("yr") === 2021)
-      .select("v").as[Int].collect().toSet == Set(2, 3))
-    // no live directory ever exists — data only under .data/, pointer
-    // only under .manifests/
-    assert(!Files.exists(Paths.get(s"$root/t")))
-    assert(Files.exists(Paths.get(s"$root/.manifests/t")))
-  }
-
-  test("manifest mode: versioned overwrite time-travels, prunes, rolls back") {
-    val (store, _) = manifestStore()
-    assert(store.overwriteVersioned("t", Seq(1).toDF("v")) == 0L)
-    assert(store.overwriteVersioned("t", Seq(2).toDF("v")) == 1L)
-    assert(store.overwriteVersioned("t", Seq(3).toDF("v")) == 2L)
-    assert(store.versions("t") == Seq(1L, 2L))
-    assert(store.read("t").as[Int].head() == 3)
-    assert(store.readVersion("t", 1).as[Int].head() == 1)
-    assert(store.readVersion("t", 2).as[Int].head() == 2)
-    // rollback publishes one more manifest pointing at v1's entries; the
-    // displaced current stays readable as its own id
-    val displaced = store.rollback("t", 1)
-    assert(store.read("t").as[Int].head() == 1)
-    assert(store.readVersion("t", displaced).as[Int].head() == 3)
-    // retention: keep=2 prunes older manifests AND their orphaned data
-    store.overwriteVersioned("t", Seq(4).toDF("v"), keep = 2)
-    assert(store.versions("t").size == 2)
-    intercept[IllegalArgumentException](store.readVersion("t", 1))
-  }
-
-  test("manifest mode: replacePartitions rebinds atomically in one manifest") {
-    val (store, root) = manifestStore()
-    store.replacePartitions("t",
-      Seq((1, 1L), (2, 1L), (3, 2L)).toDF("v", "p"), "p")
-    assert(store.read("t").select("v").as[Int].collect().toSet == Set(1, 2, 3))
-    // replacing two partitions = ONE new manifest (atomic as a unit),
-    // Include entries rebound
-    val before = Files.list(Paths.get(s"$root/.manifests/t")).count()
-    store.replacePartitions("t",
-      Seq((10, 1L), (30, 2L), (40, 4L)).toDF("v", "p"), "p")
-    val after = Files.list(Paths.get(s"$root/.manifests/t")).count()
-    assert(store.read("t").select("v").as[Int].collect().toSet == Set(10, 30, 40))
-    assert(after - before <= 1, "multi-partition replace must publish once")
-    // replacement over a WHOLE-DIR entry (from append) takes the
-    // exclusion path: untouched partitions keep reading the appended dir
-    store.append("u", Seq((1, 1L), (2, 2L)).toDF("v", "p"), Seq("p"))
-    store.replacePartitions("u", Seq((20, 2L)).toDF("v", "p"), "p")
-    assert(store.read("u").select("v").as[Int].collect().toSet == Set(1, 20))
-    assert(store.lastAppliedBatch("u", "p") == 2L)
-  }
-
-  test("manifest mode chaos: a crash before the pointer lands publishes nothing") {
-    val (store, root) = manifestStore()
-    store.overwrite("t", Seq(1, 2).toDF("v"))
-    // a writer that died after finishing its data dir but before moving
-    // the manifest file: data present, pointer absent
-    Seq(99).toDF("v").write.parquet(s"$root/.data/t/w_orphan_crashed")
-    Files.writeString(Paths.get(s"$root/.manifests/t/.tmp_m2"), "keep=0\nw_orphan_crashed\t-\t*\t")
-    assert(store.read("t").as[Int].collect().sorted.toSeq == Seq(1, 2),
-      "readers must keep resolving the old manifest")
-    // the next committed write garbage-collects the orphan dir
-    store.overwrite("t", Seq(7).toDF("v"))
-    assert(!Files.exists(Paths.get(s"$root/.data/t/w_orphan_crashed")))
-    assert(store.read("t").as[Int].head() == 7)
-  }
-
-  test("manifest mode chaos: a crash after the pointer lands loses nothing to GC") {
-    val (store, root) = manifestStore()
-    store.overwrite("t", Seq(1).toDF("v"))
-    store.overwrite("t", Seq(2).toDF("v"))
-    // GC runs strictly after the publish, so the worst crash leaves
-    // stale manifests + their dirs — readers already see the new state,
-    // and any later write re-runs the sweep. Simulate the leftovers:
-    Seq(0).toDF("v").write.parquet(s"$root/.data/t/w_stale_dir")
-    assert(store.read("t").as[Int].head() == 2)
-    store.append("t", Seq(3).toDF("v"))
-    assert(!Files.exists(Paths.get(s"$root/.data/t/w_stale_dir")))
-    assert(store.read("t").as[Int].collect().sorted.toSeq == Seq(2, 3))
-  }
-
-  test("manifest mode: streaming-fold shape (replacePartitions + lastAppliedBatch + filtered reads)") {
-    // the exact access pattern every streaming maintainer uses, driven
-    // against the object-store-safe protocol: per-batch __applied
-    // partition appends with replay guards and history-filtered reads
-    val (store, _) = manifestStore()
-    def fold(rows: Seq[(Long, Long)], batch: Long): Unit = {
-      if (batch > store.lastAppliedBatch("log")) {
-        val history =
-          if (store.exists("log"))
-            store.read("log").filter(col("__applied") < batch).count()
-          else 0L
-        assert(history == rows.head._2, "fold must see exactly prior batches")
-        store.replacePartitions("log",
-          rows.toDF("k", "n").withColumn("__applied", lit(batch)), "__applied")
-      }
-    }
-    fold(Seq((1L, 0L), (2L, 0L)), 0L)
-    fold(Seq((3L, 2L)), 1L)
-    fold(Seq((3L, 2L)), 1L) // replay: replaces its own partition, no dup
-    fold(Seq((4L, 3L)), 2L)
-    assert(store.lastAppliedBatch("log") == 2L)
-    assert(store.read("log").select("k").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 2L, 3L, 4L))
-  }
-
-  test("manifest mode: empty writes land nothing (never an uninferable dir)") {
-    val (store, _) = manifestStore()
-    val empty = Seq.empty[(Int, Long)].toDF("v", "p")
-    store.replacePartitions("e", empty, "p")
-    assert(!store.exists("e"))
-    store.append("e", empty, Seq("p"))
-    assert(!store.exists("e"))
-    store.overwrite("e", empty, Seq("p"))
-    assert(!store.exists("e"))
-    store.replacePartitions("e", Seq((1, 1L)).toDF("v", "p"), "p")
-    store.append("e", empty, Seq("p")) // empty append must not disturb state
-    assert(store.read("e").select("v").as[Int].collect().toSeq == Seq(1))
-    // an overwrite that empties an EXISTING table reads as nonexistent
-    store.overwrite("e", empty, Seq("p"))
-    assert(!store.exists("e"))
-  }
-
-  test("manifest mode: special-char partition values bind; mixed columns refuse") {
-    val (store, _) = manifestStore()
-    // values with ':' and ' ' are Hive-escaped in dir names; the manifest
-    // must bind the UNESCAPED value or the replacement becomes invisible
-    store.replacePartitions("s",
-      Seq(("a", "x y:z"), ("b", "plain")).toDF("v", "p"), "p")
-    assert(store.read("s").select("v").as[String].collect().toSet == Set("a", "b"))
-    store.replacePartitions("s", Seq(("A", "x y:z")).toDF("v", "p"), "p")
-    assert(store.read("s").select("v").as[String].collect().toSet == Set("A", "b"))
-    // a second partition column on the same table: defined refusal, not
-    // silent binding corruption
-    intercept[IllegalArgumentException](
-      store.replacePartitions("s", Seq(("c", "q1")).toDF("v", "q"), "q"))
-    // null partition values cannot be excluded later: defined refusal
-    intercept[IllegalArgumentException](
-      store.replacePartitions("n",
-        Seq((1, Option.empty[String]), (2, Some("ok"))).toDF("v", "p"), "p"))
-  }
-
-  test("manifest mode: compact folds N append entries into one data dir") {
-    val (store, root) = manifestStore()
-    (1 to 5).foreach(i => store.append("t", Seq(i).toDF("v")))
-    def dataDirs = Files.list(Paths.get(s"$root/.data/t")).count()
-    assert(dataDirs == 5, "one uuid dir per append")
-    store.compact("t", targetRowsPerFile = 100)
-    // the compacted manifest references ONE dir; GC (keep=0) drops the
-    // five append dirs it no longer references
-    assert(dataDirs == 1, "compact must fold entries and GC old dirs")
-    assert(store.read("t").as[Int].collect().sorted.toSeq == (1 to 5))
-  }
-
-  test("manifest mode: schema-evolved append stays readable; current id is no snapshot") {
-    val (store, _) = manifestStore()
-    store.append("t", Seq(1).toDF("v"))
-    store.append("t", Seq((2, "x")).toDF("v", "tag"))
-    val got = store.read("t").orderBy("v").collect()
-    assert(got.map(_.getInt(0)).toSeq == Seq(1, 2))
-    assert(got(0).isNullAt(1) && got(1).getString(1) == "x")
-    // the current manifest is the live table, not a snapshot
-    store.overwriteVersioned("w", Seq(1).toDF("v"))
-    intercept[IllegalArgumentException](store.readVersion("w", 1))
-    store.overwriteVersioned("w", Seq(2).toDF("v"))
-    assert(store.readVersion("w", 1).as[Int].head() == 1)
-    intercept[IllegalArgumentException](store.readVersion("w", 2))
   }
 
   // --- Schema reuse ---------------------------------------------------------
@@ -481,16 +325,13 @@ class TableStoreSpec extends SparkSpec {
     assert(Jobs.count(spark)(a.read("u2")) > 0)
   }
 
-  test("schema reuse: partitioned and manifest-mode tables still infer") {
+  test("schema reuse: partitioned tables still infer") {
     val root = Files.createTempDirectory("graft_reuse").toString
     val store = new TableStore(spark, root)
     store.overwrite("p", Seq((1, 2020), (2, 2021)).toDF("v", "yr"), Seq("yr"))
     store.append("q", Seq((1, 2020)).toDF("v", "yr"), Seq("yr"))
     assert(Jobs.count(spark)(store.read("p")) > 0)
     assert(Jobs.count(spark)(store.read("q")) > 0)
-    val (m, _) = manifestStore()
-    m.overwrite("t", Seq(1).toDF("v"))
-    assert(Jobs.count(spark)(m.read("t")) > 0)
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)

@@ -20,6 +20,11 @@ import graft.functions.TextAnalysis
   * duplicate-cluster size — a pathological mega-bucket means the banding
   * parameters are wrong, not that the plan should degrade to a cross join.
   * Exact dedup is a single hash aggregate on the text hash.
+  *
+  * One form per operator: SimHash is the portable 32-bit md5 family
+  * ([[simhashPortable]]), and the Hamming-pair and substring operators
+  * take the signature or span-occurrence frame (`…FromSig`, `…FromOcc`)
+  * that the catalog and the streaming folds persist and share.
   */
 object Dedup {
 
@@ -396,18 +401,13 @@ object Dedup {
       .select(col(idCol), col("pos").cast(LongType).as("pos"),
         md5(col("gram")).as("span_h"))
 
-  /** The corpus's duplicated-span index: every L-token window text that
-    * occurs more than once (within OR across documents — suffix-array
-    * semantics; within-doc self-repetition is duplication too), with its
-    * occurrence and document counts. One hash aggregate on the span hash.
-    */
-  def duplicatedSpanIndex(docs: DataFrame, idCol: String, textCol: String,
-      l: Int): DataFrame =
-    duplicatedSpanIndexFromOcc(spanOccurrences(docs, idCol, textCol, l), idCol)
-
-  /** [[duplicatedSpanIndex]] over an existing (possibly persisted)
-    * occurrence frame — consumers that share one span-occurrence store
-    * across queries pass it here instead of re-windowing the corpus.
+  /** The corpus's duplicated-span index over a [[spanOccurrences]] frame:
+    * every L-token window text that occurs more than once (within OR
+    * across documents — suffix-array semantics; within-doc
+    * self-repetition is duplication too), with its occurrence and
+    * document counts. One hash aggregate on the span hash. Consumers
+    * share one (possibly persisted) occurrence frame instead of
+    * re-windowing the corpus.
     */
   def duplicatedSpanIndexFromOcc(occ: DataFrame, idCol: String): DataFrame =
     occ
@@ -417,16 +417,11 @@ object Dedup {
         countDistinct(col(idCol)).cast(LongType).as("n_docs"))
       .filter(col("n_occ") > 1)
 
-  /** The persisted span-count store: one row per distinct L-token window
-    * text with its corpus occurrence count — the substring analog of the
-    * LSH band-key store. Incremental maintenance appends a batch's counts
-    * instead of re-windowing history.
+  /** The persisted span-count store over a [[spanOccurrences]] frame: one
+    * row per distinct L-token window text with its corpus occurrence
+    * count — the substring analog of the LSH band-key store. Incremental
+    * maintenance appends a batch's counts instead of re-windowing history.
     */
-  def spanCountStore(docs: DataFrame, idCol: String, textCol: String,
-      l: Int): DataFrame =
-    spanCountStoreFromOcc(spanOccurrences(docs, idCol, textCol, l))
-
-  /** [[spanCountStore]] over an existing occurrence frame. */
   def spanCountStoreFromOcc(occ: DataFrame): DataFrame =
     occ
       .groupBy(col("span_h"))
@@ -464,16 +459,11 @@ object Dedup {
     * the duplicate filter is a left-semi join on the span hash, and the
     * final join back to the corpus is per-doc 1:1. Output:
     * (id, n_tokens, n_dup_tokens) for every document, 0 for clean docs.
+    *
+    * `occ` is `docs`' [[spanOccurrences]] frame at the same `l`. It feeds
+    * BOTH the duplicate-key aggregate and the semi-join probe side, so
+    * pass a persisted or pinned frame, or the corpus is windowed twice.
     */
-  def duplicatedSpanCoverage(docs: DataFrame, idCol: String, textCol: String,
-      l: Int): DataFrame =
-    // occ feeds BOTH the duplicate-key aggregate and the semi-join probe
-    // side: checkpoint it so a standalone call windows the corpus once,
-    // not twice (catalog consumers pass a persisted shared frame instead)
-    duplicatedSpanCoverageFromOcc(docs,
-      Pin(spanOccurrences(docs, idCol, textCol, l)), idCol, textCol, l)
-
-  /** [[duplicatedSpanCoverage]] over an existing occurrence frame. */
   def duplicatedSpanCoverageFromOcc(docs: DataFrame, occ: DataFrame,
       idCol: String, textCol: String, l: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -506,7 +496,7 @@ object Dedup {
   }
 
   /** APPLY the substring-dedup policy — the transform a pipeline runs
-    * AFTER [[duplicatedSpanCoverage]] measures the cut quantity. Each
+    * AFTER [[duplicatedSpanCoverageFromOcc]] measures the cut quantity. Each
     * doc's duplicated L-token windows merge into islands (same interval
     * union), then:
     *  - DROP a document whose islands cover at least half its tokens
@@ -954,38 +944,14 @@ object Dedup {
     else prefilteredVerify(sh, idCol, Pin(cands), threshold.toDouble)
   }
 
-  /** SimHash (64-bit) per document over its token set: per bit position,
-    * sum ±1 weighted by each token-hash's bit, take the sign. Uses Spark's
-    * native xxhash64 — codegen'd, no UDF. The 64 positions are 64 sum
-    * aggregates over the token rows (one shuffle on doc id), NOT a 64×
+  /** Portable 32-bit SimHash per document over its token set: per bit
+    * position, sum ±1 weighted by each token-hash's bit, take the sign.
+    * The per-token hash family is md5 hex — computable bit-for-bit by any
+    * engine with md5 (bit p of a token = whether hex char p of its md5
+    * has its high bit set), so the whole hash is verifiable by an
+    * external SQL oracle, not just by recall. The 32 positions are 32 sum
+    * aggregates over the token rows (one shuffle on doc id), NOT a 32×
     * row explosion.
-    */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = graft.sources.Tables.spread(docs)
-      .select(col(idCol), explode(array_distinct(split(col(textCol), " "))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val bitSums = (0 until 64).map { p =>
-      sum(
-        when(shiftright(col("h"), p).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"b$p")
-    }
-    toks
-      .groupBy(col(idCol))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(
-        col(idCol),
-        (0 until 64)
-          .map(p => when(col(s"b$p") > 0, lit(1L << p)).otherwise(0L))
-          .reduce(_ + _)
-          .as("simhash"))
-  }
-
-  /** Portable 32-bit SimHash: same sign-sum construction as [[simhash]],
-    * but the per-token hash family is md5 hex — computable bit-for-bit by
-    * any engine with md5 (bit p of a token = whether hex char p of its
-    * md5 has its high bit set), so the whole hash is verifiable by an
-    * external SQL oracle, not just by recall. Same single-shuffle shape:
-    * 32 sum aggregates on the doc id, no row explosion per bit.
     */
   def simhashPortable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f")
@@ -1008,31 +974,6 @@ object Dedup {
           .as("simhash32"))
   }
 
-  /** EXACT Hamming-≤d near-dup pairs over the portable 32-bit SimHash,
-    * with the LSH plan shape: split each hash into d+1 chunks of
-    * near-equal width (chunk c covers bits ⌊32c/(d+1)⌋ … ⌊32(c+1)/(d+1)⌋,
-    * so every chunk holds ≥ 1 real bit for any d < 32) — by pigeonhole,
-    * any pair within Hamming distance d agrees on at least one chunk —
-    * bucket-join on (chunk index, chunk value), then keep only pairs
-    * whose full Hamming distance (bit_count of xor, codegen'd) is within
-    * the bound. Unlike [[simhashCandidates]] this is not a candidate set:
-    * the pigeonhole guarantee + residual filter make the result exactly
-    * the brute-force all-pairs answer, at bucket-join cost (sum over
-    * buckets of C(n,2) comparisons instead of C(N,2)). Wider chunks
-    * (smaller d) mean fewer, more selective buckets.
-    *
-    * Output: (doc_a, doc_b, hamming), a < b.
-    */
-  def simhashHammingPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 1): DataFrame =
-    simhashHammingPairsFromSig(
-      simhashPortable(docs, idCol, textCol), idCol, maxDist)
-
-  /** [[simhashHammingPairs]] over an existing (possibly persisted /
-    * session-shared) `(id, simhash32)` signature frame — the signature
-    * aggregate is the dominant cost and the production contract keeps it
-    * in a store, so consumers pass it in instead of re-deriving it.
-    */
   /** The pigeonhole chunk emission of [[simhashHammingPairsFromSig]] as
     * a standalone frame — (id, h, chunk, chunk_val), one row per doc per
     * chunk. Shared with the streaming fold
@@ -1062,6 +1003,25 @@ object Dedup {
       .select(col("id"), col("h"), col("pos").as("chunk"), col("col").as("chunk_val"))
   }
 
+  /** EXACT Hamming-≤d near-dup pairs over the portable 32-bit SimHash,
+    * with the LSH plan shape: split each hash into d+1 chunks of
+    * near-equal width (chunk c covers bits ⌊32c/(d+1)⌋ … ⌊32(c+1)/(d+1)⌋,
+    * so every chunk holds ≥ 1 real bit for any d < 32) — by pigeonhole,
+    * any pair within Hamming distance d agrees on at least one chunk —
+    * bucket-join on (chunk index, chunk value), then keep only pairs
+    * whose full Hamming distance (bit_count of xor, codegen'd) is within
+    * the bound. Unlike [[simhashCandidatesPortable]] this is not a
+    * candidate set: the pigeonhole guarantee + residual filter make the
+    * result exactly the brute-force all-pairs answer, at bucket-join cost
+    * (sum over buckets of C(n,2) comparisons instead of C(N,2)). Wider
+    * chunks (smaller d) mean fewer, more selective buckets.
+    *
+    * `sig` is an `(id, simhash32)` signature frame ([[simhashPortable]]),
+    * possibly persisted or session-shared: the signature aggregate is the
+    * dominant cost and the production contract keeps it in a store.
+    *
+    * Output: (doc_a, doc_b, hamming), a < b.
+    */
   def simhashHammingPairsFromSig(sig: DataFrame, idCol: String,
       maxDist: Int): DataFrame = {
     // Size-filtered bucket EQUI-JOIN ([[bucketPairs]]), not a per-bucket
@@ -1080,23 +1040,7 @@ object Dedup {
       .distinct()
   }
 
-  /** SimHash near-dup candidates: split the 64-bit hash into 4 16-bit
-    * chunks; docs sharing any chunk are candidates (finds all pairs within
-    * Hamming distance 3 by pigeonhole). [[bucketPairs]] over the chunk
-    * buckets — no bucket is ever materialized as one aggregation row.
-    */
-  def simhashCandidates(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    bucketPairs(
-      simhash(docs, idCol, textCol)
-        .select(
-          col(idCol),
-          posexplode(
-            array((0 until 4).map(c =>
-              shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL)): _*)))
-        .select(col(idCol), col("pos").as("chunk"), col("col").as("chunk_val")),
-      Seq("chunk", "chunk_val"), idCol)
-
-  /** [[simhashCandidates]] over the PORTABLE 32-bit md5 SimHash
+  /** SimHash near-dup candidates over the PORTABLE 32-bit md5 SimHash
     * ([[simhashPortable]]), banded into 4 byte-wide chunks with a
     * HOT-BUCKET CAP: docs sharing any chunk whose bucket holds at most
     * `maxBucket` docs are candidates. Uncapped, pigeonhole guarantees
@@ -1133,9 +1077,9 @@ object Dedup {
 
   /** EXACT edit-distance-≤d self-join (PassJoin-family pigeonhole —
     * Li et al., "PassJoin: a partition-based method for similarity
-    * joins", VLDB 2012; same family as [[simhashHammingPairs]]'s chunk
-    * buckets, extended to handle the alignment SHIFT that insertions and
-    * deletions introduce).
+    * joins", VLDB 2012; same family as [[simhashHammingPairsFromSig]]'s
+    * chunk buckets, extended to handle the alignment SHIFT that
+    * insertions and deletions introduce).
     *
     * Candidate generation: each string of length L ≥ d+1 is split into
     * d+1 balanced contiguous segments. If ED(a,b) ≤ d then, by

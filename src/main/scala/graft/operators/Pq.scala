@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
+
+import graft.plans.TopKPairs
 
 /** Product quantization (PQ) for approximate nearest neighbor at memory
   * scale: each `dim`-float vector is compressed to `nSub` small integer
@@ -127,35 +129,29 @@ object Pq {
         col("col.t").as("t"))
   }
 
-  /** The grouped ADC readout: (qid, nid, dist_est) from a (nid, m, code
-    * [, pqid]) frame joined to broadcast tables — when the codes frame
-    * carries a per-pair `pqid` (the IVF-PQ candidate restriction), each
-    * code row only meets its own query's table rows. Rounded to 12
-    * decimals: the decimal→double cast differs between engines in the
-    * last ULP; 12 digits is far above that noise and far below any
-    * ranking decision.
+  /** The grouped ADC readout: each query's `k` nearest (qid, nid,
+    * dist_est, rnk) from a (nid, m, code [, pqid]) frame joined to
+    * broadcast tables — when the codes frame carries a per-pair `pqid`
+    * (the IVF-PQ candidate restriction), each code row only meets its own
+    * query's table rows. dist_est is rounded to 12 decimals: the
+    * decimal→double cast differs between engines in the last ULP; 12
+    * digits is far above that noise and far below any ranking decision.
+    * The ranking is ascending, so the score is the negated distance.
     */
-  private def adcReduce(codes: DataFrame, table: DataFrame): DataFrame = {
+  private def adcRank(codes: DataFrame, table: DataFrame, k: Int): DataFrame = {
     val tbl = table.withColumnRenamed("qid", "tqid")
     val sameQuery =
       if (codes.columns.contains("pqid")) col("pqid") === col("tqid") else lit(true)
-    codes
+    val dist = codes
       .join(broadcast(tbl),
         sameQuery && col("m") === col("tm") && col("code") === col("tj"))
       .filter(col("nid") =!= col("tqid"))
       .groupBy(col("tqid").as("qid"), col("nid"))
       .agg(round(sum(col("t")).cast(DoubleType), 12).as("dist_est"))
+    TopKPairs.perGroup(dist, col("qid"), -col("dist_est"), col("nid"), k)
+      .select(col("qid"), col("id").as("nid"),
+        (-col("score")).as("dist_est"), col("rank").as("rnk"))
   }
-
-  private def heapTopK(dist: DataFrame, k: Int): DataFrame =
-    dist
-      .groupBy(col("qid"))
-      .agg(call_function("topk_pairs", -col("dist_est"), col("nid"),
-        lit(k)).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("nid"),
-        (-col("col.score")).as("dist_est"),
-        (col("pos") + 1).cast(LongType).as("rnk"))
 
   /** The hot-path encode: same (nid, m, code) output as [[encode]], but
     * per-row codes come from the native fused-loop expression
@@ -192,7 +188,7 @@ object Pq {
       corpusSize: Option[Long] = None): DataFrame = {
     val cb = codebook(corpus, idCol, vecCol, nCent, corpusSize)
     val codes = encode(corpus, idCol, vecCol, cb, nSub)
-    heapTopK(adcReduce(codes, adcTables(queries, idCol, vecCol, cb, nSub)), k)
+    adcRank(codes, adcTables(queries, idCol, vecCol, cb, nSub), k)
   }
 
   /** The IVF-PQ composition point: [[adcTopK]] restricted to a candidate
@@ -207,6 +203,6 @@ object Pq {
     val cb = codebook(corpus, idCol, vecCol, nCent, corpusSize)
     val codes = encode(corpus, idCol, vecCol, cb, nSub)
       .join(pairs.select(col("qid").as("pqid"), col("nid")), Seq("nid"))
-    heapTopK(adcReduce(codes, adcTables(queries, idCol, vecCol, cb, nSub)), k)
+    adcRank(codes, adcTables(queries, idCol, vecCol, cb, nSub), k)
   }
 }

@@ -46,10 +46,10 @@ object Sampling {
 
   /** Keep at most `n` rows per group, chosen deterministically by
     * `orderCols`. One shuffle on the group key; the per-group sort is
-    * window-local. (When n ≪ group size at extreme scale, the bounded-
-    * heap `topk_pairs` aggregate computes the same kept-set with only
-    * n rows per group reaching the shuffle — this window form is the
-    * readable default.)
+    * window-local. (When n ≪ group size at extreme scale and the order
+    * is one double and a BIGINT id, [[graft.plans.TopKPairs.perGroup]]
+    * computes the same kept-set with only n rows per group reaching the
+    * shuffle — this window form takes any order columns.)
     */
   def quotaPerGroup(df: DataFrame, groupCols: Seq[Column],
       orderCols: Seq[Column], n: Int): DataFrame =

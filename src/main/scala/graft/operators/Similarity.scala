@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+
+import graft.plans.TopKPairs
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -11,20 +12,21 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   *  - [[bruteForceTopK]]: exact cosine top-k via a broadcast of the query
   *    set — the correctness baseline. Linear in corpus size; the query set
   *    must be small enough to broadcast.
-  *  - [[lshTopK]]: random-hyperplane LSH — vectors hash to sign-pattern
-  *    buckets, candidates come from an equi-join on the bucket key, so the
-  *    corpus is scanned once and never self-cross-joined. The scale path.
+  *  - [[lshTopKMd5]]: random-hyperplane LSH over the md5 plane family —
+  *    vectors hash to sign-pattern buckets, candidates come from an
+  *    equi-join on the bucket key, so the corpus is scanned once and
+  *    never self-cross-joined. The scale path.
   *
-  * Dot products use `zip_with` + `aggregate` (sequential fold, no UDF).
-  * Both are `CodegenFallback` in Spark 4.1.2, so the fold runs interpreted
-  * even inside a whole-stage-codegen stage; [[dotNative]] is the fused,
-  * code-generated form.
+  * Every ranking ends in [[graft.plans.TopKPairs.perGroup]], and every
+  * dot product is the fused, code-generated [[dotNative]]. [[dot]] is its
+  * `zip_with` + `aggregate` reference: both are `CodegenFallback` in
+  * Spark 4.1.2, so that fold runs interpreted.
   */
 object Similarity {
 
   /** Sequential-fold dot product via built-ins (`zip_with` + `aggregate`).
-    * Allocates an intermediate array per row — kept as the portable
-    * reference implementation; hot paths use [[dotNative]].
+    * Allocates an intermediate array per row — the reference
+    * [[dotNative]] is pinned against; no query runs it.
     */
   def dot(a: Column, b: Column): Column =
     aggregate(
@@ -64,22 +66,6 @@ object Similarity {
     aggregate(terms, lit(java.math.BigDecimal.ZERO).cast(ExactTerm),
       (acc, t) => (acc + t).cast(ExactTerm)).cast(DecimalType(38, 18))
 
-  /** Rank scored (qid, nid, cosine) candidates to top-k per query via the
-    * bounded-heap `topk_pairs` aggregate ([[graft.plans.TopKPairs]]):
-    * map-side partial top-k means only k rows per key per partition reach
-    * the shuffle, where a window `row_number` formulation shuffles and
-    * fully sorts every scored row. Ties break on lower nid, matching the
-    * window ordering (cosine desc, nid asc).
-    */
-  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
-    scored
-      .groupBy(col("qid"))
-      .agg(call_function("topk_pairs", col("cosine"), col("nid"), lit(k)).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(
-        col("qid"), col("col.id").as("nid"), col("col.score").as("cosine"),
-        (col("pos") + 1).cast(LongType).as("rank"))
-
   def cosine(a: Column, b: Column): Column =
     dotNative(a, b) / (norm(a) * norm(b))
 
@@ -118,7 +104,8 @@ object Similarity {
     val scored = c
       .join(broadcast(q), col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    heapTopK(scored, k)
+    TopKPairs.perGroup(scored, col("qid"), col("cosine"), col("nid"), k)
+      .toDF("qid", "nid", "cosine", "rank")
   }
 
   /** SPARSE-vector top-k: exact tf-idf cosine neighbors of a bounded
@@ -133,11 +120,10 @@ object Similarity {
     * every accumulated quantity is the INTEGER
     * (tf_q · tf_d · 10¹²) div (df · df) — a term's contribution to
     * q·d/N² — summed exactly; the cosine emerges from one pinned double
-    * expression over three exact integers. Ranking uses the bounded-heap
-    * `topk_pairs` aggregate (k rows per query per partition reach the
-    * shuffle). The intermediate product tf_q·tf_d·10¹² is computed in
-    * DECIMAL(38,0) — two tf≈3000 sides (long repetitive docs) would wrap
-    * a signed 64-bit product. The per-pair SUM of quotients must still
+    * expression over three exact integers. Ranking is
+    * [[TopKPairs.perGroup]]. The intermediate product tf_q·tf_d·10¹² is
+    * computed in DECIMAL(38,0) — two tf≈3000 sides (long repetitive
+    * docs) would wrap a signed 64-bit product. The per-pair SUM of quotients must still
     * stay under 2⁶³ — high-tf shared RARE terms dominate; at 10¹² scale
     * that allows ~9M of tf=1 df=1 shared terms, far past real documents.
     *
@@ -188,28 +174,14 @@ object Similarity {
         (col("dp").cast("double") /
           sqrt(col("nrm_q").cast("double") * col("nrm").cast("double")))
           .as("cosine"))
-    heapTopK(scored, k)
+    TopKPairs.perGroup(scored, col("qid"), col("cosine"), col("nid"), k)
+      .toDF("qid", "nid", "cosine", "rank")
   }
-
-  /** Deterministic ±1 random hyperplanes (seeded), as literal arrays. */
-  private def planes(nPlanes: Int, dim: Int, seed: Long): Seq[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(nPlanes)(Array.fill(dim)(if (rng.nextBoolean()) 1.0 else -1.0))
-  }
-
-  /** Sign-pattern LSH bucket key for a vector column. */
-  def lshBucket(vec: Column, nPlanes: Int, dim: Int, seed: Long = 42L): Column =
-    concat(
-      planes(nPlanes, dim, seed).map { p =>
-        when(dot(vec, lit(p)) >= 0, "1").otherwise("0")
-      }: _*)
 
   /** Deterministic md5-derived ±1 hyperplanes: plane p's sign at (1-based)
     * dimension i is the high bit of md5("p|i")'s first hex char — the
     * family any engine with md5 can rederive, so bucket keys (and the
     * candidate sets they induce) are replayable by an external SQL oracle.
-    * Same ±1 sign-pattern geometry as [[planes]]; only the source of
-    * randomness differs.
     */
   private def planesMd5(nPlanes: Int, dim: Int,
       family: String = ""): Seq[Array[Double]] = {
@@ -222,14 +194,15 @@ object Similarity {
     }
   }
 
-  /** [[lshBucket]] with the md5-plane family. The sign rule is strictly
-    * `> 0` (not `>= 0`) to match the portable SQL formulation `s_p > 0`
-    * bit for bit.
+  /** Sign-pattern LSH bucket key of a vector column over the md5-plane
+    * family, one [[dotNative]] projection per plane. The sign rule is
+    * strictly `> 0` to match the portable SQL formulation `s_p > 0` bit
+    * for bit.
     */
   def lshBucketMd5(vec: Column, nPlanes: Int, dim: Int): Column =
     concat(
       planesMd5(nPlanes, dim).map { p =>
-        when(dot(vec, lit(p)) > 0, "1").otherwise("0")
+        when(dotNative(vec, lit(p)) > 0, "1").otherwise("0")
       }: _*)
 
   /** IVF-style approximate top-k: a deterministic coarse quantizer (the
@@ -260,14 +233,12 @@ object Similarity {
 
   /** The IVF probe stage against a given (cid, centvec) quantizer.
     *
-    * Centroid assignment is the [[nearestCentroidIds]] aggregate shape —
-    * NOT a `row_number` window over the id×k cross rows: the window
-    * formulation exchanges all n×k rows (each dragging the dim-double
-    * vector) keyed on the id before any reduction, which at a
-    * corpus-scale n with a large quantizer shuffles k× the corpus. The
-    * bounded-heap aggregate partial-reduces map-side, so one row per id
-    * crosses the exchange and the vector is joined back batch-sized
-    * after (the `StreamSemDedup` assignment contract).
+    * Centroid assignment is [[nearestCentroidIds]], NOT a `row_number`
+    * window over the id×k cross rows: the window formulation exchanges
+    * all n×k rows (each dragging the dim-double vector) keyed on the id,
+    * which at a corpus-scale n with a large quantizer shuffles k× the
+    * corpus. The vector is joined back batch-sized after the per-id
+    * top-k (the `StreamSemDedup` assignment contract).
     */
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int, centroids: DataFrame): DataFrame = {
@@ -281,27 +252,24 @@ object Similarity {
       .join(probes, Seq("cid"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    heapTopK(scored, k)
+    TopKPairs.perGroup(scored, col("qid"), col("cosine"), col("nid"), k)
+      .toDF("qid", "nid", "cosine", "rank")
   }
 
   /** Per-id `top` nearest centroid ids — (id, cid) rows, membership-equal
     * to `row_number().over(partitionBy(id).orderBy(csim desc, cid)) <=
-    * top` but window-free: the vector is projected AWAY before a
-    * `topk_pairs` bounded-heap aggregate, so the exchange carries one
-    * partial heap per id instead of id×k scored rows. Tie/NaN parity
-    * with the window ordering is exact: [[graft.plans.TopKPairs]] orders
-    * by `java.lang.Double.compare` (NaN greatest — Spark's sort order
-    * for double desc puts NaN first) then lower id.
+    * top` but window-free: the vector is projected AWAY before
+    * [[TopKPairs.perGroup]], so the exchange carries one partial heap per
+    * id instead of id×k scored rows.
     */
   def nearestCentroidIds(df: DataFrame, vecCol: String, idCol: String,
-      top: Int, centroids: DataFrame): DataFrame =
-    df.crossJoin(broadcast(centroids))
+      top: Int, centroids: DataFrame): DataFrame = {
+    val scored = df.crossJoin(broadcast(centroids))
       .select(col(idCol), col("cid"),
         cosine(col(vecCol), col("centvec")).as("csim"))
-      .groupBy(col(idCol))
-      .agg(call_function("topk_pairs", col("csim"), col("cid"), lit(top)).as("t"))
-      .select(col(idCol), explode(col("t")).as("e"))
-      .select(col(idCol), col("e.id").as("cid"))
+    TopKPairs.perGroup(scored, col(idCol), col("csim"), col("cid"), top)
+      .select(col(idCol), col("id").as("cid"))
+  }
 
   /** Lloyd's k-means over the embedding column, for IVF centroid
     * refinement. Scale shape per iteration: assignment is map-side
@@ -370,28 +338,30 @@ object Similarity {
     ivfTopKWith(corpus, queries, idCol, vecCol, k, nProbe, centroids)
   }
 
-  /** Approximate top-k: candidates share the query's LSH bucket; ranking
-    * within the bucket is exact cosine. Recall is tuned by `nPlanes`
-    * (fewer planes → bigger buckets → higher recall, more compute).
-    * The query side is broadcast — enforced by [[requireBroadcastable]].
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nPlanes: Int, dim: Int, seed: Long = 42L,
-      maxQueryRows: Long = MaxBroadcastQueryRows): DataFrame =
-    lshTopKBucketed(corpus, queries, idCol, vecCol, k, maxQueryRows,
-      "lshTopK", lshBucket(_, nPlanes, dim, seed))
-
-  /** [[lshTopK]] with the deterministic md5-plane family
-    * ([[lshBucketMd5]]) — identical plan shape (bucket equi-join against
-    * the broadcast query side, exact cosine within buckets), but every
-    * bucket key is rederivable by an external SQL engine, so the whole
-    * candidate pipeline is oracle-certifiable, not just recall-bounded.
+  /** Approximate top-k: candidates share the query's LSH bucket
+    * ([[lshBucketMd5]]), an equi-join against the broadcast query side;
+    * ranking within the bucket is exact cosine. Recall is tuned by
+    * `nPlanes` (fewer planes → bigger buckets → higher recall, more
+    * compute). Every bucket key is rederivable by an external SQL
+    * engine, so the whole candidate pipeline is oracle-certifiable, not
+    * just recall-bounded. The query side is broadcast — enforced by
+    * [[requireBroadcastable]].
     */
   def lshTopKMd5(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nPlanes: Int, dim: Int,
-      maxQueryRows: Long = MaxBroadcastQueryRows): DataFrame =
-    lshTopKBucketed(corpus, queries, idCol, vecCol, k, maxQueryRows,
-      "lshTopKMd5", lshBucketMd5(_, nPlanes, dim))
+      maxQueryRows: Long = MaxBroadcastQueryRows): DataFrame = {
+    requireBroadcastable(queries, maxQueryRows, "lshTopKMd5")
+    val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cvec"))
+      .withColumn("bucket", lshBucketMd5(col("cvec"), nPlanes, dim))
+    val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qvec"))
+      .withColumn("bucket", lshBucketMd5(col("qvec"), nPlanes, dim))
+    val scored = c
+      .join(broadcast(q), Seq("bucket"))
+      .filter(col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"), cosine(col("qvec"), col("cvec")).as("cosine"))
+    TopKPairs.perGroup(scored, col("qid"), col("cosine"), col("nid"), k)
+      .toDF("qid", "nid", "cosine", "rank")
+  }
 
   /** Random-projection (Johnson–Lindenstrauss) screened top-k: score
     * every corpus vector against the broadcast query set in an
@@ -430,14 +400,16 @@ object Similarity {
       .select(col("qid"), col("nid"),
         cosine(col("pqvec"), col("pvec")).as("cosine"))
     // bounded-heap screen, then exact rerank of the nCand survivors
-    val cand = heapTopK(screened, nCand)
-      .select(col("qid"), col("nid"))
+    val cand = TopKPairs.perGroup(screened, col("qid"), col("cosine"),
+        col("nid"), nCand)
+      .select(col("qid"), col("id").as("nid"))
     val rer = cand
       .join(c.select(col("nid"), col("cvec")), Seq("nid"))
       .join(broadcast(q.select(col("qid"), col("qvec"))), Seq("qid"))
       .select(col("qid"), col("nid"),
         cosine(col("qvec"), col("cvec")).as("cosine"))
-    heapTopK(rer, k)
+    TopKPairs.perGroup(rer, col("qid"), col("cosine"), col("nid"), k)
+      .toDF("qid", "nid", "cosine", "rank")
   }
 
   /** Top principal direction of the (uncentered) second moment by
@@ -549,27 +521,9 @@ object Similarity {
       .filter(col("nid") =!= col("qid"))
       .groupBy(col("qid"), col("nid"))
       .agg(sum(expr("bit_count(wq ^ wc)")).cast(LongType).as("ham"))
-    // exact integer order through the heap: score -ham (integer-valued
-    // doubles are exact), ties to the lower nid — the window parity
-    ham.groupBy(col("qid"))
-      .agg(call_function("topk_pairs",
-        (-col("ham")).cast(DoubleType), col("nid"), lit(nCand)).as("t"))
-      .select(col("qid"), explode(col("t")).as("e"))
-      .select(col("qid"), col("e.id").as("nid"))
-  }
-
-  private def lshTopKBucketed(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, maxQueryRows: Long,
-      caller: String, bucketOf: Column => Column): DataFrame = {
-    requireBroadcastable(queries, maxQueryRows, caller)
-    val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cvec"))
-      .withColumn("bucket", bucketOf(col("cvec")))
-    val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qvec"))
-      .withColumn("bucket", bucketOf(col("qvec")))
-    val scored = c
-      .join(broadcast(q), Seq("bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    heapTopK(scored, k)
+    // ascending Hamming as score -ham: integer-valued doubles are exact
+    TopKPairs.perGroup(ham, col("qid"), (-col("ham")).cast(DoubleType),
+        col("nid"), nCand)
+      .select(col("qid"), col("id").as("nid"))
   }
 }

@@ -157,12 +157,8 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
             col("c_name").as("customer_name"),
             col("c_mktsegment").as("segment"),
             col("c_nationkey").as("nation_nk"))
-        if (!store.exists("dim_customer"))
-          Scd2.initial(src, Seq("customer_nk"), Constants.LowDt)
-        else
-          Scd2.scd2Apply(
-            store.read("dim_customer"), src, Seq("customer_nk"),
-            Seq("customer_name", "segment", "nation_nk"), runDate)
+        scd2Dim("dim_customer", src, "customer_nk",
+          Seq("customer_name", "segment", "nation_nk"), runDate)
       },
 
       // SCD1 supplier dim (M9/M14 recipe at warehouse breadth): NA member +
@@ -206,12 +202,8 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
             split_part(col("s_name"), lit("#"), lit(1)).as("first_name"),
             split_part(col("s_name"), lit("#"), lit(2)).as("last_name"),
             coalesce(col("nation_sk"), lit(Constants.NaKey)).as("nation_sk"))
-        if (!store.exists("dim_employee"))
-          Scd2.initial(empSrc, Seq("employee_nk"), Constants.LowDt)
-        else
-          Scd2.scd2Apply(
-            store.read("dim_employee"), empSrc, Seq("employee_nk"),
-            Seq("first_name", "last_name", "nation_sk"), runDate)
+        scd2Dim("dim_employee", empSrc, "employee_nk",
+          Seq("first_name", "last_name", "nation_sk"), runDate)
       },
 
       // Second SCD2 dim — products from the part feed, tracking name/brand/
@@ -223,12 +215,8 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
             col("p_name").as("product_name"),
             col("p_brand").as("brand_nk"),
             col("p_retailprice").as("retail_price"))
-        if (!store.exists("dim_product"))
-          Scd2.initial(prodSrc, Seq("product_nk"), Constants.LowDt)
-        else
-          Scd2.scd2Apply(
-            store.read("dim_product"), prodSrc, Seq("product_nk"),
-            Seq("product_name", "brand_nk", "retail_price"), runDate)
+        scd2Dim("dim_product", prodSrc, "product_nk",
+          Seq("product_name", "brand_nk", "retail_price"), runDate)
       },
 
       // SCD1 segment dim (reference Dim_Segments, bl_3nf.sql:67-75): the
@@ -292,6 +280,16 @@ final class Runner(spark: SparkSession, sfDir: String, workDir: String) {
         else Surrogates.assignAfter(existing, fresh, skCol, Seq(col(nkCol)))
       existing.unionByName(keyed.select(existing.columns.map(col).toIndexedSeq: _*))
     }
+
+  /** The SCD2 dim recipe shared by every versioned dimension: the first
+    * batch bootstraps every row active from [[Constants.LowDt]]; later
+    * batches are [[Scd2.scd2Apply]] as of `runDate` — close the active
+    * rows whose `tracked` attributes changed, insert unseen keys.
+    */
+  private def scd2Dim(name: String, src: DataFrame, nkCol: String,
+      tracked: Seq[String], runDate: Date): DataFrame =
+    if (!store.exists(name)) Scd2.initial(src, Seq(nkCol), Constants.LowDt)
+    else Scd2.scd2Apply(store.read(name), src, Seq(nkCol), tracked, runDate)
 
   /** Stage 3 — fact load (reference f_orders, bl_cl.sql:1190-1347):
     * staged batch filter (P2) → broadcast dim lookups (J1) → typed

@@ -4,29 +4,55 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{call_function, col, lit, posexplode}
 import org.apache.spark.sql.types._
 
+object TopKPairs {
+
+  /** Each key's `k` best rows: (key, `id`, `score`, `rank`), `rank` a
+    * 1-based BIGINT. The one per-group top-k of the engine.
+    *
+    * Order: score descending, ties to the lower id, NaN greatest — the
+    * order of `row_number() OVER (PARTITION BY key ORDER BY score DESC,
+    * id) <= k`, row for row and rank for rank (the heap compares scores
+    * as Spark's sort does: NaN above +Infinity, 0.0 equal to -0.0).
+    *
+    * Rows whose score OR id is null are EXCLUDED, the way `max`/`min`/
+    * `sum` skip null inputs, where the window would rank a null score
+    * last and still emit it when a key has fewer than k non-null rows;
+    * coalesce the score to -Infinity to keep such rows. An ascending
+    * ranking negates the score in and out.
+    *
+    * `score` must be a DOUBLE, `id` a BIGINT, and `key` one column not
+    * named `t`, `pos` or `col`; the result keeps the key's name.
+    *
+    * Plan shape: one `topk_pairs` aggregate keeps a k-element heap per
+    * key and partial-aggregates map-side, so only k rows per key per map
+    * partition reach the shuffle, where the window form shuffles and
+    * fully sorts every scored row. The heap's best-first array is
+    * `posexplode`d, so the position is `rank - 1`.
+    */
+  def perGroup(df: DataFrame, key: Column, score: Column, id: Column,
+      k: Int): DataFrame = {
+    val top = df.groupBy(key)
+      .agg(call_function("topk_pairs", score, id, lit(k)).as("t"))
+    val keyCol = col(top.columns.head)
+    top.select(keyCol, posexplode(col("t")))
+      .select(keyCol, col("col.id").as("id"), col("col.score").as("score"),
+        (col("pos") + 1).cast(LongType).as("rank"))
+  }
+}
+
 /** Bounded-heap top-k aggregate: `topk_pairs(score, id, k)` returns the k
-  * highest-scoring (score, id) pairs, best first, ties broken by lower id.
-  *
-  * Null contract: rows whose score OR id is null are EXCLUDED, the same
-  * way `max`/`min`/`sum` skip null inputs. This differs from a
-  * `row_number()` window ranking, which would order null scores last and
-  * still emit them when a key has fewer than k non-null candidates;
-  * callers that must surface null-scored rows should coalesce the score
-  * to -Infinity before aggregating.
-  *
-  * This is the aggregation shape ranked similarity search needs at scale:
-  * the window `row_number() <= k` formulation shuffles EVERY scored row
-  * and fully sorts each key's partition, while this aggregate keeps a
-  * k-element heap per key and participates in partial aggregation — only
-  * k rows per key per map partition ever reach the shuffle. Same result,
-  * ~k/N of the shuffle volume.
+  * highest-scoring (score, id) pairs as an array of `struct<score, id>`,
+  * best first, in the [[TopKPairs.perGroup]] order. Callers go through
+  * [[TopKPairs.perGroup]], which states the contract.
   */
 case class TopKPairs(
     score: Expression, id: Expression, kExpr: Expression,
@@ -37,12 +63,13 @@ case class TopKPairs(
   private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
 
   /** Orders the WORST pair highest so the queue's dequeue evicts it:
-    * worse = lower score, then larger id.
+    * worse = lower score, then larger id. Scores compare as Spark's sort
+    * does: 0.0 and -0.0 are equal, and NaN is above +Infinity.
     */
   private val worstFirst: Ordering[(Double, Long)] =
     new Ordering[(Double, Long)] {
       def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
+        val c = if (a._1 == b._1) 0 else java.lang.Double.compare(b._1, a._1)
         if (c != 0) c else java.lang.Long.compare(a._2, b._2)
       }
     }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.LongType
 import graft.functions.Cleaning.lcount
 import graft.functions.TextAnalysis
 import graft.operators.{AsOfJoin, Dedup, Sampling, Sketches, Surrogates}
+import graft.plans.TopKPairs
 import graft.sources.Tables
 import graft.queries.Q.C
 
@@ -1173,13 +1174,9 @@ object Curation {
 
   /** Deterministic k-per-group downsampling: the 5 lowest md5-keyed docs
     * per language — the "cap every stratum at k" step a mixture pipeline
-    * runs, WITHOUT a per-group sort: the native bounded-heap `topk_pairs`
-    * aggregate keeps a 5-element heap per language and partial-aggregates
-    * map-side, so only k rows per lang per map partition reach the
-    * shuffle, where the `row_number()` window form would shuffle and
-    * fully sort every row of the corpus. The 32-bit md5-prefix key is
-    * exact in the aggregate's double score; ties break on lower doc_id in
-    * both formulations.
+    * runs, WITHOUT a per-group sort: [[graft.plans.TopKPairs.perGroup]]
+    * ranks the negated key, ascending. The 32-bit md5-prefix key is exact
+    * in its double score.
     */
   private val kPerGroup = Q(
     "sample_k_per_group",
@@ -1193,16 +1190,12 @@ object Curation {
     val key32 = conv(
       substring(md5(concat(lit("kpg|"), col("doc_id").cast("string"))), 1, 8),
       16, 10).cast(LongType)
-    Tables.documents(s, d)
+    val docs = Tables.documents(s, d)
       .select(col("lang"), col("doc_id"), key32.as("key32"))
-      .groupBy(col("lang"))
-      .agg(call_function("topk_pairs",
-        -col("key32").cast("double"), col("doc_id"), lit(5)).as("top"))
-      .select(col("lang"), posexplode(col("top")))
-      .select(
-        col("lang"), col("col.id").as("doc_id"),
-        (-col("col.score")).cast(LongType).as("key32"),
-        (col("pos") + 1).cast(LongType).as("rnk"))
+    TopKPairs.perGroup(docs, col("lang"), -col("key32").cast("double"),
+        col("doc_id"), 5)
+      .select(col("lang"), col("id").as("doc_id"),
+        (-col("score")).cast(LongType).as("key32"), col("rank").as("rnk"))
   }
 
   /** Per-epoch deterministic training shuffle: each epoch is a different

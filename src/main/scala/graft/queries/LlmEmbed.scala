@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.functions.Cleaning.lcount
 import graft.operators.{Pin, Similarity}
+import graft.plans.TopKPairs
 import graft.sources.{Frames, Tables}
 import graft.queries.Q.C
 
@@ -69,28 +70,6 @@ object LlmEmbed {
       |       FROM embeddings CROSS JOIN range(1, 4097) t(i)
       |       WHERE i <= len(embedding))""".stripMargin
 
-  /** Final ANN ranking: each query's top-k (nid, cosine, rnk) —
-    * membership-, order-, and value-equal to `row_number().over(
-    * partitionBy(qid).orderBy(cosine desc, nid)) <= k`, but via the
-    * bounded-heap `topk_pairs` aggregate ([[graft.plans.TopKPairs]]):
-    * it partial-reduces map-side, so only k rows per query per map
-    * partition reach the exchange instead of EVERY scored candidate —
-    * and per-query candidate populations grow with the corpus (an IVF
-    * list is ~n/k rows, brute force is n), so the window formulation
-    * funnels a corpus-scale row set into one partition per query.
-    * NaN/tie parity with the window is exact (`java.lang.Double.compare`
-    * — NaN greatest, Spark's desc sort order — then lower nid; the
-    * best-first result array makes `posexplode`'s index the rank).
-    */
-  private def rankTopK(cosd: org.apache.spark.sql.DataFrame,
-      k: Int): org.apache.spark.sql.DataFrame =
-    cosd.groupBy(col("qid"))
-      .agg(call_function("topk_pairs", col("cosine"), col("nid"), lit(k)).as("t"))
-      .select(col("qid"), posexplode(col("t")))
-      .select(col("qid"), col("col.id").as("nid"),
-        col("col.score").as("cosine"),
-        (col("pos") + 1).cast(LongType).as("rnk"))
-
   /** Per-vector centroid argmax over (vec_id, cid, cs) rows as ONE
     * map-side-partial aggregate — max cs, then LOWER cid (cid is unique
     * per row, so the struct order is total; NaN sorts GREATEST under
@@ -103,19 +82,6 @@ object LlmEmbed {
       .groupBy(col("vec_id"))
       .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc")))
         .as("cid"))
-
-  /** Top-`k` probe centroids per vector ((vec_id, cid, cs) → (qid, cid))
-    * via the bounded-heap topk_pairs aggregate
-    * ([[graft.plans.TopKPairs]]) — replays the window's (cs desc, cid
-    * asc) order, Double.compare then lower id, without a WindowExec
-    * anywhere in the plan.
-    */
-  private def probeCids(scored: org.apache.spark.sql.DataFrame, k: Int) =
-    scored
-      .groupBy(col("vec_id"))
-      .agg(call_function("topk_pairs", col("cs"), col("cid"), lit(k)).as("t"))
-      .select(col("vec_id").as("qid"), explode(col("t")).as("e"))
-      .select(col("qid"), col("e.id").as("cid"))
 
   /** Shared tail of the portable ANN queries: rank bounded (qid, nid)
     * candidate pairs by exact-decimal cosine and keep each query's top 3.
@@ -137,7 +103,8 @@ object LlmEmbed {
       .select(
         col("qid"), col("nid"),
         round(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 12).as("cosine"))
-    rankTopK(cosd, 3)
+    TopKPairs.perGroup(cosd, col("qid"), col("cosine"), col("nid"), 3)
+      .toDF("qid", "nid", "cosine", "rnk")
   }
 
   /** Per-label corpus stats over L2 norms. n² comes from the fused native
@@ -221,7 +188,8 @@ object LlmEmbed {
         // the last ULP or two (decimal-cast rounding of the inputs);
         // 12 digits is far above the noise and far below any real tie.
         round(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 12).as("cosine"))
-    rankTopK(cosd, 3)
+    TopKPairs.perGroup(cosd, col("qid"), col("cosine"), col("nid"), 3)
+      .toDF("qid", "nid", "cosine", "rnk")
   }
 
   /** Approximate top-3 via the ENGINE-NATIVE LSH path
@@ -465,10 +433,12 @@ object LlmEmbed {
       .select(col("vec_id"), col("cid"),
         round(col("dot") / (sqrt(col("nv")) * sqrt(col("nc"))), 12).as("cs"))
     // per-vector argmax / top-4 as map-side-partial aggregates
-    // ([[argmaxCid]]/[[probeCids]]), not row_number windows over the
-    // n×k scored rows (see semAssign)
+    // ([[argmaxCid]]/[[TopKPairs.perGroup]]), not row_number windows
+    // over the n×k scored rows (see semAssign)
     val lists = argmaxCid(csim).select(col("vec_id").as("nid"), col("cid"))
-    val probes = probeCids(csim.filter(col("vec_id") < 5), 4)
+    val probes = TopKPairs.perGroup(csim.filter(col("vec_id") < 5),
+        col("vec_id"), col("cs"), col("cid"), 4)
+      .select(col("vec_id").as("qid"), col("id").as("cid"))
     val cand = probes.join(lists, Seq("cid"))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid")).distinct()
@@ -616,19 +586,22 @@ object LlmEmbed {
       }
     }
     val lists = assignIds.select(col("vec_id").as("nid"), col("cid"))
-    // top-4 probe centroids for the 5 probe vectors ([[probeCids]])
-    val probes = probeCids(assignCs.filter(col("vec_id") < 5), 4)
+    // top-4 probe centroids for the 5 probe vectors
+    val probes = TopKPairs.perGroup(assignCs.filter(col("vec_id") < 5),
+        col("vec_id"), col("cs"), col("cid"), 4)
+      .select(col("vec_id").as("qid"), col("id").as("cid"))
     val cand = probes.join(lists, Seq("cid"))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid")).distinct()
-    rankTopK(cand
+    val cosd = cand
       .join(embD.select(col("vec_id").as("qid"), col("v").as("va")), Seq("qid"))
       .join(embD.select(col("vec_id").as("nid"), col("v").as("vb")), Seq("nid"))
       .select(col("qid"), col("nid"),
         round(Similarity.dotNative(col("va"), col("vb")) /
           (sqrt(Similarity.dotNative(col("va"), col("va"))) *
-            sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine")),
-      3)
+            sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine"))
+    TopKPairs.perGroup(cosd, col("qid"), col("cosine"), col("nid"), 3)
+      .toDF("qid", "nid", "cosine", "rnk")
   }
 
   /** INCREMENTAL ANN maintenance: a new embedding batch (vec_id % 40 == 7
@@ -705,20 +678,23 @@ object LlmEmbed {
         round(Similarity.dotNative(col("v"), col("cv")) /
           (sqrt(col("n2")) * sqrt(col("n2c"))), 12).as("cs"))
     // history argmax / arrival top-4 as map-side-partial aggregates
-    // ([[argmaxCid]]/[[probeCids]]), not row_number windows over the
-    // n×k scored rows (see semAssign)
+    // ([[argmaxCid]]/[[TopKPairs.perGroup]]), not row_number windows
+    // over the n×k scored rows (see semAssign)
     val lists = argmaxCid(assign(hist)).select(col("vec_id").as("nid"), col("cid"))
-    val probes = probeCids(assign(newb), 4)
+    val probes = TopKPairs.perGroup(assign(newb), col("vec_id"), col("cs"),
+        col("cid"), 4)
+      .select(col("vec_id").as("qid"), col("id").as("cid"))
     val cand = probes.join(lists, Seq("cid"))
       .select(col("qid"), col("nid")).distinct()
-    rankTopK(cand
+    val cosd = cand
       .join(embD.select(col("vec_id").as("qid"), col("v").as("va")), Seq("qid"))
       .join(embD.select(col("vec_id").as("nid"), col("v").as("vb")), Seq("nid"))
       .select(col("qid"), col("nid"),
         round(Similarity.dotNative(col("va"), col("vb")) /
           (sqrt(Similarity.dotNative(col("va"), col("va"))) *
-            sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine")),
-      3)
+            sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine"))
+    TopKPairs.perGroup(cosd, col("qid"), col("cosine"), col("nid"), 3)
+      .toDF("qid", "nid", "cosine", "rnk")
   }
 
   /** Shared oracle CTEs: exact-decimal cosine near-dup pairs (vec_id < 100,
@@ -1000,18 +976,15 @@ object LlmEmbed {
     // nearest-centroid argmin / top-4 as map-side-partial aggregates,
     // not a row_number window over the n×k distance rows (see
     // semAssign). min_by's struct order (lowest d2, then lowest cid)
-    // replays the window's (d2 asc, cid asc); the heap probe negates d2
-    // so topk_pairs' score-desc order is distance-asc, ties lower cid —
-    // d2 is a sum of squares, so no NaN enters either ordering.
+    // replays the window's (d2 asc, cid asc); the probe ranks -d2, so
+    // distance ascending — d2 is a sum of squares, so no NaN enters
+    // either ordering.
     val lists = cd.groupBy(col("vec_id"))
       .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
       .select(col("vec_id").as("nid"), col("cid"))
-    val probes = cd.filter(col("vec_id") < 5)
-      .groupBy(col("vec_id"))
-      .agg(call_function("topk_pairs", (-col("d2")).as("s"), col("cid"),
-        lit(4)).as("t"))
-      .select(col("vec_id").as("qid"), explode(col("t")).as("e"))
-      .select(col("qid"), col("e.id").as("cid"))
+    val probes = TopKPairs.perGroup(cd.filter(col("vec_id") < 5),
+        col("vec_id"), -col("d2"), col("cid"), 4)
+      .select(col("vec_id").as("qid"), col("id").as("cid"))
     val cand = probes.join(lists, Seq("cid"))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid")).distinct()
@@ -1139,19 +1112,16 @@ object LlmEmbed {
       .join(norms(tgtEl).select(col("vec_id").as("tid"), col("n2").as("nb")), Seq("tid"))
       .select(col("qid"), col("tid"),
         round(col("dot") / (sqrt(col("na")) * sqrt(col("nb"))), 12).as("c")))
-    // Both top-4 normalization terms and the final argmax are bounded-
-    // heap / max_by aggregates, not row_number windows: cosd is
-    // |src|×|tgt| rows, and partitioning it by qid funnels the whole
-    // target pool through one partition per query (and vice versa for
-    // tid) before any reduction — the aggregates partial-reduce map-side
-    // (see rankTopK). topk_pairs replays each window's (c desc, id asc)
-    // selection exactly, so the decimal sums are over the same 4 rows.
-    def top4Sum(keyCol: String, idCol: String, out: String) = cosd
-      .groupBy(col(keyCol))
-      .agg(call_function("topk_pairs", col("c"), col(idCol), lit(4)).as("t"))
-      .select(col(keyCol), explode(col("t")).as("e4"))
-      .groupBy(col(keyCol))
-      .agg(sum(col("e4.score").cast(DecimalType(16, 12))).as(out))
+    // Both top-4 normalization terms and the final argmax are
+    // TopKPairs.perGroup / max_by aggregates, not row_number windows:
+    // cosd is |src|×|tgt| rows, and partitioning it by qid funnels the
+    // whole target pool through one partition per query (and vice versa
+    // for tid). perGroup selects each window's (c desc, id asc) rows, so
+    // the decimal sums are over the same 4 rows.
+    def top4Sum(keyCol: String, idCol: String, out: String) =
+      TopKPairs.perGroup(cosd, col(keyCol), col("c"), col(idCol), 4)
+        .groupBy(col(keyCol))
+        .agg(sum(col("score").cast(DecimalType(16, 12))).as(out))
     val sq = top4Sum("qid", "tid", "sq")
     val st = top4Sum("tid", "qid", "st")
     val margins = cosd.join(sq, Seq("qid")).join(st, Seq("tid"))
@@ -1434,16 +1404,13 @@ object LlmEmbed {
     val p = semPairs(s, d)
     val e = p.select(col("va").as("q"), col("vb").as("n"), col("c"))
       .unionAll(p.select(col("vb").as("q"), col("va").as("n"), col("c")))
-    // top-8 neighbor selection as a bounded-heap aggregate, not a
-    // row_number window: per-q population is the cluster size, which
-    // grows once the k-cap binds (see rankTopK for the full rationale);
-    // topk_pairs replays the window's (c desc, n asc) selection exactly,
-    // then the 8-row-per-q explode feeds the same decimal mean
-    e.groupBy(col("q"))
-      .agg(call_function("topk_pairs", col("c"), col("n"), lit(8)).as("t"))
-      .select(col("q"), explode(col("t")).as("e8"))
+    // top-8 neighbor selection as TopKPairs.perGroup, not a row_number
+    // window: per-q population is the cluster size, which grows once the
+    // k-cap binds; the window's (c desc, n asc) 8 rows per q feed the
+    // same decimal mean
+    TopKPairs.perGroup(e, col("q"), col("c"), col("n"), 8)
       .groupBy(col("q"))
-      .agg((sum(col("e8.score").cast(DecimalType(16, 12))).cast(DoubleType) /
+      .agg((sum(col("score").cast(DecimalType(16, 12))).cast(DoubleType) /
           count(lit(1)).cast(DoubleType)).as("density"))
       .select(col("q").as("vec_id"), col("density"))
   }
@@ -1756,12 +1723,9 @@ object LlmEmbed {
       .join(pnrm.select(col("vec_id").as("nid"), col("n2r").as("nb")), Seq("nid"))
       .select(col("qid"), col("nid"),
         round(col("dotr") / (sqrt(col("na")) * sqrt(col("nb"))), 12).as("cs"))
-    // top-20 candidates per query via the bounded-heap aggregate (window
-    // tie/NaN parity per rankTopK), then exact full-dim rerank
-    val cand = pcs.groupBy(col("qid"))
-      .agg(call_function("topk_pairs", col("cs"), col("nid"), lit(nCand)).as("t"))
-      .select(col("qid"), explode(col("t")).as("e"))
-      .select(col("qid"), col("e.id").as("nid"))
+    // top-20 candidates per query, then exact full-dim rerank
+    val cand = TopKPairs.perGroup(pcs, col("qid"), col("cs"), col("nid"), nCand)
+      .select(col("qid"), col("id").as("nid"))
     val nrm = nrmOf(vecs)
     rankTop3(vecs, nrm, cand).select(col("qid"), col("nid"), col("rnk"))
   }

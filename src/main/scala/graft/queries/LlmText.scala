@@ -345,7 +345,7 @@ object LlmText {
   }
 
   /** Exact substring-dedup index (Lee et al. 2022 re-expressed as an
-    * L-token window index — see [[Dedup.duplicatedSpanIndex]]): every
+    * L-token window index — see [[Dedup.duplicatedSpanIndexFromOcc]]): every
     * 8-token span text occurring ≥ 2 times corpus-wide, with occurrence
     * and document counts. The md5 span keys are engine-portable, so the
     * whole index hash-matches the oracle.
@@ -530,9 +530,7 @@ object LlmText {
     * is the standard LSH skew guard — see
     * [[Dedup.simhashCandidatesPortable]]). The oracle rederives hash,
     * bands, bucket-size filter and pairs from scratch, so the hash match
-    * certifies the full candidate pipeline — not just its recall. The
-    * xxhash64-native 64-bit variant ([[Dedup.simhashCandidates]]) keeps
-    * its recall spec in DedupSpec.
+    * certifies the full candidate pipeline — not just its recall.
     */
   private val simhash = Q(
     "dedup_simhash_candidates",

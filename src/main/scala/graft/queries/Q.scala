@@ -58,9 +58,6 @@ object Q {
     new graft.sources.TableStore(s, path)
   }
 
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
-
   // --- Shared oracle SQL fragments (exact cross-engine arithmetic) --------
 
   /** Order-independent exact sum of a double expression (see

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.Cleaning._
+import graft.plans.TopKPairs
 import graft.sources.Tables
 import graft.queries.Q.{C, DS, DS2}
 
@@ -1913,14 +1914,10 @@ object Relational {
       .agg(countDistinct(col("user_id")).cast(LongType).as("active"))
   }
 
-  /** Top-3 users per event type via the NATIVE bounded-heap `topk_pairs`
-    * aggregate ([[graft.plans.TopKPairs]]) against a `row_number` window
-    * oracle — the direct CORRECTNESS row for the TypedImperativeAggregate
-    * itself (elsewhere it runs inside the similarity rankers). The heap
-    * partial-aggregates map-side, so only k rows per event type per
-    * partition reach the shuffle, where the window form shuffles and
-    * sorts every (type, user) count. Ties break on lower user_id in both
-    * formulations.
+  /** Top-3 users per event type via [[graft.plans.TopKPairs.perGroup]]
+    * against a `row_number` window oracle — the direct CORRECTNESS row
+    * for the per-group top-k itself (elsewhere it runs inside the
+    * similarity rankers).
     */
   private val topUsers = Q(
     "events_top_users",
@@ -1930,17 +1927,13 @@ object Relational {
        |                    ORDER BY n DESC, user_id) AS BIGINT) AS rnk
        |      FROM c)
        |SELECT event_type, user_id, n, rnk FROM r WHERE rnk <= 3""".stripMargin) { (s, d) =>
-    Tables.events(s, d)
+    val counts = Tables.events(s, d)
       .groupBy(col("event_type"), col("user_id"))
       .agg(lcount().as("n"))
-      .groupBy(col("event_type"))
-      .agg(call_function("topk_pairs",
-        col("n").cast("double"), col("user_id"), lit(3)).as("top"))
-      .select(col("event_type"), posexplode(col("top")))
-      .select(
-        col("event_type"), col("col.id").as("user_id"),
-        col("col.score").cast(LongType).as("n"),
-        (col("pos") + 1).cast(LongType).as("rnk"))
+    TopKPairs.perGroup(counts, col("event_type"), col("n").cast("double"),
+        col("user_id"), 3)
+      .select(col("event_type"), col("id").as("user_id"),
+        col("score").cast(LongType).as("n"), col("rank").as("rnk"))
   }
 
   /** RFM segmentation over orders: per-customer recency/frequency/

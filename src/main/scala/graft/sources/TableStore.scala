@@ -243,12 +243,16 @@ final class TableStore(spark: SparkSession, root: String) {
     * untouched). Keeps the newest `keep` snapshots, prunes older ones.
     * Returns the snapshot id the displaced version received (0 when the
     * table didn't exist yet).
+    *
+    * A versioned table is never partitioned: a zero-row partitioned
+    * write lands only `_SUCCESS`, and beside snapshots the sweep must
+    * keep such a dir (a missing live dir there is [[rollback]]'s crash
+    * window), so it would read as an uninferable table.
     */
-  def overwriteVersioned(table: String, df: DataFrame, keep: Int = 3,
-      partitionBy: Seq[String] = Nil): Long = {
+  def overwriteVersioned(table: String, df: DataFrame, keep: Int = 3): Long = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     var snapped = 0L
-    swapIn(table, df, partitionBy) { live =>
+    swapIn(table, df, Nil) { live =>
       snapped = versions(table).lastOption.getOrElse(0L) + 1
       Files.createDirectories(snapDir(table))
       Files.move(live, snapDir(table).resolve(s"v$snapped"),

@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Pin, Similarity}
+import graft.plans.TopKPairs
 import graft.sources.TableStore
 
 /** Streaming ANN index maintenance — the streaming face of
@@ -76,13 +76,10 @@ object StreamAnn {
           .filter(col("cid").isInCollection(touched))
           .filter(col("__applied").cast("long") < batchId)
           .select(col("vec_id").as("nid"), col("cid"), col("v").as("vb"))
-      // Final ranking as the topk_pairs bounded-heap aggregate, not a
-      // row_number window: per-qid candidates = the probed lists' rows,
-      // which grow with the STORE (~history/k per list) — the window
-      // would funnel them through one partition per query, the aggregate
-      // partial-reduces map-side. Tie/NaN order replays the window's
-      // (cosine desc, nid asc) exactly; posexplode's index is the rank.
-      val neighbors = probes
+      // Final ranking as TopKPairs.perGroup, not a row_number window:
+      // per-qid candidates = the probed lists' rows, which grow with the
+      // STORE (~history/k per list).
+      val cands = probes
         .join(hist, Seq("cid"))
         .join(batch.select(col("vec_id").as("qid"), col("v").as("va")), Seq("qid"))
         .select(col("qid"), col("nid"),
@@ -90,12 +87,9 @@ object StreamAnn {
             (sqrt(Similarity.dotNative(col("va"), col("va"))) *
               sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine"))
         .distinct() // a neighbor reachable via several probed lists scores once
-        .groupBy(col("qid"))
-        .agg(call_function("topk_pairs", col("cosine"), col("nid"), lit(k)).as("t"))
-        .select(col("qid"), posexplode(col("t")))
-        .select(col("qid"), col("col.id").as("nid"),
-          col("col.score").as("cosine"),
-          (col("pos") + 1).cast(LongType).as("rnk"))
+      val neighbors = TopKPairs.perGroup(cands, col("qid"), col("cosine"),
+          col("nid"), k)
+        .toDF("qid", "nid", "cosine", "rnk")
       store.replacePartitions(neighborsTable,
         neighbors.withColumn("__batch", lit(batchId)), "__batch")
       store.replacePartitions(listTable,

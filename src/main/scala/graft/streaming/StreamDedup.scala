@@ -272,7 +272,7 @@ object StreamDedup {
 
   /** The per-batch SimHash fold, run from a document stream with
     * [[Maintain]]: maintains the EXACT Hamming-≤d SimHash stores — the
-    * streaming face of [[graft.operators.Dedup.simhashHammingPairs]]:
+    * streaming face of [[graft.operators.Dedup.simhashHammingPairsFromSig]]:
     * each micro-batch SimHashes ONLY its own documents (the token-hash
     * aggregate is the expensive stage; stored 32-bit signatures re-chunk
     * for free, map-side), joins its pigeonhole chunks against the signature

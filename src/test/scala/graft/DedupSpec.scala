@@ -7,7 +7,8 @@ import graft.operators.Dedup
 /** Dedup operators: exact groups, MinHash-LSH recall vs brute-force
   * Jaccard, SimHash candidate generation. The hash families are
   * deterministic (md5 / xxhash64 over a fixed corpus), so these are exact
-  * assertions, not statistical ones.
+  * assertions, not statistical ones. Each operator is driven in the form
+  * the catalog runs: over a signature or occurrence frame.
   */
 class DedupSpec extends SparkSpec {
   private lazy val s = spark
@@ -170,18 +171,18 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical texts collide, near-dups become candidates") {
-    val sh = Dedup.simhash(corpus, "doc_id", "text")
+    val sh = Dedup.simhashPortable(corpus, "doc_id", "text")
     val h = sh.filter(col("doc_id").isin(0L, 200L, 201L))
-      .select("simhash").as[Long].collect()
+      .select("simhash32").as[Long].collect()
     assert(h.distinct.length == 1, "identical text must produce identical simhash")
 
-    val cand = Dedup.simhashCandidates(corpus, "doc_id", "text")
+    val cand = Dedup.simhashCandidatesPortable(corpus, "doc_id", "text")
       .as[(Long, Long)].collect().toSet
     // exact duplicates have Hamming distance 0 -> all chunks shared
     assert(cand.contains((0L, 200L)) && cand.contains((200L, 201L)))
-    // a 1-of-60-token change flips ~10 of 64 bits (each bit flips when its
-    // ±1 vote margin is ≤ 2), so chunk collisions are likely but not
-    // certain per pair — require a majority of the 8 near-dup pairs
+    // a 1-of-60-token change flips some of the 32 bits (each bit flips
+    // when its ±1 vote margin is ≤ 2), so byte-chunk collisions are likely
+    // but not certain per pair — require a majority of the 8 near-dup pairs
     val nearDupHits = (0 until 8).count(c => cand.contains((c * 10L, c * 10L + 1)))
     assert(nearDupHits >= 4, s"only $nearDupHits/8 near-dup pairs bucketed")
   }
@@ -400,8 +401,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashHammingPairs is exact vs brute force at arbitrary maxDist") {
-    val h = Dedup.simhashPortable(corpus, "doc_id", "text")
-      .as[(Long, Long)].collect().toMap
+    val sig = Dedup.simhashPortable(corpus, "doc_id", "text")
+    val h = sig.as[(Long, Long)].collect().toMap
     def brute(d: Int) = (for {
       a <- h.keys; b <- h.keys if a < b
       dist = java.lang.Long.bitCount(h(a) ^ h(b)) if dist <= d
@@ -409,14 +410,14 @@ class DedupSpec extends SparkSpec {
     // 2, 4: chunk widths of 32/(d+1) are NOT integral — the balanced
     // boundaries must still give the exact all-pairs answer by pigeonhole
     Seq(2, 4, 6).foreach { d =>
-      val got = Dedup.simhashHammingPairs(corpus, "doc_id", "text", maxDist = d)
+      val got = Dedup.simhashHammingPairsFromSig(sig, "doc_id", maxDist = d)
         .as[(Long, Long, Long)].collect().toSet
       assert(got == brute(d),
         s"d=$d: missing=${brute(d) -- got}, extra=${got -- brute(d)}")
     }
     // out-of-range distances are rejected, not silently mis-chunked
     intercept[IllegalArgumentException](
-      Dedup.simhashHammingPairs(corpus, "doc_id", "text", maxDist = 32))
+      Dedup.simhashHammingPairsFromSig(sig, "doc_id", maxDist = 32))
   }
 
   test("editDistancePairs equals brute-force levenshtein at d=1,2,3") {
@@ -523,7 +524,8 @@ class DedupSpec extends SparkSpec {
       (3L, "p q r s t u v"),
       (4L, "m m m m")).toDF("doc_id", "text")
 
-    val idx = Dedup.duplicatedSpanIndex(docs, "doc_id", "text", l = 3)
+    val occ = Dedup.spanOccurrences(docs, "doc_id", "text", l = 3)
+    val idx = Dedup.duplicatedSpanIndexFromOcc(occ, "doc_id")
       .as[(String, Long, Long)].collect().toSet
     val expectedGrams = Map(
       "a b c" -> (2L, 2L), "b c d" -> (2L, 2L), "c d e" -> (2L, 2L),
@@ -534,7 +536,7 @@ class DedupSpec extends SparkSpec {
     }.toSet
     assert(idx == expectedIdx)
 
-    val cov = Dedup.duplicatedSpanCoverage(docs, "doc_id", "text", l = 3)
+    val cov = Dedup.duplicatedSpanCoverageFromOcc(docs, occ, "doc_id", "text", l = 3)
       .as[(Long, Long, Long)].collect()
       .map { case (id, nt, nd) => id -> ((nt, nd)) }.toMap
     assert(cov == Map(
@@ -558,13 +560,15 @@ class DedupSpec extends SparkSpec {
       (12L, "m0 n1 n2 n3"),
       (13L, "u v w x y")).toDF("doc_id", "text")
     val inc = Dedup.incrementalDuplicatedSpans(
-        Dedup.spanCountStore(history, "doc_id", "text", l = 3),
+        Dedup.spanCountStoreFromOcc(
+          Dedup.spanOccurrences(history, "doc_id", "text", l = 3)),
         Dedup.spanOccurrences(batch, "doc_id", "text", l = 3))
       .as[(String, Long, Long)].collect().toSet
 
     // one-shot over the full corpus, restricted to spans the batch touches
     val full = history.unionByName(batch)
-    val oneShot = Dedup.duplicatedSpanIndex(full, "doc_id", "text", l = 3)
+    val oneShot = Dedup.duplicatedSpanIndexFromOcc(
+      Dedup.spanOccurrences(full, "doc_id", "text", l = 3), "doc_id")
     val batchKeys = Dedup.spanOccurrences(batch, "doc_id", "text", l = 3)
       .groupBy(col("span_h")).agg(count(lit(1)).cast("long").as("n_new"))
     val expected = oneShot.join(batchKeys, Seq("span_h"))
@@ -649,14 +653,12 @@ class DedupSpec extends SparkSpec {
         "doc_id"),
       Set("doc_id"), "candidatePairs")
     assertNoBucketCollects(
-      Dedup.simhashCandidates(corpus, "doc_id", "text"), Set("doc_id"),
-      "simhashCandidates")
-    assertNoBucketCollects(
       Dedup.simhashCandidatesPortable(corpus, "doc_id", "text"), Set("doc_id"),
       "simhashCandidatesPortable")
     assertNoBucketCollects(
-      Dedup.simhashHammingPairs(corpus, "doc_id", "text", maxDist = 2),
-      Set("doc_id"), "simhashHammingPairs")
+      Dedup.simhashHammingPairsFromSig(
+        Dedup.simhashPortable(corpus, "doc_id", "text"), "doc_id", maxDist = 2),
+      Set("doc_id"), "simhashHammingPairsFromSig")
     assertNoBucketCollects(
       Dedup.prefixJaccardPairs(corpus, "doc_id", "text", BigDecimal("0.7")),
       Set("doc_id"), "prefixJaccardPairs")

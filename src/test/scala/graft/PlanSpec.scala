@@ -208,6 +208,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("native LSH buckets fold with the fused dot, not interpreted zip_with/aggregate") {
+    // zip_with and aggregate are CodegenFallback: one per plane per row
+    // would run interpreted inside the bucket projection
+    val exprs = SparkEntry.queries("embed_ann_lsh")(spark, sfDir)
+      .queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.ZipWith => e.prettyName
+        case e: org.apache.spark.sql.catalyst.expressions.ArrayAggregate => e.prettyName
+      }))
+    assert(exprs.isEmpty, s"embed_ann_lsh plans interpreted folds: ${exprs.distinct}")
+  }
+
   test("sequence packing plans no single-task global window") {
     val df = SparkEntry.queries("pack_sequences")(spark, sfDir)
     val windows = df.queryExecution.sparkPlan.collect {

@@ -167,7 +167,8 @@ class PropertiesSpec extends SparkSpec {
           .flatMap(g => g._2 until g._2 + l).toSet
         i.toLong -> ((t.split(" ").length.toLong, covered.size.toLong))
       }.toMap
-      val got = Dedup.duplicatedSpanCoverage(docs, "doc_id", "text", l)
+      val got = Dedup.duplicatedSpanCoverageFromOcc(docs,
+          Dedup.spanOccurrences(docs, "doc_id", "text", l), "doc_id", "text", l)
         .as[(Long, Long, Long)].collect()
         .map { case (id, nt, nd) => id -> ((nt, nd)) }.toMap
       assert(got == want, s"corpus=$texts")

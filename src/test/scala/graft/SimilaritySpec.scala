@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /** Embedding similarity search: exact brute-force ranking and LSH-bucketed
-  * ANN recall. Planes are seeded, the corpus is fixed — deterministic.
+  * ANN recall. Planes are md5-derived, the corpus is fixed — deterministic.
   */
 class SimilaritySpec extends SparkSpec {
   private lazy val s = spark
@@ -120,15 +120,15 @@ class SimilaritySpec extends SparkSpec {
       s"portable-only: ${portable -- native}; native-only: ${native -- portable}")
   }
 
-  test("lshTopK fails fast when the broadcast query side exceeds the row cap") {
+  test("lshTopKMd5 fails fast when the broadcast query side exceeds the row cap") {
     val e = intercept[IllegalArgumentException] {
-      Similarity.lshTopK(vectors, vectors, "vec_id", "embedding",
+      Similarity.lshTopKMd5(vectors, vectors, "vec_id", "embedding",
         k = 3, nPlanes = 4, dim = dim, maxQueryRows = 5L)
     }
     assert(e.getMessage.contains("broadcasts the query set"),
       s"guard message should name the contract, got: ${e.getMessage}")
     // and a query set at the cap passes the guard
-    assert(Similarity.lshTopK(vectors, vectors.limit(5), "vec_id", "embedding",
+    assert(Similarity.lshTopKMd5(vectors, vectors.limit(5), "vec_id", "embedding",
       k = 3, nPlanes = 4, dim = dim, maxQueryRows = 5L).count() > 0)
   }
 
@@ -154,12 +154,12 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.4, s"incremental ANN recall $recall")
   }
 
-  test("lshTopK recall >= 0.8 vs brute force on clustered vectors") {
+  test("lshTopKMd5 recall >= 0.8 vs brute force on clustered vectors") {
     val queries = vectors.filter(col("vec_id") % 10 === 0)
     val k = 3
     val truth = Similarity.bruteForceTopK(vectors, queries, "vec_id", "embedding", k)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(vectors, queries, "vec_id", "embedding", k,
+    val approx = Similarity.lshTopKMd5(vectors, queries, "vec_id", "embedding", k,
       nPlanes = 4, dim = dim)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val recall = truth.count(approx.contains).toDouble / truth.size

@@ -10,7 +10,7 @@ import graft.streaming.StreamDedup
 
 /** Streaming EXACT Hamming-≤d SimHash maintenance: the micro-batch folds
   * must emit, across all batches, exactly the one-shot
-  * [[Dedup.simhashHammingPairs]] answer — pairs AND exact distances —
+  * [[Dedup.simhashHammingPairsFromSig]] answer — pairs AND exact distances —
   * with every cross-batch pair surfacing in the arrival batch, a
   * replayed batch a no-op, and only the batch ever token-hashed.
   */
@@ -35,7 +35,8 @@ class StreamHammingSpec extends SparkSpec {
   private val d = 1
 
   private def oneShot =
-    Dedup.simhashHammingPairs(corpus, "doc_id", "text", maxDist = d)
+    Dedup.simhashHammingPairsFromSig(
+        Dedup.simhashPortable(corpus, "doc_id", "text"), "doc_id", maxDist = d)
       .as[(Long, Long, Int)].collect().toSet
 
   test("cross-batch folds emit exactly the one-shot answer (distances included); replay is a no-op") {

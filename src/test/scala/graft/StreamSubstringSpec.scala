@@ -46,7 +46,8 @@ class StreamSubstringSpec extends SparkSpec {
     val storeCounts = store.read("spans")
       .groupBy(col("span_h")).agg(sum(col("n_old")).cast("long").as("n"))
       .as[(String, Long)].collect().toSet
-    val oneShotCounts = Dedup.spanCountStore(corpus, "doc_id", "text", L)
+    val occ = Dedup.spanOccurrences(corpus, "doc_id", "text", L)
+    val oneShotCounts = Dedup.spanCountStoreFromOcc(occ)
       .select(col("span_h"), col("n_old").as("n"))
       .as[(String, Long)].collect().toSet
     assert(storeCounts == oneShotCounts)
@@ -54,7 +55,7 @@ class StreamSubstringSpec extends SparkSpec {
     val logged = store.read("dups")
       .groupBy(col("span_h")).agg(max(col("n_occ")).cast("long").as("n_occ"))
       .as[(String, Long)].collect().toSet
-    val oneShotDups = Dedup.duplicatedSpanIndex(corpus, "doc_id", "text", L)
+    val oneShotDups = Dedup.duplicatedSpanIndexFromOcc(occ, "doc_id")
       .select(col("span_h"), col("n_occ"))
       .as[(String, Long)].collect().toSet
     assert(logged == oneShotDups)

@@ -47,6 +47,21 @@ class TableStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.readVersion("t", 2))
   }
 
+  test("a zero-row versioned overwrite reads back empty; its snapshot keeps the rows") {
+    val root = Files.createTempDirectory("graft_store").toString
+    val store = new TableStore(spark, root)
+    store.overwriteVersioned("t", Seq((1, "a"), (2, "b")).toDF("v", "w"))
+    store.overwriteVersioned("t", Seq((3, "c")).toDF("v", "w"))
+    val v = store.overwriteVersioned("t", Seq((3, "c")).toDF("v", "w").limit(0))
+    assert(v == 2L)
+    assert(store.exists("t"))
+    val now = store.read("t")
+    assert(now.schema.map(_.name) == Seq("v", "w") && now.isEmpty)
+    assert(store.readVersion("t", v).as[(Int, String)].collect().toSeq == Seq((3, "c")))
+    assert(store.readVersion("t", 1).as[(Int, String)].collect().toSet ==
+      Set((1, "a"), (2, "b")))
+  }
+
   test("crash between overwrite's two moves recovers: finished tmp published") {
     val root = Files.createTempDirectory("graft_store").toString
     val store = new TableStore(spark, root)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Local iteration harness: times named registered queries on
@@ -15,7 +16,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *   - `--explain`: print the formatted physical plan on the first rep.
   *   - `--prof`: on the last rep only, print each job's wall time and each
   *     stage's task time and row counts (find where the time goes before
-  *     touching a plan).
+  *     touching a plan), and how many classes the rep compiled: a warm
+  *     rep that still compiles regenerates its code on every run.
   * Exits 1 when any named query fails or is not registered.
   */
 object Debug {
@@ -68,7 +70,8 @@ object Debug {
   }
 
   /** Runs `run` with a listener that records each job's wall time and
-    * each stage's metrics, then prints them. The bus is drained before
+    * each stage's metrics, then prints them with the number of generated
+    * classes the run compiled (JVM-wide). The bus is drained before
     * attaching, so earlier reps' events never reach the listener, and
     * before printing, so every event of the run is delivered. A job whose
     * start event was not seen has no duration and prints nothing.
@@ -94,10 +97,12 @@ object Debug {
     }
     ListenerBus.drain(sc)
     sc.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val secs = run
       ListenerBus.drain(sc)
-      println(f"[prof] ===== $name wall=$secs%.3f s =====")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      println(f"[prof] ===== $name wall=$secs%.3f s codegen_compiles=$compiles =====")
       lines.forEach(l => println(l))
       secs
     } finally sc.removeSparkListener(listener)

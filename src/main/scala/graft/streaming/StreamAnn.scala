@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Pin, Similarity}
@@ -35,12 +34,13 @@ import graft.sources.TableStore
 object StreamAnn {
 
   /** The per-batch fold, run from a stream with [[Maintain]]. `batch`
-    * carries (vec_id, v: array<double>); `centroids` (cid, cv:
-    * array<double>).
+    * carries (vec_id, v: array<double>); `centroids` (cid: bigint, cv:
+    * array<double>). Each vector probes its `probe` ≥ 1 nearest lists.
     */
   def applyBatch(store: TableStore, listTable: String,
       neighborsTable: String, centroids: DataFrame, probe: Int, k: Int)(
       batch: DataFrame, batchId: Long): Unit = {
+    require(probe >= 1, s"probe must be at least 1 (the home list), got $probe")
     val lastApplied = store.lastAppliedBatch(listTable)
     if (batchId > lastApplied) {
       val cents = centroids
@@ -57,16 +57,19 @@ object StreamAnn {
         // assignment and ranking read the same 12-digit value in every
         // engine that replays this fold (the per-element double dot fold
         // is already reproducible; the rounding absorbs any tie wobble)
-        .select(col("vec_id"), col("v"), col("cid"),
+        .select(col("vec_id"), col("cid"),
           round(Similarity.dotNative(col("v"), col("cv")) /
             (sqrt(col("n2")) * sqrt(col("n2c"))), 12).as("cs"))
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cs").desc, col("cid"))
-      val ranked = Pin(scored.withColumn("r", row_number().over(w)))
-      val home = ranked.filter(col("r") === 1)
-        .select(col("vec_id"), col("cid"), col("v"))
-      val probes = ranked.filter(col("r") <= probe)
-        .select(col("vec_id").as("qid"), col("cid"))
+      // each vector's `probe` nearest lists; rank 1 is its home list. A
+      // null cs (a centroid with a null vector) ranks last, as it did
+      // under the row_number window's DESC NULLS LAST: a rounded cosine
+      // is never -Infinity
+      val ranked = Pin(TopKPairs.perGroup(scored, col("vec_id"),
+        coalesce(col("cs"), lit(Double.NegativeInfinity)), col("cid"), probe))
+      val home = ranked.filter(col("rank") === 1)
+        .select(col("vec_id"), col("id").as("cid"))
+        .join(batch.select(col("vec_id"), col("v")), Seq("vec_id"))
+      val probes = ranked.select(col("vec_id").as("qid"), col("id").as("cid"))
       val touched = probes.select(col("cid")).distinct()
         .collect().map(_.getLong(0)).toSeq
       val hist =

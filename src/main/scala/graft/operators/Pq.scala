@@ -49,16 +49,16 @@ object Pq {
     transform(c, x => x.cast(DoubleType))
 
   /** Deterministic strided codebook: subvectors of the `nCent` corpus
-    * vectors at ids 0, stride, 2·stride, … (stride = n/nCent). Returns
-    * (code j, full centroid vector) — nCent×dim doubles, the only thing
-    * that ever reaches the driver.
+    * vectors at ids 0, stride, 2·stride, … (stride = n/nCent, the
+    * [[Similarity.stridedSeeds]] sample). Returns (code j, full centroid
+    * vector) — nCent×dim doubles, the only thing that ever reaches the
+    * driver.
     */
   def codebook(corpus: DataFrame, idCol: String, vecCol: String,
       nCent: Int, corpusSize: Option[Long] = None): Seq[(Int, Array[Double])] = {
     val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cvec"))
-    val stride = math.max(1L, corpusSize.getOrElse(c.count()) / nCent)
-    c.filter(pmod(col("nid"), lit(stride)) === 0)
-      .orderBy(col("nid")).limit(nCent)
+    val stride = Similarity.seedStride(corpusSize.getOrElse(c.count()), nCent)
+    Similarity.stridedSeeds(c, "nid", stride, nCent)
       .select(col("cvec")).collect()
       .zipWithIndex
       .map { case (r, j) => (j, r.getSeq[Double](0).toArray) }.toSeq

@@ -8,14 +8,21 @@ import graft.plans.TopKPairs
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
-  *  - [[bruteForceTopK]]: exact cosine top-k via a broadcast of the query
-  *    set — the correctness baseline. Linear in corpus size; the query set
-  *    must be small enough to broadcast.
-  *  - [[lshTopKMd5]]: random-hyperplane LSH over the md5 plane family —
-  *    vectors hash to sign-pattern buckets, candidates come from an
-  *    equi-join on the bucket key, so the corpus is scanned once and
-  *    never self-cross-joined. The scale path.
+  * Exact and hashed paths: [[bruteForceTopK]] (exact cosine against a
+  * broadcast query set, the correctness baseline), [[lshTopKMd5]] and
+  * [[rpTopK]] (md5-plane LSH buckets and a random-projection screen),
+  * [[tfidfTopK]] (sparse text vectors) and the sign-bit screen
+  * [[bqCandidatesOf]].
+  *
+  * The coarse quantizer behind every IVF, k-means and SemDeDup path has
+  * one implementation of each step: [[stridedSeeds]] samples the seeds,
+  * [[centroidScores]] scores vectors against a broadcast (cid, cv)
+  * frame, [[nearestCentroid]] takes the argmax, and [[kmeans]] runs the
+  * Lloyd loop over those two. Its arithmetic contract, which the oracles
+  * replay: native dot ([[dotNative]]), the 12-digit cosine
+  * ([[cosine12]]), max cs then the lower cid, and DECIMAL(38,18) element
+  * means. [[ivfTopK]], [[ivfTopKKmeans]] and [[ivfTopKWith]] are built
+  * on it.
   *
   * Every ranking ends in [[graft.plans.TopKPairs.perGroup]], and every
   * dot product is the fused, code-generated [[dotNative]]. [[dot]] is its
@@ -205,136 +212,143 @@ object Similarity {
         when(dotNative(vec, lit(p)) > 0, "1").otherwise("0")
       }: _*)
 
-  /** IVF-style approximate top-k: a deterministic coarse quantizer (the
-    * `nCentroids` lowest-id corpus vectors) partitions the corpus into
-    * inverted lists; each query probes its `nProbe` nearest centroids and
-    * ranks only those lists by exact cosine.
-    *
-    * Scale shape: assignment is a map-side broadcast of the centroid set
-    * (n × nCentroids dot products, no shuffle of the corpus beyond the
-    * final per-list grouping); queries never touch lists they don't probe.
-    * A k-means-refined centroid set plugs in by swapping `centroids`.
+  /** Stride of the seed sample that spreads `k` seeds over `n` ids. */
+  def seedStride(n: Long, k: Int): Long = math.max(1L, n / k)
+
+  /** The coarse quantizer's seed sample: the `limit` lowest-id rows of
+    * `vecs` whose id is a multiple of `stride`, every column kept, in id
+    * order — deterministic, spread across the id range, and replayable
+    * by an external SQL engine (`WHERE id % s = 0 ORDER BY id LIMIT k`).
+    */
+  def stridedSeeds(vecs: DataFrame, idCol: String, stride: Long,
+      limit: Int): DataFrame =
+    vecs.filter(pmod(col(idCol), lit(stride)) === 0)
+      .orderBy(col(idCol)).limit(limit)
+
+  /** The family's 12-digit cosine: native dot over the product of the
+    * square roots of the squared norms `na`, `nb`, rounded to 12 digits —
+    * the value every engine that replays it with a sequential double dot
+    * (DuckDB's `list_dot_product`) reads bit for bit.
+    */
+  def cosine12(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dotNative(a, b) / (sqrt(na) * sqrt(nb)), 12)
+
+  /** [[cosine12]] of two vectors, norms computed in-row. */
+  def cosine12(a: Column, b: Column): Column =
+    cosine12(a, b, dotNative(a, a), dotNative(b, b))
+
+  /** Scores (vec_id, cid, cs) of every vector of `vecs` (vec_id, v:
+    * array<double>) against the broadcast centroid frame `centroids`
+    * (cid, cv: array<double>), cs the [[cosine12]]. The quantizer's one
+    * cross join: one codegen'd projection per vector × k centroids, no
+    * element explode, and the vector is projected away before any
+    * per-vector reduction.
+    */
+  def centroidScores(vecs: DataFrame, centroids: DataFrame): DataFrame = {
+    val cents = centroids.select(col("cid"), col("cv"),
+      dotNative(col("cv"), col("cv")).as("nc"))
+    vecs.select(col("vec_id"), col("v"), dotNative(col("v"), col("v")).as("n2"))
+      .crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("cid"),
+        cosine12(col("v"), col("cv"), col("n2"), col("nc")).as("cs"))
+  }
+
+  /** Each vector's nearest centroid (vec_id, cid) over a scores frame
+    * (vec_id, cid, cs): max cs, then the LOWER cid — the order of
+    * `row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) = 1`
+    * and of [[TopKPairs.perGroup]]'s rank 1 (NaN greatest, 0.0 equal to
+    * -0.0). One map-side-partial aggregate: n rows of (vec_id, cid) cross
+    * the exchange, where a window would shuffle all n×k scored rows.
+    */
+  def nearestCentroid(scores: DataFrame): DataFrame =
+    scores.groupBy(col("vec_id"))
+      .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc")))
+        .as("cid"))
+
+  /** Lloyd's k-means over `vecs` (vec_id, v: array<double>) from `seeds`
+    * (vec_id, v), labelled 0..k-1 in id order: `iters` rounds of
+    * [[nearestCentroid]] over [[centroidScores]], then per-element means.
+    * A mean accumulates in DECIMAL(38,18) and divides once (exact and
+    * order-independent, so Spark's partial aggregation and an external
+    * decimal engine evolve the same centroids); a cluster that lost
+    * every member keeps its previous centroid. Only k×dim doubles reach
+    * the driver. Returns the centroid frame (cid, cv).
+    */
+  def kmeans(vecs: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    var cents: Seq[(Long, Seq[Double])] = seeds.orderBy(col("vec_id"))
+      .select(col("v")).collect().toSeq.zipWithIndex
+      .map { case (r, i) => (i.toLong, r.getSeq[Double](0)) }
+    def centsDf = cents.toDF("cid", "cv")
+    for (_ <- 0 until iters) {
+      val assigned = nearestCentroid(centroidScores(vecs, centsDf))
+      val means = vecs.join(assigned, Seq("vec_id"))
+        .select(col("cid"), posexplode(col("v")))
+        .groupBy(col("cid"), col("pos"))
+        .agg((sum(col("col").cast(DecimalType(38, 18))).cast(DoubleType) /
+          count(lit(1)).cast(DoubleType)).as("m"))
+        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      cents = cents.map { case (cid, prev) =>
+        cid -> prev.indices.map(j => means.getOrElse((cid, j), prev(j)))
+      }
+    }
+    centsDf
+  }
+
+  /** (vec_id, v) frame of an (id, vector) input, the vector widened. */
+  private def vectorsOf(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("vec_id"), toDouble(col(vecCol)).as("v"))
+
+  /** IVF-style approximate top-k over the strided quantizer: the
+    * `nCentroids` [[stridedSeeds]] (cid = the seed's id) partition the
+    * corpus into inverted lists, and each query ranks only the lists of
+    * its `nProbe` nearest centroids. Callers that know the corpus size
+    * pass it — otherwise the stride costs one COUNT scan of the corpus.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
       corpusSize: Option[Long] = None): DataFrame = {
-    val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cvec"))
-    // deterministic strided sample: one centroid every n/nCentroids ids,
-    // spread across the id range ([[ivfTopKKmeans]] refines these).
-    // Callers that know the corpus size pass it — otherwise deriving the
-    // stride costs one COUNT scan of the corpus per invocation, a full
-    // extra pass at 100 TB (cache the count, don't re-derive it).
-    val stride = math.max(1L, corpusSize.getOrElse(c.count()) / nCentroids)
-    val centroids = c.filter(pmod(col("nid"), lit(stride)) === 0)
-      .orderBy(col("nid")).limit(nCentroids)
-      .select(col("nid").as("cid"), col("cvec").as("centvec"))
+    val c = vectorsOf(corpus, idCol, vecCol)
+    val stride = seedStride(corpusSize.getOrElse(c.count()), nCentroids)
+    val centroids = stridedSeeds(c, "vec_id", stride, nCentroids)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
     ivfTopKWith(corpus, queries, idCol, vecCol, k, nProbe, centroids)
   }
 
-  /** The IVF probe stage against a given (cid, centvec) quantizer.
-    *
-    * Centroid assignment is [[nearestCentroidIds]], NOT a `row_number`
-    * window over the id×k cross rows: the window formulation exchanges
-    * all n×k rows (each dragging the dim-double vector) keyed on the id,
-    * which at a corpus-scale n with a large quantizer shuffles k× the
-    * corpus. The vector is joined back batch-sized after the per-id
-    * top-k (the `StreamSemDedup` assignment contract).
+  /** The IVF probe stage against a given (cid, cv) quantizer: each corpus
+    * vector is listed under its [[nearestCentroid]], each query probes its
+    * `nProbe` best centroids ([[TopKPairs.perGroup]] over the same
+    * scores), and the candidates rank by [[cosine12]], ties to the lower
+    * id. Returns (qid, nid, cosine, rank).
     */
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int, centroids: DataFrame): DataFrame = {
-    val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cvec"))
-    val lists = nearestCentroidIds(c, "cvec", "nid", 1, centroids)
-      .join(c, Seq("nid"))
-    val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qvec"))
-    val probes = nearestCentroidIds(q, "qvec", "qid", nProbe, centroids)
-      .join(q, Seq("qid"))
-    val scored = lists
-      .join(probes, Seq("cid"))
+    val c = vectorsOf(corpus, idCol, vecCol)
+    val q = vectorsOf(queries, idCol, vecCol)
+    val lists = nearestCentroid(centroidScores(c, centroids))
+      .select(col("vec_id").as("nid"), col("cid"))
+    val probes = TopKPairs.perGroup(centroidScores(q, centroids),
+        col("vec_id"), col("cs"), col("cid"), nProbe)
+      .select(col("vec_id").as("qid"), col("id").as("cid"))
+    val scored = probes.join(lists, Seq("cid"))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), cosine(col("qvec"), col("cvec")).as("cosine"))
+      .join(q.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
+      .join(c.select(col("vec_id").as("nid"), col("v").as("cv")), Seq("nid"))
+      .select(col("qid"), col("nid"), cosine12(col("qv"), col("cv")).as("cosine"))
     TopKPairs.perGroup(scored, col("qid"), col("cosine"), col("nid"), k)
       .toDF("qid", "nid", "cosine", "rank")
   }
 
-  /** Per-id `top` nearest centroid ids — (id, cid) rows, membership-equal
-    * to `row_number().over(partitionBy(id).orderBy(csim desc, cid)) <=
-    * top` but window-free: the vector is projected AWAY before
-    * [[TopKPairs.perGroup]], so the exchange carries one partial heap per
-    * id instead of id×k scored rows.
-    */
-  def nearestCentroidIds(df: DataFrame, vecCol: String, idCol: String,
-      top: Int, centroids: DataFrame): DataFrame = {
-    val scored = df.crossJoin(broadcast(centroids))
-      .select(col(idCol), col("cid"),
-        cosine(col(vecCol), col("centvec")).as("csim"))
-    TopKPairs.perGroup(scored, col(idCol), col("csim"), col("cid"), top)
-      .select(col(idCol), col("id").as("cid"))
-  }
-
-  /** Lloyd's k-means over the embedding column, for IVF centroid
-    * refinement. Scale shape per iteration: assignment is map-side
-    * (k cosines against literal centroid arrays — the centroid set is
-    * tiny and ships with the plan), and the mean recompute is one
-    * element-level aggregation; only k×dim averaged values ever reach the
-    * driver (the corpus never does).
-    *
-    * The mean accumulates element sums in DECIMAL(38,18) and divides
-    * once (the `embed_norm_stats` trick): decimal addition is exact and
-    * order-independent, so the centroid evolution is deterministic under
-    * Spark's partial aggregation AND replayable by an external decimal
-    * engine — a double `avg` would drift with shuffle order.
-    *
-    * Returns (cid, centvec) with `k` rows, cids 0..k-1.
-    */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, corpusSize: Option[Long] = None): Seq[(Long, Array[Double])] = {
-    val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cvec"))
-    // deterministic strided seed spread across the id range (same sample
-    // the plain IVF quantizer uses); a known corpusSize skips the COUNT
-    // scan — see ivfTopK
-    val stride = math.max(1L, corpusSize.getOrElse(c.count()) / k)
-    var cents: Seq[(Long, Array[Double])] = c
-      .filter(pmod(col("nid"), lit(stride)) === 0)
-      .orderBy(col("nid")).limit(k)
-      .select(col("nid"), col("cvec")).collect()
-      .zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Double](1).toArray) }.toSeq
-    // an empty corpus seeds no centroids: return the empty quantizer
-    // (consumers join against it and go empty) instead of building a
-    // zero-column cosine array the analyzer rejects
-    if (cents.isEmpty) return cents
-    for (_ <- 0 until iters) {
-      val cosines = array(cents.map { case (_, v) => cosine(col("cvec"), lit(v)) }: _*)
-      val assigned = c
-        .withColumn("cid", (array_position(cosines, array_max(cosines)) - 1).cast(LongType))
-      val means = assigned
-        .select(col("cid"), posexplode(col("cvec")))
-        .groupBy(col("cid"), col("pos"))
-        .agg((sum(col("col").cast(DecimalType(38, 18))).cast(DoubleType) /
-          count(lit(1)).cast(DoubleType)).as("m"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
-        .select(col("cid"), transform(col("ps"), p => p.getField("m")).as("centvec"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      // empty clusters keep their previous centroid
-      val byId = means.map(m => m._1 -> m._2).toMap
-      cents = cents.map { case (cid, v) => (cid, byId.getOrElse(cid, v)) }
-    }
-    cents
-  }
-
-  /** IVF top-k with a k-means-refined coarse quantizer — [[ivfTopK]]'s
-    * scale shape (broadcast centroid assignment, probed inverted lists)
-    * with proper Lloyd centroids instead of the strided id sample.
+  /** IVF top-k with a [[kmeans]]-refined quantizer: [[ivfTopK]]'s
+    * strided seeds, `iters` Lloyd rounds, then the same probe stage.
     */
   def ivfTopKKmeans(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int, nProbe: Int,
       iters: Int = 3, corpusSize: Option[Long] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = kmeansCentroids(corpus, idCol, vecCol, nCentroids, iters, corpusSize)
-    val centroids = cents.toDF("cid", "centvec")
+    val c = vectorsOf(corpus, idCol, vecCol)
+    val stride = seedStride(corpusSize.getOrElse(c.count()), nCentroids)
+    val centroids = kmeans(c, stridedSeeds(c, "vec_id", stride, nCentroids), iters)
     ivfTopKWith(corpus, queries, idCol, vecCol, k, nProbe, centroids)
   }
 

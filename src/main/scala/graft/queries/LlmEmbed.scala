@@ -70,19 +70,6 @@ object LlmEmbed {
       |       FROM embeddings CROSS JOIN range(1, 4097) t(i)
       |       WHERE i <= len(embedding))""".stripMargin
 
-  /** Per-vector centroid argmax over (vec_id, cid, cs) rows as ONE
-    * map-side-partial aggregate — max cs, then LOWER cid (cid is unique
-    * per row, so the struct order is total; NaN sorts GREATEST under
-    * both this and the window/oracle ordering). Every assignment path
-    * uses this shape instead of a row_number window over the n×k scored
-    * rows — see semAssign for the full rationale.
-    */
-  private def argmaxCid(scored: org.apache.spark.sql.DataFrame) =
-    scored
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc")))
-        .as("cid"))
-
   /** Shared tail of the portable ANN queries: rank bounded (qid, nid)
     * candidate pairs by exact-decimal cosine and keep each query's top 3.
     * `vecs` is the array frame ([[vecsOf]]), `nrm` its per-vector
@@ -322,24 +309,14 @@ object LlmEmbed {
       .select(col("qid"), col("nid"), col("rank").as("rnk"))
   }
 
-  /** IVF with a k-means-refined quantizer through the ENGINE-NATIVE path
-    * ([[Similarity.ivfTopKKmeans]]: Lloyd iterations with decimal-exact
-    * centroid means, broadcast assignment, probed lists), certified end
-    * to end: seeds, the 2-round centroid EVOLUTION, assignments, probes
-    * and ranking are all deterministic and rederived from scratch by the
-    * oracle, so the hash match certifies the whole iterative quantizer —
-    * convergence/recall bounds stay in SimilaritySpec. Certified surface
-    * is (qid, nid, rnk) (float cosine values excluded, as above).
+  /** The (qid, nid, rnk) projection of [[ivfKmeansTop3]], certified
+    * against the same oracle; convergence and recall bounds stay in
+    * SimilaritySpec.
     */
   private val annIvfKmeans = Q(
     "embed_ann_ivf_kmeans",
     s"SELECT qid, nid, rnk FROM (\n$ivfKmeansPortableSql\n) certified") { (s, d) =>
-    val emb = Tables.embeddings(s, d)
-    Similarity.ivfTopKKmeans(
-      emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-      k = 3, nCentroids = 16, nProbe = 4, iters = 2,
-      corpusSize = Some(Tables.rowCount(s, d, "embeddings")))
-      .select(col("qid"), col("nid"), col("rank").as("rnk"))
+    ivfKmeansTop3(s, d).select(col("qid"), col("nid"), col("rnk"))
   }
 
   /** IVF approximate top-3, oracle-checked end to end: the coarse
@@ -407,10 +384,9 @@ object LlmEmbed {
     // IDS come from the unfiltered table (the oracle's cents CTE ranks
     // raw vec_ids); their ARRAYS are k×dim driver state — the same
     // bounded materialization the k-means twin performs.
-    val stride = math.max(1L, Tables.rowCount(s, d, "embeddings") / 16)
-    val centIds = Tables.embeddings(s, d).select(col("vec_id"))
-      .filter(pmod(col("vec_id"), lit(stride)) === 0)
-      .orderBy(col("vec_id")).limit(16)
+    val centIds = Similarity.stridedSeeds(Tables.embeddings(s, d), "vec_id",
+        Similarity.seedStride(Tables.rowCount(s, d, "embeddings"), 16), 16)
+      .select(col("vec_id"))
     val centArrs = vecs.join(broadcast(centIds), Seq("vec_id"))
       .orderBy(col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -432,10 +408,9 @@ object LlmEmbed {
       .join(nrm.select(col("vec_id").as("cid"), col("n2").as("nc")), Seq("cid"))
       .select(col("vec_id"), col("cid"),
         round(col("dot") / (sqrt(col("nv")) * sqrt(col("nc"))), 12).as("cs"))
-    // per-vector argmax / top-4 as map-side-partial aggregates
-    // ([[argmaxCid]]/[[TopKPairs.perGroup]]), not row_number windows
-    // over the n×k scored rows (see semAssign)
-    val lists = argmaxCid(csim).select(col("vec_id").as("nid"), col("cid"))
+    // the quantizer's argmax and top-4 over the decimal scores
+    val lists = Similarity.nearestCentroid(csim)
+      .select(col("vec_id").as("nid"), col("cid"))
     val probes = TopKPairs.perGroup(csim.filter(col("vec_id") < 5),
         col("vec_id"), col("cs"), col("cid"), 4)
       .select(col("vec_id").as("qid"), col("id").as("cid"))
@@ -445,61 +420,12 @@ object LlmEmbed {
     rankTop3(vecs, nrm, cand)
   }
 
-  /** K-MEANS IVF, oracle-checked end to end: the full centroid EVOLUTION
-    * is replayed by the oracle — strided seeds (the same deterministic
-    * sample the plain IVF quantizer uses), then two Lloyd iterations,
-    * then probed-list search. Cross-engine exactness is a hybrid of the
-    * two certified arithmetic modes:
-    *
-    *  - every DOT (assignment cosines AND final ranking) is the fused
-    *    native [[graft.plans.DotProduct]] double fold, which
-    *    `embed_dot_native` proves bit-identical to DuckDB's sequential
-    *    `list_dot_product`;
-    *  - every MEAN (the centroid update) accumulates element sums in
-    *    DECIMAL(38,18) and divides once (exact, order-independent — the
-    *    `embed_norm_stats` trick).
-    *
-    * So seeds, per-round assignments, refined centroids, probed
-    * candidate sets, and the ranked output are all bit-identical across
-    * engines; ties in the argmax break on lower cid in both
-    * (row_number ORDER BY cs DESC, cid). Empty clusters keep their
-    * previous centroid, matching [[Similarity.kmeansCentroids]].
-    *
-    * Scale shape: assignment is ONE codegen'd projection over the corpus
-    * crossed with the k-row broadcast centroid frame (bounded by design —
-    * whitelisted in PlanSpec), with NO dim× row explosion; only the
-    * centroid update touches elements (corpus × dim rows, one decimal
-    * aggregate per round), and only k×dim averaged values ever reach the
-    * driver, never the corpus.
-    */
   /** The portable k-means-IVF oracle SQL, shared by
     * `embed_ann_ivf_kmeans_portable` and (projected to qid/nid/rnk) the
     * native `embed_ann_ivf_kmeans`. A def: consumed by query vals on
     * both sides of this point.
     */
-  private def ivfKmeansPortableSql: String = {
-      val dim = "len(cv)"
-      // one Lloyd iteration as a CTE block: c{i} -> n/s/a/m/ce{i} -> c{i+1}
-      def iter(i: Int): String =
-        s"""n$i AS (SELECT cid, CAST(list_dot_product(cv, cv) AS DOUBLE) AS nc FROM c$i),
-           |s$i AS (SELECT emb.vec_id, c.cid,
-           |               round(CAST(list_dot_product(emb.v, c.cv) AS DOUBLE)
-           |                     / (sqrt(CAST(list_dot_product(emb.v, emb.v) AS DOUBLE)) * sqrt(n$i.nc)), 12) AS cs
-           |        FROM emb CROSS JOIN c$i c JOIN n$i ON n$i.cid = c.cid),
-           |a$i AS (SELECT vec_id, cid FROM (
-           |          SELECT vec_id, cid,
-           |                 row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid) AS r
-           |          FROM s$i) WHERE r = 1),
-           |m$i AS (SELECT a$i.cid, t.i,
-           |               CAST(SUM(CAST(emb.v[i] AS DECIMAL(38,18))) AS DOUBLE)
-           |                 / CAST(count(*) AS DOUBLE) AS mx
-           |        FROM emb JOIN a$i USING (vec_id)
-           |        CROSS JOIN LATERAL (SELECT unnest(range(1, len(emb.v) + 1)) AS i) t
-           |        GROUP BY 1, 2),
-           |ce$i AS (SELECT cid, t.i, cv[i] AS cx
-           |         FROM c$i CROSS JOIN LATERAL (SELECT unnest(range(1, $dim + 1)) AS i) t),
-           |c${i + 1} AS (SELECT cid, list(coalesce(m$i.mx, ce$i.cx) ORDER BY i) AS cv
-           |       FROM ce$i LEFT JOIN m$i USING (cid, i) GROUP BY 1)""".stripMargin
+  private def ivfKmeansPortableSql: String =
       s"""WITH emb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |             FROM embeddings),
          |str AS (SELECT greatest(1, CAST(floor(count(*) / 16.0) AS BIGINT)) AS s
@@ -508,8 +434,8 @@ object LlmEmbed {
          |          FROM (SELECT vec_id FROM embeddings, str WHERE vec_id % s = 0
          |                ORDER BY vec_id LIMIT 16)),
          |c0 AS (SELECT cid, v AS cv FROM emb JOIN seeds USING (vec_id)),
-         |${iter(0)},
-         |${iter(1)},
+         |${lloydRoundCte(0)},
+         |${lloydRoundCte(1)},
          |ncf AS (SELECT cid, CAST(list_dot_product(cv, cv) AS DOUBLE) AS nc FROM c2),
          |scf AS (SELECT emb.vec_id, c.cid,
          |               round(CAST(list_dot_product(emb.v, c.cv) AS DOUBLE)
@@ -534,75 +460,30 @@ object LlmEmbed {
          |            JOIN emb a ON a.vec_id = cand.qid
          |            JOIN emb b ON b.vec_id = cand.nid))
          |WHERE rnk <= 3""".stripMargin
+
+  /** K-MEANS IVF top-3 (qid, nid, cosine, rnk), oracle-checked end to
+    * end: [[Similarity.ivfTopKKmeans]]'s strided seeds, two Lloyd
+    * rounds and probed-list search, every step replayed by the oracle.
+    * Every DOT is the native [[graft.plans.DotProduct]] fold, which
+    * `embed_dot_native` proves bit-identical to DuckDB's
+    * `list_dot_product`, read as the 12-digit cosine; every MEAN is a
+    * DECIMAL(38,18) sum divided once. So seeds, assignments (ties to the
+    * lower cid), refined centroids, probes and the ranked output are
+    * bit-identical across engines. `embed_ann_ivf_kmeans` certifies
+    * (qid, nid, rnk) of it, `embed_ann_ivf_kmeans_portable` the cosines
+    * too.
+    */
+  private def ivfKmeansTop3(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val emb = Tables.embeddings(s, d)
+    Similarity.ivfTopKKmeans(
+      emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+      k = 3, nCentroids = 16, nProbe = 4, iters = 2,
+      corpusSize = Some(Tables.rowCount(s, d, "embeddings")))
+      .toDF("qid", "nid", "cosine", "rnk")
   }
 
   private val annIvfKmeansPortable = Q(
-    "embed_ann_ivf_kmeans_portable", ivfKmeansPortableSql) { (s, d) =>
-    import s.implicits._
-    val embD = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
-    val stride = math.max(1L, Tables.rowCount(s, d, "embeddings") / 16)
-    val seedIds = Tables.embeddings(s, d)
-      .select(col("vec_id"))
-      .filter(pmod(col("vec_id"), lit(stride)) === 0)
-      .orderBy(col("vec_id")).limit(16)
-      .collect().map(_.getLong(0)).sorted.zipWithIndex
-      .map { case (v, c) => (v, c.toLong) }
-    // k×dim doubles live on the driver between rounds (the same bounded
-    // materialization any k-means performs); the corpus never does
-    var cents: Map[Long, IndexedSeq[Double]] = embD
-      .join(broadcast(seedIds.toSeq.toDF("vec_id", "cid")), Seq("vec_id"))
-      .select(col("cid"), col("v"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq).toMap
-    def centsDf = cents.toSeq.sortBy(_._1).map { case (c, v) => (c, v) }
-      .toDF("cid", "cv")
-      .withColumn("nc", Similarity.dotNative(col("cv"), col("cv")))
-    // ONE projection per corpus row × k broadcast centroids: native dot,
-    // inline norms, no element explode — and no vector past this select:
-    // the per-vector argmax below is a map-side-partial aggregate over
-    // (vec_id, cid, cs) rows, not a row_number window that would
-    // exchange all n×k cross rows (see semAssign for the full rationale;
-    // tie and NaN parity with the window/oracle ordering is identical).
-    def assignCs = embD
-      .withColumn("n2", Similarity.dotNative(col("v"), col("v")))
-      .crossJoin(broadcast(centsDf))
-      .select(col("vec_id"), col("cid"),
-        round(Similarity.dotNative(col("v"), col("cv")) /
-          (sqrt(col("n2")) * sqrt(col("nc"))), 12).as("cs"))
-    def assignIds = argmaxCid(assignCs)
-    for (_ <- 0 until 2) {
-      // decimal-exact element means; empty clusters keep the previous
-      // centroid (no row for that (cid, i) -> driver-side fallback)
-      val means = embD.join(assignIds, Seq("vec_id"))
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy(col("cid"), (col("pos") + 1).cast(LongType).as("i"))
-        .agg((sum(col("col").cast(dec)).cast(DoubleType) /
-          count(lit(1)).cast(DoubleType)).as("mx"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      cents = cents.map { case (cid, prev) =>
-        cid -> prev.indices.map(j => means.getOrElse((cid, j + 1L), prev(j)))
-      }
-    }
-    val lists = assignIds.select(col("vec_id").as("nid"), col("cid"))
-    // top-4 probe centroids for the 5 probe vectors
-    val probes = TopKPairs.perGroup(assignCs.filter(col("vec_id") < 5),
-        col("vec_id"), col("cs"), col("cid"), 4)
-      .select(col("vec_id").as("qid"), col("id").as("cid"))
-    val cand = probes.join(lists, Seq("cid"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid")).distinct()
-    val cosd = cand
-      .join(embD.select(col("vec_id").as("qid"), col("v").as("va")), Seq("qid"))
-      .join(embD.select(col("vec_id").as("nid"), col("v").as("vb")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        round(Similarity.dotNative(col("va"), col("vb")) /
-          (sqrt(Similarity.dotNative(col("va"), col("va"))) *
-            sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine"))
-    TopKPairs.perGroup(cosd, col("qid"), col("cosine"), col("nid"), 3)
-      .toDF("qid", "nid", "cosine", "rnk")
-  }
+    "embed_ann_ivf_kmeans_portable", ivfKmeansPortableSql)(ivfKmeansTop3)
 
   /** INCREMENTAL ANN maintenance: a new embedding batch (vec_id % 40 == 7
     * — the arrivals) is searched against an index built from HISTORY only
@@ -613,10 +494,10 @@ object LlmEmbed {
     * (= DuckDB `list_dot_product`), so assignment, probes, candidates,
     * and the ranked output hash-match end to end.
     *
-    * Scale shape: two bounded corpus × k broadcast-centroid projections
-    * (history once — in production that assignment IS the persisted
-    * index — plus the small new batch), a bucket equi-join on the
-    * centroid id, and a per-query top-k window. Nothing rebuilds, and
+    * It is [[Similarity.ivfTopKWith]] with history as the corpus (its
+    * lists; in production that assignment IS the persisted index) and
+    * the arrivals as the queries (their probes): a bucket equi-join on
+    * the centroid id and a per-query top-k. Nothing rebuilds, and
     * nothing ever compares new × all-history.
     */
   private val annIncremental = Q(
@@ -658,42 +539,16 @@ object LlmEmbed {
       |            JOIN emb a ON a.vec_id = cand.qid
       |            JOIN emb b ON b.vec_id = cand.nid))
       |WHERE rnk <= 3""".stripMargin) { (s, d) =>
-    val embD = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
-    val hist = embD.filter(pmod(col("vec_id"), lit(40)) =!= 7)
-    val newb = embD.filter(pmod(col("vec_id"), lit(40)) === 7)
+    val emb = Tables.embeddings(s, d)
+    val hist = emb.filter(pmod(col("vec_id"), lit(40)) =!= 7)
     // stride from the memoized TOTAL corpus count (one cached scalar);
-    // the seed set itself is restricted to history below
-    val stride = math.max(1L, Tables.rowCount(s, d, "embeddings") / 16)
-    val cents = hist
-      .filter(pmod(col("vec_id"), lit(stride)) === 0)
-      .orderBy(col("vec_id")).limit(16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-      .withColumn("n2c", Similarity.dotNative(col("cv"), col("cv")))
-    def assign(side: org.apache.spark.sql.DataFrame) = side
-      .withColumn("n2", Similarity.dotNative(col("v"), col("v")))
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        round(Similarity.dotNative(col("v"), col("cv")) /
-          (sqrt(col("n2")) * sqrt(col("n2c"))), 12).as("cs"))
-    // history argmax / arrival top-4 as map-side-partial aggregates
-    // ([[argmaxCid]]/[[TopKPairs.perGroup]]), not row_number windows
-    // over the n×k scored rows (see semAssign)
-    val lists = argmaxCid(assign(hist)).select(col("vec_id").as("nid"), col("cid"))
-    val probes = TopKPairs.perGroup(assign(newb), col("vec_id"), col("cs"),
-        col("cid"), 4)
-      .select(col("vec_id").as("qid"), col("id").as("cid"))
-    val cand = probes.join(lists, Seq("cid"))
-      .select(col("qid"), col("nid")).distinct()
-    val cosd = cand
-      .join(embD.select(col("vec_id").as("qid"), col("v").as("va")), Seq("qid"))
-      .join(embD.select(col("vec_id").as("nid"), col("v").as("vb")), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        round(Similarity.dotNative(col("va"), col("vb")) /
-          (sqrt(Similarity.dotNative(col("va"), col("va"))) *
-            sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine"))
-    TopKPairs.perGroup(cosd, col("qid"), col("cosine"), col("nid"), 3)
+    // the seed set itself is restricted to history
+    val cents = Similarity.stridedSeeds(hist, "vec_id",
+        Similarity.seedStride(Tables.rowCount(s, d, "embeddings"), 16), 16)
+      .select(col("vec_id").as("cid"),
+        transform(col("embedding"), x => x.cast(DoubleType)).as("cv"))
+    Similarity.ivfTopKWith(hist, emb.filter(pmod(col("vec_id"), lit(40)) === 7),
+        "vec_id", "embedding", k = 3, nProbe = 4, cents)
       .toDF("qid", "nid", "cosine", "rnk")
   }
 
@@ -950,14 +805,13 @@ object LlmEmbed {
        |WHERE rnk <= 3""".stripMargin) { (s, d) =>
     val emb = Tables.spread(Tables.embeddings(s, d))
     val vecs = vecsOf(s, d)
-    val stride = math.max(1L, Tables.rowCount(s, d, "embeddings") / 16)
     // centroid IDS from the unfiltered table (the oracle ranks raw
     // vec_ids); their arrays are k×dim driver state, and the coarse d²
     // is 16 IN-ROW decimal folds — the el-join form inflated the corpus
     // dim×16 and re-aggregated 2M element products
-    val centIds = Tables.embeddings(s, d).select(col("vec_id"))
-      .filter(pmod(col("vec_id"), lit(stride)) === 0)
-      .orderBy(col("vec_id")).limit(16)
+    val centIds = Similarity.stridedSeeds(Tables.embeddings(s, d), "vec_id",
+        Similarity.seedStride(Tables.rowCount(s, d, "embeddings"), 16), 16)
+      .select(col("vec_id"))
     val centArrs = vecs.join(broadcast(centIds), Seq("vec_id"))
       .orderBy(col("vec_id")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -975,8 +829,8 @@ object LlmEmbed {
         .select(col("vec_id"), col("e.cid").as("cid"), col("e.d2").as("d2"))
     // nearest-centroid argmin / top-4 as map-side-partial aggregates,
     // not a row_number window over the n×k distance rows (see
-    // semAssign). min_by's struct order (lowest d2, then lowest cid)
-    // replays the window's (d2 asc, cid asc); the probe ranks -d2, so
+    // Similarity.nearestCentroid). min_by's struct order (lowest d2,
+    // then lowest cid) replays the window's (d2 asc, cid asc); the probe ranks -d2, so
     // distance ascending — d2 is a sum of squares, so no NaN enters
     // either ordering.
     val lists = cd.groupBy(col("vec_id"))
@@ -1205,7 +1059,6 @@ object LlmEmbed {
 
   private def semAssign(s: org.apache.spark.sql.SparkSession, d: String) =
     cachedFrame(s, d, "semdedup-assign") {
-      import s.implicits._
       val embD = Tables.embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
@@ -1225,58 +1078,19 @@ object LlmEmbed {
       require(effK >= 1,
         s"embedding dim $dim needs ${dim.toLong * 8} B per centroid — over " +
           s"the $CentroidBudgetBytes B broadcast budget even at k = 1")
-      val seedIds = Tables.embeddings(s, d).select(col("vec_id"))
-        .filter(pmod(col("vec_id"), lit(SemStride)) === 0)
-        .orderBy(col("vec_id")).limit(effK)
-        .collect().map(_.getLong(0)).sorted.zipWithIndex
-        .map { case (v, c) => (v, c.toLong) }
-      var cents: Map[Long, IndexedSeq[Double]] = embD
-        .join(broadcast(seedIds.toSeq.toDF("vec_id", "cid")), Seq("vec_id"))
-        .select(col("cid"), col("v"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq).toMap
-      def centsDf = cents.toSeq.sortBy(_._1).toDF("cid", "cv")
-        .withColumn("nc", Similarity.dotNative(col("cv"), col("cv")))
-      val embN = embD
-        .withColumn("n2", Similarity.dotNative(col("v"), col("v")))
-      // Per-vector argmax WITHOUT a window: the row_number formulation
-      // exchanged all n×k cross rows — each dragging the dim-double
-      // vector — keyed on vec_id before any reduction; at the SemMaxK
-      // cap that is a 65 536× corpus shuffle. Here the vector is
-      // projected AWAY before a map-side-partial `max_by` (the
-      // StreamSemDedup.applyBatch assignment shape), so n rows of
-      // (vec_id, cid) cross the exchange and v/n2 join back batch-sized.
-      // Tie rule (max cs, then LOWER cid) matches the old window's
-      // (cs desc, cid asc) exactly — cid is unique per candidate row, so
-      // the struct order is total. NaN parity: a zero-norm vector's
-      // cosines are all NaN, which both the window's desc sort and
-      // max_by's struct ordering treat as GREATEST — both shapes then
-      // fall to the cid tie-break and pick the lowest cid, and DuckDB's
-      // row_number oracle orders NaN the same way (last ORDER BY DESC),
-      // so batch, stream-witness, and oracle stay hash-aligned without a
-      // zero-norm filter (the streaming maintainer filters n2 > 0 only
-      // because a directionless vector must not become a dedup WITNESS
-      // there; the batch contract is assign-everything).
-      def assignIds = argmaxCid(embN
-        .crossJoin(broadcast(centsDf))
-        .select(col("vec_id"), col("cid"),
-          round(Similarity.dotNative(col("v"), col("cv")) /
-            (sqrt(col("n2")) * sqrt(col("nc"))), 12).as("cs")))
-      for (_ <- 0 until 2) {
-        val means = embD.join(assignIds, Seq("vec_id"))
-          .select(col("cid"), posexplode(col("v")))
-          .groupBy(col("cid"), (col("pos") + 1).cast(LongType).as("i"))
-          .agg((sum(col("col").cast(dec)).cast(DoubleType) /
-            count(lit(1)).cast(DoubleType)).as("mx"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-        cents = cents.map { case (cid, prev) =>
-          cid -> prev.indices.map(j => means.getOrElse((cid, j + 1L), prev(j)))
-        }
-      }
-      // n2 rides along: every pair consumer divides by sqrt(na)·sqrt(nb),
-      // and recomputing the self-dots inside the quadratic pair join
-      // would triple its flops
-      assignIds.join(embN, Seq("vec_id"))
+      val cents = Similarity.kmeans(embD,
+        Similarity.stridedSeeds(embD, "vec_id", SemStride, effK), 2)
+      // No zero-norm filter: a zero-norm vector's cosines are all NaN,
+      // which the argmax ranks greatest, so it lands on the lowest cid —
+      // as under the oracle's row_number (NaN last in ORDER BY DESC).
+      // The streaming maintainer filters n2 > 0 only because a
+      // directionless vector must not become a dedup WITNESS there; the
+      // batch contract is assign-everything. n2 rides along: every pair
+      // consumer divides by sqrt(na)·sqrt(nb), and recomputing the
+      // self-dots inside the quadratic pair join would triple its flops.
+      Similarity.nearestCentroid(Similarity.centroidScores(embD, cents))
+        .join(embD.withColumn("n2", Similarity.dotNative(col("v"), col("v"))),
+          Seq("vec_id"))
         .select(col("vec_id"), col("cid"), col("v"), col("n2"))
     }
 
@@ -1295,17 +1109,16 @@ object LlmEmbed {
         col("v").as("xb"), col("n2").as("nb"))
       a.join(b, Seq("cid")).filter(col("va") < col("vb"))
         .select(col("cid"), col("va"), col("vb"),
-          round(Similarity.dotNative(col("xa"), col("xb")) /
-            (sqrt(col("na")) * sqrt(col("nb"))), 12).as("c"))
+          Similarity.cosine12(col("xa"), col("xb"), col("na"), col("nb")).as("c"))
     }
 
-  /** One Lloyd round as oracle CTEs — textually the same block the
-    * `embed_ann_ivf_kmeans_portable` oracle replays (assignment cosines
-    * via `list_dot_product`, DECIMAL(38,18) element means, empty-cluster
-    * carry-forward), lifted so the stride-seeded SemDeDup oracle can
-    * reuse it.
+  /** One Lloyd round as oracle CTEs, c{i} -> n/s/a/m/ce{i} -> c{i+1}:
+    * the [[Similarity.kmeans]] round replayed — `list_dot_product`
+    * cosines rounded to 12 digits, row_number argmax (cs DESC, cid),
+    * DECIMAL(38,18) element means, empty-cluster carry-forward. Shared
+    * by the k-means IVF and SemDeDup oracles.
     */
-  private def semIterCte(i: Int): String =
+  private def lloydRoundCte(i: Int): String =
     s"""n$i AS (SELECT cid, CAST(list_dot_product(cv, cv) AS DOUBLE) AS nc FROM c$i),
        |s$i AS (SELECT emb.vec_id, c.cid,
        |               round(CAST(list_dot_product(emb.v, c.cv) AS DOUBLE)
@@ -1337,8 +1150,8 @@ object LlmEmbed {
        |                ORDER BY vec_id
        |                LIMIT (SELECT CAST(least($SemMaxK, $CentroidBudgetBytes // (8 * coalesce(max(len(v)), 1))) AS BIGINT) FROM emb))),
        |c0 AS (SELECT cid, v AS cv FROM emb JOIN seeds USING (vec_id)),
-       |${semIterCte(0)},
-       |${semIterCte(1)},
+       |${lloydRoundCte(0)},
+       |${lloydRoundCte(1)},
        |ncf AS (SELECT cid, CAST(list_dot_product(cv, cv) AS DOUBLE) AS nc FROM c2),
        |scf AS (SELECT emb.vec_id, c.cid,
        |               round(CAST(list_dot_product(emb.v, c.cv) AS DOUBLE)
@@ -1440,9 +1253,7 @@ object LlmEmbed {
     embD.filter(col("vec_id") >= 20)
       .crossJoin(broadcast(bench))
       .select(col("vec_id"),
-        round(Similarity.dotNative(col("v"), col("bv")) /
-          (sqrt(Similarity.dotNative(col("v"), col("v"))) *
-            sqrt(Similarity.dotNative(col("bv"), col("bv")))), 12).as("c"))
+        Similarity.cosine12(col("v"), col("bv")).as("c"))
       .groupBy(col("vec_id"))
       .agg(max(col("c")).as("max_bench_cosine"))
   }

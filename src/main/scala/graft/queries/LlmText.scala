@@ -1,7 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Cleaning.lcount
 import graft.functions.TextAnalysis
@@ -1701,24 +1702,39 @@ object LlmText {
   private val bm25 = {
     val terms = bm25Terms
     Q("text_bm25_search", bm25OracleSql) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val toks = Tables.spread(docs)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+      // posexplode_outer keeps one (pos, tok) = null row for a doc whose
+      // text is null, so each doc row has exactly one row at pos null or
+      // 0, and n_docs is counted on the token chain
+      val toks = Tables.spread(Tables.documents(s, d))
+        .select(col("doc_id"), posexplode_outer(split(col("text"), " ")))
+        .select(col("doc_id"), col("pos"), col("col").as("tok"))
       val tf = toks.groupBy(col("doc_id")).agg(
-        lcount().as("dl"),
-        terms.zipWithIndex.map { case (t, i) =>
-          lcount(when(col("tok") === t, lit(1))).as(s"tf${i + 1}")
-        }: _*)
-      val dfRow = toks.agg(
-        countDistinct(when(col("tok") === terms.head, col("doc_id")))
-          .cast(LongType).as("df1"),
-        terms.tail.zipWithIndex.map { case (t, i) =>
-          countDistinct(when(col("tok") === t, col("doc_id")))
-            .cast(LongType).as(s"df${i + 2}")
-        }: _*)
-      val nRow = docs.select(lcount().as("n_docs"))
-      val sRow = toks.select(lcount().as("total_toks"))
-      bm25Rank(tf, dfRow, nRow, sRow)
+        lcount(col("tok")).as("dl"),
+        lcount(when(col("pos").isNull || col("pos") === 0, lit(1))).as("nd") +:
+          terms.zipWithIndex.map { case (t, i) =>
+            lcount(when(col("tok") === t, lit(1))).as(s"tf${i + 1}")
+          }: _*)
+      // The corpus statistics are one aggregate over the per-doc tf frame,
+      // fetched as one row: df_i = docs with tf_i > 0 (the oracle's
+      // count(DISTINCT CASE WHEN tok = t THEN doc_id END), which skips a
+      // null doc_id). Scalar frames planned beside the ranking would run
+      // as independent stage chains whose completion order numbers the
+      // codegen stages under adaptive execution, so each execution could
+      // generate new classes; several countDistincts would also plan an
+      // Expand whose projection order changes on every execution.
+      val dfCols = terms.indices.map(i => s"df${i + 1}")
+      val st = tf.agg(
+        coalesce(sum(col("nd")), lit(0L)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("total_toks") +:
+          dfCols.zipWithIndex.map { case (c, i) =>
+            lcount(when(col("doc_id").isNotNull && col(s"tf${i + 1}") > 0, lit(1)))
+              .as(c)
+          }: _*).head()
+      // local 1-row frames: their values stay data, never plan literals
+      def row(cs: Seq[String]) = s.createDataFrame(
+        java.util.Collections.singletonList(Row.fromSeq(cs.map(st.getAs[Long]))),
+        StructType(cs.map(StructField(_, LongType, nullable = false))))
+      bm25Rank(tf, row(dfCols), row(Seq("n_docs")), row(Seq("total_toks")))
     }
   }
 

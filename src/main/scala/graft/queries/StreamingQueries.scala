@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.functions.Cleaning.{dsum, lcount}
-import graft.operators.{IncrementalAgg, Sketches}
+import graft.operators.{IncrementalAgg, Similarity, Sketches}
 import graft.sources.Tables
 import graft.streaming.{EventStream, StreamAnn, StreamAsOf, StreamBm25, StreamCdc, StreamDedup, StreamFunnel, StreamItemCf, StreamMarkov, StreamSemDedup, StreamSketch, StreamSkyline, ViewMaintain}
 import graft.queries.Q.{C, DS}
@@ -253,9 +253,8 @@ object StreamingQueries {
     val store = Q.foldedStore(s, d, "c17") { st =>
       val hist = embD.filter(pmod(col("vec_id"), lit(40)) =!= 7)
       val newb = embD.filter(pmod(col("vec_id"), lit(40)) === 7)
-      val stride = math.max(1L, Tables.rowCount(s, d, "embeddings") / 16)
-      val cents = hist.filter(pmod(col("vec_id"), lit(stride)) === 0)
-        .orderBy(col("vec_id")).limit(16)
+      val cents = Similarity.stridedSeeds(hist, "vec_id",
+          Similarity.seedStride(Tables.rowCount(s, d, "embeddings"), 16), 16)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val fold = StreamAnn.applyBatch(st, "lists", "nbrs", cents,
         probe = 4, k = 3) _
@@ -487,11 +486,10 @@ object StreamingQueries {
       // zero-norm seeds are excluded exactly as the maintainer excludes
       // zero-norm members (engine parity with the oracle's b CTE); the
       // 65536 cap bounds the broadcast frame at any corpus size
-      val cents = embD
-        .filter(pmod(col("vec_id"), lit(3)) === 0 &&
-          pmod(col("vec_id"), lit(125)) === 0)
-        .filter(graft.operators.Similarity.dotNative(col("v"), col("v")) > 0d)
-        .orderBy(col("vec_id")).limit(65536)
+      val cents = Similarity.stridedSeeds(embD
+          .filter(pmod(col("vec_id"), lit(3)) === 0)
+          .filter(Similarity.dotNative(col("v"), col("v")) > 0d),
+          "vec_id", 125, 65536)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val fold = StreamSemDedup.applyBatch(st, "members", cents, 0.35) _
       (0 to 2).foreach(i =>

@@ -43,23 +43,12 @@ object StreamAnn {
     require(probe >= 1, s"probe must be at least 1 (the home list), got $probe")
     val lastApplied = store.lastAppliedBatch(listTable)
     if (batchId > lastApplied) {
-      val cents = centroids
-        .withColumn("n2c", Similarity.dotNative(col("cv"), col("cv")))
-      val scored = batch
-        .withColumn("n2", Similarity.dotNative(col("v"), col("v")))
-        // zero-norm vectors have no cosine direction: their 0/0 = NaN
-        // similarity would sort ABOVE every real neighbor (Spark orders
-        // NaN greatest), so they are unindexable — dropped here, like
-        // null embeddings at the source reader
-        .filter(col("n2") > 0d)
-        .crossJoin(broadcast(cents))
-        // round(…, 12): the batch ANN family's engine-portability pin —
-        // assignment and ranking read the same 12-digit value in every
-        // engine that replays this fold (the per-element double dot fold
-        // is already reproducible; the rounding absorbs any tie wobble)
-        .select(col("vec_id"), col("cid"),
-          round(Similarity.dotNative(col("v"), col("cv")) /
-            (sqrt(col("n2")) * sqrt(col("n2c"))), 12).as("cs"))
+      // zero-norm vectors have no cosine direction: their 0/0 = NaN
+      // similarity would sort ABOVE every real neighbor (Spark orders
+      // NaN greatest), so they are unindexable — dropped here, like
+      // null embeddings at the source reader
+      val scored = Similarity.centroidScores(
+        batch.filter(Similarity.dotNative(col("v"), col("v")) > 0d), centroids)
       // each vector's `probe` nearest lists; rank 1 is its home list. A
       // null cs (a centroid with a null vector) ranks last, as it did
       // under the row_number window's DESC NULLS LAST: a rounded cosine
@@ -86,9 +75,7 @@ object StreamAnn {
         .join(hist, Seq("cid"))
         .join(batch.select(col("vec_id").as("qid"), col("v").as("va")), Seq("qid"))
         .select(col("qid"), col("nid"),
-          round(Similarity.dotNative(col("va"), col("vb")) /
-            (sqrt(Similarity.dotNative(col("va"), col("va"))) *
-              sqrt(Similarity.dotNative(col("vb"), col("vb")))), 12).as("cosine"))
+          Similarity.cosine12(col("va"), col("vb")).as("cosine"))
         .distinct() // a neighbor reachable via several probed lists scores once
       val neighbors = TopKPairs.perGroup(cands, col("qid"), col("cosine"),
           col("nid"), k)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Pin, Similarity}
@@ -57,28 +56,16 @@ object StreamSemDedup {
       tau: Double)(batch: DataFrame, batchId: Long): Unit = {
     val lastApplied = store.lastAppliedBatch(table)
     if (batchId > lastApplied) {
-      val cents = centroids
-        .withColumn("n2c", Similarity.dotNative(col("cv"), col("cv")))
-      // home assignment: one map-side projection against the broadcast
+      // home assignment: the quantizer's argmax against the broadcast
       // centroid frame; zero-norm vectors have no cosine direction
       // (their NaN would sort above every real centroid) — dropped, as
-      // at the ANN maintainer's door. The vector is projected AWAY
-      // before the per-vector argmax (k rows per vector would otherwise
-      // drag dim doubles each through the aggregate's exchange — k grows
-      // with the corpus here) and joined back batch-sized after.
+      // at the ANN maintainer's door. The vector is joined back
+      // batch-sized after the argmax.
       val keep = batch
         .withColumn("n2", Similarity.dotNative(col("v"), col("v")))
         .filter(col("n2") > 0d)
-      val homeIds = keep
-        .crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("cid"),
-          round(Similarity.dotNative(col("v"), col("cv")) /
-            (sqrt(col("n2")) * sqrt(col("n2c"))), 12).as("cs"))
-        // argmax with the family's tie rule (max cs, then LOWER cid):
-        // cid is unique per candidate row, so the struct order is total
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cid"), struct(col("cs"), (-col("cid")).as("nc")))
-          .as("cid"))
+      val homeIds = Similarity.nearestCentroid(
+        Similarity.centroidScores(keep, centroids))
       // consumed 4× below (witness joins + the write)
       val home = Pin(homeIds
         .join(keep.select(col("vec_id"), col("v"), col("n2")), Seq("vec_id"))
@@ -106,15 +93,13 @@ object StreamSemDedup {
       // recomputing the self-dots inside the quadratic pair joins would
       // triple their flops.
       val histDup = home.join(hist, Seq("cid"))
-        .filter(round(Similarity.dotNative(col("v"), col("vu")) /
-          (sqrt(col("n2")) * sqrt(col("nu"))), 12) >= tau)
+        .filter(Similarity.cosine12(col("v"), col("vu"), col("n2"), col("nu")) >= tau)
         .select(col("vec_id"))
       val a = home.select(col("cid"), col("vec_id").as("ua"),
         col("v").as("xa"), col("n2").as("na"))
       val batchDup = home.join(a, Seq("cid"))
         .filter(col("ua") < col("vec_id") &&
-          round(Similarity.dotNative(col("xa"), col("v")) /
-            (sqrt(col("na")) * sqrt(col("n2"))), 12) >= tau)
+          Similarity.cosine12(col("xa"), col("v"), col("na"), col("n2")) >= tau)
         .select(col("vec_id"))
       val dropped = histDup.unionByName(batchDup).distinct()
         .withColumn("d", lit(0L))

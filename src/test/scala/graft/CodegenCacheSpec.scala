@@ -12,11 +12,6 @@ import graft.plans.GraftExtensions
   * Spark's default 100 entries. Pass 1 also builds the memoized frames
   * and BuildCache artifacts, whose plans are not the steady state's, so
   * only pass 3 is held to zero.
-  *
-  * `text_bm25_search` is left out: its document frequencies are several
-  * `count(DISTINCT …)`s, which Spark rewrites to an `Expand` whose
-  * projection order follows a hash of the expressions' ids, so every
-  * execution generates differently ordered code.
   */
 class CodegenCacheSpec extends SparkSpec {
 
@@ -24,7 +19,7 @@ class CodegenCacheSpec extends SparkSpec {
     "j7_star_year_region", "scd2_point_in_time", "s5_pipeline_view",
     "c6_incremental_view", "q8_fact_null_fk_reinsert", "m13_dm_fact_rekey",
     "embed_brute_topk", "embed_coreset", "dedup_minhash_pairs",
-    "events_pagerank")
+    "events_pagerank", "text_bm25_search")
 
   /** Classes compiled (JVM-wide) by each query of the mix, run once,
     * construction included, through a noop write.

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.plans.TopKPairs
 
 /** Embedding similarity search: exact brute-force ranking and LSH-bucketed
   * ANN recall. Planes are md5-derived, the corpus is fixed — deterministic.
@@ -59,9 +60,13 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("k-means centroids converge to the cluster structure; IVF recall holds") {
-    val cents = Similarity.kmeansCentroids(vectors, "vec_id", "embedding",
-      k = 4, iters = 3)
-    assert(cents.size == 4)
+    val vecs = vectors.select(col("vec_id"),
+      transform(col("embedding"), _.cast("double")).as("v"))
+    val seeds = Similarity.stridedSeeds(vecs, "vec_id",
+      Similarity.seedStride(vecs.count(), 4), 4)
+    val cents = Similarity.kmeans(vecs, seeds, iters = 3)
+      .orderBy("cid").as[(Long, Seq[Double])].collect()
+    assert(cents.map(_._1).toSeq == Seq(0L, 1L, 2L, 3L))
     // after Lloyd iterations each centroid should live in exactly one
     // one-hot block: its max block mass dominates
     val blockPurity = cents.map { case (_, v) =>
@@ -81,30 +86,66 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.8, s"k-means IVF recall $recall with a single probe")
   }
 
+  /** A query's (qid, nid, rnk) rows, sorted. */
+  private def ranked(name: String): Seq[(Long, Long, Long)] =
+    SparkEntry.queries(name)(spark, sfDir)
+      .select("qid", "nid", "rnk").as[(Long, Long, Long)].collect().toSeq.sorted
+
   test("portable IVF query returns the engine-native ivfTopK neighbor sets") {
-    // Same strided quantizer, same nProbe/k — the oracle-checked portable
-    // twin and the engine-native path must surface the same neighbors
-    // (scores differ only in last-ULP noise below the round-12 cutoff).
-    val native = SparkEntry.queries("embed_ann_ivf")(spark, sfDir)
-      .select("qid", "nid").as[(Long, Long)].collect().toSet
-    val portable = SparkEntry.queries("embed_ann_ivf_portable")(spark, sfDir)
-      .select("qid", "nid").as[(Long, Long)].collect().toSet
+    // Same strided quantizer, same nProbe/k, both ranked by a 12-digit
+    // cosine — the decimal-dot portable twin and the native-dot path must
+    // return the same rows, rank for rank.
+    val native = ranked("embed_ann_ivf")
+    val portable = ranked("embed_ann_ivf_portable")
+    assert(native.nonEmpty)
     assert(portable == native,
-      s"portable-only: ${portable -- native}; native-only: ${native -- portable}")
+      s"portable-only: ${portable.diff(native)}; native-only: ${native.diff(portable)}")
   }
 
   test("portable k-means IVF query returns the engine-native ivfTopKKmeans neighbor sets") {
-    // Same seeds, same decimal-exact Lloyd means, same nProbe/k — the
-    // oracle-checked portable twin and the engine-native path must
-    // surface the same neighbors (assignment arithmetic differs only in
-    // last-ULP noise far below the round-12 cutoff and the cluster
-    // separation of the corpus).
-    val native = SparkEntry.queries("embed_ann_ivf_kmeans")(spark, sfDir)
-      .select("qid", "nid").as[(Long, Long)].collect().toSet
-    val portable = SparkEntry.queries("embed_ann_ivf_kmeans_portable")(spark, sfDir)
-      .select("qid", "nid").as[(Long, Long)].collect().toSet
+    val native = ranked("embed_ann_ivf_kmeans")
+    val portable = ranked("embed_ann_ivf_kmeans_portable")
+    assert(native.nonEmpty)
     assert(portable == native,
-      s"portable-only: ${portable -- native}; native-only: ${native -- portable}")
+      s"portable-only: ${portable.diff(native)}; native-only: ${native.diff(portable)}")
+  }
+
+  test("the quantizer's argmax equals perGroup rank 1 under ties, NaN and signed zeros") {
+    val nan = Double.NaN
+    val scores = Seq(
+      (1L, 5L, 0.9), (1L, 2L, 0.9), (1L, 1L, 0.1), // tie: lower cid
+      (2L, 0L, 1.0), (2L, 4L, nan), // NaN ranks greatest
+      (3L, 3L, 0.0), (3L, 1L, -0.0), (3L, 2L, -0.5), // 0.0 equals -0.0
+      (4L, 7L, nan), (4L, 6L, nan),
+      (5L, 9L, 0.0), (5L, 0L, -0.0),
+      (6L, 3L, -0.2), (6L, 8L, -0.1)
+    ).toDF("vec_id", "cid", "cs")
+    val argmax = Similarity.nearestCentroid(scores)
+      .as[(Long, Long)].collect().sorted.toSeq
+    val top1 = TopKPairs.perGroup(scores, col("vec_id"), col("cs"), col("cid"), 1)
+      .select(col("vec_id"), col("id")).as[(Long, Long)].collect().sorted.toSeq
+    assert(argmax == Seq(1L -> 2L, 2L -> 4L, 3L -> 1L, 4L -> 6L, 5L -> 0L, 6L -> 8L))
+    assert(argmax == top1)
+  }
+
+  test("a k-means near-tie below the 12th digit resolves to the lower cid") {
+    // vector 2's unrounded cosines to seed 0 and seed 1 differ by
+    // ~7e-14, seed 1 ahead; the 12-digit cosines are equal, so it joins
+    // cid 0 and one Lloyd round leaves centroid 1 at seed 1.
+    val eps = 1e-13
+    val vecs = Seq((0L, Seq(1.0, 0.0, 0.0)), (1L, Seq(0.0, 1.0, 0.0)),
+      (2L, Seq(1.0, 1.0 + eps, 0.0))).toDF("vec_id", "v")
+    val n = math.sqrt(1.0 + (1.0 + eps) * (1.0 + eps))
+    assert((1.0 + eps) / n > 1.0 / n && (1.0 + eps) / n - 1.0 / n < 1e-12)
+    val cents = Similarity.kmeans(vecs,
+        Similarity.stridedSeeds(vecs, "vec_id", 1, 2), iters = 1)
+      .orderBy("cid").as[(Long, Seq[Double])].collect()
+    assert(cents(1)._2 == Seq(0.0, 1.0, 0.0), s"centroid 1 moved: ${cents(1)}")
+    assert(cents(0)._2(1) > 0.4, s"centroid 0 did not take vector 2: ${cents(0)}")
+    assert(Similarity.nearestCentroid(Similarity.centroidScores(
+        vecs.filter(col("vec_id") === 2),
+        vecs.filter(col("vec_id") < 2).toDF("cid", "cv")))
+      .as[(Long, Long)].collect().toSeq == Seq(2L -> 0L))
   }
 
   test("native md5-plane LSH query returns the portable twin's neighbor sets") {

@@ -384,8 +384,8 @@ object StreamingQueries {
     * the corpus arrives in two batches (even doc ids, then odd) and
     * folds into a persisted postings store (doc, token, tf) plus a
     * one-row-per-doc length store — append-only (postings are
-    * value-derived, doc ids unique), two O(batch) partitions per fold,
-    * the length partition last as the applied marker. The readout runs
+    * value-derived, doc ids unique), two O(batch) partitions per fold
+    * under one committed marker. The readout runs
     * the fixed [[LlmText.bm25Terms]] query against the MAINTAINED index:
     * term-pruned postings read (predicate pushdown on the token column),
     * corpus statistics aggregated from the stores, and the ranking tail

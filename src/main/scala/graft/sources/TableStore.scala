@@ -405,50 +405,11 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   private def parkDir(table: String): Path = Paths.get(s"$root/.old_part/$table")
 
-  /** Highest applied batch id recorded in `markerCol` of `table`, or −1
-    * when the table is absent/empty — the replay guard every streaming
-    * fold reads before touching a batch (at-least-once micro-batch
-    * delivery, [[graft.streaming.Maintain]], makes this check the
-    * idempotence boundary). [[exists]] runs the recovery sweep first, so
-    * a crashed fold's parked partition can't hide the marker.
-    */
-  def lastAppliedBatch(table: String, markerCol: String = "__applied"): Long = {
-    import org.apache.spark.sql.functions.{col, max}
-    if (!exists(table)) -1L
-    else metaPartitionMax(table, markerCol).getOrElse {
-      val r = read(table).agg(max(col(markerCol).cast("long"))).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
-  }
-
-  /** Max long value of `partCol` read from the partition directory names
-    * only, so the streaming folds' per-batch watermark probe costs a
-    * directory listing, not a Spark job over the table. Returns None
-    * whenever the layout can't prove the answer (table not partitioned
-    * by `partCol`, a non-long partition value): callers fall back to the
-    * scan, never guess. Call only after [[exists]] has settled recovery:
-    * committed partitions exist exactly as live `partCol=v/` dirs (parked
-    * dirs are restored first, and a partition dir is only ever published
-    * by a completed atomic move).
-    */
-  private def metaPartitionMax(table: String, partCol: String): Option[Long] = {
-    val ls = Files.list(Paths.get(path(table)))
-    val parts = try ls.toArray.map(_.asInstanceOf[Path]).toSeq
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$partCol="))
-      finally ls.close()
-    val vals = parts.map(p => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName(p.getFileName.toString.drop(partCol.length + 1)).toLongOption)
-    if (parts.isEmpty || vals.contains(None)) None else Some(vals.flatten.max)
-  }
-
   /** Driver-side scalar watermark, crash-safe without a Spark job: the
     * value lives in ONE small file published by atomic single-file move,
     * so a reader sees the old value or the new one, never a torn
-    * write. This is the streaming maintainers' applied-batch marker:
-    * committing it AFTER the batch's data writes keeps the replay rule
-    * ("re-fold anything above the marker") intact at the cost of a file
-    * write, where a 1-row marker TABLE paid a Spark write plus a Spark
-    * read per fold.
+    * write. This is the streaming folds' committed-batch marker, read
+    * and written only by [[graft.streaming.Maintain.once]].
     */
   def putMarker(name: String, value: Long): Unit = {
     val dir = Paths.get(s"$root/.markers")

@@ -25,11 +25,10 @@ import graft.sources.TableStore
   * Per fold: assign the batch's vectors to their nearest centroid
   * (map-side against the broadcast centroids), log each vector's top-k
   * cosine neighbors among history in its probed lists, append the
-  * neighbor rows as one `__batch` partition, then append the batch's
-  * list rows LAST — their `__applied` id is the applied marker, so
-  * at-least-once replay short-circuits, and a half-landed crash replays
-  * against the same pre-batch lists (`__applied < batchId` pruning, the
-  * [[StreamJoinView]] rule).
+  * neighbor rows as one `__batch` partition and the batch's list rows as
+  * one `__applied` partition, under [[Maintain.once]]: a replay of an
+  * applied batch is a no-op, and a half-landed crash replays against the
+  * same pre-batch lists (`__applied <= committed` pruning).
   */
 object StreamAnn {
 
@@ -41,8 +40,7 @@ object StreamAnn {
       neighborsTable: String, centroids: DataFrame, probe: Int, k: Int)(
       batch: DataFrame, batchId: Long): Unit = {
     require(probe >= 1, s"probe must be at least 1 (the home list), got $probe")
-    val lastApplied = store.lastAppliedBatch(listTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, listTable, batchId) { committed =>
       // zero-norm vectors have no cosine direction: their 0/0 = NaN
       // similarity would sort ABOVE every real neighbor (Spark orders
       // NaN greatest), so they are unindexable — dropped here, like
@@ -61,13 +59,9 @@ object StreamAnn {
       val probes = ranked.select(col("vec_id").as("qid"), col("id").as("cid"))
       val touched = probes.select(col("cid")).distinct()
         .collect().map(_.getLong(0)).toSeq
-      val hist =
-        if (!store.exists(listTable))
-          home.select(col("vec_id").as("nid"), col("cid"), col("v").as("vb")).limit(0)
-        else store.read(listTable)
-          .filter(col("cid").isInCollection(touched))
-          .filter(col("__applied").cast("long") < batchId)
-          .select(col("vec_id").as("nid"), col("cid"), col("v").as("vb"))
+      val hist = Maintain.history(store, listTable, committed, home)
+        .filter(col("cid").isInCollection(touched))
+        .select(col("vec_id").as("nid"), col("cid"), col("v").as("vb"))
       // Final ranking as TopKPairs.perGroup, not a row_number window:
       // per-qid candidates = the probed lists' rows, which grow with the
       // STORE (~history/k per list).

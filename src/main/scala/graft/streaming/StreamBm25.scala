@@ -15,9 +15,8 @@ import graft.sources.TableStore
   * the value alone and doc ids are unique across batches, so the index
   * is append-only — no merge, no re-ranking, no candidate generation.
   * Each micro-batch tokenizes ONLY its own documents and lands exactly
-  * two O(batch) partitions: postings FIRST, the length partition LAST as
-  * the applied marker (same replay contract as the dedup maintainers —
-  * a replayed batch replaces its own partitions, never doubles).
+  * two O(batch) partitions under [[Maintain.once]] — a replayed batch
+  * replaces its own partitions, never doubles.
   *
   * The length store carries one row per ingested doc — null-text docs
   * land dl = 0 (they can never match a term, but they count in n_docs
@@ -38,8 +37,7 @@ object StreamBm25 {
   def applyBatch(store: TableStore, postTable: String, dlTable: String,
       idCol: String, textCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(dlTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, dlTable, batchId) { _ =>
       val toks = batch
         .select(col(idCol).as("doc_id"),
           explode(split(col(textCol), " ")).as("tok"))
@@ -60,17 +58,16 @@ object StreamBm25 {
 
   /** The maintained index's statistics frames for a fixed term list —
     * (tf, dfRow, nRow, sRow) in the exact shapes the one-shot BM25
-    * ranking tail consumes. A crashed fold's orphaned postings partition
-    * (postings commit before the marker) is excluded by the applied
-    * watermark.
+    * ranking tail consumes. Partitions a crashed fold landed before its
+    * marker commit are excluded by the committed batch id.
     */
   def searchFrames(store: TableStore, postTable: String, dlTable: String,
       terms: Seq[String]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val applied = store.lastAppliedBatch(dlTable)
-    val posts = store.read(postTable)
-      .filter(col("__applied") <= applied).drop("__applied")
-      .filter(col("tok").isin(terms: _*))
-    val dl = store.read(dlTable).drop("__applied")
+    val applied = Maintain.committed(store, dlTable)
+    def committed(table: String) =
+      store.read(table).filter(col("__applied") <= applied).drop("__applied")
+    val posts = committed(postTable).filter(col("tok").isin(terms: _*))
+    val dl = committed(dlTable)
     val tf = posts.groupBy(col("doc_id")).agg(
       coalesce(sum(when(col("tok") === terms.head, col("tf"))), lit(0L))
         .cast(LongType).as("tf1"),

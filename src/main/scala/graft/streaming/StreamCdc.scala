@@ -31,16 +31,13 @@ import graft.sources.TableStore
   * table. The un-touched buckets are untouched bytes, and the state
   * stays a plain partitioned table every batch query can read.
   *
-  * Replay safety: [[Maintain]] is at-least-once, and per-bucket
-  * replacement is NOT atomic across buckets, so the applied-batch
-  * watermark lives in its own scalar marker committed LAST
-  * ([[TableStore.putMarker]] — one file, atomic single-file move). A crash anywhere before the marker — half the
-  * buckets swapped, or a bucket parked mid-swap
-  * (the store's recovery sweep restores it before the next fold
-  * reads) — leaves the marker behind, the batch replays, and the fold
-  * is idempotent: re-merging rows the state already absorbed picks the
-  * same winners ([[Cdc.latestRows]] is a max, and maxes are
-  * idempotent).
+  * Replay safety: the fold runs under [[Maintain.once]], and per-bucket
+  * replacement is NOT atomic across buckets. A crash anywhere before the
+  * marker commit — half the buckets swapped, or a bucket parked mid-swap
+  * (the store's recovery sweep restores it before the next fold reads) —
+  * replays the batch, and the fold is idempotent: re-merging rows the
+  * state already absorbed picks the same winners ([[Cdc.latestRows]] is
+  * a max, and maxes are idempotent).
   */
 object StreamCdc {
 
@@ -51,9 +48,7 @@ object StreamCdc {
   def applyBatch(store: TableStore, table: String, keys: Seq[String],
       seqCol: String, opCol: String, nBuckets: Int = 64)(
       batch: DataFrame, batchId: Long): Unit = {
-    val marker = s"${table}__batch"
-    val lastApplied = store.getMarker(marker).getOrElse(-1L)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       val bucketOf =
         pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
       val collapsed = Cdc.latestRows(batch, keys, seqCol, opCol)
@@ -70,7 +65,6 @@ object StreamCdc {
           Cdc.latestRows(state.unionByName(collapsed), keys, seqCol, opCol)
         }
       store.replacePartitions(table, next, "__bucket")
-      store.putMarker(marker, batchId)
     }
   }
 

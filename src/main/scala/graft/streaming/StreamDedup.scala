@@ -46,28 +46,22 @@ object StreamDedup {
     * including new-vs-new duplication), and appends the batch's counts
     * as ONE store partition. Write volume per batch is O(batch); the
     * store is a per-batch count log whose per-span SUM is the corpus
-    * count (compact with [[graft.sources.TableStore.compact]] when the
-    * partition count grows).
+    * count.
     *
-    * Replay safety mirrors [[applyBatch]]: the span partition's presence
-    * is the applied marker (lands last), the dup log's partition lands
-    * first and replays by replacement, and folds recover parked
-    * partitions before reading.
+    * Replay safety mirrors [[applyBatch]]: the fold runs under
+    * [[Maintain.once]], both partitions replay by replacement, and folds
+    * recover parked partitions before reading.
     */
   def applySubstringBatch(store: TableStore, spanTable: String,
       dupTable: String, idCol: String, textCol: String, l: Int)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(spanTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, spanTable, batchId) { committed =>
       // window once; the occurrences feed the dup join AND the count store
       val newOcc = Pin(Dedup.spanOccurrences(batch, idCol, textCol, l))
-      val oldCounts =
-        if (!store.exists(spanTable))
-          Dedup.spanCountStoreFromOcc(newOcc).limit(0)
-        else
-          store.read(spanTable).drop("__applied")
-            .groupBy(col("span_h"))
-            .agg(sum(col("n_old")).cast("long").as("n_old"))
+      val oldCounts = Maintain.history(store, spanTable, committed,
+          Dedup.spanCountStoreFromOcc(newOcc))
+        .groupBy(col("span_h"))
+        .agg(sum(col("n_old")).cast("long").as("n_old"))
       val dups = Dedup.incrementalDuplicatedSpans(oldCounts, newOcc)
         .withColumn("__batch", lit(batchId))
       store.replacePartitions(dupTable, dups, "__batch")
@@ -100,26 +94,20 @@ object StreamDedup {
     * probe must be the ≥-sized side and a new doc can be smaller than
     * its historical partner — each direction broadcasts the batch-sized
     * side); verify exactly against the shingle store semi-joined to
-    * candidate docs. Writes are O(batch): the pair log lands FIRST
-    * (replay replaces, never doubles), the shingle partition next, and
-    * the prefix partition LAST as the applied marker — same replay
-    * contract as [[applyBatch]].
+    * candidate docs. Writes are O(batch), one partition per store, and
+    * a replay replaces them, never doubles — same replay contract as
+    * [[applyBatch]].
     */
   def applyPrefixBatch(store: TableStore, shTable: String,
       prefixTable: String, pairsTable: String, idCol: String,
       textCol: String, threshold: BigDecimal, shingleN: Int)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(prefixTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, prefixTable, batchId) { committed =>
       // shingle + rank ONCE per batch; both feed joins and the stores
       val newSh = Pin(Dedup.shingleSet(batch, idCol, textCol, shingleN))
       val newRanked = Pin(Dedup.prefixRankedStable(newSh, idCol, threshold))
-      val oldRanked =
-        if (store.exists(prefixTable)) store.read(prefixTable).drop("__applied")
-        else newRanked.limit(0)
-      val oldSh =
-        if (store.exists(shTable)) store.read(shTable).drop("__applied")
-        else newSh.limit(0)
+      val oldRanked = Maintain.history(store, prefixTable, committed, newRanked)
+      val oldSh = Maintain.history(store, shTable, committed, newSh)
       // every pair involving a batch doc, exactly once: old×old pairs
       // were emitted by earlier folds and never regenerate (direction 2's
       // probe side is history-only, so each candidate there pairs an old
@@ -168,9 +156,9 @@ object StreamDedup {
     * assumed unique across batches (same contract as the near-dup and
     * PPJoin maintainers); a re-ingested id needs the batch rebuild.
     *
-    * Writes are O(batch): pair log FIRST (replay replaces, never
-    * doubles), the new-value segment partition next, and the doc
-    * partition LAST as the applied marker. Hot-segment refinement is
+    * Writes are O(batch): the pair log, the new-value segment partition
+    * and the doc partition, each replaced (never doubled) by a replay
+    * under [[Maintain.once]]. Hot-segment refinement is
     * intentionally absent at stream grain — per-batch bucket population
     * is (batch probes) × (stored segments in bucket), linear in the
     * store per batch; adversarial constant-prefix corpora should use the
@@ -182,15 +170,10 @@ object StreamDedup {
       batch: DataFrame, batchId: Long): Unit = {
     val d = maxDist
     require(d >= 1, s"maxDist must be >= 1, got $d")
-    val lastApplied = store.lastAppliedBatch(strTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, strTable, batchId) { committed =>
       val newDocs = Pin(batch
         .select(col(idCol).as("__id"), col(strCol).as("__s")))
-      // the doc store is the marker table (written LAST), so it can
-      // never hold partitions beyond lastApplied — no crash filter here
-      val oldDocs =
-        if (store.exists(strTable)) store.read(strTable).drop("__applied")
-        else newDocs.limit(0)
+      val oldDocs = Maintain.history(store, strTable, committed, newDocs)
       val batchBase = Pin(Dedup.editBase(newDocs.select(col("__s"))))
       val oldVals = oldDocs.select(col("__s")).distinct()
       val oldBase = oldVals.select(col("__s"), length(col("__s")).as("__len"))
@@ -199,14 +182,7 @@ object StreamDedup {
       // value re-arriving under a new doc id appends nothing
       val freshBase = batchBase.join(oldVals, Seq("__s"), "left_anti")
       val newSegs = Pin(Dedup.editSegs(freshBase, d))
-      // a crashed attempt of THIS batch may have landed its segment
-      // partition (segments commit before the marker): exclude it — the
-      // refold recomputes and replaces that partition
-      val oldSegs =
-        if (store.exists(segTable))
-          store.read(segTable)
-            .filter(col("__applied") <= lastApplied).drop("__applied")
-        else newSegs.limit(0)
+      val oldSegs = Maintain.history(store, segTable, committed, newSegs)
       val allSegs = oldSegs.unionByName(newSegs)
       val longCand = Dedup.editProbes(batchBase, d).as("p")
         .join(allSegs.as("g"), col("p.kk") === col("g.kk"))
@@ -282,10 +258,10 @@ object StreamDedup {
     * One candidate direction suffices (simplest of the exact family):
     * the pigeonhole witness is a chunk BOTH sides carry verbatim, so
     * probe(batch) ⋈ chunks(history ∪ batch) covers every pair with a
-    * batch-side member. Writes are O(batch): pair log FIRST (replay
-    * replaces, never doubles), the one-row-per-doc signature partition
-    * LAST as the applied marker. Doc ids unique across batches (same
-    * contract as the other maintainers). Hot chunk buckets cost (batch
+    * batch-side member. Writes are O(batch): the pair log and the
+    * one-row-per-doc signature partition, each replaced (never doubled)
+    * by a replay under [[Maintain.once]]. Doc ids unique across batches
+    * (same contract as the other maintainers). Hot chunk buckets cost (batch
     * docs in bucket) × (stored docs in bucket) per batch — linear in
     * the store, the family's documented adversarial exposure.
     */
@@ -293,13 +269,10 @@ object StreamDedup {
       pairsTable: String, idCol: String, textCol: String, maxDist: Int)(
       batch: DataFrame, batchId: Long): Unit = {
     val d = maxDist
-    val lastApplied = store.lastAppliedBatch(sigTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, sigTable, batchId) { committed =>
       // only the batch is token-hashed; one row per doc
       val newSig = Pin(Dedup.simhashPortable(batch, idCol, textCol))
-      val oldSig =
-        if (store.exists(sigTable)) store.read(sigTable).drop("__applied")
-        else newSig.limit(0)
+      val oldSig = Maintain.history(store, sigTable, committed, newSig)
       val probe = Dedup.simhashChunks(newSig, idCol, d)
         .select(col("chunk"), col("chunk_val"),
           col("id").as("new_id"), col("h").as("h_new"))
@@ -339,16 +312,14 @@ object StreamDedup {
     * latest-batch delta row (`max_by(cluster, __batch)`), and docs in no
     * pair never appear, matching [[graft.operators.Dedup.dupClusters]].
     *
-    * Write order: the label delta FIRST (a replayed batch replaces it),
-    * the band partition LAST as the applied marker — same replay
-    * contract as [[applyBatch]].
+    * Replay: the fold runs under [[Maintain.once]] and both partitions
+    * replay by replacement — same replay contract as [[applyBatch]].
     */
   def applyClusterBatch(store: TableStore, bandTable: String,
       labelTable: String, idCol: String, textCol: String, numHashes: Int,
       rowsPerBand: Int, shingleN: Int)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(bandTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, bandTable, batchId) { committed =>
       val batchBands = Dedup.bandKeysFromWide(
         Dedup.minhashWide(
           batch.select(col(idCol),
@@ -356,18 +327,16 @@ object StreamDedup {
               .as("shingle")),
           idCol, numHashes),
         idCol, numHashes, rowsPerBand)
-      val oldBands =
-        if (store.exists(bandTable)) store.read(bandTable).drop("__applied")
-        else batchBands.limit(0)
+      val oldBands = Maintain.history(store, bandTable, committed, batchBands)
       val newBands = Pin(batchBands
         .join(oldBands, Seq(idCol, "band", "band_key"), "left_anti"))
       // current labeling = latest delta per doc; a crashed attempt of
-      // THIS batch may have landed its delta partition (deltas commit
-      // before the marker) — exclude it, the refold replaces it
+      // THIS batch may have landed its delta partition — exclude it, the
+      // refold replaces it
       val oldLabels =
         if (store.exists(labelTable))
           store.read(labelTable)
-            .filter(col("__batch") <= lastApplied)
+            .filter(col("__batch") <= committed)
             .groupBy(col(idCol))
             .agg(max_by(col("cluster"), col("__batch")).as("cluster"))
             .withColumnRenamed(idCol, "doc_id")
@@ -412,12 +381,11 @@ object StreamDedup {
     * lose band keys (and with them every future cross-batch pair against
     * those docs).
     *
-    * Replay safety ([[Maintain]] is at-least-once): the applied batch id
-    * IS the band partition, which lands LAST, so a replayed batch
-    * short-circuits on `batchId <= max(__applied)`; the pair log's
-    * partition lands FIRST and is idempotent by reconstruction — a
-    * crashed attempt of THIS batch id left at most a `__batch=<id>`
-    * partition that the replay replaces, never doubles.
+    * Replay safety: [[Maintain.once]] short-circuits a replayed batch,
+    * and a crashed attempt of THIS batch id left at most its own
+    * `__batch=<id>` and `__applied=<id>` partitions, which the refold
+    * does not read (history stops at the committed batch) and replaces,
+    * never doubles.
     *
     * Re-ingested documents: a doc id re-arriving in a later batch (same
     * or updated text) is folded by anti-joining its band keys against
@@ -432,8 +400,7 @@ object StreamDedup {
   def applyBatch(store: TableStore, bandTable: String, pairsTable: String,
       idCol: String, textCol: String, numHashes: Int, rowsPerBand: Int,
       shingleN: Int)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(bandTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, bandTable, batchId) { committed =>
       val batchBands = Dedup.bandKeysFromWide(
         Dedup.minhashWide(
           batch.select(col(idCol),
@@ -441,9 +408,7 @@ object StreamDedup {
               .as("shingle")),
           idCol, numHashes),
         idCol, numHashes, rowsPerBand)
-      val oldBands =
-        if (store.exists(bandTable)) store.read(bandTable).drop("__applied")
-        else batchBands.limit(0)
+      val oldBands = Maintain.history(store, bandTable, committed, batchBands)
       // shingle once; the deduped bands feed the join AND the store
       val newBands = Pin(batchBands
         .join(oldBands, Seq(idCol, "band", "band_key"), "left_anti"))

@@ -17,9 +17,8 @@ import graft.sources.TableStore
   * [[StreamSketch.applyDailyRegisters]]). So each micro-batch aggregates
   * ONLY its own rows to (user, stage, min ts) and appends them as one
   * `__applied`-keyed partition — O(batch's distinct user-stage pairs)
-  * writes, history never rewritten, compact with [[TableStore.compact]]
-  * as partitions accumulate — and [[mergedStageMins]]' per-key MIN over
-  * partitions IS the corpus first-touch table. The funnel readout
+  * writes, history never rewritten — and [[mergedStageMins]]' per-key
+  * MIN over partitions IS the corpus first-touch table. The funnel readout
   * (ordered-stage survivor counts) is a pure function of those minima,
   * so the maintained store answers the EXACT one-shot `events_funnel`
   * aggregate at any moment — the registered `c30_stream_funnel` readout
@@ -31,9 +30,8 @@ import graft.sources.TableStore
   * query's conditional-min formulation; an exists-ordered-subsequence
   * funnel is a different statistic and needs per-user event retention).
   *
-  * Replay safety ([[Maintain]] is at-least-once): the mins partition's
-  * `__applied` id is the applied marker and a replayed partition
-  * replaces itself ([[StreamDedup.applyBatch]] discipline).
+  * Replay safety: the fold runs under [[Maintain.once]], and a replayed
+  * partition replaces itself.
   */
 object StreamFunnel {
 
@@ -52,8 +50,7 @@ object StreamFunnel {
     */
   def applyStageMins(store: TableStore, table: String, userCol: String,
       typeCol: String, tsCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       store.replacePartitions(table,
         stageMins(batch, userCol, typeCol, tsCol)
           .withColumn("__applied", lit(batchId)),

@@ -22,11 +22,9 @@ import graft.sources.TableStore
   * top-k at any moment — `c35_stream_itemcf` certifies against VERBATIM
   * the one-shot oracle SQL.
   *
-  * Crash discipline ([[StreamDedup.applyBatch]]): the pair partition
-  * (the delta) lands FIRST, the item-count partition (the applied
-  * marker) lands LAST; refolds and readers filter the pair store to
-  * `__applied <= lastApplied`, so a crashed attempt's orphan pairs are
-  * excluded and replaced by the retry.
+  * Crash discipline ([[Maintain.once]]): readers filter both stores to
+  * `__applied <= committed`, so a crashed attempt's orphan partitions
+  * are excluded until the retry replaces them.
   */
 object StreamItemCf {
 
@@ -87,8 +85,7 @@ object StreamItemCf {
   def applyBatch(store: TableStore, pairTable: String, itemTable: String,
       basketCol: String, itemCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(itemTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, itemTable, batchId) { _ =>
       val inc = Pin(basketIncidence(batch, basketCol, itemCol))
       store.replacePartitions(pairTable,
         basketPairCounts(inc).withColumn("__applied", lit(batchId)),
@@ -100,19 +97,19 @@ object StreamItemCf {
   }
 
   /** Corpus pair counts from the store (orphan partitions of a crashed
-    * attempt excluded by the item-table marker).
+    * attempt excluded by the committed batch id).
     */
   def mergedPairCounts(store: TableStore, pairTable: String,
-      itemTable: String): DataFrame = {
-    val lastApplied = store.lastAppliedBatch(itemTable)
-    store.read(pairTable).filter(col("__applied") <= lastApplied)
+      itemTable: String): DataFrame =
+    store.read(pairTable)
+      .filter(col("__applied") <= Maintain.committed(store, itemTable))
       .groupBy(col("pa"), col("pb"))
       .agg(sum(col("n_ab")).cast(LongType).as("n_ab"))
-  }
 
   /** Corpus per-item basket counts from the store. */
   def mergedItemCounts(store: TableStore, itemTable: String): DataFrame =
     store.read(itemTable)
+      .filter(col("__applied") <= Maintain.committed(store, itemTable))
       .groupBy(col("item"))
       .agg(sum(col("n_item")).cast(LongType).as("n_item"))
 }

@@ -20,18 +20,13 @@ import graft.sources.TableStore
   * re-joining history against history. The side logs are hash-bucketed
   * on the join key inside each batch partition, so a fold's delta joins
   * read only the buckets the batch touches — O(touched-bucket state)
-  * per refresh, not O(all history); compact with [[TableStore.compact]]
-  * as batch partitions accumulate.
+  * per refresh, not O(all history).
   *
-  * Replay safety ([[Maintain]] is at-least-once) rests on ONE rule: the
-  * fold only ever reads side partitions with `__applied < batchId`. A
-  * crashed attempt may have appended this batch's side partitions
-  * already, but the replay's delta computation prunes them, so ΔV is
-  * reconstructed identically and its partition replacement is
-  * idempotent. The view partition lands LAST and is the applied marker;
-  * its presence implies the side partitions landed too. Run from a
-  * stream with [[Maintain]], whose checkpoint keeps the batch ids this
-  * rule compares durable.
+  * Replay safety: the fold runs under [[Maintain.once]] and only ever
+  * reads side partitions with `__applied <= committed`. A crashed attempt
+  * may have appended this batch's side partitions already, but the
+  * replay's delta computation prunes them, so ΔV is reconstructed
+  * identically and its partition replacement is idempotent.
   */
 object StreamJoinView {
 
@@ -51,8 +46,7 @@ object StreamJoinView {
   def applyBatch(store: TableStore, aTable: String, bTable: String,
       viewTable: String, sideCol: String, keys: Seq[String],
       nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(viewTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, viewTable, batchId) { committed =>
       val bucketOf =
         pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
       // ONE materialization of the batch (splits re-filter it in memory):
@@ -68,14 +62,13 @@ object StreamJoinView {
         if (!store.exists(table)) like.limit(0).drop("__bucket")
         else store.read(table)
           .filter(col("__bucket").isInCollection(touched))
-          .filter(col("__applied").cast("long") < batchId)
+          .filter(col("__applied") <= committed)
           .drop("__applied", "__bucket")
       val aOld = priorSide(aTable, aDelta)
       val bOld = priorSide(bTable, bDelta)
       val dv = IncrementalJoin.delta(
         aOld, aDelta.drop("__bucket"), bOld, bDelta.drop("__bucket"), keys)
-      // the side logs are independent tables — land them concurrently;
-      // the view partition (the applied marker) still lands strictly last
+      // the side logs are independent tables — land them concurrently
       sideBySide(
         () => store.replacePartitions(aTable,
           aDelta.withColumn("__applied", lit(batchId)), "__applied", Seq("__bucket")),
@@ -87,9 +80,9 @@ object StreamJoinView {
   }
 
   /** Run two independent store writes concurrently (different tables, so
-    * different tmp dirs and manifest streams); rethrows the first
-    * failure after both settle — a half-landed side pair is safe because
-    * the view partition, the fold's applied marker, never landed.
+    * different tmp dirs); rethrows the first failure after both settle —
+    * a half-landed side pair is safe because the fold's marker never
+    * committed.
     */
   private def sideBySide(a: () => Unit, b: () => Unit): Unit = {
     import scala.concurrent.{Await, Future}
@@ -100,62 +93,12 @@ object StreamJoinView {
     Await.result(fa, Duration.Inf)
   }
 
-  /** The per-batch weighted fold, run from a stream with [[Maintain]] —
-    * the CDC form: the tagged stream also carries an op column ('I' insert,
-    * 'D' delete), and the fold flows deletes through the join as −1
-    * weights ([[IncrementalJoin.weightedDelta]] — the streaming
-    * `c10_retract_join_view`): deleting a side row appends a −1 row to
-    * its log and the view delta retracts exactly the pairs that row once
-    * produced, the ΔA⋈ΔB cross term netting a double-sided delete to
-    * zero once. Readers collapse the view log with
-    * `IncrementalJoin.present(store.read(viewTable).drop("__applied"))`
-    * — the batch partition column must be dropped first or +1/−1 rows
-    * of the same pair land in different groups and never net.
-    * Same bucket pruning, same replay rule
-    * (only side partitions with `__applied < batchId` are read). The
-    * feed must be consistent (delete only what was inserted) — weights,
-    * like any counting IVM, track the feed's algebra rather than
-    * validate it.
-    */
-  def applyCdcBatch(store: TableStore, aTable: String, bTable: String,
-      viewTable: String, sideCol: String, opCol: String, keys: Seq[String],
-      nBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(viewTable)
-    if (batchId > lastApplied) {
-      val bucketOf =
-        pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
-      val pinned = Pin(batch
-        .withColumn("w", when(col(opCol) === "D", lit(-1)).otherwise(lit(1)))
-        .withColumn("__bucket", bucketOf))
-      val aDelta = split(pinned, sideCol, "a", keys, extra = Seq("w", "__bucket"))
-      val bDelta = split(pinned, sideCol, "b", keys, extra = Seq("w", "__bucket"))
-      lazy val touched = pinned.select(col("__bucket"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      def priorSide(table: String, like: DataFrame): DataFrame =
-        if (!store.exists(table)) like.limit(0).drop("__bucket")
-        else store.read(table)
-          .filter(col("__bucket").isInCollection(touched))
-          .filter(col("__applied").cast("long") < batchId)
-          .drop("__applied", "__bucket")
-      val dv = IncrementalJoin.weightedDelta(
-        priorSide(aTable, aDelta), aDelta.drop("__bucket"),
-        priorSide(bTable, bDelta), bDelta.drop("__bucket"), keys, "w")
-      sideBySide(
-        () => store.replacePartitions(aTable,
-          aDelta.withColumn("__applied", lit(batchId)), "__applied", Seq("__bucket")),
-        () => store.replacePartitions(bTable,
-          bDelta.withColumn("__applied", lit(batchId)), "__applied", Seq("__bucket")))
-      store.replacePartitions(viewTable,
-        dv.withColumn("__applied", lit(batchId)), "__applied")
-    }
-  }
-
   /** One side's rows of the tagged union, reprojected to its own
     * columns: the join keys plus every column that is non-null anywhere
     * on this side is kept; columns that are entirely the OTHER side's
     * (all-null here) are dropped by name convention — side columns are
     * prefixed `a_`/`b_` (keys unprefixed). `extra` names shared
-    * passthrough columns (e.g. the CDC weight).
+    * passthrough columns (the key bucket).
     */
   private def split(batch: DataFrame, sideCol: String, side: String,
       keys: Seq[String], extra: Seq[String] = Nil): DataFrame = {

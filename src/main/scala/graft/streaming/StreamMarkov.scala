@@ -39,11 +39,9 @@ import graft.sources.TableStore
   * anonymous walker (the stitch joins null-safe, matching the window's
   * null partition).
   *
-  * Crash discipline ([[StreamDedup.applyBatch]]): the counts partition
-  * (the delta) lands FIRST, the last-event partition (the applied
-  * marker) lands LAST; refolds read counts filtered to
-  * `__applied <= lastApplied`, so a crashed attempt's orphan counts are
-  * excluded and replaced by the retry.
+  * Crash discipline ([[Maintain.once]]): refolds and readers filter
+  * both stores to `__applied <= committed`, so a crashed attempt's
+  * orphan partitions are excluded until the retry replaces them.
   */
 object StreamMarkov {
 
@@ -55,19 +53,14 @@ object StreamMarkov {
   def applyBatch(store: TableStore, cntTable: String, lastTable: String,
       userCol: String, tsCol: String, idCol: String, kCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(lastTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, lastTable, batchId) { committed =>
       val ev = Pin(batch.select(col(userCol).as("u"), col(tsCol).as("t"),
         col(idCol).as("eid"), col(kCol).as("k")))
       val w = Window.partitionBy(col("u")).orderBy(col("t"), col("eid"))
       val internal = ev
         .select(lag(col("k"), 1).over(w).as("src"), col("k").as("dst"))
         .filter(col("src").isNotNull)
-      val prevLast =
-        if (store.exists(lastTable))
-          perUserLast(store.read(lastTable)
-            .filter(col("__applied") <= lastApplied))
-        else ev.limit(0).select(col("u"), col("k"))
+      val prevLast = perUserLast(Maintain.history(store, lastTable, committed, ev))
       val firsts = ev.groupBy(col("u"))
         .agg(min_by(col("k"), struct(col("t"), col("eid"))).as("kf"))
       val stitch = prevLast.as("p")
@@ -104,10 +97,9 @@ object StreamMarkov {
     * orphan partition — counts written, marker not — is excluded).
     */
   def mergedCounts(store: TableStore, cntTable: String,
-      lastTable: String): DataFrame = {
-    val lastApplied = store.lastAppliedBatch(lastTable)
-    store.read(cntTable).filter(col("__applied") <= lastApplied)
+      lastTable: String): DataFrame =
+    store.read(cntTable)
+      .filter(col("__applied") <= Maintain.committed(store, lastTable))
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("n")).cast(LongType).as("n"))
-  }
 }

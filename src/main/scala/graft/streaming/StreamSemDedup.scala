@@ -34,11 +34,9 @@ import graft.sources.TableStore
   * the maintained store equal a pure batch replay under any batching of
   * the same arrival order.
   *
-  * Replay safety: the batch's member rows land LAST (single store), so
-  * their `__applied` id doubles as the applied marker —
-  * [[TableStore.lastAppliedBatch]] short-circuits an at-least-once
-  * replay, and a half-landed crash re-folds against `__applied <
-  * batchId` state only (the [[StreamJoinView]] rule).
+  * Replay safety: [[Maintain.once]] short-circuits an at-least-once
+  * replay, and a half-landed crash re-folds against `__applied <=
+  * committed` state only.
   */
 object StreamSemDedup {
 
@@ -54,8 +52,7 @@ object StreamSemDedup {
     */
   def applyBatch(store: TableStore, table: String, centroids: DataFrame,
       tau: Double)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { committed =>
       // home assignment: the quantizer's argmax against the broadcast
       // centroid frame; zero-norm vectors have no cosine direction
       // (their NaN would sort above every real centroid) — dropped, as
@@ -77,17 +74,12 @@ object StreamSemDedup {
       // Scala % of a negative cid would probe a bucket that can't exist
       val touchedBuckets = touched.map(c => java.lang.Math.floorMod(c, CidBuckets))
         .distinct
-      val hist =
-        if (!store.exists(table))
-          home.select(col("vec_id").as("uid"), col("cid"),
-            col("v").as("vu"), col("n2").as("nu")).limit(0)
-        else store.read(table)
-          // directory prune on the bounded bucket, row-group prune on cid
-          .filter(col("__cbucket").isInCollection(touchedBuckets))
-          .filter(col("cid").isInCollection(touched))
-          .filter(col("__applied").cast("long") < batchId)
-          .select(col("vec_id").as("uid"), col("cid"),
-            col("v").as("vu"), col("n2").as("nu"))
+      val hist = Maintain.history(store, table, committed, home)
+        // directory prune on the bounded bucket, row-group prune on cid
+        .filter(col("__cbucket").isInCollection(touchedBuckets))
+        .filter(col("cid").isInCollection(touched))
+        .select(col("vec_id").as("uid"), col("cid"),
+          col("v").as("vu"), col("n2").as("nu"))
       // witnesses with precedence: any earlier-batch member in the same
       // cluster, or a lower-id vector of this batch. Norms ride along —
       // recomputing the self-dots inside the quadratic pair joins would

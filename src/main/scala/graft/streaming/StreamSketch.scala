@@ -61,15 +61,12 @@ object StreamSketch {
     * [[mergedDailyRegisters]] reads the per-(day, register) MAX over
     * partitions, which IS the corpus register (rho maxima are monotone
     * and order-independent, the HLL merge law). Write volume per batch is
-    * O(days-in-batch × m), history never rewritten; compact with
-    * [[TableStore.compact]] as partitions accumulate. Replay-safe the
-    * [[StreamDedup.applyBatch]] way: the register partition's `__applied`
-    * id is the applied marker, and a replayed partition replaces itself.
+    * O(days-in-batch × m), history never rewritten. Replay-safe under
+    * [[Maintain.once]]: a replayed partition replaces itself.
     */
   def applyDailyRegisters(store: TableStore, table: String, b: Int = 4)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       store.replacePartitions(table,
         dailyUserRegisters(batch, b).withColumn("__applied", lit(batchId)),
         "__applied")
@@ -100,8 +97,7 @@ object StreamSketch {
     * append them as one `__applied`-keyed partition of the increment log
     * — CMS is linear, so the per-(r, bucket) SUM over partitions IS the
     * corpus sketch, write volume O(depth×width) per batch, history never
-    * rewritten (compact with [[TableStore.compact]] as partitions
-    * accumulate). Candidates: the stored k survivors ∪ the batch's
+    * rewritten. Candidates: the stored k survivors ∪ the batch's
     * distinct keys, re-estimated against the FOLDED sketch, top k kept
     * (ties broken by key — deterministic). A key's estimate only grows,
     * and it is reconsidered at every arrival with its full-history
@@ -110,22 +106,18 @@ object StreamSketch {
     * guarantee (overestimate ≤ εN with prob 1−δ for width e/ε, depth
     * ln 1/δ).
     *
-    * Replay safety ([[Maintain]] is at-least-once): the sketch partition
-    * lands LAST and its `__applied` id is the applied marker; the
-    * candidate table is overwritten FIRST and is idempotent by
-    * reconstruction (deterministic from the pre-fold sketch + batch).
+    * Replay safety ([[Maintain.once]]): the refold reads the sketch up to
+    * the committed batch id only, and the candidate table is idempotent
+    * by reconstruction (deterministic from the pre-fold sketch + batch).
     */
   def applyHeavyHitters(store: TableStore, cmsTable: String, topTable: String,
       keyCol: String, k: Int, depth: Int, width: Int)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(cmsTable)
-    if (batchId > lastApplied) {
+    Maintain.once(store, cmsTable, batchId) { committed =>
       val batchCms = Pin(Sketches.countMin(batch.select(col(keyCol)), keyCol,
         depth, width))
-      val folded = (
-        if (store.exists(cmsTable))
-          store.read(cmsTable).drop("__applied").unionByName(batchCms)
-        else batchCms)
+      val folded = Maintain.history(store, cmsTable, committed, batchCms)
+        .unionByName(batchCms)
         .groupBy(col("r"), col("bucket"))
         .agg(sum(col("n")).cast(LongType).as("n"))
       val pool = (
@@ -161,15 +153,11 @@ object StreamSketch {
     * shuffle) and appends ≤ groups×k rows as one `__applied`-keyed
     * partition; [[mergedKmvSketch]] re-sketches the stored rows, which
     * IS the corpus bottom-k. Write volume per batch is O(groups×k),
-    * history never rewritten; compact with [[TableStore.compact]] as
-    * partitions accumulate. Replay-safe the [[applyDailyRegisters]] way:
-    * the sketch partition's `__applied` id is the applied marker, and a
-    * replayed partition replaces itself.
+    * history never rewritten. Replay-safe the [[applyDailyRegisters]] way.
     */
   def applyKmvSketch(store: TableStore, table: String, grpCol: String,
       hashCol: String, k: Int)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       val sk = batch
         .groupBy(col(grpCol))
         .agg(call_function("kmv_sketch", col(hashCol), lit(k)).as("sk"))
@@ -189,16 +177,13 @@ object StreamSketch {
     * per-score SUM over partitions IS the corpus frame —
     * [[graft.operators.Stats.aucFromCounts]] (or a KS readout; same
     * statistic family) runs over the fold at any moment. Write volume
-    * per batch is O(batch's distinct scores); compact with
-    * [[TableStore.compact]] as partitions accumulate. Replay-safe the
-    * [[applyDailyRegisters]] way — the counts partition is its own
-    * applied marker.
+    * per batch is O(batch's distinct scores). Replay-safe the
+    * [[applyDailyRegisters]] way.
     */
   def applyScoreCounts(store: TableStore, table: String, scoreCol: String,
       labelCol: String, xType: String = "decimal(18,4)")(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       store.replacePartitions(table,
         graft.operators.Stats.scoreClassCounts(batch, col(scoreCol),
           col(labelCol), xType).withColumn("__applied", lit(batchId)),
@@ -215,13 +200,12 @@ object StreamSketch {
     * .cusumFromCounts]], so the maintained store answers the EXACT
     * one-shot `events_changepoint` at any moment.
     *
-    * Replay safety: the partition's `__applied` id is the applied
-    * marker; a replayed batch replaces itself.
+    * Replay safety: the fold runs under [[Maintain.once]]; a replayed
+    * batch replaces itself.
     */
   def applyTimeCounts(store: TableStore, table: String, timeCol: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       store.replacePartitions(table,
         graft.operators.Stats.perTimeCounts(batch, col(timeCol))
           .withColumn("__applied", lit(batchId)),
@@ -246,14 +230,13 @@ object StreamSketch {
     * statistic, so the maintained store answers the EXACT one-shot
     * `ml_calibration` readout at any moment.
     *
-    * Replay safety: the partition's `__applied` id is the applied
-    * marker; a replayed batch replaces itself.
+    * Replay safety: the fold runs under [[Maintain.once]]; a replayed
+    * batch replaces itself.
     */
   def applyCalibBins(store: TableStore, table: String, nCol: String,
       labelCol: String, prior: Int = 500)(
       batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       store.replacePartitions(table,
         graft.operators.Stats.calibrationBins(batch, col(nCol),
           col(labelCol), prior).withColumn("__applied", lit(batchId)),

@@ -16,13 +16,10 @@ import graft.sources.TableStore
   * giving front(A ∪ B) = front(front(A) ∪ front(B)). Each micro-batch
   * therefore sweeps ONLY front(stored front ∪ batch) — O(front + batch)
   * work, history never re-read — and lands the new front as one
-  * `__applied`-keyed partition; the partition at `lastAppliedBatch` IS
-  * the current front (earlier partitions are the front's history, free
-  * time travel; compact with [[TableStore.compact]] as they
-  * accumulate). Replay-safe the [[StreamSketch.applyDailyRegisters]]
-  * way: the front partition's `__applied` id is the applied marker, a
-  * replayed batch is a no-op, and a crashed half-write is replaced by
-  * its replay.
+  * `__applied`-keyed partition; the partition at the committed batch id
+  * ([[Maintain.once]]) IS the current front (earlier partitions are the
+  * front's history, free time travel). A replayed batch is a no-op, and
+  * a partition a crashed attempt landed is replaced by its replay.
   *
   * A point once dominated can never re-enter the front (the dominator
   * stays in the state), which is what makes the compact state sound:
@@ -35,11 +32,10 @@ object StreamSkyline {
   /** The per-batch front fold, run from a stream with [[Maintain]]. */
   def applyBatch(store: TableStore, table: String, xCol: String,
       yCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val lastApplied = store.lastAppliedBatch(table)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { committed =>
       val prev =
         if (store.exists(table))
-          store.read(table).filter(col("__applied") === lastApplied)
+          store.read(table).filter(col("__applied") === committed)
             .select(col(xCol), col(yCol))
         else batch.select(col(xCol), col(yCol)).limit(0)
       val merged = Skyline.paretoFront2d(
@@ -49,9 +45,9 @@ object StreamSkyline {
     }
   }
 
-  /** The current front: the partition at the applied watermark. */
-  def currentFront(store: TableStore, table: String): DataFrame = {
-    val applied = store.lastAppliedBatch(table)
-    store.read(table).filter(col("__applied") === applied).drop("__applied")
-  }
+  /** The current front: the partition at the committed batch id. */
+  def currentFront(store: TableStore, table: String): DataFrame =
+    store.read(table)
+      .filter(col("__applied") === Maintain.committed(store, table))
+      .drop("__applied")
 }

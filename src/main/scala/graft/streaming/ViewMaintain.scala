@@ -32,32 +32,21 @@ object ViewMaintain {
     * O(touched-bucket state + delta), not O(all groups) — at 100 TB view
     * cardinality a day's delta rewrites a few buckets, never the table.
     *
-    * Replay-safe: [[Maintain]] is at-least-once, so the fold must be
-    * idempotent per batch id. Per-bucket replacement is not atomic
-    * across buckets, so the applied-batch watermark lives in a scalar
-    * marker ([[TableStore.putMarker]] — one file, atomic single-file
-    * move, no Spark job) committed LAST — a crash before it replays the batch
-    * against whatever landed. UNLIKE the CDC mirror's max-based fold,
-    * a re-MERGE of an already-folded delta would double counts and sums,
-    * so the guard is conservative in the other direction too: groups
-    * only ever move forward because the marker commit is the only
-    * boundary a replay consults, and a replayed batch at or below the
-    * marker is a no-op. The half-applied crash window (some buckets
-    * merged, marker absent, replay re-merges them) is closed by folding
-    * idempotently per bucket: the replay recomputes each touched bucket
-    * from the PRE-batch snapshot that [[TableStore.replacePartitions]]
-    * restores via its parked-partition recovery — a bucket is either
-    * fully pre-batch or fully post-batch, never half, and the re-merge
-    * of a post-batch bucket is prevented by writing the batch id into
-    * the bucket rows (`__applied`) and skipping buckets already at it.
+    * Replay-safe under [[Maintain.once]]: a crash before the marker
+    * commit replays the batch against whatever landed. UNLIKE the CDC
+    * mirror's max-based fold, a re-MERGE of an already-folded delta
+    * would double counts and sums, and per-bucket replacement is not
+    * atomic across buckets. So each bucket is folded idempotently: a
+    * bucket is either fully pre-batch or fully post-batch, never half
+    * ([[TableStore.replacePartitions]] restores a parked bucket), and the
+    * batch id written into the bucket rows (`__applied`) marks a
+    * post-batch bucket, which the replay keeps instead of re-merging.
     */
   def applyBatch(store: TableStore, table: String, keys: Seq[String],
       sumCols: Seq[String], nBuckets: Int = 64)(
       batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val marker = s"${table}__batch"
-    val lastApplied = store.getMarker(marker).getOrElse(-1L)
-    if (batchId > lastApplied) {
+    Maintain.once(store, table, batchId) { _ =>
       val bucketOf =
         pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
       val delta = IncrementalAgg.fromBatch(batch, keys, sumCols)
@@ -84,7 +73,6 @@ object ViewMaintain {
             .unionByName(done)
         }
       store.replacePartitions(table, next, "__bucket")
-      store.putMarker(marker, batchId)
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 import org.apache.spark.sql.functions._
 
@@ -93,14 +92,10 @@ class StreamAnnSpec extends SparkSpec {
     val nbrs = store.read("nbrs").collect().toSet
     fold(store)(batchDf(1), 1L) // replay an applied batch
     assert(store.read("nbrs").collect().toSet == nbrs)
-    // crash: batch 2's neighbors landed, its list partition (marker) did not
-    deleteDir(Path.of(store.path("lists"), "__applied=2"))
+    // crash: batch 2's neighbors landed, its list partition and marker did not
+    FoldCrash.beforePartition(store, "lists", 2L)
     fold(store)(batchDf(2), 2L)
     assert(store.read("nbrs").collect().toSet == clean.read("nbrs").collect().toSet)
     assert(store.read("lists").collect().toSet == clean.read("lists").collect().toSet)
   }
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
 }

@@ -69,12 +69,9 @@ class StreamBm25Spec extends SparkSpec {
       store, "posts", "dl", Seq("spark", "merge", "vector"))
     val statsBefore = (tfB.collect().toSet, dfB.collect().toSet,
       nB.collect().toSet, sB.collect().toSet)
-    // simulate the crash: batch 1's postings landed, the dl marker didn't
-    val p1 = java.nio.file.Paths.get(s"${store.path("dl")}/__applied=1")
-    val walk = Files.walk(p1)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    // simulate the crash: batch 1's postings landed, its dl partition and
+    // marker didn't
+    FoldCrash.beforePartition(store, "dl", 1L)
     // searchFrames over the crashed store must exclude the orphan postings
     val (tfC, _, nC, _) = StreamBm25.searchFrames(
       store, "posts", "dl", Seq("spark", "merge", "vector"))
@@ -87,5 +84,20 @@ class StreamBm25Spec extends SparkSpec {
       store, "posts", "dl", Seq("spark", "merge", "vector"))
     assert((tfA.collect().toSet, dfA.collect().toSet,
       nA.collect().toSet, sA.collect().toSet) == statsBefore)
+  }
+
+  test("a crash after both partitions landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_sbm3").toString)
+    val fold = StreamBm25.applyBatch(store, "posts", "dl", "doc_id", "text") _
+    fold(corpus.filter(col("doc_id") % 2 === 0), 0L)
+    fold(corpus.filter(col("doc_id") % 2 === 1), 1L)
+    val clean = FoldCrash.tables(store, "posts", "dl")
+    FoldCrash.beforeMarker(store, "dl", 1L)
+    // the uncommitted batch is invisible to search: n_docs counts batch 0
+    val (_, _, nC, _) = StreamBm25.searchFrames(
+      store, "posts", "dl", Seq("spark", "merge", "vector"))
+    assert(nC.head.getLong(0) == corpus.filter(col("doc_id") % 2 === 0).count())
+    fold(corpus.filter(col("doc_id") % 2 === 1), 1L) // recovery replay
+    assert(FoldCrash.tables(store, "posts", "dl") == clean)
   }
 }

@@ -85,26 +85,40 @@ class StreamDupClustersSpec extends SparkSpec {
   }
 
   test("a crash before the band-marker commit replays without duplicate or stale deltas") {
-    // applyClusterBatch commits the label delta FIRST and the band
-    // partition (whose presence IS the applied marker) LAST. The
-    // dangerous partial state: batch N's delta on disk, marker absent. A
-    // replay must exclude the orphaned delta from the labeling it folds
-    // against and replace it.
+    // The dangerous partial state: batch N's label delta on disk, its
+    // band partition and its marker absent. A replay must exclude the
+    // orphaned delta from the labeling it folds against and replace it.
     val store = new TableStore(s, Files.createTempDirectory("graft_scc2").toString)
     val fold = StreamDedup.applyClusterBatch(
       store, "bands", "labels", "doc_id", "text", 16, 4, 3) _
     fold(corpus.filter(col("doc_id") % 3 === 0), 0L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L)
     val labelsAfter1 = store.read("labels").collect().toSet
-    val p1 = java.nio.file.Paths.get(s"${store.path("bands")}/__applied=1")
-    val walk = Files.walk(p1)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    val p1 = FoldCrash.beforePartition(store, "bands", 1L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L) // recovery replay
     assert(store.read("labels").collect().toSet == labelsAfter1)
     assert(Files.exists(p1))
     fold(corpus.filter(col("doc_id") % 3 === 2), 2L)
+    assert(readout(store) == oneShot)
+  }
+
+  test("a crash after both partitions landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_scc3").toString)
+    foldAll(store)
+    val clean = FoldCrash.tables(store, "bands", "labels")
+    val fold = StreamDedup.applyClusterBatch(
+      store, "bands", "labels", "doc_id", "text", 16, 4, 3) _
+    FoldCrash.beforeMarker(store, "bands", 2L)
+    fold(corpus.filter(col("doc_id") % 3 === 2), 2L) // recovery replay
+    assert(FoldCrash.tables(store, "bands", "labels") == clean)
+    assert(readout(store) == oneShot)
+    // write order is free: the band partition landed, the label delta
+    // did not. The refold must not read back its own band partition as
+    // history, or it would find no new pairs and land no delta.
+    FoldCrash.beforeMarker(store, "bands", 2L)
+    FoldCrash.dropPartition(store, "labels", "__batch=2")
+    fold(corpus.filter(col("doc_id") % 3 === 2), 2L)
+    assert(FoldCrash.tables(store, "bands", "labels") == clean)
     assert(readout(store) == oneShot)
   }
 
@@ -136,7 +150,7 @@ class StreamDupClustersSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
       Maintain(stream, ckptDir)(StreamDedup.applyClusterBatch(
         store, "bands", "labels", "doc_id", "text", 32, 1, 1) _).start().awaitTermination()
-      assert(store.lastAppliedBatch("bands") == 1L, "the chain arrives in two batches")
+      assert(Maintain.committed(store, "bands") == 1L, "the chain arrives in two batches")
       assert(readout(store) == ids.map(_ -> 1L).toSet, s"reversed=$reversed")
     }
   }

@@ -77,12 +77,10 @@ class StreamEditPairsSpec extends SparkSpec {
   }
 
   test("a crash before the doc-marker commit replays without duplicate pairs or segments") {
-    // applyEditBatch commits pairs FIRST, the segment partition next, and
-    // the doc partition (whose presence IS the applied marker) LAST. The
-    // dangerous partial state: batch N's pairs + segments on disk, marker
-    // absent. A replay must reconstruct, not double — the refold excludes
-    // the crashed segment partition (__applied > lastApplied) and
-    // replaces it.
+    // The dangerous partial state: batch N's pairs + segments on disk,
+    // its doc partition and its marker absent. A replay must reconstruct,
+    // not double — the refold excludes the crashed segment partition
+    // (__applied > committed) and replaces it.
     val store = new TableStore(s, Files.createTempDirectory("graft_sed2").toString)
     val fold = StreamDedup.applyEditBatch(
       store, "docs", "segs", "pairs", "doc_id", "str", d) _
@@ -91,15 +89,29 @@ class StreamEditPairsSpec extends SparkSpec {
     val pairsAfter1 = store.read("pairs").collect().toSet
     val segsAfter1 = store.read("segs").collect().toSet
     // simulate the crash: batch 1's pairs + segments landed, marker didn't
-    val p1 = java.nio.file.Paths.get(s"${store.path("docs")}/__applied=1")
-    val walk = Files.walk(p1)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    val p1 = FoldCrash.beforePartition(store, "docs", 1L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L) // recovery replay
     assert(store.read("pairs").collect().toSet == pairsAfter1)
     assert(store.read("segs").collect().toSet == segsAfter1)
     assert(Files.exists(p1))
+  }
+
+  test("a crash after every partition landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_sed4").toString)
+    val fold = StreamDedup.applyEditBatch(
+      store, "docs", "segs", "pairs", "doc_id", "str", d) _
+    (0 to 2).foreach(i => fold(corpus.filter(col("doc_id") % 3 === i), i.toLong))
+    val clean = FoldCrash.tables(store, "docs", "segs", "pairs")
+    FoldCrash.beforeMarker(store, "docs", 2L)
+    fold(corpus.filter(col("doc_id") % 3 === 2), 2L) // recovery replay
+    assert(FoldCrash.tables(store, "docs", "segs", "pairs") == clean)
+    // write order is free: the doc and segment partitions landed, the
+    // pair log did not. The refold must not read back its own docs and
+    // segments as history, or it would emit the batch's pairs wrongly.
+    FoldCrash.beforeMarker(store, "docs", 2L)
+    FoldCrash.dropPartition(store, "pairs", "__batch=2")
+    fold(corpus.filter(col("doc_id") % 3 === 2), 2L)
+    assert(FoldCrash.tables(store, "docs", "segs", "pairs") == clean)
   }
 
   test("history is never re-segmented and re-arriving values append no segment rows") {

@@ -60,20 +60,16 @@ class StreamHammingSpec extends SparkSpec {
   }
 
   test("a crash before the signature-marker commit replays without duplicate pairs") {
-    // pairs commit FIRST, the signature partition (the applied marker)
-    // LAST. Replay after the dangerous partial state (pairs landed,
-    // marker absent) must reconstruct, not double.
+    // Replay after the dangerous partial state (pairs landed, the
+    // signature partition and the marker absent) must reconstruct, not
+    // double.
     val store = new TableStore(s, Files.createTempDirectory("graft_shp2").toString)
     val fold = StreamDedup.applyHammingBatch(
       store, "sigs", "pairs", "doc_id", "text", d) _
     fold(corpus.filter(col("doc_id") % 3 === 0), 0L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L)
     val pairsAfter1 = store.read("pairs").collect().toSet
-    val p1 = java.nio.file.Paths.get(s"${store.path("sigs")}/__applied=1")
-    val walk = Files.walk(p1)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    val p1 = FoldCrash.beforePartition(store, "sigs", 1L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L) // recovery replay
     assert(store.read("pairs").collect().toSet == pairsAfter1)
     assert(Files.exists(p1))

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -87,8 +86,8 @@ class StreamHeavyHittersSpec extends SparkSpec {
     (0 to 1).foreach(i => fold(store)(arrivals.filter(col("idx") % 3 === i), i.toLong))
     fold(store)(arrivals.filter(col("idx") % 3 === 2), 2L)
     // simulate the crash: batch 2's candidate overwrite landed but its
-    // sketch partition (the applied marker, committed last) did not
-    deleteDir(Path.of(store.path("cms"), "__applied=2"))
+    // sketch partition and its marker did not
+    FoldCrash.beforePartition(store, "cms", 2L)
     fold(store)(arrivals.filter(col("idx") % 3 === 2), 2L) // at-least-once replay
     assert(store.read("cms").collect().toSet == clean.read("cms").collect().toSet)
     assert(store.read("top").collect().toSet == clean.read("top").collect().toSet)
@@ -123,8 +122,4 @@ class StreamHeavyHittersSpec extends SparkSpec {
     assert(store.read("top").collect().toSet ==
       batchFolded.read("top").collect().toSet)
   }
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
 }

@@ -61,16 +61,26 @@ class StreamItemCfSpec extends SparkSpec {
     val fold = StreamItemCf.applyBatch(store, "p", "i", "basket", "item") _
     fold(rows.filter(col("basket") % 3 === 2), 2L) // at-least-once replay
     assert(readPairs(store) == expectedPairs && readItems(store) == expectedItems)
-    // crash: batch 2's pairs landed, its item partition (marker) did not
-    val p2 = java.nio.file.Paths.get(s"${store.path("i")}/__applied=2")
-    val walk = Files.walk(p2)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    // crash: batch 2's pairs landed, its item partition and marker did not
+    FoldCrash.beforePartition(store, "i", 2L)
     // batch 2 = baskets {2, 5}: its pairs are invisible until the retry
     assert(readPairs(store) == Map(("A", "B") -> 1L, ("A", "C") -> 1L,
       ("B", "C") -> 2L))
     fold(rows.filter(col("basket") % 3 === 2), 2L) // recovery replay
+    assert(readPairs(store) == expectedPairs && readItems(store) == expectedItems)
+  }
+
+  test("a crash after both partitions landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_scf3").toString)
+    foldAll(store, Seq(0, 1, 2))
+    val clean = FoldCrash.tables(store, "p", "i")
+    FoldCrash.beforeMarker(store, "i", 2L)
+    // batch 2 = baskets {2, 5}: uncommitted, so invisible to the readers
+    assert(readPairs(store) == Map(("A", "B") -> 1L, ("A", "C") -> 1L,
+      ("B", "C") -> 2L))
+    StreamItemCf.applyBatch(store, "p", "i", "basket", "item")(
+      rows.filter(col("basket") % 3 === 2), 2L) // recovery replay
+    assert(FoldCrash.tables(store, "p", "i") == clean)
     assert(readPairs(store) == expectedPairs && readItems(store) == expectedItems)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -79,13 +78,22 @@ class StreamJoinViewSpec extends SparkSpec {
     (0 to 3).foreach(i => fold(store)(arrivals.filter(col("idx") === i), i.toLong))
     fold(store)(arrivals.filter(col("idx") === 4), 4L)
     // simulate the crash: batch 4's side partitions landed but the view
-    // partition (the applied marker, committed last) did not
-    deleteDir(Path.of(store.path("v"), "__applied=4"))
+    // partition and the marker did not
+    FoldCrash.beforePartition(store, "v", 4L)
     fold(store)(arrivals.filter(col("idx") === 4), 4L) // at-least-once replay
     // the replay must prune the already-landed side partitions (__applied
-    // < batchId) or ΔA⋈ΔA self-matches would double the view
+    // > committed) or ΔA⋈ΔA self-matches would double the view
     assert(bag(store.read("v").drop("__applied")) == bag(clean.read("v").drop("__applied")))
     assert(store.read("a_log").collect().toSet == clean.read("a_log").collect().toSet)
+  }
+
+  test("a crash after every partition landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_sjv3").toString)
+    foldAll(store)
+    val clean = FoldCrash.tables(store, "a_log", "b_log", "v")
+    FoldCrash.beforeMarker(store, "v", 4L)
+    fold(store)(arrivals.filter(col("idx") === 4), 4L) // at-least-once replay
+    assert(FoldCrash.tables(store, "a_log", "b_log", "v") == clean)
   }
 
   test("a real AvailableNow stream reaches the same view, across a restart") {
@@ -107,30 +115,4 @@ class StreamJoinViewSpec extends SparkSpec {
     assert(bag(store.read("v").drop("__applied")) == bag(oneShot))
   }
 
-  test("CDC folds: deletes retract exactly their pairs; double-sided delete nets zero") {
-    import graft.operators.IncrementalJoin
-    val store = new TableStore(s, Files.createTempDirectory("graft_sjvc").toString)
-    val cdcFold = StreamJoinView.applyCdcBatch(
-      store, "a_log", "b_log", "v", "side", "op", Seq("k"), nBuckets = 4) _
-    // batch 0: all rows inserted
-    cdcFold(arrivals.withColumn("op", lit("I")), 0L)
-    // batch 1: delete a1 (k=1) on the A side, b3 (k=2) on the B side,
-    // and BOTH k=3 partners — the cross term must net k=3 to zero once
-    val dels = arrivals.filter(
-      col("a_v").isin("a1", "a4") || col("b_v").isin("b3", "b4"))
-      .withColumn("op", lit("D"))
-    cdcFold(dels, 1L)
-    val net = IncrementalJoin.present(store.read("v").drop("__applied"))
-    val expected = Seq((1, "a2", "b1"), (1, "a2", "b2")).toDF("k", "a_v", "b_v")
-    assert(bag(net.drop("w")) == bag(expected))
-    assert(net.filter(col("k") === 3).count() == 0, "double-sided delete must net zero")
-    // replaying the delete batch is a no-op
-    val v = store.read("v").collect().toSet
-    cdcFold(dels, 1L)
-    assert(store.read("v").collect().toSet == v)
-  }
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
 }

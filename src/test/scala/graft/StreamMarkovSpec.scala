@@ -67,23 +67,30 @@ class StreamMarkovSpec extends SparkSpec {
   }
 
   test("a crash between the counts and last-event commits replays without double stitches") {
-    // applyBatch commits the counts delta FIRST, the last-event marker
-    // LAST — the dangerous partial state is "batch 2's counts written,
-    // its marker absent": mergedCounts must exclude the orphan, and the
-    // recovery replay must reconstruct (not double) batch 2's pairs.
+    // The dangerous partial state is "batch 2's counts written, its
+    // last-event partition and its marker absent": mergedCounts must
+    // exclude the orphan, and the recovery replay must reconstruct (not
+    // double) batch 2's pairs.
     val store = new TableStore(s, Files.createTempDirectory("graft_smk3").toString)
     foldAll(store)
-    val p2 = java.nio.file.Paths.get(s"${store.path("last")}/__applied=2")
-    val walk = Files.walk(p2)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    FoldCrash.beforePartition(store, "last", 2L)
     // the orphan counts partition is invisible to readers
     assert(counts(store) ==
       expected - ((Some(3L), Some(4L))) - ((Some(1L), Some(2L))) +
         ((Some(1L), Some(2L)) -> 1L))
     StreamMarkov.applyBatch(store, "cnt", "last", "u", "ts", "eid", "k")(
       ev.filter(col("ts") >= 20), 2L) // recovery replay
+    assert(counts(store) == expected)
+  }
+
+  test("a crash after both partitions landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_smk4").toString)
+    foldAll(store)
+    val clean = FoldCrash.tables(store, "cnt", "last")
+    FoldCrash.beforeMarker(store, "last", 2L)
+    StreamMarkov.applyBatch(store, "cnt", "last", "u", "ts", "eid", "k")(
+      ev.filter(col("ts") >= 20), 2L) // recovery replay
+    assert(FoldCrash.tables(store, "cnt", "last") == clean)
     assert(counts(store) == expected)
   }
 }

@@ -81,11 +81,9 @@ class StreamNearDupSpec extends SparkSpec {
   }
 
   test("a crash between the pair-log and band-store commits replays without duplicates") {
-    // applyBatch commits the pair log FIRST, the band store partition
-    // (whose presence IS the applied-batch-id guard) LAST — so the
-    // dangerous partial state is "batch N's pairs written, batch N's band
-    // partition absent". A replay of batch N must reconstruct, not
-    // double, its pair rows.
+    // The dangerous partial state: batch N's pairs written, batch N's
+    // band partition and its marker absent. A replay of batch N must
+    // reconstruct, not double, its pair rows.
     val store = new TableStore(s, Files.createTempDirectory("graft_sdedup3").toString)
     val fold = StreamDedup.applyBatch(
       store, "bands", "pairs", "doc_id", "text", 16, 4, 3) _
@@ -95,14 +93,29 @@ class StreamNearDupSpec extends SparkSpec {
     val bandsAfter1 = store.read("bands").collect().toSet
     // simulate the crash: batch 1's pairs are on disk, but its band
     // partition never landed
-    val p1 = java.nio.file.Paths.get(s"${store.path("bands")}/__applied=1")
-    val walk = Files.walk(p1)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    FoldCrash.beforePartition(store, "bands", 1L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L) // recovery replay
     assert(store.read("pairs").collect().toSet == pairsAfter1)
     assert(store.read("bands").collect().toSet == bandsAfter1)
+  }
+
+  test("a crash after both partitions landed, before the marker commit, replays to the clean store") {
+    val store = new TableStore(s, Files.createTempDirectory("graft_sdedup6").toString)
+    val fold = StreamDedup.applyBatch(
+      store, "bands", "pairs", "doc_id", "text", 16, 4, 3) _
+    (0 to 2).foreach(i => fold(corpus.filter(col("doc_id") % 3 === i), i.toLong))
+    val clean = FoldCrash.tables(store, "bands", "pairs")
+    FoldCrash.beforeMarker(store, "bands", 2L)
+    fold(corpus.filter(col("doc_id") % 3 === 2), 2L) // recovery replay
+    assert(FoldCrash.tables(store, "bands", "pairs") == clean)
+    // write order is free: the band partition landed, the pair log did
+    // not. The refold must not read back its own band partition — as
+    // history it would anti-join away every band key of the batch and
+    // emit no pairs.
+    FoldCrash.beforeMarker(store, "bands", 2L)
+    FoldCrash.dropPartition(store, "pairs", "__batch=2")
+    fold(corpus.filter(col("doc_id") % 3 === 2), 2L)
+    assert(FoldCrash.tables(store, "bands", "pairs") == clean)
   }
 
   test("a crash parking a band partition mid-swap is recovered before the next fold plans") {

@@ -61,12 +61,11 @@ class StreamPrefixJaccardSpec extends SparkSpec {
   }
 
   test("a crash before the prefix-marker commit replays without duplicate pairs or shingles") {
-    // applyPrefixBatch commits pairs FIRST, the shingle partition next,
-    // and the prefix partition (whose presence IS the applied marker)
-    // LAST. The dangerous partial state: batch N's pairs + shingles on
-    // disk, marker absent. A replay must reconstruct, not double — the
-    // shingle partition is replaced (not appended) and the verify's
-    // collect_set absorbs the transiently doubled (doc, shingle) rows.
+    // The dangerous partial state: batch N's pairs + shingles on disk,
+    // its prefix partition and its marker absent. A replay must
+    // reconstruct, not double — the refold reads history up to the
+    // committed batch only, and the shingle partition is replaced (not
+    // appended).
     val store = new TableStore(s, Files.createTempDirectory("graft_sppj2").toString)
     val fold = StreamDedup.applyPrefixBatch(
       store, "sh", "prefix", "pairs", "doc_id", "text", t, 3) _
@@ -75,11 +74,7 @@ class StreamPrefixJaccardSpec extends SparkSpec {
     val pairsAfter1 = store.read("pairs").collect().toSet
     val shAfter1 = store.read("sh").collect().toSet
     // simulate the crash: batch 1's pairs + shingles landed, marker didn't
-    val p1 = java.nio.file.Paths.get(s"${store.path("prefix")}/__applied=1")
-    val walk = Files.walk(p1)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    val p1 = FoldCrash.beforePartition(store, "prefix", 1L)
     fold(corpus.filter(col("doc_id") % 3 === 1), 1L) // recovery replay
     assert(store.read("pairs").collect().toSet == pairsAfter1)
     assert(store.read("sh").collect().toSet == shAfter1)

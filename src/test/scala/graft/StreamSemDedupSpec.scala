@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 import org.apache.spark.sql.functions._
 
@@ -115,7 +114,7 @@ class StreamSemDedupSpec extends SparkSpec {
     fold(store)(batchDf(1), 1L) // replay an applied batch
     assert(store.read("members").collect().toSet == members)
     // crash: batch 2's member partition never landed
-    deleteDir(Path.of(store.path("members"), "__applied=2"))
+    FoldCrash.beforePartition(store, "members", 2L)
     fold(store)(batchDf(2), 2L)
     assert(store.read("members").collect().toSet ==
       clean.read("members").collect().toSet)
@@ -143,8 +142,4 @@ class StreamSemDedupSpec extends SparkSpec {
       .select(col("vec_id"), col("kept")).as[(Long, Long)].collect().toMap
     assert(got == expect)
   }
-
-  private def deleteDir(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
 }

@@ -66,11 +66,7 @@ class StreamSubstringSpec extends SparkSpec {
     assert((store.read("spans").collect().toSet, store.read("dups").collect().toSet) == before)
     // crash: batch 2's dup log landed but its span partition didn't —
     // the replay must reconstruct both without doubling
-    val p2 = java.nio.file.Paths.get(s"${store.path("spans")}/__applied=2")
-    val walk = Files.walk(p2)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => Files.delete(f))
-    finally walk.close()
+    FoldCrash.beforePartition(store, "spans", 2L)
     fold(corpus.filter(col("doc_id") % 3 === 2), 2L)
     assert((store.read("spans").collect().toSet, store.read("dups").collect().toSet) == before)
   }

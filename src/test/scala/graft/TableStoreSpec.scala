@@ -101,9 +101,9 @@ class TableStoreSpec extends SparkSpec {
   test("chaos: every overwrite kill window recovers via every next entry point") {
     // enumerate the three states a kill inside overwrite can leave on
     // disk, then drive recovery through each public entry point a
-    // restarted process might hit FIRST (read, lastAppliedBatch, append)
+    // restarted process might hit FIRST (read, exists, append)
     // and assert no path loses data, strands history in parked dirs, or
-    // restarts a fold from lastApplied=-1 with history present.
+    // reports no batch with history present.
     val v1 = Seq((1, 0L), (2, 0L)).toDF("v", "__applied")
     val v2 = Seq((10, 1L), (20, 1L), (30, 1L)).toDF("v", "__applied")
     def mkState(point: Int): (TableStore, String) = {
@@ -125,8 +125,8 @@ class TableStoreSpec extends SparkSpec {
       assert(s1.read("t").select("v").as[Int].collect().toSet == expected(point),
         s"read after kill at point $point")
       val (s2, _) = mkState(point)
-      assert(s2.lastAppliedBatch("t") == expectedBatch(point),
-        s"replay guard must never see -1 with history present (point $point)")
+      assert(maxOf(s2, "t", "__applied") == expectedBatch(point),
+        s"exists must never report no table with history present (point $point)")
       // append must land ON TOP of the recovered table — an append that
       // recreated the live dir with only its own batch would strand the
       // full pre-crash table in the parked dirs forever
@@ -134,7 +134,7 @@ class TableStoreSpec extends SparkSpec {
       s3.append("t", Seq((99, 2L)).toDF("v", "__applied"))
       assert(s3.read("t").select("v").as[Int].collect().toSet == expected(point) + 99,
         s"append after kill at point $point")
-      assert(s3.lastAppliedBatch("t") == 2L)
+      assert(maxOf(s3, "t", "__applied") == 2L)
     }
   }
 
@@ -235,11 +235,11 @@ class TableStoreSpec extends SparkSpec {
     assert(!store.exists("e"))
     store.append("e", empty, Seq("p"))
     assert(!store.exists("e"))
-    assert(store.lastAppliedBatch("e", "p") == -1L)
+    assert(maxOf(store, "e", "p") == -1L)
     store.append("e", Seq((1, 1L), (2, 2L)).toDF("v", "p"), Seq("p"))
     assert(store.read("e").select("v").as[Int].collect().sorted.toSeq == Seq(1, 2))
     store.append("e", empty, Seq("p")) // must not disturb a live table
-    assert(store.lastAppliedBatch("e", "p") == 2L)
+    assert(maxOf(store, "e", "p") == 2L)
     // an overwrite that empties the table reads as nonexistent — also
     // after a crash before the displaced version's cleanup, whose stale
     // .old_ park a later sweep must not resurrect
@@ -348,6 +348,14 @@ class TableStoreSpec extends SparkSpec {
     assert(Jobs.count(spark)(store.read("p")) > 0)
     assert(Jobs.count(spark)(store.read("q")) > 0)
   }
+
+  /** Highest value of column `c` in `table` through [[TableStore.exists]]
+    * and [[TableStore.read]], or −1 while the table holds no data.
+    */
+  private def maxOf(store: TableStore, table: String, c: String): Long =
+    if (!store.exists(table)) -1L
+    else store.read(table).agg(org.apache.spark.sql.functions.max(col(c)))
+      .head().getAs[Number](0).longValue
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)
   private def lit(v: Any) = org.apache.spark.sql.functions.lit(v)
